@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Cumulative task-metric counters fed by a SparkListener — the
@@ -70,38 +69,10 @@ private object BenchMetricsListener {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[w,c,mem] times the same sweep under
-    // multi-JVM executors (same contract as graft.Verify: driver classpath
-    // rides along because local-cluster executors only get Spark's own).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Round-robin rep interleaving (below) cycles ~128 distinct plans
-      // between two reps of the same mark; the generated-code cache
-      // holds 100 classes by default, so every rep would RECOMPILE its
-      // whole-stage codegen (janino) instead of hitting the cache —
-      // measured +38% on the full-menu 100× sweep vs back-to-back reps.
-      // A cache sized over the menu keeps rep 2+ codegen-warm, which is
-      // also the steady state a production driver resubmitting the same
-      // queries runs in. (Static conf: must be set before the session.)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-    if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path"))
-    if (sys.env.contains("SPARK_GRAFT_CHECKPOINT_DIR"))
-      builder.config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
+    val spark = GraftSession.start("graft-bench")
+    val master = spark.sparkContext.master
     val metrics = new BenchMetricsListener
     spark.sparkContext.addSparkListener(metrics)
-    // Same reliable-memo contract as graft.Verify: with a checkpoint dir
-    // configured the memos survive executor loss (QueryMemo.materialize),
-    // so the reliable path's cost is benchmarkable, not just correct.
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.sparkContext.setCheckpointDir)
     // Warm the session so the alphabetically-first query doesn't absorb
     // JVM startup cost: one parquet scan (footer reader, vectorized
     // reader classes) plus a synthetic window + shuffle-join + aggregate

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.Pipeline
 
 /** Entry point 2 (reference: demo.py:60-175): a 5-article in-memory
@@ -11,12 +10,7 @@ import graft.pipeline.Pipeline
   * `runMain graft.Demo /root/reference/configs/pipeline_config.yaml`. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-demo")
     import spark.implicits._
 
     val body =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.Pipeline
 
 /** Entry point 1 — the reference's `python -m src.main` CLI
@@ -37,15 +36,7 @@ object Main {
     val outDir = a.getOrElse("output-dir",
       java.nio.file.Files.createTempDirectory("graft-out").toString)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-pipeline")
 
     val docs = (a.get("input"), a.get("wiki-dump")) match {
       case (Some(parquet), _) =>

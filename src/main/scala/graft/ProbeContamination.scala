@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.pipeline.Contamination
 
 /** Scale probe for the fuzzy decontamination tier's |bench| constant
@@ -9,8 +7,7 @@ import graft.pipeline.Contamination
   * which cannot expose a cost proportional to the benchmark size — a
   * real eval suite is 10^4–10^5 items. This harness times
   * [[Contamination.fuzzyContaminationQuery]] at an arbitrary
-  * `benchDocs`, and optionally the RETIRED `arrays_overlap` broadcast
-  * nested-loop spelling (`--old`) for a before/after on the same data.
+  * `benchDocs`.
   *
   * With `--index`, instead builds ONLY the driver-resident fuzzy index
   * and prints its build time and memory footprint (gram-map entries,
@@ -24,8 +21,8 @@ import graft.pipeline.Contamination
   * task #7 — the set is eval-bounded by the same argument as the fuzzy
   * index, but the bound should be a measured row, not an argument).
   *
-  * Usage: runMain graft.ProbeContamination <dir> <benchDocs> [--old|--index|--benchset]
-  * Prints one line: `probe_fuzzy dir=<dir> bench=<n> mode=<new|old> sec=<s> rows=<k>`,
+  * Usage: runMain graft.ProbeContamination <dir> <benchDocs> [--index|--benchset]
+  * Prints one line: `probe_fuzzy dir=<dir> bench=<n> sec=<s> rows=<k>`,
   * `probe_fuzzy_index dir=<dir> bench=<n> build_sec=<s> grams=<n> ...`, or
   * `probe_bench_set dir=<dir> bench=<n> build_sec=<s> grams=<n> est_mb=<m>`.
   */
@@ -33,40 +30,16 @@ object ProbeContamination {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val benchDocs = args.lift(1).map(_.toInt).getOrElse(1000)
-    val old = args.contains("--old")
     if (args.contains("--index")) { indexStats(dir, benchDocs); return }
     if (args.contains("--benchset")) { benchSetStats(dir, benchDocs); return }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-probe-contamination")
     val docs = Tables.documents(spark, dir)
-    val q =
-      if (!old) Contamination.fuzzyContaminationQuery(docs, benchDocs)
-      else {
-        // the pre-round-10 plan, verbatim shape: broadcast nested-loop
-        // with an arrays_overlap predicate over ALL (train, bench) pairs.
-        val tri = docs.select(col("doc_id"), graft.functions.Trigrams(col("text")).as("ga"))
-          .filter(size(col("ga")) > 0)
-        val bench = tri.filter(col("doc_id") < benchDocs)
-          .select(col("doc_id").as("bench_id"), col("ga").as("bga"))
-        tri.filter(col("doc_id") >= benchDocs)
-          .join(broadcast(bench), arrays_overlap(col("ga"), col("bga")))
-          .select(col("doc_id"),
-            size(array_intersect(col("ga"), col("bga"))).cast("double").as("inter"),
-            (size(col("ga")) + size(col("bga"))).cast("double").as("sz"))
-          .select(col("doc_id"), (col("inter") / (col("sz") - col("inter"))).as("jac"))
-          .groupBy(col("doc_id"))
-          .agg(max(col("jac")).as("max_jaccard"))
-      }
+    val q = Contamination.fuzzyContaminationQuery(docs, benchDocs)
     val t0 = System.nanoTime()
     q.write.format("noop").mode("overwrite").save()
     val sec = (System.nanoTime() - t0) / 1e9
     val rows = q.count()
-    println(f"probe_fuzzy dir=$dir bench=$benchDocs mode=${if (old) "old" else "new"} sec=$sec%.2f rows=$rows")
+    println(f"probe_fuzzy dir=$dir bench=$benchDocs sec=$sec%.2f rows=$rows")
     spark.stop()
   }
 
@@ -76,13 +49,7 @@ object ProbeContamination {
     * long[] similar. Deliberately rough — the point is the GROWTH LAW
     * in |bench| and the order of magnitude vs a 128 GiB driver. */
   private def indexStats(dir: String, benchDocs: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-probe-contamination")
     val tri = Contamination.trigramFrame(Tables.documents(spark, dir))
     tri.count() // materialize the persisted trigram frame outside the mark
     val t0 = System.nanoTime()
@@ -107,13 +74,7 @@ object ProbeContamination {
     * [[indexStats]]: entry ≈ 40 B + String 40 B header + 2 B/char —
     * the point is the growth law in |bench|, not exact bytes). */
   private def benchSetStats(dir: String, benchDocs: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-probe-contamination")
     val docs = Tables.documents(spark, dir)
     docs.count() // pull the scan outside the mark (parity with indexStats)
     val t0 = System.nanoTime()

@@ -40,13 +40,7 @@ object ProbeDelta {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-probe-delta")
     import graft.pipeline.{Dedup, MinHash}
     // Slice predicates DERIVED from Dedup.DeltaMod (round-17 advice):
     // sigStoreFor's store is `doc_id % DeltaMod != 0`, so the probe's

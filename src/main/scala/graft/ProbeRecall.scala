@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   */
 object ProbeRecall {
 
-  private val P = sys.env.getOrElse("SPARK_GRAFT_RECALL_PLANTED", "200").toInt
+  private val P = 200
 
   private def jitterText(t: String, rnd: scala.util.Random): String =
     t.split(" ").map { w =>
@@ -63,13 +63,7 @@ object ProbeRecall {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-probe-recall")
 
     // Optional family-group filter (args after sfDir): "minhash",
     // "textlsh", "embed", "ann" — restricts the run for fast iteration

@@ -2,9 +2,6 @@ package graft
 
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Scale probe for the WARC/WET source (round-16; r15 verdict #2: WET
   * was the only operator family with fixture-only evidence). Generates a
   * synthetic multi-file `.warc.wet.gz` corpus shaped like a Common Crawl
@@ -17,16 +14,11 @@ import org.apache.spark.sql.functions._
   *  2. scan throughput docs/s, separator fast path vs Content-Length
   *     exact framing (the r15 #4 upgrade), same doc counts;
   *  3. linearity in file count (quarter corpus vs full corpus);
-  *  4. asDocs → Pipeline.run end-to-end on the extracted documents,
-  *     ABLATED per stage (round 17, verdict #6): the fused plan makes
-  *     in-run stage timing meaningless by design (Metrics scaladoc), so
-  *     the split comes from differencing full vs tokenize-off vs
-  *     quality-off vs dedup-off runs of the same input;
-  *  5. (round 17, verdict #5 — `bigMemberMB` > 0) ONE production-shaped
+  *  4. (round 17, verdict #5 — `bigMemberMB` > 0) ONE production-shaped
   *     gzip member of ~that compressed size (Common Crawl members are
   *     ~150 MB): one task per member on both framings, docs/s and
   *     member-MB/s at real size;
-  *  6. (with the same flag) a member whose first payload DECLARES more
+  *  5. (with the same flag) a member whose first payload DECLARES more
   *     than the 256 MB cap: the scan must warn, truncate the value,
   *     realign, and read every following record intact at full size —
   *     the at-scale twin of WarcWetSpec's conf-keyed cap test.
@@ -115,13 +107,7 @@ object ProbeWet {
     val root = new java.io.File(args.headOption.getOrElse("/tmp/wetprobe"))
     val nFiles = args.lift(1).map(_.toInt).getOrElse(120)
     val docsPerFile = args.lift(2).map(_.toInt).getOrElse(400)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-probe-wet")
 
     // --- generate: full corpus + a quarter-corpus sibling (linearity leg)
     val full = new java.io.File(root, "full"); full.mkdirs()
@@ -171,49 +157,13 @@ object ProbeWet {
     println(s"[wetprobe] tasks: fast=$pFast (bin-packed whole files), " +
       s"exact=$pExact (one split per file) over $nFiles files")
 
-    // --- E2E: asDocs -> Pipeline.run, ablated per stage. The engine
-    // fuses clean+quality into the scan and shares actions across
-    // stages, so the honest per-stage attribution is BY DIFFERENCE:
-    // each run disables one more stage (tokenize -> quality -> dedup);
-    // delta(full, -tok) = tokenizer train+encode+tokens sink,
-    // delta(-tok, -tok-quality) = the quality cascade, and so on down
-    // to the irreducible ingest+clean+documents-sink floor.
-    import graft.pipeline.Pipeline.{DedupConfig, GraftConfig, TokenizationConfig}
-    import graft.pipeline.Quality
-    def e2e(cfg: GraftConfig, tag: String): (Long, Double) = {
-      val outDir = new java.io.File(root, s"pipeline_out_$tag").getAbsolutePath
-      val (n, sec) = timed {
-        graft.pipeline.Pipeline.run(
-          graft.sources.WarcWet.asDocs(spark, full.getAbsolutePath), cfg, outDir)
-          .collect().head.getAs[Long]("docs_ingested")
-      }
-      CacheScope.drain(); spark.catalog.clearCache(); System.gc()
-      (n, sec)
-    }
-    val cFull = GraftConfig(quality = Quality.Config.reference)
-    val cNoTok = cFull.copy(tokenization = TokenizationConfig(enabled = false))
-    val cNoQ = cNoTok.copy(qualityEnabled = false)
-    val cNoDedup = cNoQ.copy(dedup = DedupConfig(enabled = false))
-    val (ingested, e2eSec) = e2e(cFull, "full")
-    val (_, noTokSec) = e2e(cNoTok, "notok")
-    val (_, noQSec) = e2e(cNoQ, "noq")
-    val (_, noDedupSec) = e2e(cNoDedup, "nodedup")
-
     println("| leg | files | docs | sec | docs/s |")
     println("|---|---|---|---|---|")
     println(f"| WET scan, separator fast path | $nFiles | $nFast | $fastSec%.1f | ${nFast / fastSec}%.0f |")
     println(f"| WET scan, exact Content-Length framing | $nFiles | $nExact | $exactSec%.1f | ${nExact / exactSec}%.0f |")
     println(f"| WET scan, quarter corpus (linearity) | ${nFiles / 4} | $nQ | $qSec%.1f | ${nQ / qSec}%.0f |")
-    println(f"| asDocs -> Pipeline.run E2E | $nFiles | $ingested | $e2eSec%.1f | ${ingested / e2eSec}%.0f |")
     println(f"[wetprobe] exact/fast = ${exactSec / fastSec}%.2fx, " +
       f"full/quarter = ${fastSec / qSec}%.2fx (linear = ~4x work on ~4x files)")
-    println("| E2E stage split (by ablation) | sec | share of full |")
-    println("|---|---|---|")
-    println(f"| full pipeline | $e2eSec%.1f | 100%% |")
-    println(f"| tokenizer (train+encode+tokens sink) | ${e2eSec - noTokSec}%.1f | ${(e2eSec - noTokSec) / e2eSec * 100}%.0f%% |")
-    println(f"| quality cascade | ${noTokSec - noQSec}%.1f | ${(noTokSec - noQSec) / e2eSec * 100}%.0f%% |")
-    println(f"| minhash dedup | ${noQSec - noDedupSec}%.1f | ${(noQSec - noDedupSec) / e2eSec * 100}%.0f%% |")
-    println(f"| ingest+clean+documents sink (floor) | $noDedupSec%.1f | ${noDedupSec / e2eSec * 100}%.0f%% |")
 
     // --- production-shaped member legs (opt-in: arg 4 = target gz MB)
     val bigMB = args.lift(3).map(_.toInt).getOrElse(0)

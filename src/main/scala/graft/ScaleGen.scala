@@ -62,15 +62,7 @@ object ScaleGen {
     val uniqueDocs = args.contains("--unique")
     val factor = args.drop(2).filterNot(_.startsWith("--"))
       .headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("graft-scalegen")
 
     def load(name: String): DataFrame = spark.read.parquet(s"$sfDir/$name.parquet")
     def write(df: DataFrame, name: String): Unit =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,33 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional: restrict to named queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[2,2,2048] runs the same dump under
-    // multi-JVM executors — the cheapest proxy for a real cluster. Executors
-    // launched by local-cluster get Spark's own classpath only, so the
-    // driver's classpath (sbt target/classes) must ride along explicitly.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path"))
-    // With a reliable checkpoint dir in play, let the ContextCleaner
-    // reclaim checkpoint files of GC'd (LRU-evicted) memo frames —
-    // without this a long multi-corpus session accumulates one rdd-<id>
-    // dir per memo build forever (the cleaner default is off).
-    if (sys.env.contains("SPARK_GRAFT_CHECKPOINT_DIR"))
-      builder.config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CHECKPOINT_DIR flips every memo/CC materialization to
-    // fault-tolerant checkpoint() (QueryMemo.materialize) — set it when
-    // driving under local-cluster to exercise the reliable path E2E.
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.sparkContext.setCheckpointDir)
+    val spark = GraftSession.start("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

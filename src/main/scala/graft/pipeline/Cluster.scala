@@ -149,10 +149,8 @@ object Cluster {
 
   /** Driver-collect bound for [[componentsOfPairs]]' central solve:
     * 4M edges = two longs each ≈ 64 MB collected — comfortable driver
-    * headroom; beyond it the distributed iteration takes over.
-    * Env-tunable for A/B probes (0 forces the distributed path). */
-  val DriverCcMaxEdges: Long =
-    sys.env.get("SPARK_GRAFT_CC_DRIVER_MAX").map(_.toLong).getOrElse(4000000L)
+    * headroom; beyond it the distributed iteration takes over. */
+  val DriverCcMaxEdges: Long = 4000000L
 
   /** Components of an already-CONTRACTED pair graph, adaptively:
     * count the edges (a scan — callers pass checkpointed pair frames)

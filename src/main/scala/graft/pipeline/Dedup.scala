@@ -107,6 +107,12 @@ object Dedup {
   /** A line is boilerplate once it appears in this many distinct docs. */
   val LineDropDf = 2
 
+  /** Broadcast bound for the boilerplate-line DROP SET (round 18):
+    * ~60-char lines × 1M ≈ 60 MB framed — comfortably broadcastable;
+    * beyond it the drop join falls back to the shuffled semi join
+    * (AQE skew-splits it). */
+  val LineDropKeysMax: Long = 1000000L
+
   /** Cross-document LINE-level dedup (Dolma / RefinedWeb boilerplate
     * removal): a line appearing in >= [[LineDropDf]] DISTINCT documents
     * is dropped from every document; each doc is rebuilt from its
@@ -124,15 +130,13 @@ object Dedup {
     * lines participate like any other (an empty line shared by >= 2
     * docs drops); order is restored by sorting (pos, line) structs, so
     * the rebuild is collect-order-independent — deterministic under any
-    * partitioning. */
-  /** Broadcast bound for the boilerplate-line DROP SET (round 18):
-    * ~60-char lines × 1M ≈ 60 MB framed — comfortably broadcastable;
-    * beyond it the drop join falls back to the shuffled semi join
-    * (AQE skew-splits it). Env-overridable for A/B probes (0 disables
-    * the broadcast path). */
-  val LineDropKeysMax: Long =
-    sys.env.get("SPARK_GRAFT_LINE_DROP_MAX").map(_.toLong).getOrElse(1000000L)
-
+    * partitioning.
+    *
+    * Eager: building the plan runs Spark actions. The drop set is
+    * persisted and counted against `dropBroadcastMax`; when it fits,
+    * it is also collected to the driver and broadcast, all before this
+    * method returns. Past the bound the returned plan stays lazy (the
+    * shuffled semi join). */
   def lineDedupQuery(docs: DataFrame, sep: String = "\n",
       dropBroadcastMax: Long = LineDropKeysMax): DataFrame = {
     // Round-18 reshape (guide §2.3 / §8 "decide with small rows"): the

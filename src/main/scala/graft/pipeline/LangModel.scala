@@ -482,7 +482,6 @@ object LangModel {
     // materialization and the 25M-row join were ~2/3 of lm_scores on the
     // realistic 100x corpus for output the fold below reproduces with
     // zero exchanges on the corpus side.)
-    val t0 = System.nanoTime()
     val modelRows = docs
       .select(explode(graft.functions.LmBigramFeats(col("text"))).as("f"))
       .select(col("f.hp").as("hp"), col("f.hb").as("hb"), col("f.n").as("n_occ"))
@@ -496,9 +495,6 @@ object LangModel {
       if (!r.isNullAt(0)) bigArr(r.getInt(0)) = r.getLong(2)
       else { ctxArr(r.getInt(1)) = r.getLong(2); v += 1 }
     }
-    if (sys.env.contains("SPARK_GRAFT_LM_PROBE"))
-      System.err.println(f"[graft.lm] models ${(System.nanoTime() - t0) / 1e9}%.1f s" +
-        s" (${modelRows.length} buckets, v=$v)")
     // Pass 2 — in-row fold against the broadcast model: each executor
     // fetches the <=10 MB count arrays once, and every doc's sums come
     // straight off the scan — no persist, no join, no doc-keyed

@@ -61,18 +61,10 @@ object Memos {
     Seq("bench_grams" -> ((s, d) => Contamination.benchGramsFor(s, d))),
     Seq("lexicon" -> ((s, d) => Bpe.lexiconFor(s, d))))
 
-  /** Build concurrency. One thread per chain by default; fewer trades
-    * overlap for less contention on the critical rep chain —
-    * env-tunable for A/B probes (measured on the gate corpus: 7 ≈ 4
-    * within noise, both ~25-35% under sequential; 1 restores the
-    * sequential build). */
-  private val poolSize: Int =
-    sys.env.get("SPARK_GRAFT_MEMO_THREADS").map(_.toInt.max(1))
-      .getOrElse(chains.size)
-
+  /** Builds the chains concurrently, one thread per chain (measured on
+    * the gate corpus: ~25-35% under the sequential build). */
   def build(s: SparkSession, d: String): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(poolSize, chains.size))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(chains.size)
     try {
       val futs = chains.map { steps =>
         pool.submit(new Runnable {

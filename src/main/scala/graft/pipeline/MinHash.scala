@@ -115,7 +115,11 @@ object MinHash {
     // broadcasts all carry it — and INT halves every one of those byte
     // counts. Arithmetic stays in longs above; only the storage narrows,
     // so values are unchanged and the DuckDB oracle (whose SQL twin
-    // keeps BIGINT lists) still agrees on every derived result.
+    // keeps BIGINT lists) still agrees on every derived result. An empty
+    // hash set would leave every slot at Long.MaxValue, which narrows to
+    // -1; shingleHashes never returns one, and the require below fails
+    // loudly if that ever changes.
+    require(n > 0, "signature: no shingle hashes")
     val out = new Array[Int](NumPerm)
     var k = 0
     while (k < NumPerm) { out(k) = sig(k).toInt; k += 1 }
@@ -222,39 +226,12 @@ object MinHash {
     * kernel with zero chunk bookkeeping (the jaccard adaptive-path
     * lesson: the fast path must not pay for the slow path). */
 
-  /** Stage probe, active only under SPARK_GRAFT_MINHASH_PROBE (the
-    * NearDup.mark pattern): cumulative noop-forced deltas. */
-  private def mark(name: String, df: DataFrame): DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_MINHASH_PROBE")) {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      System.err.println(
-        f"[graft.minhash] $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-    df
-  }
-
-  /** Wall-clock stage timer under the same probe env — for the stages
-    * whose cost is an ACTION already (checkpoints, driver probes), where
-    * [[mark]]'s forced noop would double-evaluate them. */
-  private def timed[A](name: String)(f: => A): A =
-    if (sys.env.contains("SPARK_GRAFT_MINHASH_PROBE")
-        || sys.env.contains("SPARK_GRAFT_MINHASH_TIMED")) {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[graft.minhash] $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      r
-    } else f
-
   val BandBucketChunkLen = 4096
 
   /** Broadcast cap for the hot-bucket key set (see the pre-filter in
     * [[repGraph]]): 4M (band, bh) keys ≈ 64 MB — comfortably
-    * broadcastable; beyond it the filter falls back to the full frame.
-    * Env-overridable for A/B probes (0 disables the filter). */
-  val HotBucketKeysMax: Long =
-    sys.env.get("SPARK_GRAFT_HOT_BUCKET_MAX").map(_.toLong).getOrElse(4000000L)
+    * broadcastable; beyond it the filter falls back to the full frame. */
+  val HotBucketKeysMax: Long = 4000000L
 
   private[pipeline] def repGraph(sigs: DataFrame): (DataFrame, DataFrame) =
     repGraph(sigs, BandBucketChunkLen)
@@ -323,10 +300,10 @@ object MinHash {
       .transform(graft.CacheScope.persist)
     val ghCounts = hashed.groupBy(col("gh")).agg(count(lit(1)).as("n"))
       .transform(graft.CacheScope.persist)
-    val stats = timed("collapse_stats_probe")(ghCounts.agg(
+    val stats = ghCounts.agg(
       coalesce(sum(col("n")), lit(0L)).as("total"),
       coalesce(sum(when(col("n") >= 2, col("n"))), lit(0L)).as("dup_rows"),
-      count(when(col("n") >= 2, lit(1))).as("dup_keys")).head())
+      count(when(col("n") >= 2, lit(1))).as("dup_keys")).head()
     val (nTotal, nDupRows, nDupKeys) =
       (stats.getLong(0), stats.getLong(1), stats.getLong(2))
     val grpW = Window.partitionBy(col("gh"), col("sig"))
@@ -335,14 +312,13 @@ object MinHash {
       .withColumn("gid", min(col("doc_id")).over(grpW))
       .withColumn("gsz", count(lit(1)).over(grpW))
       .select(col("doc_id"), col("sig"), col("gid"), col("gsz"))
-    val withG = (if (nDupKeys <= HotBucketKeysMax && nDupRows * 2 <= nTotal) {
+    val withG = if (nDupKeys <= HotBucketKeysMax && nDupRows * 2 <= nTotal) {
       val dupGh = ghCounts.filter(col("n") >= 2).select(col("gh"))
       hashed.join(broadcast(dupGh), Seq("gh"), "left_anti")
         .select(col("doc_id"), col("sig"),
           col("doc_id").as("gid"), lit(1L).as("gsz"))
         .union(windowed(hashed.join(broadcast(dupGh), Seq("gh"), "left_semi")))
-    } else windowed(hashed))
-      .transform(mark("collapse", _))
+    } else windowed(hashed)
     (withG, Seq(hashed, ghCounts))
   }
 
@@ -400,13 +376,11 @@ object MinHash {
     val counts = allBands.groupBy(col("band"), col("bh"))
       .agg(count(lit(1)).as("c"))
       .transform(graft.CacheScope.persist) // feeds probe, hot count, hot keys
-      .transform(mark("bucket_counts", _))
     // One probe job for both bucket statistics (round 14: was two
     // driver round-trips — max(c) then a count — each re-analyzing the
     // counts lineage).
-    val cstats = timed("bucket_stats_probe")(
-      counts.agg(coalesce(max(col("c")), lit(0L)),
-        count(when(col("c") >= 2, lit(1)))).head())
+    val cstats = counts.agg(coalesce(max(col("c")), lit(0L)),
+      count(when(col("c") >= 2, lit(1)))).head()
     val (maxBucket, nHot) = (cstats.getLong(0), cstats.getLong(1))
     val bands = if (nHot <= HotBucketKeysMax)
       allBands.join(broadcast(counts.filter(col("c") >= 2).select("band", "bh")),
@@ -450,8 +424,7 @@ object MinHash {
           col("l.ps"), col("r.ps"), col("l.ci") === col("r.ci"))).as("p"))
       small.union(large)
     }
-    mark("verify_kernel", pairs)
-      .select(col("p._1").as("ga"), col("p._2").as("gb"),
+    pairs.select(col("p._1").as("ga"), col("p._2").as("gb"),
         col("p._3").as("matches"), col("p._4").as("tree"))
   }
 
@@ -735,11 +708,11 @@ object MinHash {
       // by the ContextCleaner once this build returns — only the two
       // skinny memoized frames outlive it), the same
       // one-build-lifetime class as the signature persist it joins.
-      val (withG0, transients) = timed("collapse_plan")(
-        collapseWithTransients(signatures(Tables.documents(s, d))))
+      val (withG0, transients) =
+        collapseWithTransients(signatures(Tables.documents(s, d)))
       val withG = graft.CacheScope.persist(withG0)
-      val members = timed("members_ckpt")(QueryMemo.materialize(
-        withG.select(col("doc_id"), col("gid"), col("gsz"))))
+      val members = QueryMemo.materialize(
+        withG.select(col("doc_id"), col("gid"), col("gsz")))
       // The members checkpoint materialized the withG persist (the
       // window executed once); the hashed/ghCounts transients have no
       // further consumer — release them BEFORE the band/verify phase
@@ -747,15 +720,14 @@ object MinHash {
       // through the build's GC-heavy half (guide §5; the r17 driver
       // sweep read 20 s task GC inside this mark).
       transients.foreach(_.unpersist(blocking = false))
-      val reps = timed("reps_ckpt")(
-        QueryMemo.materialize(withG.filter(col("doc_id") === col("gid"))
-          .select(col("gid"), col("sig"))))
+      val reps = QueryMemo.materialize(withG.filter(col("doc_id") === col("gid"))
+        .select(col("gid"), col("sig")))
       // Same lifecycle cut: reps/members are checkpointed, so the wide
       // withG cache is dead from here on — the verify chain plans over
       // the reps checkpoint alone.
       withG.unpersist(blocking = false)
-      val pairs = timed("pairs_ckpt")(QueryMemo.materialize(
-        verifiedPairsOfReps(reps, BandBucketChunkLen)))
+      val pairs = QueryMemo.materialize(
+        verifiedPairsOfReps(reps, BandBucketChunkLen))
       (members, pairs)
     }
 

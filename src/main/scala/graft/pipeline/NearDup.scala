@@ -177,22 +177,6 @@ object NearDup {
   private[graft] def jaccardDuplicateOf(docs: DataFrame, chunkLen: Int): DataFrame =
     jaccardOverGrams(Grams.triFrame(docs), chunkLen)
 
-  /** Stage probe, active only under SPARK_GRAFT_JACCARD_PROBE: forces
-    * the named frame through a noop sink and prints the delta. With the
-    * pipeline's persists in place, cumulative marks attribute cost per
-    * stage (gramDict is not persisted — its mark double-counts the one
-    * extra evaluation the join pays; read the two lines together). A
-    * no-op in normal runs. */
-  private def mark(name: String, df: DataFrame): DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_JACCARD_PROBE")) {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      System.err.println(
-        f"[graft.jaccard] $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-    df
-  }
-
   /** The PPJoin chain over an already-built `(doc_id, ga)` trigram
     * relation ([[Grams.triFrame]] — or the [[Grams.gramsFor]]
     * checkpoint, which the `dedup_jaccard_dupmap` registration rides so
@@ -233,7 +217,6 @@ object NearDup {
         org.apache.spark.sql.expressions.Window.partitionBy(col("gh"), col("ga"))))
       .drop("gh")
       .transform(graft.CacheScope.persist)
-      .transform(mark("withG", _))
     val repsArr = withG.filter(col("doc_id") === col("gid"))
       .select(col("gid").as("doc_id"), col("ga"))
     // PERSISTED: `grams` feeds the df-count and the dictionary join;
@@ -243,7 +226,6 @@ object NearDup {
       .select(col("doc_id"), col("n"), explode(col("ga")).as("g"))
       .repartition(numParts, col("g"))
       .transform(graft.CacheScope.persist)
-      .transform(mark("grams", _))
     // Dictionary-encode grams as dense ints in global rarity order
     // (document frequency, gram) — EXACT (no hash collisions), and gid
     // order *is* the rarity order, so downstream sorts/windows use the
@@ -266,12 +248,10 @@ object NearDup {
           .select(col("g")).as[String].rdd
           .zipWithIndex().map { case (g, idx) => (g, (idx + 1).toInt) })
       .toDF("g", "gid")
-      .transform(mark("gramDict", _))
     val gramsG = grams.join(gramDict, "g")
       .select(col("doc_id"), col("n"), col("gid"))
       .repartition(numParts, col("doc_id"))
       .transform(graft.CacheScope.persist)
-      .transform(mark("gramsG", _))
     val t = JaccardNumer.toDouble / JaccardDenom
     // rk = position of gid in the doc's grams sorted by global rarity; kept
     // past the prefix cut because the positional filter below needs it.
@@ -282,7 +262,6 @@ object NearDup {
       .select(col("doc_id"), col("gid"), col("n"), col("rk"))
       .repartition(numParts, col("gid"))
       .transform(graft.CacheScope.persist)
-      .transform(mark("prefix", _))
     // Candidate generation + verification, MIN-PARTNER KERNEL form
     // (round 9; the TextEmbed.minPartnerUdf idiom ported to set
     // similarity). The dup map only ever consumes ONE fact per
@@ -322,7 +301,6 @@ object NearDup {
     val gidArr = gramsG.groupBy("doc_id")
       .agg(sort_array(collect_list(col("gid"))).as("ga"))
       .transform(graft.CacheScope.persist)
-      .transform(mark("gidArr", _))
     // The explicit repartition pins the kernel's exchange: postings are
     // small in BYTES (AQE's coalescing currency) but the kernel is
     // CPU-dense — the round-2 probe showed byte-based coalescing
@@ -370,7 +348,6 @@ object NearDup {
     // skips the extra pass — the filter would drop little.
     val prefixM = if (singleRows * 4L >= prefixRows)
       prefix.join(pcounts.filter(col("c") >= 2).select(col("gid")), Seq("gid"))
-        .transform(mark("prefix_multi", _))
     else prefix
     val pairs = if (maxPosting <= chunkLen) {
       prefixM.join(gidArr, "doc_id")
@@ -415,8 +392,7 @@ object NearDup {
           col("l.ps"), col("r.ps"), col("l.ci") === col("r.ci"))).as("p"))
       small.union(large)
     }
-    val verified = mark("pairs", pairs)
-      .select(col("p._1").as("rep"), col("p._2").as("mp"))
+    val verified = pairs.select(col("p._1").as("rep"), col("p._2").as("mp"))
       .groupBy(col("rep"))
       .agg(min(col("mp")).as("mp"))
     // expand rep-level attributions back to members (the shared algebra

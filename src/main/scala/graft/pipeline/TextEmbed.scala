@@ -80,36 +80,16 @@ object TextEmbed {
     * wall at or below baseline (the +34% candidate pairs are absorbed
     * by the ascending early-exit kernel and the one extra plane's finer
     * buckets), recall over the 0.96 bar. */
-  /** Knob parsing note (round-14 review): a malformed value warns and
-    * falls back to the default — never silently, never by throwing from
-    * this object's initializer (an opaque ExceptionInInitializerError). */
-  private def envKnob(name: String, default: Int)(clamp: Int => Int): Int =
-    sys.env.get(name).flatMap { v =>
-      val p = v.trim.toIntOption
-      if (p.isEmpty) System.err.println(
-        s"[graft.textlsh] ignoring malformed $name='$v' (not an integer); using $default")
-      p
-    }.map { p =>
-      // An out-of-range value is clamped, and the clamp must be as loud
-      // as the malformed case (round-14 advice): a knob-curve sweep
-      // that sets COFLIPS=9 but runs 4 would otherwise record an
-      // override it never applied.
-      val c = clamp(p)
-      if (c != p) System.err.println(
-        s"[graft.textlsh] $name=$p out of range; clamped to $c")
-      c
-    }.getOrElse(default)
-
-  val ProbeFlips: Int = envKnob("SPARK_GRAFT_TEXTLSH_FLIPS", 5)(_.max(0))
+  val ProbeFlips: Int = 5
 
   /** Extra bucket sharpening beyond key-count occupancy neutrality:
     * each doubling halves expected occupancy (quartering in-bucket
     * pair work) at the cost of one more straddleable plane — the
-    * probes absorb most of that risk. Env-tunable for A/B probes. */
-  val OccSharpen: Int = envKnob("SPARK_GRAFT_TEXTLSH_SHARPEN", 1)(_.max(1))
+    * probes absorb most of that risk. */
+  val OccSharpen: Int = 1
 
-  /** Co-flip probe-key count (round 14, env-tunable for the recall/cost
-    * frontier sweep): how many XOR-composed keys each vector emits
+  /** Co-flip probe-key count (round 14, from the recall/cost frontier
+    * sweep): how many XOR-composed keys each vector emits
     * beyond its bucket and the [[ProbeFlips]] single flips. The defs
     * below list them in fixed order — pairs over the three
     * smallest-|margin| planes, then the triple — so C=1 is exactly the
@@ -119,8 +99,7 @@ object TextEmbed {
     * combinations compose. Total keys per vector = 1 + T + C, and the
     * plane count derives from that product, keeping the bucket join
     * occupancy-neutral in total keys. */
-  val CoFlips: Int =
-    envKnob("SPARK_GRAFT_TEXTLSH_COFLIPS", 1)(_.max(0).min(4))
+  val CoFlips: Int = 1
 
   /** 1-based sorted-margin index sets of the co-flip keys, in fixed
     * order; defs needing a plane index beyond np drop out (the oracle's
@@ -254,23 +233,6 @@ object TextEmbed {
     * the group's global min, so rep-level verification + the standard
     * member expansion reproduces the all-pairs answer the oracle
     * computes). */
-  /** Stage probe, active only under SPARK_GRAFT_TEXTLSH_PROBE (the
-    * NearDup.mark pattern): cumulative noop-forced deltas. */
-  private def mark(name: String, df: DataFrame): DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_TEXTLSH_PROBE")) {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val pairs =
-        if (name == "verified") {
-          val acc = scannedPairsAcc(df.sparkSession)
-          val v = acc.value; acc.reset(); s" pairs=$v"
-        } else ""
-      System.err.println(
-        f"[graft.textlsh] $name ${(System.nanoTime() - t0) / 1e9}%.1f s$pairs")
-    }
-    df
-  }
-
   /** Memoized documents cardinality (the Similarity.embCountFor
     * pattern): the plane derivation below needs only n, and an
     * un-memoized count opened a full-table job per query invocation. */
@@ -281,7 +243,7 @@ object TextEmbed {
 
   def semanticDedupQuery(docs: DataFrame, threshold: Double = DedupCosine,
       nOpt: Option[Long] = None): DataFrame = {
-    val collapsed = mark("collapsed", bucketedVectors(docs, nOpt))
+    val collapsed = bucketedVectors(docs, nOpt)
     val members = collapsed.select(col("doc_id"), col("gid"))
     // packed sparse vector: dim << 32 | weight in one Long per entry —
     // the verify kernel reads a primitive array instead of deserializing
@@ -317,14 +279,14 @@ object TextEmbed {
     // Worst case (a bucket of mutual non-duplicates) degrades to the
     // same k²/2 merges the join form always paid — with k capped near
     // 128 by the occupancy-targeted plane count.
-    val verified = mark("verified", repVecs
+    val verified = repVecs
       .groupBy(col("bucket"))
       .agg(sort_array(collect_list(struct(col("doc_id"), col("pv")))).as("rs"))
       // singleton buckets (common under multi-probe keys) can emit no
       // pair — skip the kernel row decode for them
       .filter(size(col("rs")) >= 2)
-      .select(explode(minPartnerUdf(docs.sparkSession, threshold)(col("rs"))).as("p"))
-      .select(col("p._1").as("gid"), col("p._2").as("cand")))
+      .select(explode(minPartnerUdf(threshold)(col("rs"))).as("p"))
+      .select(col("p._1").as("gid"), col("p._2").as("cand"))
     // member expansion (the shared algebra of MinHash.duplicateOfSigs /
     // Similarity.dedupFromRepPairs): in-group members attribute to their
     // gid; cross-group to the smallest verified partner gid below them.
@@ -431,29 +393,7 @@ object TextEmbed {
     * the early exit rarely fires (the realistic corpus runs ~254M cosine
     * calls over ~60k reps). Same exact integers, same final IEEE
     * expression — verdicts are bit-identical. */
-  // Probe counter as a Spark LongAccumulator (round-13 advice): the old
-  // JVM-static AtomicLong was incremented executor-side, so any
-  // non-local deployment read pairs=0 on the driver, and speculative or
-  // retried tasks double-counted even locally. Accumulators are
-  // driver-merged and deduplicated on task success — cluster-correct.
-  // Keyed on the SparkContext (round-14 review): a bare static cached
-  // the FIRST session's accumulator, so after a session restart (sbt
-  // suites reuse the JVM) the new context's tasks updated an
-  // accumulator the new driver never registered — dropped silently,
-  // pairs=0, the very symptom the accumulator switch fixed.
-  @volatile private var pairsAcc
-    : (org.apache.spark.SparkContext, org.apache.spark.util.LongAccumulator) = _
-  private def scannedPairsAcc(ss: SparkSession): org.apache.spark.util.LongAccumulator =
-    synchronized {
-      val sc = ss.sparkContext
-      if (pairsAcc == null || (pairsAcc._1 ne sc))
-        pairsAcc = (sc, sc.longAccumulator("graft.textlsh.scanned_pairs"))
-      pairsAcc._2
-    }
-
-  private def minPartnerUdf(ss: SparkSession, threshold: Double) = {
-    val probe = sys.env.contains("SPARK_GRAFT_TEXTLSH_PROBE")
-    val acc = if (probe) scannedPairsAcc(ss) else null
+  private def minPartnerUdf(threshold: Double) =
     udf { rs: Seq[Row] =>
       val n = rs.length
       val ids = new Array[Long](n)
@@ -470,14 +410,12 @@ object TextEmbed {
         norms(i) = nn
         i += 1
       }
-      var scanned = 0L
       val out = Seq.newBuilder[(Long, Long)]
       var b = 1
       while (b < n) {
         var a = 0
         var found = false
         while (a < b && !found) {
-          scanned += 1
           if (cosineGe(vecs(a), vecs(b), norms(a), norms(b), threshold)) {
             out += ((ids(b), ids(a))); found = true
           }
@@ -485,10 +423,8 @@ object TextEmbed {
         }
         b += 1
       }
-      if (probe) acc.add(scanned)
       out.result()
     }
-  }
 
   /** cosine(a, b) >= t over two dim-SORTED packed sparse vectors
     * (entry = dim << 32 | weight), by linear merge: dot over shared dims

@@ -99,73 +99,35 @@ object Similarity {
   //    measured sweep reads 0.32/0.50/0.84 at 8/16/32 subspaces).
   //
   // All three derivations are INTEGER-EXACT and mirrored in the oracle's
-  // params CTE, so engine and oracle agree at every corpus size. The env
-  // overrides below exist for [[graft.ProbeRecall]]'s knob-curve
-  // measurements; oracles interpolate the same override, staying in
-  // lockstep at any setting.
+  // params CTE, so engine and oracle agree at every corpus size.
   // ---------------------------------------------------------------------
 
   val ScanBudget = 4096L
 
-  /** Knob parsing: malformed values are ignored WITH A WARNING — silent
-    * fallback would record a knob-curve run as measuring an override it
-    * never applied (round-14 review), while throwing from an object
-    * initializer surfaces as an opaque ExceptionInInitializerError
-    * (round-13 advice). The warning names the variable and the value. */
-  /** `fallback` names what a dropped override leaves in effect — "the
-    * derived default" is only true for the per-query derivations, not
-    * for a fixed constant like [[FlatMax]] (round-14 advice: the
-    * hardcoded message misled knob sweeps; "(not an integer)" also
-    * overstated the parse type when the target is Long). */
-  private def envNum[T](name: String, fallback: String)(
-      parse: String => Option[T]): Option[T] =
-    sys.env.get(name).flatMap { v =>
-      val p = parse(v.trim)
-      if (p.isEmpty) System.err.println(
-        s"[graft.similarity] ignoring malformed $name='$v' (not a number); using $fallback")
-      p
-    }
-
-  /** IVF probe width override (recall/latency knob curve measurements). */
-  private val nprobeEnv: Option[Int] =
-    envNum("SPARK_GRAFT_NPROBE", "the derived nprobe")(_.toIntOption).map(_.max(1))
-
-  /** LSH Hamming probe radius override. */
-  private val lshRadiusEnv: Option[Int] =
-    envNum("SPARK_GRAFT_LSH_RADIUS", "the derived radius")(_.toIntOption).map(_.max(0))
-
-  /** Corpus-size ceiling for the PQ flat fallback (0 forces the ADC path
-    * at any size — used to measure the compressed-domain recall curve). */
-  val FlatMax: Long =
-    envNum("SPARK_GRAFT_PQ_FLAT_MAX", s"the ScanBudget constant ($ScanBudget)")(
-      _.toLongOption).getOrElse(ScanBudget)
-
   /** Derived IVF probe width: ceil(ScanBudget x cells / n), clamped to
     * [1, cells]. Integer-exact (ceil division). */
-  def nprobeFor(n: Long, cells: Int): Int =
-    nprobeEnv.map(_.min(cells)).getOrElse {
-      val nn = math.max(1L, n)
-      math.min(cells.toLong, math.max(1L, (ScanBudget * cells + nn - 1) / nn)).toInt
-    }
+  def nprobeFor(n: Long, cells: Int): Int = {
+    val nn = math.max(1L, n)
+    math.min(cells.toLong, math.max(1L, (ScanBudget * cells + nn - 1) / nn)).toInt
+  }
 
   /** Derived LSH probe radius: smallest R with C(p, <=R) x n >=
     * ScanBudget x 2^p (i.e. the expected Hamming-<=R ball holds at least
     * the budget), else p (exhaustive). BigInt-exact. */
-  def lshRadiusFor(n: Long, p: Int): Int =
-    lshRadiusEnv.map(_.min(p)).getOrElse {
-      val target = BigInt(ScanBudget) << p
-      var cum = BigInt(0)
-      var c = BigInt(1) // C(p, 0)
-      var r = 0
-      var found = -1
-      while (r <= p && found < 0) {
-        cum += c
-        if (cum * math.max(1L, n) >= target) found = r
-        c = c * (p - r) / (r + 1) // C(p, r+1), exact in this order
-        r += 1
-      }
-      if (found < 0) p else found
+  def lshRadiusFor(n: Long, p: Int): Int = {
+    val target = BigInt(ScanBudget) << p
+    var cum = BigInt(0)
+    var c = BigInt(1) // C(p, 0)
+    var r = 0
+    var found = -1
+    while (r <= p && found < 0) {
+      cum += c
+      if (cum * math.max(1L, n) >= target) found = r
+      c = c * (p - r) / (r + 1) // C(p, r+1), exact in this order
+      r += 1
     }
+    if (found < 0) p else found
+  }
 
   /** Integer bit length: bitLen(x) = length(bin(x)) for x >= 1. */
   private def bitLen(x: Long): Int = 64 - java.lang.Long.numberOfLeadingZeros(x)
@@ -557,7 +519,7 @@ object Similarity {
     val cents = ix.cents
     val cb = ix.cb
     val nprobe = nprobeFor(ix.n, ix.cells)
-    val flat = ix.n <= FlatMax
+    val flat = ix.n <= ScanBudget
     // Bounded collect: the NumQueries query vectors (driver-side tables
     // and probe cells replicate the UDF loops exactly — same arithmetic).
     val qRows = ix.coded.filter(col("vec_id") < NumQueries)
@@ -914,19 +876,15 @@ object Similarity {
   /** The oracle's derived-constant CTEs (cells for the codebook family,
     * np for the hyperplane family, n / nprobe / flat for the serving
     * law) — prepend to any oracle that blocks. The nprobe expression
-    * mirrors [[nprobeFor]] exactly (env override interpolated when set,
-    * else the integer-exact ceil division), and `flat` mirrors the
-    * [[FlatMax]] fallback rule. */
-  private def nprobeSqlExpr: String = nprobeEnv match {
-    case Some(v) => s"least($v, cells)"
-    case None =>
-      s"CAST(least(CAST(cells AS BIGINT), greatest(1, ($ScanBudget * cells + n - 1) // n)) AS INT)"
-  }
+    * mirrors [[nprobeFor]]'s integer-exact ceil division exactly, and
+    * `flat` mirrors the n <= [[ScanBudget]] PQ flat fallback rule. */
+  private def nprobeSqlExpr: String =
+    s"CAST(least(CAST(cells AS BIGINT), greatest(1, ($ScanBudget * cells + n - 1) // n)) AS INT)"
   private def paramsCte =
     s"""params0 AS (SELECT $cellsSql AS cells, $planesSql AS np,
        |  CAST(greatest(1, (SELECT count(*) FROM embeddings)) AS BIGINT) AS n),
        |params AS (SELECT cells, np, n, $nprobeSqlExpr AS nprobe,
-       |  (n <= $FlatMax) AS flat FROM params0)""".stripMargin
+       |  (n <= $ScanBudget) AS flat FROM params0)""".stripMargin
 
   /** DuckDB left-fold squared-L2, same fold order as the JVM argmin loop. */
   private def l2D(a: String, b: String): String =
@@ -1135,11 +1093,7 @@ object Similarity {
     "sim_ann_lsh" -> {
       // The oracle's probe radius mirrors lshRadiusFor exactly: cumulative
       // binomials are integer-exact for np <= MaxPlanes = 20 (20! fits a
-      // HUGEINT), and the env override interpolates like the engine's.
-      val radiusExpr = lshRadiusEnv match {
-        case Some(v) => s"least($v, (SELECT np FROM params))"
-        case None => "(SELECT r FROM radius)"
-      }
+      // HUGEINT).
       s"""WITH $paramsCte,
          |comb AS (SELECT i, factorial(CAST(np AS INT)) // (factorial(CAST(i AS INT)) * factorial(CAST(np - i AS INT))) AS c
          |         FROM range(0, ${MaxPlanes + 1}) t(i), params WHERE i <= np),
@@ -1153,7 +1107,7 @@ object Similarity {
          |         ${dotD("embedding", "q_emb")} AS dot,
          |         ${dotD("embedding", "embedding")} AS na,
          |         ${dotD("q_emb", "q_emb")} AS nb
-         |  FROM b JOIN q ON bit_count(CAST(xor(bucket, q_bucket) AS BIGINT)) <= $radiusExpr AND vec_id <> q_id),
+         |  FROM b JOIN q ON bit_count(CAST(xor(bucket, q_bucket) AS BIGINT)) <= (SELECT r FROM radius) AND vec_id <> q_id),
          |sims AS (SELECT q_id, vec_id, label, dot / (sqrt(na) * sqrt(nb)) AS sim
          |         FROM scored WHERE na > 0 AND nb > 0),
          |ranked AS (SELECT q_id, vec_id, label, sim,

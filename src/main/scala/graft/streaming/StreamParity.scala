@@ -85,23 +85,10 @@ object StreamParity {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outMd = args.lift(1).getOrElse("STREAMPARITY.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // SPARK_GRAFT_MASTER=local-cluster[w,c,mem] replays the parity checks
     // under multi-JVM executors — streaming state stores then live per
-    // executor, the closest local proxy for cluster stateful streaming
-    // (same classpath contract as graft.Verify).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path"))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // executor, the closest local proxy for cluster stateful streaming.
+    val spark = graft.GraftSession.start("graft-stream-parity")
 
     val results = Seq(
       checkCleanDedup(spark, sfDir),

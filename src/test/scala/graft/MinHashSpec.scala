@@ -27,6 +27,16 @@ class MinHashSpec extends SparkSpec {
     assert(s1.sameElements(s2))
   }
 
+  test("signature slots of the shortest texts all lie in [0, P)") {
+    // "" and a 1-char text each have a single shingle hash; no slot may
+    // keep the Long.MaxValue sentinel that narrows to -1
+    Seq("", "x").foreach { t =>
+      val sig = MinHash.signature(t)
+      assert(sig.length == MinHash.NumPerm)
+      assert(sig.forall(v => v >= 0 && v < MinHash.P), t)
+    }
+  }
+
   test("exact duplicate: identical text detected, first-seen (lowest id) wins") {
     val d = docs(1L -> longA, 2L -> longA, 3L -> other)
     val dup = MinHash.duplicateOf(d).as[(Long, Long)].collect().toSet

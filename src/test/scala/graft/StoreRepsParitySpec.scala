@@ -42,10 +42,10 @@ class StoreRepsParitySpec extends SparkSpec {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val derived = MinHash.storeRepsDerived(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toList)).toSet
+      .collect().map(r => (r.getLong(0), r.getSeq[Int](1).toList)).toSet
     val direct = MinHash.storeRepsOf(
         Tables.documents(spark, dir).filter(col("doc_id") % Dedup.DeltaMod =!= 0))
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toList)).toSet
+      .collect().map(r => (r.getLong(0), r.getSeq[Int](1).toList)).toSet
     assert(direct.nonEmpty)
     // fixture sanity for the two boundary cases the equality argument
     // leans on: the 410/411/412 family's store rep is 411 (corpus gid
