@@ -8,9 +8,13 @@ import java.nio.file.{Files, Paths}
   * Counts come from `Sinks.observeStage` observations — exact, collected
   * during the run's existing actions with NO extra pass over the data.
   * Durations are wall-clock phase timers from `Pipeline.run`. One honest
-  * deviation from the eager reference: stages that Catalyst fuses into a
-  * single whole-stage-codegen pass (ingest→clean→dedup→quality evaluate
-  * inside one action) share that action's duration and say so via
+  * deviation from the eager reference: ingest→clean→dedup→quality do
+  * not run one after another. MinHash dedup's probe jobs, run while the
+  * dedup stage is planned, already scan, clean and sign the corpus; the
+  * first action over the quality frame (the tokenizer's word-frequency
+  * aggregation, or the output write when tokenization is off) runs the
+  * rest. The four stages therefore share one window, from just before
+  * the dedup stage is planned to the end of that action, and say so via
   * `custom_metrics.evaluation = "fused"` — per-stage wall-clock is a
   * property of eager row-at-a-time engines, and un-fusing the plan to
   * time stages separately would throw away the engine's main win.

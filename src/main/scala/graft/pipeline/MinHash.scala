@@ -236,12 +236,15 @@ object MinHash {
   private[pipeline] def repGraph(sigs: DataFrame): (DataFrame, DataFrame) =
     repGraph(sigs, BandBucketChunkLen)
 
-  /** Lazy composition for per-batch consumers (streaming dedup, the
-    * chunk-path test hook): identical plan to the pre-round-14 shape.
-    * The memoized batch path ([[repGraphFor]]) materializes the same
-    * two stages around checkpoints instead — see there for why. */
+  /** Per-call composition for the unmemoized consumers ([[dedup]],
+    * streaming dedup, [[clusterEdges]], the chunk-path test hook). The
+    * collapse is persisted through [[graft.CacheScope]]: the bucket-stats
+    * probe, the verified pairs and the members all read it, and on a
+    * duplicate-heavy corpus each read would otherwise re-run the
+    * `repartition(gh)` window (the memoized path, [[repGraphFor]], fixed
+    * the same re-execution in round 14). */
   private[pipeline] def repGraph(sigs: DataFrame, chunkLen: Int): (DataFrame, DataFrame) = {
-    val withG = collapse(sigs)
+    val withG = graft.CacheScope.persist(collapse(sigs))
     val reps = withG.filter(col("doc_id") === col("gid"))
       .select(col("gid"), col("sig"))
     (withG, verifiedPairsOfReps(reps, chunkLen))
@@ -250,7 +253,9 @@ object MinHash {
   /** The identical-signature collapse: `(doc_id, sig, gid, gsz)` where
     * `gid` is the min doc_id among byte-identical signatures and `gsz`
     * the group size. One probe job chooses between the unique-row
-    * bypass and the full window (see inline notes). */
+    * bypass and the full window (see inline notes). The result is lazy;
+    * [[repGraph]] persists it, since its consumers read it several
+    * times. */
   private def collapse(sigs: DataFrame): DataFrame =
     collapseWithTransients(sigs)._1
 
@@ -652,9 +657,14 @@ object MinHash {
   }
   private val sigMatchCountUdf = udf(sigMatchCount _)
 
-  /** D5: the surviving documents (near-dups removed, lowest id wins). */
-  def dedup(docs: DataFrame): DataFrame =
-    dedupAgainst(docs, duplicateOf(docs))
+  /** D5: the surviving documents (near-dups removed, lowest id wins).
+    * `docs` is read twice — by the signature pass and by the survivors'
+    * anti-join — so it is persisted through [[graft.CacheScope]]: an
+    * expensive upstream (the pipeline's clean chain) runs once. */
+  def dedup(docs: DataFrame): DataFrame = {
+    val once = graft.CacheScope.persist(docs)
+    dedupAgainst(once, duplicateOf(once))
+  }
 
   private def dedupAgainst(docs: DataFrame, dups: DataFrame): DataFrame =
     docs.join(dups, docs("doc_id") === dups("duplicate_id"), "left_anti")

@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 /** Config tree + end-to-end orchestrator (reference: src/main.py:44-150
   * `LLMDataPipeline`, configs/pipeline_config.yaml, src/utils/config.py).
   *
-  * The reference materializes a Python list between stages; here the whole
-  * run is ONE lazy plan per output action — clean and quality fuse into a
-  * single codegen stage over the scan, dedup contributes the only wide
-  * exchange, and the sinks are distributed writers. Stage counters come
-  * from `observe` (no extra pass), not driver-side len() calls.
+  * The reference materializes a Python list between stages; here the run
+  * is a few lazy plans joined by persists at the multi-consumer frames
+  * (see [[run]]) — ingest and clean fuse into one codegen pass over the
+  * scan, dedup contributes the wide exchanges, and the sinks are
+  * distributed writers. Stage counters come from `observe` (no extra
+  * pass), not driver-side len() calls.
   */
 object Pipeline {
 
@@ -92,7 +93,11 @@ object Pipeline {
 
   /** Toggleable clean chain (cleaner.py:62-90 constructor flags). The
     * UDF-backed steps (mojibake, NFKC) only enter the plan when enabled,
-    * keeping the default chain fully codegen'd. */
+    * keeping the default chain fully codegen'd. The chain is wrapped in
+    * [[Stage.once]]: the run filters on the cleaned length right after,
+    * and without the barrier `PushDownPredicates` copies the whole chain
+    * (two UDFs + the regex passes) into a scan-level Filter, cleaning
+    * every row twice. */
   def cleanColumn(cfg: CleaningConfig): org.apache.spark.sql.Column = {
     var c = col("text")
     if (cfg.fixMojibake) c = CleanUdfs.fixMojibakeCol(c)
@@ -103,7 +108,7 @@ object Pipeline {
     if (cfg.removeCitations) c = Clean.stripCitations(c)
     c = Clean.stripControl(c)
     if (cfg.normalizeWhitespace) c = Clean.normalizeWhitespace(c)
-    c
+    Stage.once(c)
   }
 
   def dedupStage(df: DataFrame, cfg: DedupConfig): DataFrame =
@@ -122,9 +127,20 @@ object Pipeline {
     * Every stage boundary carries an `observe` counter, so stage counts
     * (and the run summary built from them) cost ZERO extra passes — they
     * resolve as a side effect of the actions the run performs anyway.
-    * The quality frame is the one multi-consumer subtree (passed docs +
-    * tokenizer training + filter-reason histogram), so it is persisted;
-    * everything upstream of it evaluates exactly once. When metrics are
+    *
+    * Each layer's work runs once per document. Where that is arranged:
+    *  - clean: [[cleanColumn]] is a [[Stage.once]] barrier, so the
+    *    min-length filter reads the cleaned column instead of re-running
+    *    the chain below the projection;
+    *  - dedup: [[MinHash.dedup]] persists its input (the cleaned corpus
+    *    feeds both the signature pass and the survivors' anti-join) and
+    *    the identical-signature collapse (its probes and the band/verify
+    *    chain all read it) through [[graft.CacheScope]] — released at the
+    *    caller's `CacheScope.drain()`;
+    *  - quality: the reasoned frame feeds the passed docs, the tokenizer
+    *    training and the filter-reason histogram, so it is persisted;
+    *  - tokenize: the encoded frame feeds both sinks, so it is persisted.
+    * The last two are released before the run returns. When metrics are
     * enabled, a `pipeline_metrics.json` report (utils/metrics.py:138-170
     * shape) lands next to the outputs. */
   def run(docs0: DataFrame, cfg: GraftConfig, outDir: String): DataFrame = {
@@ -132,7 +148,11 @@ object Pipeline {
     val spark = docs0.sparkSession
     def nowS: Double = System.currentTimeMillis() / 1000.0
     val tStart = nowS
-    val docs = cfg.maxDocs.fold(docs0)(n => docs0.limit(n.toInt))
+    val docs = cfg.maxDocs.fold(docs0) { n =>
+      require(n >= 0 && n <= Int.MaxValue,
+        s"ingestion.max_articles = $n is outside [0, ${Int.MaxValue}]")
+      docs0.limit(n.toInt)
+    }
 
     val (ingested, ingestObs) = Sinks.observeStage(docs, "ingest")
     val cleaned = ingested
@@ -142,6 +162,10 @@ object Pipeline {
       .withColumn("cleaned_length", length(col("text")))
     val (cleanedObs, cleanObs) = Sinks.observeStage(cleaned, "clean",
       sum(col("original_length") - col("cleaned_length")).as("chars_removed"))
+    // The fused window opens here: MinHash dedup runs its probe jobs
+    // (which also build the cleaned-corpus and collapse caches) while
+    // the stage is being planned.
+    val tFusedStart = nowS
     val (deduped, dedupObs) = Sinks.observeStage(dedupStage(cleanedObs, cfg.dedup), "dedup")
     // reason column computed once, persisted: feeds the passed-docs branch
     // AND the filter-reason histogram without re-running clean/dedup.
@@ -153,9 +177,11 @@ object Pipeline {
     val (passed, qualityObs) = Sinks.observeStage(passed0, "quality")
 
     val tTrainStart = nowS
-    val out =
-      if (!cfg.tokenization.enabled) passed.withColumn("token_count", lit(null: java.lang.Long))
-      else {
+    // Encoded frame, persisted: both sinks read it, and the encode UDF
+    // would otherwise run once per sink.
+    val tokenized =
+      if (!cfg.tokenization.enabled) None
+      else Some {
         // tokenization.algorithm selects the trainer; all three models
         // share the (train on driver-merged word frequencies, distributed
         // encode UDF) contract — tokenizer.py:58-133's algorithm switch.
@@ -175,7 +201,10 @@ object Pipeline {
         val encUdf = udf(enc)
         passed.withColumn("tokens", encUdf(col("text")))
           .withColumn("token_count", size(col("tokens")).cast("long"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
       }
+    val out = tokenized.getOrElse(
+      passed.withColumn("token_count", lit(null: java.lang.Long)))
     val tTrainEnd = nowS
 
     // S6/S7 final corpus + S8 tokens
@@ -220,24 +249,25 @@ object Pipeline {
           .collect().map(row => row.getString(0) -> row.getLong(1))
       }
       val tEnd = nowS
-      // The fused corpus stages share the action that first materialized
-      // them: the tokenizer's word-frequency aggregation when training is
-      // enabled, the output write otherwise (see Metrics scaladoc).
-      val (fStart, fEnd) =
-        if (cfg.tokenization.enabled) (tTrainStart, tTrainEnd) else (tTrainEnd, tWriteEnd)
+      // The fused corpus stages share one window: from the dedup stage's
+      // planning probes to the end of the action that first materialized
+      // the quality frame — the tokenizer's word-frequency aggregation
+      // when training is enabled, the output write otherwise (see
+      // Metrics scaladoc).
+      val fEnd = if (cfg.tokenization.enabled) tTrainEnd else tWriteEnd
       val fused = Map("evaluation" -> "fused")
       val inRows = obsLong(ingestObs, "rows")
       val cleanRows = obsLong(cleanObs, "rows")
       val dedupRows = obsLong(dedupObs, "rows")
       val passRows = obsLong(qualityObs, "rows")
       val stages = Seq(
-        StageReport("ingest", fStart, fEnd, inRows, inRows, 0, 0,
+        StageReport("ingest", tFusedStart, fEnd, inRows, inRows, 0, 0,
           obsLong(ingestObs, "text_bytes"), fused),
-        StageReport("clean", fStart, fEnd, inRows, cleanRows, inRows - cleanRows, 0,
+        StageReport("clean", tFusedStart, fEnd, inRows, cleanRows, inRows - cleanRows, 0,
           obsLong(cleanObs, "text_bytes"), fused),
-        StageReport("dedup", fStart, fEnd, cleanRows, dedupRows, cleanRows - dedupRows, 0,
+        StageReport("dedup", tFusedStart, fEnd, cleanRows, dedupRows, cleanRows - dedupRows, 0,
           obsLong(dedupObs, "text_bytes"), fused),
-        StageReport("quality", fStart, fEnd, dedupRows, passRows, dedupRows - passRows, 0,
+        StageReport("quality", tFusedStart, fEnd, dedupRows, passRows, dedupRows - passRows, 0,
           obsLong(qualityObs, "text_bytes"), fused),
         StageReport("tokenize", tTrainStart, tWriteEnd, passRows, passRows, 0, 0,
           obsLong(tokenObs, "text_bytes"),
@@ -249,6 +279,7 @@ object Pipeline {
           java.time.Instant.now().toString))
     }
     reasoned.foreach(_.unpersist())
+    tokenized.foreach(_.unpersist())
     summary
   }
 }

@@ -58,6 +58,10 @@ object WikiXml {
         col("page_id"), col("title"), col("namespace"), col("text"),
         regexp_count(col("text"), lit("""\S+""")).as("word_count"),
         length(col("text")).as("char_count"))
-    maxArticles.fold(filtered)(n => filtered.limit(n.toInt))
+    maxArticles.fold(filtered) { n =>
+      require(n >= 0 && n <= Int.MaxValue,
+        s"ingestion.max_articles = $n is outside [0, ${Int.MaxValue}]")
+      filtered.limit(n.toInt)
+    }
   }
 }

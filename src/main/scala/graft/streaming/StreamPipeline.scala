@@ -178,19 +178,19 @@ object StreamPipeline {
     // at the scan and is what makes replays deterministic.
     val storeView = readStore(spark, stateDir)
       .map(_.filter(col("batch_id") < batchId))
-    val storeDup = storeView match {
+    val store = storeView
+      .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val storeDup = store match {
       case None =>
         spark.emptyDataFrame.select(lit(0L).as("doc_id"), lit(0L).as("store_orig"))
           .limit(0)
-      case Some(store0) =>
-        val store = store0
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      case Some(st) =>
         MinHash.bandKeys(sigs).as("b")
-          .join(MinHash.bandKeys(store).withColumnRenamed("doc_id", "store_id").as("s"),
+          .join(MinHash.bandKeys(st).withColumnRenamed("doc_id", "store_id").as("s"),
             col("b.band") === col("s.band") && col("b.bh") === col("s.bh"))
           .select(col("b.doc_id").as("doc_id"), col("store_id")).distinct()
           .join(sigs.select(col("doc_id"), col("sig")), "doc_id")
-          .join(store.select(col("doc_id").as("store_id"), col("sig").as("store_sig")),
+          .join(st.select(col("doc_id").as("store_id"), col("sig").as("store_sig")),
             "store_id")
           .filter(MinHash.sigMatchCol(col("sig"), col("store_sig")))
           .groupBy(col("doc_id"))
@@ -221,6 +221,10 @@ object StreamPipeline {
       .parquet(stateDir)
     verdicts.unpersist()
     sigs.unpersist()
+    store.foreach(_.unpersist())
+    // The batch runs its own query, so it releases the rep-graph
+    // persists duplicateOfSigs registered (CacheScope contract).
+    graft.CacheScope.drain()
   }
 
   /** Streaming sessionization — the streaming twin of

@@ -3,6 +3,9 @@ package graft
 import java.nio.file.Files
 
 import graft.pipeline.{Pipeline, Quality}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
 
 /** Config-driven end-to-end run (reference src/main.py entry point 1). */
@@ -81,5 +84,69 @@ class PipelineSpec extends SparkSpec {
     val summary = Pipeline.run(docs, cfg, out).collect().head
     assert(summary.getAs[Long]("docs_ingested") == 4L)
     assert(summary.getAs[Long]("docs_after_dedup") == 2L) // near-dup 3 survives exact hash
+  }
+
+  test("maxDocs beyond the Int range fails loudly, naming max_articles") {
+    val out = Files.createTempDirectory("pipe").toString
+    val e = intercept[IllegalArgumentException](
+      Pipeline.run(docs, Pipeline.GraftConfig(maxDocs = Some(3000000000L)), out))
+    assert(e.getMessage.contains("max_articles"), e.getMessage)
+  }
+
+  /** `docs` as a parquet scan: a LocalRelation input gets its projections
+    * evaluated by the optimizer, which would hide the plan under test. */
+  private def docsOnDisk(): org.apache.spark.sql.DataFrame = {
+    val dir = Files.createTempDirectory("pipe-in").resolve("docs").toString
+    docs.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("the min-length filter reads the cleaned column: no UDF in a Filter") {
+    val plan = docsOnDisk()
+      .withColumn("text", Pipeline.cleanColumn(Pipeline.CleaningConfig()))
+      .filter(length(col("text")) >= 100)
+      .queryExecution.optimizedPlan
+    val udfFilters = plan.collect {
+      case f: Filter if f.condition.exists(_.isInstanceOf[ScalaUDF]) => f
+    }
+    assert(udfFilters.isEmpty, s"clean chain copied into a Filter:\n$plan")
+  }
+
+  test("each input row is read once per run (clean chain and cleaned corpus evaluate once)") {
+    val reads = spark.sparkContext.longAccumulator("text-reads")
+    val tap = udf { (t: String) => reads.add(1L); t }
+    val out = Files.createTempDirectory("pipe").toString
+    val input = docsOnDisk()
+    Pipeline.run(input.withColumn("text", tap(col("text"))), Pipeline.GraftConfig(), out)
+      .collect()
+    CacheScope.drain()
+    assert(reads.value == input.count(), s"text read ${reads.value} times")
+  }
+
+  test("pipeline_metrics.json: the fused window opens before the run's first job") {
+    import scala.jdk.CollectionConverters._
+    val jobStarts = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobStarts.add(e.time)
+    }
+    val out = Files.createTempDirectory("pipe").toString
+    val t0 = System.currentTimeMillis()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Pipeline.run(docs, Pipeline.GraftConfig(), out).collect()
+      // the bus delivers in order: once one of this run's job starts has
+      // arrived, its first one has too
+      val deadline = System.currentTimeMillis() + 10000L
+      while (!jobStarts.asScala.exists(_ >= t0) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    CacheScope.drain()
+    val firstJobMs = jobStarts.asScala.filter(_ >= t0).min
+    val json = Files.readString(java.nio.file.Paths.get(s"$out/pipeline_metrics.json"))
+    val dedupStart = "\"dedup\": \\{\"stage_name\": \"dedup\", \"start_time\": ([-0-9.E]+)".r
+      .findFirstMatchIn(json).map(_.group(1).toDouble)
+      .getOrElse(fail(s"no dedup start_time in $json"))
+    assert(math.round(dedupStart * 1000) <= firstJobMs,
+      s"dedup window starts at $dedupStart s, after the run's first job at $firstJobMs ms")
   }
 }

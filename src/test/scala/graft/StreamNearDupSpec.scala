@@ -89,4 +89,24 @@ class StreamNearDupSpec extends SparkSpec {
     assert(sigRows.length === 3)
     assert(sigRows.map(_.getLong(0)).toSet === Set(1L, 2L, 4L))
   }
+
+  test("nearDupBatch releases every persist it makes: no cached frames pile up per batch") {
+    val dir = Files.createTempDirectory("snd_rel")
+    val state = dir.resolve("store").toString
+    val out = dir.resolve("verdicts").toString
+    def batch(name: String, rows: String*) = {
+      val f = dir.resolve(name)
+      Files.writeString(f, rows.mkString("", "\n", "\n"))
+      spark.read.schema(StreamPipeline.docSchema).json(f.toString)
+    }
+    val before = spark.sparkContext.getPersistentRDDs.size
+    StreamPipeline.nearDupBatch(batch("b1.json", doc(1, textA), doc(2, textB)), state, out)
+    StreamPipeline.nearDupBatch(
+      batch("b2.json", doc(3, textA), doc(4, textC), doc(5, textA)), state, out)
+    val after = spark.sparkContext.getPersistentRDDs.size
+    assert(after <= before, s"persisted RDDs grew from $before to $after over two batches")
+    val dups = spark.read.parquet(out).filter("is_duplicate").select("doc_id")
+      .collect().map(_.getLong(0)).toSet
+    assert(dups === Set(3L, 5L))
+  }
 }

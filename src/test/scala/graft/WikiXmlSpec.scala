@@ -64,6 +64,13 @@ class WikiXmlSpec extends SparkSpec {
     assert(ids == Set(11L, 15L))
   }
 
+  test("maxArticles caps the articles; past the Int range it fails loudly") {
+    assert(WikiXml.articles(spark, path, Some(1L)).count() == 1L)
+    val e = intercept[IllegalArgumentException](
+      WikiXml.articles(spark, path, Some(3000000000L)))
+    assert(e.getMessage.contains("max_articles"), e.getMessage)
+  }
+
   test("page id is the page-level id, not the revision id") {
     val row = WikiXml.articles(spark, path)
       .filter("title = 'Good Article'").collect().head
