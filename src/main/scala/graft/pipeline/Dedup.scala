@@ -107,11 +107,16 @@ object Dedup {
   /** A line is boilerplate once it appears in this many distinct docs. */
   val LineDropDf = 2
 
-  /** Broadcast bound for the boilerplate-line DROP SET (round 18):
-    * ~60-char lines × 1M ≈ 60 MB framed — comfortably broadcastable;
-    * beyond it the drop join falls back to the shuffled semi join
-    * (AQE skew-splits it). */
-  val LineDropKeysMax: Long = 1000000L
+  /** Broadcast bound, in bytes, for the boilerplate-line DROP SET: its
+    * UTF-8 text plus [[DropKeyOverheadBytes]] per key, an estimate of
+    * the driver `HashSet` it becomes. A row bound cannot bound it: the
+    * paragraph variant's keys are whole paragraphs. Beyond it the drop
+    * join falls back to the shuffled semi join (AQE skew-splits it). */
+  val LineDropBytesMax: Long = 64L << 20
+
+  /** JVM cost of one drop-set key beside its text: String and array
+    * headers plus the hash-set node and its table slot. */
+  val DropKeyOverheadBytes: Long = 64L
 
   /** Cross-document LINE-level dedup (Dolma / RefinedWeb boilerplate
     * removal): a line appearing in >= [[LineDropDf]] DISTINCT documents
@@ -133,12 +138,13 @@ object Dedup {
     * partitioning.
     *
     * Eager: building the plan runs Spark actions. The drop set is
-    * persisted and counted against `dropBroadcastMax`; when it fits,
+    * persisted and sized in bytes against `dropBroadcastMax` (one job
+    * for its key count and text bytes); when it fits,
     * it is also collected to the driver and broadcast, all before this
     * method returns. Past the bound the returned plan stays lazy (the
     * shuffled semi join). */
   def lineDedupQuery(docs: DataFrame, sep: String = "\n",
-      dropBroadcastMax: Long = LineDropKeysMax): DataFrame = {
+      dropBroadcastMax: Long = LineDropBytesMax): DataFrame = {
     // Round-18 reshape (guide §2.3 / §8 "decide with small rows"): the
     // old spelling shipped the exploded LINE TEXT through three
     // corpus-width exchanges — the df-count aggregation, the
@@ -150,7 +156,7 @@ object Dedup {
     // the dropped positions: so ship text through ONE exchange (the
     // df-count partials, skew-spread by its (line, doc_id) distinct
     // stage), semi-join the exploded lines against the broadcast drop
-    // set map-side (count-probed against [[LineDropKeysMax]]; an
+    // set map-side (byte-probed against [[LineDropBytesMax]]; an
     // adversarial corpus falls back to the shuffled semi join, which
     // AQE skew-splits), shuffle only the dropped (doc_id, pos) pairs,
     // and rebuild each doc from its own `text` in one linear kernel
@@ -165,8 +171,11 @@ object Dedup {
         .agg(countDistinct(col("doc_id")).as("line_df"))
         .filter(col("line_df") >= LineDropDf)
         .select(col("line")))
-    if (dropSet.count() <= dropBroadcastMax) {
-      // The whole decision fits the driver (count-probed): ship it as a
+    val size = dropSet
+      .agg(count(lit(1)), coalesce(sum(octet_length(col("line"))), lit(0L)))
+      .head()
+    if (size.getLong(1) + size.getLong(0) * DropKeyOverheadBytes <= dropBroadcastMax) {
+      // The whole decision fits the driver (byte-probed): ship it as a
       // broadcast SET into the rebuild kernel — the main query is then a
       // bare docs scan + one narrow kernel pass, no second explode, no
       // join, no exchange at all (the [[bloomNewDocs]] scan-local-probe

@@ -10,45 +10,39 @@ import org.apache.spark.sql.functions._
   * scan them natively). Format: ISO 28500 (WARC 1.0/1.1) as published;
   * no crawler-specific behavior assumed.
   *
-  * Two framings, selected by `exactFraming`:
+  * One framing: [[WarcFileFormat]], a Spark file source that reads each
+  * record's header block and then exactly its declared `Content-Length`
+  * payload bytes, so a page that quotes a WARC record (the literal
+  * `WARC/1.0` in its text) is extracted whole. A file is never split:
+  * an uncompressed WET file is read whole, one file per task, like a
+  * gzip one. Small files are packed into shared partitions the way
+  * Spark's text source packs them.
   *
-  *  - FAST (default): read the file as text records delimited by the
-  *    `WARC/1.` version line (`lineSep` record splitting — Hadoop's
-  *    reader keeps a single multi-GB uncompressed WET splittable across
-  *    executors at block boundaries). Caveat: a conversion payload that
-  *    itself contains the literal `WARC/1.` (a page about the WARC
-  *    format) splits mid-record — that doc truncates there, and the
-  *    orphan fragment is dropped unless its quoted text happens to spell
-  *    a header-shaped `WARC-Type:` line before its first blank line.
-  *  - EXACT: [[WarcInputFormat]], a Content-Length-honoring record
-  *    reader per the spec's own framing — immune to payload content,
-  *    one task per file (which is what gzip forces anyway, below).
-  *
-  * Both feed the SAME parse: split each record once at its FIRST blank
-  * line (either CRLF or bare-LF form — the earliest of the two, so a
-  * bare-LF-header record whose payload contains a CRLF blank line cuts
-  * at its real header end), extract the named headers from the HEADER
-  * BLOCK ONLY with codegen'd `regexp_extract` (payload text quoting
-  * WARC headers cannot spoof the type screen), and keep the remainder
-  * as the payload — all next to the scan so Catalyst prunes filtered
-  * records before anything wide runs.
+  * On top of the records, one parse: split each record once at its
+  * FIRST blank line (either CRLF or bare-LF form — the earliest of the
+  * two, so a bare-LF-header record whose payload contains a CRLF blank
+  * line cuts at its real header end), extract the named headers from
+  * the HEADER BLOCK ONLY with codegen'd `regexp_extract` (payload text
+  * quoting WARC headers cannot spoof the type screen), and keep the
+  * remainder as the payload — all next to the scan so Catalyst prunes
+  * filtered records before anything wide runs.
   *
   * Compression reality check (the deployment note that matters at
-  * 100 TB): Common Crawl ships `.warc.wet.gz` — gzip is NOT
-  * block-splittable, so one .gz file = one task; the parallelism unit
-  * is the ~53k-file segment listing, not intra-file splits. Point the
-  * reader at the directory (or a glob) and Spark schedules one task per
-  * file — exactly how production WET jobs run. bz2/zstd(hadoop codec)
-  * variants split like the wiki dumps.
+  * 100 TB): Common Crawl ships `.warc.wet.gz`, and gzip is not
+  * block-splittable, so the parallelism unit is the ~53k-file segment
+  * listing, not intra-file splits. Point the reader at the directory (or
+  * a glob): real ~150 MB members exceed the 128 MB packing bound and get
+  * one task each. The codec comes from the file extension.
   *
   * Record shape notes, pinned by WarcWetSpec:
   *   - headers end at the first blank line (CRLF per spec; bare LF
   *     tolerated — both real-world forms appear in the fixture),
   *   - the leading `warcinfo` record and any non-`conversion` record
   *     are dropped for document extraction,
-  *   - under FAST framing `Content-Length` is parsed but not trusted
-  *     for the payload cut (the split already consumed the inter-record
-  *     boundary); under EXACT framing it IS the payload cut.
+  *   - `Content-Length` is the payload cut; a record without one takes
+  *     its payload up to the next version line, and a payload over
+  *     `graft.warc.maxPayloadBytes` (default 256 MB) is truncated with
+  *     the stream kept aligned ([[WarcRecords]]).
   */
 object WarcWet {
 
@@ -57,28 +51,10 @@ object WarcWet {
   val MinTextChars = 50
 
   /** One row per WARC record (any type), `value` = headers + payload
-    * without the leading `WARC/1.` version-line prefix. FAST framing:
-    * the version line is the record separator (every record in a WET
-    * file begins `WARC/1.x`). EXACT framing: [[WarcInputFormat]] emits
-    * the identical value shape with Content-Length-framed payloads. */
-  def records(spark: SparkSession, path: String,
-      exactFraming: Boolean = false): DataFrame = {
-    val rows =
-      if (exactFraming)
-        spark.createDataFrame(
-          spark.sparkContext.newAPIHadoopFile(
-              path,
-              classOf[WarcInputFormat],
-              classOf[org.apache.hadoop.io.LongWritable],
-              classOf[org.apache.hadoop.io.Text],
-              spark.sparkContext.hadoopConfiguration)
-            .map(kv => org.apache.spark.sql.Row(kv._2.toString)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("value",
-              org.apache.spark.sql.types.StringType, nullable = false))))
-      else spark.read.option("lineSep", "WARC/1.").text(path)
-    rows.filter(col("value").contains("WARC-Type:"))
-  }
+    * without the leading `WARC/1.` version-line prefix. */
+  def records(spark: SparkSession, path: String): DataFrame =
+    spark.read.format(classOf[WarcFileFormat].getName).load(path)
+      .filter(col("value").contains("WARC-Type:"))
 
   private def header(name: String): Column =
     // hdr starts with the version remnant ("0\r\n" / "1\r\n"), then
@@ -92,9 +68,8 @@ object WarcWet {
     * blank line (earliest of CRLF / bare-LF — round-16 fix: the old
     * two-branch instr cut preferred a later CRLF blank line over an
     * earlier LF one), headers matched against the header block only. */
-  def parsed(spark: SparkSession, path: String,
-      exactFraming: Boolean = false): DataFrame =
-    records(spark, path, exactFraming)
+  def parsed(spark: SparkSession, path: String): DataFrame =
+    records(spark, path)
       // ONE regex split at the first blank line: [header block, payload].
       // A record with no blank line at all (truncated tail) has no
       // payload; warcinfo-style all-header records keep their (possibly
@@ -123,8 +98,8 @@ object WarcWet {
     * analogue of [[WikiXml.articles]] for web text, with the same
     * derived counts the downstream pipeline stages key on. */
   def documents(spark: SparkSession, path: String,
-      minChars: Int = MinTextChars, exactFraming: Boolean = false): DataFrame =
-    parsed(spark, path, exactFraming)
+      minChars: Int = MinTextChars): DataFrame =
+    parsed(spark, path)
       .filter(lower(col("warc_type")) === "conversion")
       .select(
         col("record_id"), col("target_uri"), col("warc_date"),
@@ -146,9 +121,8 @@ object WarcWet {
     * written corpus, where a collision is detectable and recoverable
     * instead of erased). `source` = the target URI's host (the
     * per-domain grouping key the quality/mixture stages use). */
-  def asDocs(spark: SparkSession, path: String,
-      exactFraming: Boolean = false): DataFrame =
-    documents(spark, path, MinTextChars, exactFraming).select(
+  def asDocs(spark: SparkSession, path: String): DataFrame =
+    documents(spark, path, MinTextChars).select(
       xxhash64(col("record_id")).as("doc_id"),
       col("record_id"),
       regexp_extract(col("target_uri"), "^[a-zA-Z][a-zA-Z0-9+.-]*://([^/]+)", 1)

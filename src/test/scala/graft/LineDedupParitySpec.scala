@@ -68,6 +68,22 @@ class LineDedupParitySpec extends SparkSpec {
     }
   }
 
+  test("paragraphs whose bytes exceed the bound take the shuffled path, " +
+      "however few they are") {
+    val para = (0 until 3).map(i => s"shared paragraph $i " + "word " * 400)
+    val d = Seq(
+      1L -> (para :+ "own one").mkString("\n\n"),
+      2L -> (para :+ "own two").mkString("\n\n")).toDF("doc_id", "text")
+    def joins(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.size
+    // three keys of ~2 KB: over a 4 KB bound, far under the default
+    val over = Dedup.lineDedupQuery(d, "\n\n", dropBroadcastMax = 4096L)
+    assert(joins(over) > 0)
+    assert(joins(Dedup.lineDedupQuery(d, "\n\n")) === 0)
+    assert(collected(over) === collected(oldLineDedup(d, "\n\n")))
+  }
+
   test("empty-line handling: an empty line shared by >= 2 docs drops") {
     val d = Seq(1L -> "a\n\nb", 2L -> "c\n\nd").toDF("doc_id", "text")
     val got = collected(Dedup.lineDedupQuery(d, "\n"))

@@ -4,12 +4,12 @@ import java.nio.file.Files
 
 import graft.sources.WarcWet
 
-/** WARC/WET ingest semantics on an inline fixture: record splitting on
-  * the version line, header parse from the header block only, earliest-
-  * blank-line payload cut (CRLF and bare-LF forms), warcinfo/non-
-  * conversion drop, min-length screen, the gzip whole-file path (the
-  * Common Crawl shipping format), and the Content-Length exact-framing
-  * reader against its separator-splitting fast path. */
+/** WARC/WET ingest semantics on an inline fixture: Content-Length record
+  * framing, header parse from the header block only, earliest-blank-line
+  * payload cut (CRLF and bare-LF forms), warcinfo/non-conversion drop,
+  * min-length screen, the gzip whole-file path (the Common Crawl shipping
+  * format) and its partition packing, missing-length recovery and the
+  * payload cap. */
 class WarcWetSpec extends SparkSpec {
 
   // Long enough (68 words, natural prose) to clear BOTH the source's
@@ -56,9 +56,12 @@ class WarcWetSpec extends SparkSpec {
   private def writeFixture(suffix: String, gz: Boolean = false): String =
     write(fixture, suffix, gz)
 
-  test("records: one row per WARC record, version line is the separator") {
-    val n = WarcWet.records(spark, writeFixture("warc.wet")).count()
-    assert(n === 5)
+  test("records: one row per WARC record, framed by Content-Length") {
+    val p = writeFixture("warc.wet")
+    assert(WarcWet.records(spark, p).count() === 5)
+    // a scan that reads no column still yields one row per record
+    assert(spark.read.format(classOf[graft.sources.WarcFileFormat].getName)
+      .load(p).count() === 5)
   }
 
   test("documents: conversion-only, blank-line payload cut (CRLF and LF), " +
@@ -139,48 +142,43 @@ class WarcWetSpec extends SparkSpec {
     assert(gz.size === 2)
   }
 
-  // ---------------------------------------------------------------------
-  // Exact Content-Length framing (WarcInputFormat)
-  // ---------------------------------------------------------------------
-
-  test("exact framing parity: on a well-formed file both framings yield " +
-      "identical documents (plain and gzip)") {
-    def docset(path: String, exact: Boolean) =
-      WarcWet.documents(spark, path, exactFraming = exact)
-        .select("record_id", "target_uri", "content_length", "text")
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getString(3)))
-        .toSet
-    val p = writeFixture("warc.wet")
-    assert(docset(p, exact = true) === docset(p, exact = false))
-    val g = writeFixture("warc.wet.gz", gz = true)
-    assert(docset(g, exact = true) === docset(g, exact = false))
-    assert(docset(g, exact = true).size === 2)
+  test("gzip members are never split, and small files share partitions: " +
+      "over 8 .gz files no file's records span two partitions, and the scan " +
+      "has fewer partitions than files") {
+    val dir = Files.createTempDirectory("graft-wet-many").toFile
+    for (f <- 0 until 8) {
+      val content = (0 until 5).map(i => rec("conversion", 100 * f + i,
+        s"http://f$f.example/$i", longText)).mkString
+      val out = new java.util.zip.GZIPOutputStream(
+        new java.io.FileOutputStream(new java.io.File(dir, f"part-$f%03d.warc.wet.gz")))
+      out.write(content.getBytes("UTF-8")); out.close()
+    }
+    import org.apache.spark.sql.functions._
+    val recs = WarcWet.records(spark, dir.getAbsolutePath)
+    // per file: distinct scan partitions, records
+    val spans = recs
+      .select(input_file_name().as("file"), spark_partition_id().as("part"))
+      .groupBy("file").agg(countDistinct("part"), count(lit(1)))
+      .collect()
+    assert(spans.length === 8)
+    assert(spans.forall(r => r.getLong(1) == 1L && r.getLong(2) == 5L))
+    assert(recs.rdd.getNumPartitions < 8)
   }
 
-  test("exact framing extracts a payload containing the literal WARC/1. " +
-      "byte-identically, where separator splitting truncates (round-15 " +
-      "verdict #4)") {
+  test("a payload containing the literal WARC/1. is extracted " +
+      "byte-identically, and the record after it parses intact " +
+      "(round-15 verdict #4)") {
     val trap = longText + "\r\nA page ABOUT the format: records begin\r\n" +
       "WARC/1.0\r\nWARC-Type: conversion\r\nand so on.\r\n\r\nAfter the quote."
     val one = rec("conversion", 8, "http://f.example/warc-page", trap) +
       rec("conversion", 9, "http://g.example/next", longText)
-    val p = write(one, "warc.wet")
-    val exact = WarcWet.documents(spark, p, exactFraming = true)
+    val docs = WarcWet.documents(spark, write(one, "warc.wet"))
       .orderBy("target_uri").collect()
-    assert(exact.length === 2)
-    assert(exact(0).getAs[String]("target_uri") === "http://f.example/warc-page")
-    assert(exact(0).getAs[String]("text") === trap) // byte-identical
-    assert(exact(1).getAs[String]("target_uri") === "http://g.example/next")
-    assert(exact(1).getAs[String]("text") === longText)
-    // the fast path truncates the trap doc at the embedded version line
-    // (and, here, the quoted header block even parses as a bogus
-    // conversion fragment) — the documented corruption channel the exact
-    // reader closes
-    val fast = WarcWet.documents(spark, p)
-      .filter(org.apache.spark.sql.functions.col("target_uri")
-        === "http://f.example/warc-page").collect()
-    assert(fast.forall(_.getAs[String]("text") != trap))
+    assert(docs.length === 2)
+    assert(docs(0).getAs[String]("target_uri") === "http://f.example/warc-page")
+    assert(docs(0).getAs[String]("text") === trap) // byte-identical
+    assert(docs(1).getAs[String]("target_uri") === "http://g.example/next")
+    assert(docs(1).getAs[String]("text") === longText)
   }
 
   test("exact framing recovery: a record missing Content-Length degrades " +
@@ -194,11 +192,21 @@ class WarcWetSpec extends SparkSpec {
         "\r\n" + longText + "\r\n\r\n"
     val p = write(noCl + rec("conversion", 11, "http://i.example/ok", longText),
       "warc.wet")
-    val docs = WarcWet.documents(spark, p, exactFraming = true)
+    val docs = WarcWet.documents(spark, p)
       .orderBy("target_uri").collect()
     assert(docs.length === 2)
     assert(docs(0).getAs[String]("text") === longText)
     assert(docs(1).getAs[String]("record_id") === "<urn:uuid:0000-11>")
+  }
+
+  test("a tail record declaring more bytes than the file holds yields " +
+      "the bytes present") {
+    val whole = rec("conversion", 12, "http://j.example/cut", longText + " Tail.")
+    val cut = whole.substring(0, whole.indexOf(" Tail."))
+    val docs = WarcWet.documents(spark,
+      write(rec("conversion", 11, "http://i.example/ok", longText) + cut, "warc.wet"))
+      .orderBy("target_uri").collect()
+    assert(docs.map(_.getAs[String]("text")).toSeq === Seq(longText, longText))
   }
 
   test("exact framing payload cap: an over-cap payload truncates the VALUE " +
@@ -215,9 +223,9 @@ class WarcWetSpec extends SparkSpec {
         rec("conversion", 22, "http://after.example/two", longText + " Two."),
       "warc.wet")
     val hc = spark.sparkContext.hadoopConfiguration
-    hc.setLong(graft.sources.WarcInputFormat.MaxPayloadKey, 1024L)
+    hc.setLong(graft.sources.WarcFileFormat.MaxPayloadKey, 1024L)
     try {
-      val docs = WarcWet.documents(spark, p, exactFraming = true)
+      val docs = WarcWet.documents(spark, p)
         .orderBy("target_uri").collect()
       assert(docs.length === 3)
       val after = docs.filter(_.getAs[String]("target_uri").startsWith("http://after"))
@@ -231,7 +239,7 @@ class WarcWetSpec extends SparkSpec {
       // the declared Content-Length still reads from the headers —
       // consumers can SEE the truncation
       assert(capped.getAs[Long]("content_length") === big.getBytes("UTF-8").length.toLong)
-    } finally hc.unset(graft.sources.WarcInputFormat.MaxPayloadKey)
+    } finally hc.unset(graft.sources.WarcFileFormat.MaxPayloadKey)
   }
 
   test("a nonpositive configured payload cap falls back to the default: " +
@@ -244,13 +252,13 @@ class WarcWetSpec extends SparkSpec {
         rec("conversion", 31, "http://negcap.example/b", longText),
       "warc.wet")
     val hc = spark.sparkContext.hadoopConfiguration
-    hc.setLong(graft.sources.WarcInputFormat.MaxPayloadKey, -1L)
+    hc.setLong(graft.sources.WarcFileFormat.MaxPayloadKey, -1L)
     try {
-      val docs = WarcWet.documents(spark, p, exactFraming = true)
+      val docs = WarcWet.documents(spark, p)
         .orderBy("target_uri").collect()
       assert(docs.length === 2)
       assert(docs(0).getAs[String]("text") === body.trim)
       assert(docs(1).getAs[String]("text") === longText)
-    } finally hc.unset(graft.sources.WarcInputFormat.MaxPayloadKey)
+    } finally hc.unset(graft.sources.WarcFileFormat.MaxPayloadKey)
   }
 }
