@@ -15,7 +15,7 @@ import java.nio.file.{Files, Paths}
   *
   * Counters are cumulative across the whole run and read by delta, so
   * listener-bus lag only ever shifts attribution into the NEXT window
-  * of the same mark loop — and the cleanup barrier (unpersist + GC)
+  * of the same mark loop — and the cleanup barrier (cache release + GC)
   * between windows gives the bus time to drain in practice. Driver-side
   * GC is read directly from the GC MXBeans (task metrics only cover
   * executors; in local mode they share the JVM, but the driver's own
@@ -124,7 +124,7 @@ object Bench {
       }
     // Shared-memo setup mark (round-10 advice): the localCheckpoint memos
     // (MinHash rep graph + dup map, Cluster CC labels, LangModel scores)
-    // deliberately survive the per-rep drain barrier below, so under
+    // deliberately survive the per-rep cleanup barrier below, so under
     // median-of-N the one cold rep that actually built a memo was
     // DISCARDED by the median — the signature/band/verify cost appeared
     // in no reported mark and the summed total silently excluded it.
@@ -175,12 +175,12 @@ object Bench {
         // the mark stops BEFORE the cleanup barrier, matching every
         // per-query mark below ("cleanup time is excluded from the
         // mark"). Through round 16 this mark alone included the
-        // drain+clearCache+GC barrier — round-over-round memo_build
+        // cache-release + GC barrier — round-over-round memo_build
         // comparisons across that boundary carry a ~1-3 s (at 100x)
-        // definitional delta on top of any real change.
+        // definitional delta on top of any real change. Each memo chain
+        // releases its own persisted frames (Memos.build), so the
+        // barrier here is the GC alone.
         val sec = (System.nanoTime() - t0) / 1e9
-        CacheScope.drain()
-        spark.catalog.clearCache()
         System.gc()
         recordSnap("memo_build_shared", snap0)
         Seq("memo_build_shared" -> (if (ok) sec else -1.0))
@@ -221,27 +221,25 @@ object Bench {
         graft.pipeline.QueryMemo.phase = name
         metrics.peakExecMem.set(0L)
         val snap0 = metrics.snapshot()
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
-        // Release this query's persisted intermediates before the next
-        // timed window: operators persist multi-use subtrees (LSH
-        // signatures, gram indexes), and 46 queries' worth of leftover
-        // blocks evict each other mid-query — a full sweep measured
-        // jaccard at 85 s vs 18 s standalone before this. The explicit GC
-        // then collects the freed blocks NOW instead of mid-way through
-        // the next timed window (cross-query GC debt measured as 1.2 vs
-        // 4.2 s swings on the same query, same binary). Cleanup time is
-        // excluded from the mark, matching a per-job submission model.
-        // CacheScope.drain() is the engine's own lifecycle (unpersists
-        // operator-registered frames); clearCache() remains as a belt-
-        // and-braces sweep for anything cached outside the registry.
-        CacheScope.drain()
-        spark.catalog.clearCache()
+        // Each query is a cache scope: its persisted intermediates are
+        // released before the next timed window. Operators persist
+        // multi-use subtrees (LSH signatures, gram indexes), and 46
+        // queries' worth of leftover blocks evict each other mid-query —
+        // a full sweep measured jaccard at 85 s vs 18 s standalone before
+        // the release. The explicit GC then collects the freed blocks NOW
+        // instead of mid-way through the next timed window (cross-query
+        // GC debt measured as 1.2 vs 4.2 s swings on the same query, same
+        // binary). Cleanup time is excluded from the mark, matching a
+        // per-job submission model.
+        val (ok, sec) = CacheScope.within {
+          val t0 = System.nanoTime()
+          val ok =
+            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+            catch { case e: Throwable =>
+              System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
+            }
+          (ok, (System.nanoTime() - t0) / 1e9)
+        }
         System.gc()
         // metric delta read AFTER the barrier: the explicit GC gives the
         // listener bus time to drain the window's late task-end events,
@@ -268,7 +266,7 @@ object Bench {
       (name, sec, okMarks ++ Seq.fill(marks.length - okMarks.length)(-1.0))
     }
     val results = memoMark ++ detailed.map { case (n, s, _) => (n, s) }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+    val qs = results.map { case (k, v) => Json.quote(k) + ":" + v }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val nFail = results.count(_._2 < 0)
@@ -284,7 +282,7 @@ object Bench {
     late.foreach { case (k, s) =>
       System.err.println(f"[bench] late memo build $k ${s}%.1f s")
     }
-    val lateJson = late.map { case (k, v) => "\"" + k + "\":" + v }
+    val lateJson = late.map { case (k, v) => Json.quote(k) + ":" + v }
       .mkString("{", ",", "}")
     // Per-mark rep spread (round-14 verdict #3): the driver sweep read
     // tok_stats at 3.63 s where the same binary read 0.71 s on the
@@ -300,7 +298,7 @@ object Bench {
       if (v < 0) "null"
       else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val spreadJson = detailed.map { case (n, _, m) =>
-      "\"" + n + "\":[" + m.map(f3).mkString(",") + "]"
+      Json.quote(n) + ":[" + m.map(f3).mkString(",") + "]"
     }.mkString("{", ",", "}")
     // Per-mark metric deltas in RUN order (rep 1..N — unlike rep_spread,
     // which sorts; run order aligns with round_sec, so "which round was
@@ -315,7 +313,7 @@ object Bench {
         snaps.map(f(_).toString).mkString("[", ",", "]")
       def mbs(f: ((BenchMetricsListener.Snap, Long)) => Long) =
         snaps.map(s => f3(f(s) / 1048576.0)).mkString("[", ",", "]")
-      "\"" + n + "\":{\"gc_ms\":" + longs(_._1.gcMs) +
+      Json.quote(n) + ":{\"gc_ms\":" + longs(_._1.gcMs) +
         ",\"drv_gc_ms\":" + longs(_._1.drvGcMs) +
         ",\"spill_mb\":" + mbs(_._1.spillBytes) +
         ",\"shuffle_mb\":" + mbs(_._1.shuffleWriteBytes) +
@@ -356,7 +354,7 @@ object Bench {
         "dedup_minhash_dupmap,sim_embed_dedup_mp," +
           "tok_encode,r_q1_pricing_summary").split(",").map(_.trim).filter(_.nonEmpty)
       val ref = sys.env.getOrElse("SPARK_GRAFT_CONTROL_REF", jar)
-      def refJson = "\"ref\":\"" + jsonEscape(ref) + "\""
+      def refJson = "\"ref\":" + Json.quote(ref)
       try {
         import scala.jdk.CollectionConverters._
         val outFile = Files.createTempFile("graft_control_", ".json")
@@ -384,33 +382,18 @@ object Bench {
         // messages span lines — a raw newline here would break the
         // one-line JSON contract AFTER spark.stop(), losing the whole
         // sweep's output (round-17 review).
-        val msg = jsonEscape(Option(e.getMessage).getOrElse(e.getClass.getName))
+        val msg = Json.quote(Option(e.getMessage).getOrElse(e.getClass.getName))
         System.err.println(s"[bench] control run FAILED: $msg")
-        s"""{$refJson,"error":"$msg"}"""
+        s"""{$refJson,"error":$msg}"""
       }
     }
     val controlField = controlJson.map(c => s""","control":$c""").getOrElse("")
-    // (helper lives below main: JSON string-literal escaping for the few
-    // free-text fields — paths and error messages — that enter the
-    // artifact; everything else is numeric or name-controlled.)
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","calibration_sec":$calJson,"master":"${jsonEscape(master)}","queries":$qs,"failed":$nFail,"reps":$reps,"round_sec":$roundJson,"rep_spread":$spreadJson,"mark_metrics":$metricsJson,"late_memo_builds":$lateJson$controlField,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","calibration_sec":$calJson,"master":${Json.quote(master)},"queries":$qs,"failed":$nFail,"reps":$reps,"round_sec":$roundJson,"rep_spread":$spreadJson,"mark_metrics":$metricsJson,"late_memo_builds":$lateJson$controlField,"sf":${Json.quote(sfDir)}}"""
     println(json)
     // stdout goes through sbt's [info] prefix, which broke the driver's
     // parser in round 1 — also drop the raw line where it can be read back.
     Files.writeString(Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "/root/repo/bench_out.json")), json + "\n")
-  }
-
-  private def jsonEscape(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '\\' => b.append("\\\\")
-      case '"'  => b.append("\\\"")
-      case c if c < 0x20 =>
-        b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.toString
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling probe for `dedup_delta_minhash` (round-16; r15 verdict #5's
@@ -18,9 +17,9 @@ import org.apache.spark.sql.functions._
   *     corpus's store: 10x the corpus should move the reading by far
   *     less than 10x (only the store band-key scan term grows).
   *
-  * Timings use the bench cleanup barrier between marks (drain +
-  * clearCache + GC) so persisted delta intermediates never leak across
-  * marks. Store state is memoized exactly as in production
+  * Each mark is a [[CacheScope.within]] scope followed by a GC, so
+  * persisted delta intermediates never leak across marks. Store state
+  * is memoized exactly as in production
   * ([[graft.pipeline.MinHash.sigStoreFor]]).
   */
 object ProbeDelta {
@@ -31,10 +30,10 @@ object ProbeDelta {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def barrier(spark: SparkSession): Unit = {
-    CacheScope.drain()
-    spark.catalog.clearCache()
+  private def mark[T](body: => T): T = {
+    val r = CacheScope.within(body)
     System.gc()
+    r
   }
 
   def main(args: Array[String]): Unit = {
@@ -54,32 +53,34 @@ object ProbeDelta {
     dirs.foreach { d =>
       val docs = Tables.documents(spark, d)
       val nStore = docs.filter(col("doc_id") % mod =!= 0).count()
-      val buildSec = timed(MinHash.sigStoreFor(spark, d))
+      val buildSec = mark(timed(MinHash.sigStoreFor(spark, d)))
       val (storeSigs, storeBands) = MinHash.sigStoreFor(spark, d)
       // leg 1: delta-proportionality (fixed store, 3 delta sizes)
       Seq(mod * 16, mod * 4, mod).foreach { m =>
-        val delta = docs.filter(col("doc_id") % m === 0)
-        val nDelta = delta.count()
-        // one measured execution (round-16 review); the dup-row count
-        // for the report re-reads the persisted chain untimed afterwards
-        val dm = MinHash.deltaDupMapOf(MinHash.signatures(delta),
-          storeSigs, storeBands)
-        val sec = timed {
-          dm.write.format("noop").mode("overwrite").save()
+        mark {
+          val delta = docs.filter(col("doc_id") % m === 0)
+          val nDelta = delta.count()
+          // one measured execution (round-16 review); the dup-row count
+          // for the report re-reads the persisted chain untimed afterwards
+          val dm = MinHash.deltaDupMapOf(MinHash.signatures(delta),
+            storeSigs, storeBands)
+          val sec = timed {
+            dm.write.format("noop").mode("overwrite").save()
+          }
+          val rows = dm.count()
+          println(f"| $d | $nStore | ${buildSec}%.1f | $nDelta (mod $m) | $sec%.2f | $rows |")
         }
-        val rows = dm.count()
-        println(f"| $d | $nStore | ${buildSec}%.1f | $nDelta (mod $m) | $sec%.2f | $rows |")
-        barrier(spark)
       }
       // leg 2: fixed-size delta (corpus-independence)
-      val fixed = docs.filter(col("doc_id") % mod === 0).limit(500)
-      val nFixed = fixed.count()
-      val sec = timed {
-        MinHash.deltaDupMapOf(MinHash.signatures(fixed), storeSigs, storeBands)
-          .write.format("noop").mode("overwrite").save()
+      mark {
+        val fixed = docs.filter(col("doc_id") % mod === 0).limit(500)
+        val nFixed = fixed.count()
+        val sec = timed {
+          MinHash.deltaDupMapOf(MinHash.signatures(fixed), storeSigs, storeBands)
+            .write.format("noop").mode("overwrite").save()
+        }
+        println(f"| $d | $nStore | ${buildSec}%.1f | $nFixed (fixed 500) | $sec%.2f | - |")
       }
-      println(f"| $d | $nStore | ${buildSec}%.1f | $nFixed (fixed 500) | $sec%.2f | - |")
-      barrier(spark)
     }
     spark.stop()
   }

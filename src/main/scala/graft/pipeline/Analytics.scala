@@ -11,7 +11,8 @@ import graft.Tables
   */
 object Analytics {
 
-  /** O1: filter-reason report sorted by count desc (metrics.py:210-215).
+  /** O1 `quality_reason_report`: filter-reason report sorted by count
+    * desc (metrics.py:210-215).
     * Deterministic secondary sort on the reason label; the global sort
     * runs over <= 12 rows, post-aggregation (the reason enum bounds the
     * cardinality) — trivially scale-safe. The total for the share column
@@ -19,11 +20,9 @@ object Analytics {
     * frame, combined back by a 1-row broadcast cross join — not an
     * unpartitioned window, which would funnel through WindowExec's
     * single-partition path (and re-deriving the total from `docs` would
-    * scan the corpus twice). */
-  def reasonReportQuery(docs: DataFrame, cfg: Quality.Config = Quality.Config()): DataFrame =
-    reasonReportOver(Quality.withReason(docs, cfg))
-
-  /** The report over any reason-carrying frame — the registration
+    * scan the corpus twice).
+    *
+    * The report runs over any reason-carrying frame — the registration
     * passes the memoized default-config verdicts ([[Quality.reasonsFor]]). */
   private[pipeline] def reasonReportOver(reasons: DataFrame): DataFrame = {
     val byReason = reasons

@@ -73,13 +73,9 @@ object Bpe {
     /** T3: JSON round-trip (hand-rolled writer; Jackson reader from the
       * Spark classpath). */
     def toJson: String = {
-      def esc(s: String) = s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      }
       val v = vocab.toSeq.sortBy(_._2)
-        .map { case (t, i) => s""""${esc(t)}": $i""" }.mkString("{", ", ", "}")
-      val m = merges.map { case (a, b) => s""""${esc(a + " " + b)}"""" }
+        .map { case (t, i) => s"${graft.Json.quote(t)}: $i" }.mkString("{", ", ", "}")
+      val m = merges.map { case (a, b) => graft.Json.quote(a + " " + b) }
         .mkString("[", ", ", "]")
       s"""{"model": "bpe", "vocab": $v, "merges": $m}"""
     }

@@ -36,9 +36,6 @@ object Clean {
   /** Python str.strip() trims all whitespace, not just spaces. */
   val EdgeWsRe = """^\s+|\s+$"""
 
-  /** Whitespace-token count == Python len(text.split()); no empty-edge cases. */
-  val NonSpaceRunRe = """\S+"""
-
   /** Strip URLs (reference cleaner.py:118-122). */
   def stripUrls(c: Column): Column = regexp_replace(c, UrlRe, " ")
   /** Strip emails (reference cleaner.py:124-128). */
@@ -60,9 +57,6 @@ object Clean {
     * this chain stays 100% built-in (codegen + oracle-comparable). */
   def cleanText(c: Column): Column =
     normalizeWhitespace(stripControl(stripCitations(stripEmails(stripUrls(c)))))
-
-  /** Count of whitespace-delimited words, == Python len(text.split()). */
-  def wordCount(c: Column): Column = regexp_count(c, lit(NonSpaceRunRe))
 
   // ---------------------------------------------------------------------
   // Web-corpus cleaners (beyond the wiki-centric reference): PII

@@ -346,8 +346,4 @@ object CleanUdfs {
   /** Column forms. Deterministic (default for Scala UDFs). */
   def nfkcCol(c: Column): Column = udf(nfkc _).apply(c)
   def fixMojibakeCol(c: Column): Column = udf(fixText _).apply(c)
-
-  /** F1+F2 prefix of the full clean chain (cleaner.py:92-116 order:
-    * ftfy text fix, then NFKC, then the regex steps in [[Clean.cleanText]]). */
-  def fixAndNormalize(c: Column): Column = nfkcCol(fixMojibakeCol(c))
 }

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.Tables
 
 /** Transitive duplicate clustering: connected components over the
@@ -56,8 +55,12 @@ object Cluster {
     *    re-joining its edges can never lower a neighbor again), and
     *  - convergence is decided by a short-circuit `isEmpty` scan of the
     *    round's own materialized checkpoint — not the former separate
-    *    join-with-previous-labels + count() job per round. */
-  def connectedComponents(pairs: DataFrame): DataFrame = {
+    *    join-with-previous-labels + count() job per round.
+    *
+    * The returned labels are checkpointed, so the call is a
+    * [[graft.CacheScope.within]] scope: the persisted edge list is
+    * released when it returns or throws. */
+  def connectedComponents(pairs: DataFrame): DataFrame = graft.CacheScope.within {
     // Plan-truncation strategy per round (round-6 verdict #8): when the
     // session has a reliable checkpoint directory configured
     // (`spark.sparkContext.setCheckpointDir` — HDFS/object store on a
@@ -95,7 +98,7 @@ object Cluster {
     }
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.CacheScope.persist)
     // round 0: label(v) = min(v, min neighbor) — the same single
     // exchange the old distinct() paid (groupBy on src), but a CLIQUE
     // converges at initialization: every member's min neighbor already
@@ -139,7 +142,6 @@ object Cluster {
       labels = jumped
       rounds += 1
     }
-    edges.unpersist()
     require(!anyChanged, s"connectedComponents did not converge in $MaxRounds rounds")
     // observability: rounds ~ log(component diameter) — the number that
     // decides iteration cost at scale (scale-probe sweeps read it).
@@ -271,10 +273,9 @@ object Cluster {
     * only its ~log-diameter label rounds on the verified REP pairs and
     * one member-expansion join. The memo holds the expanded label
     * state, eagerly `localCheckpoint`ed (plan truncated to the
-    * checkpointed blocks — `spark.catalog.clearCache()` between bench
-    * queries clears SQL-cached relations, not these), so sibling
-    * queries are a cached-partition scan. Capacity-bound + fingerprint
-    * invalidation: [[QueryMemo]]. */
+    * checkpointed blocks, which no [[graft.CacheScope]] release
+    * touches), so sibling queries are a cached-partition scan.
+    * Capacity-bound + fingerprint invalidation: [[QueryMemo]]. */
   // Round 11 (verdict r10 task #1b, stronger form): CC runs over the
   // REP-pair graph only, not the member-level star union — the label
   // state shrinks from corpus cardinality to the verified near-dup rep

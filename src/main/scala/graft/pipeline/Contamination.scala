@@ -364,10 +364,6 @@ object Contamination {
     private val cands = new Array[Int](ix.benchDocIds.length)
     private var stamp = 0
 
-    /** max Jaccard vs bench docs sharing ≥ 1 rare gram; None if none. */
-    def maxJaccard(ga: Seq[String]): Option[Double] =
-      bestMatch(ga).map(_._2)
-
     /** (bench doc_id, Jaccard) of the BEST-matching candidate — ties on
       * bit-equal Jaccard break to the smallest bench doc_id, the same
       * total order as the oracle's `ORDER BY jac DESC, bench_id`. */

@@ -638,8 +638,8 @@ object LangModel {
     * recomputing the corpus bigram model for it doubles the pair's cost
     * for zero information (the same reasoning, mechanism, and eviction
     * policy as `Cluster.ccMemo`). `localCheckpoint` materializes the
-    * per-doc score rows into block storage that survives the bench
-    * harness's per-query `CacheScope.drain()`/`clearCache()`; capacity
+    * per-doc score rows into block storage that survives the per-query
+    * [[graft.CacheScope]] release of Bench and Verify; capacity
     * bound + data-fingerprint invalidation: [[QueryMemo]]. */
   private val lmMemo = new QueryMemo[DataFrame](name = "lm_scores")
   private[graft] def scoresFor(s: SparkSession, d: String): DataFrame =

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   *
   * The localCheckpoint memos (MinHash rep graph + dup map, Cluster CC
   * labels, LangModel transition scores) deliberately survive the bench
-  * harness's per-rep `CacheScope.drain()`/`clearCache()` barrier — they
-  * are the "build the dedup index once, query it many times" model a
+  * harness's per-query [[graft.CacheScope]] release — they are the
+  * "build the dedup index once, query it many times" model a
   * production pipeline amortizes the same way. That made median-of-N
   * timing dishonest: the one cold rep that actually built a memo was
   * discarded by the median, so the signature/band/verify cost appeared
@@ -36,8 +36,9 @@ object Memos {
     * so every shared [[QueryMemo]] is populated before its dependents
     * look it up, and each memo's own lock serializes any residual race
     * to a single evaluation. Results are build-order independent; the
-    * per-build `timed` lines now overlap in wall-clock. */
-  private val chains: Seq[Seq[(String, (SparkSession, String) => Any)]] = Seq(
+    * per-build `timed` lines now overlap in wall-clock. [[graft.ProbeMemo]]
+    * times the same steps one at a time, in list order. */
+  private[graft] val chains: Seq[Seq[(String, (SparkSession, String) => Any)]] = Seq(
     Seq( // rep graph: eager checkpoints; ONE member-attribution pass
       // (round 13) materializes dup-map + cluster labels together —
       // dupsFor / clustersFor are filter-projections of its checkpoint.
@@ -62,13 +63,18 @@ object Memos {
     Seq("lexicon" -> ((s, d) => Bpe.lexiconFor(s, d))))
 
   /** Builds the chains concurrently, one thread per chain (measured on
-    * the gate corpus: ~25-35% under the sequential build). */
+    * the gate corpus: ~25-35% under the sequential build). Each chain is
+    * a [[graft.CacheScope.within]] scope on its own thread: the frames a
+    * chain persists live until its last step has read them, and no
+    * chain releases another's. */
   def build(s: SparkSession, d: String): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(chains.size)
     try {
       val futs = chains.map { steps =>
         pool.submit(new Runnable {
-          def run(): Unit = steps.foreach { case (n, f) => timed(n)(f(s, d)) }
+          def run(): Unit = graft.CacheScope.within {
+            steps.foreach { case (n, f) => timed(n)(f(s, d)) }
+          }
         })
       }
       futs.foreach(_.get()) // propagate the first failing chain

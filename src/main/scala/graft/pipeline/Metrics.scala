@@ -44,18 +44,12 @@ final case class StageReport(
 
 object Metrics {
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
+  import graft.Json.quote
 
   private def stageJson(s: StageReport): String = {
     val custom = s.customMetrics.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }.mkString("{", ", ", "}")
-    s"""{"stage_name": "${esc(s.stageName)}", "start_time": ${s.startTime}, "end_time": ${s.endTime}, "duration_seconds": ${s.durationSeconds}, "input_count": ${s.inputCount}, "output_count": ${s.outputCount}, "filtered_count": ${s.filteredCount}, "error_count": ${s.errorCount}, "bytes_processed": ${s.bytesProcessed}, "throughput": ${s.throughput}, "filter_rate": ${s.filterRate}, "custom_metrics": $custom}"""
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ", ", "}")
+    s"""{"stage_name": ${quote(s.stageName)}, "start_time": ${s.startTime}, "end_time": ${s.endTime}, "duration_seconds": ${s.durationSeconds}, "input_count": ${s.inputCount}, "output_count": ${s.outputCount}, "filtered_count": ${s.filteredCount}, "error_count": ${s.errorCount}, "bytes_processed": ${s.bytesProcessed}, "throughput": ${s.throughput}, "filter_rate": ${s.filterRate}, "custom_metrics": $custom}"""
   }
 
   /** metrics.py:151-161 `to_dict` shape (+ the derived fields the
@@ -66,10 +60,10 @@ object Metrics {
       filterReasons: Seq[(String, Long)],
       timestamp: String): String = {
     val stagesJson = stages
-      .map(s => s""""${esc(s.stageName)}": ${stageJson(s)}""").mkString("{", ", ", "}")
+      .map(s => s"${quote(s.stageName)}: ${stageJson(s)}").mkString("{", ", ", "}")
     val reasonsJson = filterReasons
-      .map { case (r, n) => s""""${esc(r)}": $n""" }.mkString("{", ", ", "}")
-    s"""{"pipeline_duration_seconds": $pipelineDurationSeconds, "stages": $stagesJson, "filter_reasons": $reasonsJson, "timestamp": "${esc(timestamp)}"}"""
+      .map { case (r, n) => s"${quote(r)}: $n" }.mkString("{", ", ", "}")
+    s"""{"pipeline_duration_seconds": $pipelineDurationSeconds, "stages": $stagesJson, "filter_reasons": $reasonsJson, "timestamp": ${quote(timestamp)}}"""
   }
 
   /** metrics.py:163-170 `save` */

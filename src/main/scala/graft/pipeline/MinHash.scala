@@ -268,7 +268,8 @@ object MinHash {
     * corpus × 1.1 KB of dead blocks still pinned (the r17 driver sweep
     * read 20 s of task GC inside this one mark). Unpersist here is
     * lifecycle-only: [[graft.CacheScope]] still registers both frames,
-    * and its later drain no-ops on the already-released entries. */
+    * and the enclosing scope's release no-ops on the already-released
+    * entries. */
   private def collapseWithTransients(
       sigs: DataFrame): (DataFrame, Seq[DataFrame]) = {
     import org.apache.spark.sql.expressions.Window
@@ -713,8 +714,8 @@ object MinHash {
       // ONCE), the wide rep frame checkpoints off the cache, and the
       // whole band/verify chain — bucket probes included — plans over
       // that small checkpointed lineage. Transient block cost: withG
-      // (corpus × ~1.1 KB, MEMORY_AND_DISK, released at CacheScope
-      // drain) plus the rep checkpoint (unique-sig × ~1.1 KB, released
+      // (corpus × ~1.1 KB, MEMORY_AND_DISK, released below once the
+      // reps checkpoint has read it) plus the rep checkpoint (unique-sig × ~1.1 KB, released
       // by the ContextCleaner once this build returns — only the two
       // skinny memoized frames outlive it), the same
       // one-build-lifetime class as the signature persist it joins.

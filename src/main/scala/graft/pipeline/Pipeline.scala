@@ -135,16 +135,16 @@ object Pipeline {
     *  - dedup: [[MinHash.dedup]] persists its input (the cleaned corpus
     *    feeds both the signature pass and the survivors' anti-join) and
     *    the identical-signature collapse (its probes and the band/verify
-    *    chain all read it) through [[graft.CacheScope]] — released at the
-    *    caller's `CacheScope.drain()`;
+    *    chain all read it);
     *  - quality: the reasoned frame feeds the passed docs, the tokenizer
     *    training and the filter-reason histogram, so it is persisted;
     *  - tokenize: the encoded frame feeds both sinks, so it is persisted.
-    * The last two are released before the run returns. When metrics are
+    * The run is a [[graft.CacheScope.within]] scope: every frame it
+    * persists, those four included, is released when it returns or
+    * throws. The returned summary is a local frame. When metrics are
     * enabled, a `pipeline_metrics.json` report (utils/metrics.py:138-170
     * shape) lands next to the outputs. */
-  def run(docs0: DataFrame, cfg: GraftConfig, outDir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def run(docs0: DataFrame, cfg: GraftConfig, outDir: String): DataFrame = graft.CacheScope.within {
     val spark = docs0.sparkSession
     def nowS: Double = System.currentTimeMillis() / 1000.0
     val tStart = nowS
@@ -171,7 +171,7 @@ object Pipeline {
     // AND the filter-reason histogram without re-running clean/dedup.
     val reasoned =
       if (cfg.qualityEnabled)
-        Some(Quality.withReason(deduped, cfg.quality).persist(StorageLevel.MEMORY_AND_DISK))
+        Some(graft.CacheScope.persist(Quality.withReason(deduped, cfg.quality)))
       else None
     val passed0 = reasoned.fold(deduped)(_.filter(col("reason") === "passed").drop("reason"))
     val (passed, qualityObs) = Sinks.observeStage(passed0, "quality")
@@ -201,7 +201,7 @@ object Pipeline {
         val encUdf = udf(enc)
         passed.withColumn("tokens", encUdf(col("text")))
           .withColumn("token_count", size(col("tokens")).cast("long"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(graft.CacheScope.persist)
       }
     val out = tokenized.getOrElse(
       passed.withColumn("token_count", lit(null: java.lang.Long)))
@@ -278,8 +278,6 @@ object Pipeline {
         Metrics.reportJson(tEnd - tStart, stages, filterReasons,
           java.time.Instant.now().toString))
     }
-    reasoned.foreach(_.unpersist())
-    tokenized.foreach(_.unpersist())
     summary
   }
 }

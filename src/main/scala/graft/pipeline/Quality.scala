@@ -191,34 +191,21 @@ object Quality {
       col("m_langdet").as("detected_language"),
       expr(reasonOverCols(cfg)).as("reason"))
 
-  /** Q10/A3: histogram of filter reasons (quality_filter.py:272-287,
-    * src/main.py:281-292) — one shuffle on a ≤12-value key. */
-  def histogramQuery(docs: DataFrame, cfg: Config = Config()): DataFrame =
-    withReason(docs, cfg).groupBy("reason").agg(count(lit(1)).as("n_docs"))
-
   /** The surviving documents (filter_batch keep-side, quality_filter.py:276-281). */
   def passedQuery(docs: DataFrame, cfg: Config = Config()): DataFrame =
     withReason(docs, cfg).filter(col("reason") === "passed")
       .select("doc_id", "lang", "source", "n_chars")
 
-  /** Same cascade at the reference's own thresholds (VERDICT r1 #7: parity
-    * with quality_filter.py defaults demonstrated, not just claimed). */
-  def histogramReferenceQuery(docs: DataFrame): DataFrame =
-    histogramQuery(docs, Config.reference)
-
-  /** Per-source cascade outcome rates — the source-curation report:
-    * which ingest sources fail which filters, and each source's pass
-    * rate. Domain-level quality rates are what decide keep/drop/reweight
-    * for a source at 100 TB (the RefinedWeb/Gopher per-domain audits);
-    * the per-doc cascade (`quality_cascade`) can't answer that without a
-    * client-side rollup. One ≤(sources × reasons)-key aggregation over
-    * the cascade projection; the pass-rate float is one IEEE division of
-    * two exact counts, computed per (source, reason) row against the
-    * source total via a broadcast self-join of the tiny rollup. */
-  def bySourceQuery(docs: DataFrame, cfg: Config = Config()): DataFrame =
-    bySourceOver(withReason(docs, cfg))
-
-  /** The rollup over any (source, reason) frame — the registration
+  /** `quality_by_source`: per-source cascade outcome rates — the
+    * source-curation report: which ingest sources fail which filters, and
+    * each source's pass rate. Domain-level quality rates are what decide
+    * keep/drop/reweight for a source at 100 TB (the RefinedWeb/Gopher
+    * per-domain audits); the per-doc cascade (`quality_cascade`) can't
+    * answer that without a client-side rollup. One ≤(sources ×
+    * reasons)-key aggregation; the pass-rate float is one IEEE division of
+    * two exact counts.
+    *
+    * The rollup runs over any (source, reason) frame — the registration
     * passes the memoized [[reasonsFor]] verdicts. The source totals are
     * a window over the AGGREGATED counts frame, which is value-
     * cardinality-bounded (≤ sources × reasons rows) — so the window is
@@ -282,15 +269,6 @@ object Quality {
       reasonsFor(s, d).filter(col("reason") === "passed").select(col("doc_id"))
     }
 
-  /** Corpus language-ID distribution — the dedicated language-analysis
-    * surface (the detector otherwise only appears per-doc inside the
-    * cascade): detected language vs the table's labeled `lang`, counted.
-    * Also an honest accuracy read on the trigram-profile detector. */
-  def langDistributionQuery(docs: DataFrame): DataFrame =
-    withMetrics(docs)
-      .groupBy(col("lang").as("labeled_lang"), col("m_langdet").as("detected_language"))
-      .agg(count(lit(1)).as("n_docs"))
-
   /** Per-doc language-ID CONFIDENCE: the best and runner-up trigram-
     * profile hit counts and their margin. CCNet-style pipelines threshold
     * on detector confidence, not just the argmax label — a doc whose top
@@ -323,15 +301,23 @@ object Quality {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "quality_lang_margin" -> ((s, d) => langMarginQuery(Tables.documents(s, d))),
+    // Corpus language-ID distribution — the dedicated language-analysis
+    // surface (the detector otherwise only appears per-doc inside the
+    // cascade): detected language vs the table's labeled `lang`, counted.
+    // Also an honest accuracy read on the trigram-profile detector.
     "lang_distribution" -> ((s, d) => metricsFor(s, d)
       .groupBy(col("lang").as("labeled_lang"), col("m_langdet").as("detected_language"))
       .agg(count(lit(1)).as("n_docs"))),
     "quality_cascade" -> ((s, d) => cascadeOver(metricsFor(s, d))),
     // the report family rides the memoized default-config verdicts
     // (reasonsFor) — each is a rollup of the same skinny checkpoint.
+    // Q10/A3: histogram of filter reasons (quality_filter.py:272-287,
+    // src/main.py:281-292) — one shuffle on a ≤12-value key.
     "quality_histogram" -> ((s, d) =>
       reasonsFor(s, d).groupBy("reason").agg(count(lit(1)).as("n_docs"))),
     "quality_by_source" -> ((s, d) => bySourceOver(reasonsFor(s, d))),
+    // the same histogram at the reference's own thresholds (VERDICT r1 #7:
+    // parity with quality_filter.py defaults demonstrated, not just claimed)
     "quality_histogram_refdefaults" -> ((s, d) => metricsFor(s, d)
       .withColumn("reason", expr(reasonOverCols(Config.reference)))
       .groupBy("reason").agg(count(lit(1)).as("n_docs"))),

@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Capacity bound (round-6 verdict): an unbounded memo pins every
   * directory's checkpointed blocks forever — block-manager memory that
-  * `spark.catalog.clearCache()` cannot touch. An evicted (or
+  * no [[graft.CacheScope]] release touches. An evicted (or
   * fingerprint-orphaned) entry's blocks are released by Spark's
   * ContextCleaner once the dropped reference is GC'd (Bench/Verify GC
   * between queries).

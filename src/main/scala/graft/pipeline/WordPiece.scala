@@ -82,12 +82,8 @@ object WordPiece {
 
     /** T3: JSON round-trip, same shape as [[Bpe.Model.toJson]]. */
     def toJson: String = {
-      def esc(s: String) = s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      }
       val v = vocab.toSeq.sortBy(_._2)
-        .map { case (t, i) => s""""${esc(t)}": $i""" }.mkString("{", ", ", "}")
+        .map { case (t, i) => s"${graft.Json.quote(t)}: $i" }.mkString("{", ", ", "}")
       s"""{"model": "wordpiece", "vocab": $v}"""
     }
   }

@@ -90,15 +90,17 @@ object StreamParity {
     // executor, the closest local proxy for cluster stateful streaming.
     val spark = graft.GraftSession.start("graft-stream-parity")
 
-    val results = Seq(
-      checkCleanDedup(spark, sfDir),
-      checkAttribution(spark, sfDir),
-      checkWindowed(spark, sfDir),
-      checkSessionized(spark, sfDir),
-      checkDecontaminated(spark, sfDir),
-      checkDecontaminatedDrop(spark, sfDir),
-      checkRealisticNearDup(spark),
-      checkRealisticQualityHistogram(spark))
+    // each check is a cache scope: what its batch sides persist dies with it
+    val results = Seq[() => Result](
+      () => checkCleanDedup(spark, sfDir),
+      () => checkAttribution(spark, sfDir),
+      () => checkWindowed(spark, sfDir),
+      () => checkSessionized(spark, sfDir),
+      () => checkDecontaminated(spark, sfDir),
+      () => checkDecontaminatedDrop(spark, sfDir),
+      () => checkRealisticNearDup(spark),
+      () => checkRealisticQualityHistogram(spark))
+      .map(check => graft.CacheScope.within(check()))
 
     val md = new StringBuilder
     md.append("# STREAMPARITY — streaming ↔ batch equivalence\n\n")

@@ -163,12 +163,14 @@ object StreamPipeline {
     nearDupBatch(batch, stateDir, outDir, nextId)
   }
 
-  /** One micro-batch of [[nearDupStream]]. */
+  /** One micro-batch of [[nearDupStream]]: a [[graft.CacheScope.within]]
+    * scope, so everything the batch persists (its signatures, the store
+    * view, the verdicts and the rep-graph frames) is released when it
+    * returns or throws. */
   def nearDupBatch(batch: DataFrame, stateDir: String, outDir: String,
-      batchId: Long): Unit = {
+      batchId: Long): Unit = graft.CacheScope.within {
     val spark = batch.sparkSession
-    val sigs = MinHash.signatures(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = graft.CacheScope.persist(MinHash.signatures(batch))
     // (1) within-batch attribution (min-id original wins, LSH-verified);
     // shares the persisted signature frame with the store join below.
     val inBatch = MinHash.duplicateOfSigs(sigs)
@@ -178,8 +180,7 @@ object StreamPipeline {
     // at the scan and is what makes replays deterministic.
     val storeView = readStore(spark, stateDir)
       .map(_.filter(col("batch_id") < batchId))
-    val store = storeView
-      .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val store = storeView.map(graft.CacheScope.persist)
     val storeDup = store match {
       case None =>
         spark.emptyDataFrame.select(lit(0L).as("doc_id"), lit(0L).as("store_orig"))
@@ -204,7 +205,7 @@ object StreamPipeline {
         col("doc_id"),
         coalesce(col("store_orig"), col("batch_orig")).as("original_id"),
         coalesce(col("store_orig"), col("batch_orig")).isNotNull.as("is_duplicate"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.CacheScope.persist)
     verdicts.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -219,12 +220,6 @@ object StreamPipeline {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(stateDir)
-    verdicts.unpersist()
-    sigs.unpersist()
-    store.foreach(_.unpersist())
-    // The batch runs its own query, so it releases the rep-graph
-    // persists duplicateOfSigs registered (CacheScope contract).
-    graft.CacheScope.drain()
   }
 
   /** Streaming sessionization — the streaming twin of

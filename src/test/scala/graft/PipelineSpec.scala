@@ -119,8 +119,24 @@ class PipelineSpec extends SparkSpec {
     val input = docsOnDisk()
     Pipeline.run(input.withColumn("text", tap(col("text"))), Pipeline.GraftConfig(), out)
       .collect()
-    CacheScope.drain()
     assert(reads.value == input.count(), s"text read ${reads.value} times")
+  }
+
+  test("a run releases every frame it persists, whether it returns or a sink throws") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val input = docsOnDisk()
+    val before = persisted
+    Pipeline.run(input, Pipeline.GraftConfig(), Files.createTempDirectory("pipe").toString)
+      .collect()
+    val leftByRun = persisted -- before
+    assert(leftByRun.isEmpty, s"the run left persisted RDDs $leftByRun")
+    // an unknown codec fails the docs sink after dedup, quality and the
+    // tokenizer training have materialized their persisted frames
+    val badSink = Pipeline.GraftConfig(output = Pipeline.OutputConfig(compression = "no-such-codec"))
+    intercept[Exception](
+      Pipeline.run(input, badSink, Files.createTempDirectory("pipe").toString))
+    val leftByThrow = persisted -- before
+    assert(leftByThrow.isEmpty, s"the failed run left persisted RDDs $leftByThrow")
   }
 
   test("pipeline_metrics.json: the fused window opens before the run's first job") {
@@ -140,7 +156,6 @@ class PipelineSpec extends SparkSpec {
       while (!jobStarts.asScala.exists(_ >= t0) && System.currentTimeMillis() < deadline)
         Thread.sleep(20)
     } finally spark.sparkContext.removeSparkListener(listener)
-    CacheScope.drain()
     val firstJobMs = jobStarts.asScala.filter(_ >= t0).min
     val json = Files.readString(java.nio.file.Paths.get(s"$out/pipeline_metrics.json"))
     val dedupStart = "\"dedup\": \\{\"stage_name\": \"dedup\", \"start_time\": ([-0-9.E]+)".r

@@ -109,4 +109,20 @@ class StreamNearDupSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(dups === Set(3L, 5L))
   }
+
+  test("a batch whose write throws leaves no persisted RDDs behind") {
+    val dir = Files.createTempDirectory("snd_throw")
+    val f = dir.resolve("b1.json")
+    Files.writeString(f, Seq(doc(1, textA), doc(2, textB), doc(3, textA)).mkString("", "\n", "\n"))
+    val batch = spark.read.schema(StreamPipeline.docSchema).json(f.toString)
+    // the verdict sink's directory sits under a regular file, so its
+    // write fails after the signature, rep-graph and verdict persists
+    val blocker = Files.writeString(dir.resolve("blocker"), "not a directory")
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    intercept[Exception](StreamPipeline.nearDupBatch(batch,
+      dir.resolve("store").toString, blocker.resolve("verdicts").toString, 0L))
+    val left = persisted -- before
+    assert(left.isEmpty, s"the failed batch left persisted RDDs $left")
+  }
 }
