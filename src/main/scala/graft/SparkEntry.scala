@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Analytics, Bpe, Chunking, Clean, Cluster, Contamination, Dedup, LangModel, MinHash, NearDup, PipelineOps, Quality, Repetition, Sampling, TextEmbed, Tokenize, Unigram, Wiki, WordPiece}
+import graft.pipeline.{Analytics, Bpe, Chunking, Clean, Cluster, Contamination, Dedup, LangModel, MinHash, NearDup, PipelineOps, Quality, Repetition, Sampling, Stage, TextEmbed, Tokenize, Unigram, Wiki, WordPiece}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -23,7 +23,7 @@ object SparkEntry {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val docs = Tables.documents(spark, sfDir)
     val cleaned = docs
-      .withColumn("text", Clean.cleanText(col("text")))
+      .withColumn("text", Stage.once(Clean.cleanText(col("text"))))
       .filter(length(col("text")) >= 100)
     Quality.withReason(Dedup.exactDedup(cleaned))
       .groupBy(col("lang"), col("reason"))

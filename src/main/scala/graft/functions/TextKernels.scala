@@ -52,6 +52,73 @@ object Winnow {
     GraftSqlBridge.column(WinnowExpression(GraftSqlBridge.expression(c)))
 }
 
+/** The text-cleaning chain as one expression → string. Decodes the
+  * document once, runs the optional [[graft.pipeline.CleanUdfs.fixText]]
+  * and [[graft.pipeline.CleanUdfs.nfkc]] steps, then each
+  * [[graft.pipeline.Clean.Rule]] in order on the same `String`, and
+  * encodes once. A rule whose trigger is absent from the current text is
+  * skipped: its pattern could not match. Same `java.util.regex` engine,
+  * patterns and order as one `regexp_replace` per rule, so the output is
+  * the same (CleanSpec's property spec pins it against that spelling). */
+case class CleanExpression(child: Expression, fixText: Boolean, nfkc: Boolean,
+    rules: Seq[graft.pipeline.Clean.Rule]) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires a string argument, got ${child.dataType}")
+  override def dataType: DataType = StringType
+  // nullable whenever a Scala-function step runs, as the ScalaUDF steps
+  // were: the schema a sink writes (`optional` vs `required` Parquet
+  // columns) stays the chain's
+  override def nullable: Boolean = child.nullable || fixText || nfkc
+  override def foldable: Boolean = child.foldable
+  override def prettyName: String = "graft_clean"
+  // plan strings name the rules by count: the patterns hold raw newlines
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, fixText, nfkc, s"${rules.size} rules")
+
+  @transient private lazy val kernel = new CleanKernel(fixText, nfkc, rules)
+
+  override protected def nullSafeEval(input: Any): Any =
+    kernel(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val k = ctx.addReferenceObj("cleanKernel", kernel)
+    defineCodeGen(ctx, ev, c => s"$k.apply($c)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): CleanExpression =
+    copy(child = newChild)
+}
+
+/** [[CleanExpression]]'s per-document work, with each pattern compiled
+  * once per instance (a task deserializes one instance). */
+final class CleanKernel(fixText: Boolean, nfkc: Boolean,
+    rules: Seq[graft.pipeline.Clean.Rule]) extends Serializable {
+  private val patterns = rules.map(r => java.util.regex.Pattern.compile(r.pattern)).toArray
+  private val replacements = rules.map(_.replacement).toArray
+  private val triggers = rules.map(_.trigger).toArray
+
+  def apply(s: UTF8String): UTF8String = {
+    var t = s.toString
+    if (fixText) t = graft.pipeline.CleanUdfs.fixText(t)
+    if (nfkc) t = graft.pipeline.CleanUdfs.nfkc(t)
+    var i = 0
+    while (i < patterns.length) {
+      if (triggers(i).in(t)) t = patterns(i).matcher(t).replaceAll(replacements(i))
+      i += 1
+    }
+    UTF8String.fromString(t)
+  }
+}
+
+object CleanChain {
+  def apply(c: Column, rules: Seq[graft.pipeline.Clean.Rule],
+      fixText: Boolean = false, nfkc: Boolean = false): Column =
+    GraftSqlBridge.column(CleanExpression(GraftSqlBridge.expression(c), fixText, nfkc, rules))
+}
+
 /** Distinct word trigrams in first-occurrence order → array<string>.
   * Kernel: [[graft.pipeline.NearDup.trigrams]]. */
 case class TrigramsExpression(child: Expression) extends UnaryExpression {

@@ -36,27 +36,77 @@ object Clean {
   /** Python str.strip() trims all whitespace, not just spaces. */
   val EdgeWsRe = """^\s+|\s+$"""
 
+  /** One regex pass of the clean kernel ([[graft.functions.CleanExpression]]):
+    * every match of `pattern` becomes `replacement`, in Java
+    * `Matcher.replaceAll` syntax, as with `regexp_replace`. The pass runs
+    * only when its [[Trigger]] is present in the text as the earlier passes
+    * left it. */
+  final case class Rule(pattern: String, replacement: String, trigger: Trigger)
+
+  /** A cheap test that is true whenever a [[Rule]]'s pattern could change
+    * the text. It may be conservative (true where the pass changes
+    * nothing), never the other way round. */
+  sealed trait Trigger extends Serializable { def in(s: String): Boolean }
+
+  object Trigger {
+    /** Any of the literals occurs. */
+    final case class AnyOf(literals: String*) extends Trigger {
+      def in(s: String): Boolean = literals.exists(s.contains)
+    }
+
+    /** A char of [[ControlRe]]'s ranges occurs. */
+    case object ControlChar extends Trigger {
+      def in(s: String): Boolean = {
+        var i = 0
+        while (i < s.length) {
+          val c = s.charAt(i)
+          if (c <= '\u0008' || c == '\u000b' || c == '\u000c' || (c >= '\u000e' && c <= '\u001f') ||
+              (c >= '\u007f' && c <= '\u009f')) return true
+          i += 1
+        }
+        false
+      }
+    }
+
+    /** [[EdgeWsRe]] can match: a `\s` char first or last, or a `\s` char
+      * before a final line terminator that `\s` does not cover (Java `$`
+      * also matches before a trailing `\u0085`, `\u2028` or `\u2029`;
+      * a trailing `\n` or `\r` is itself `\s`). */
+    case object EdgeWs extends Trigger {
+      private def ws(c: Char): Boolean =
+        c == ' ' || c == '\t' || c == '\n' || c == '\u000b' || c == '\f' || c == '\r'
+      def in(s: String): Boolean = {
+        val n = s.length
+        n > 0 && (ws(s.charAt(0)) || ws(s.charAt(n - 1)) ||
+          (n >= 2 && (s.charAt(n - 1) == '\u0085' || (s.charAt(n - 1) | 1) == '\u2029') &&
+            ws(s.charAt(n - 2))))
+      }
+    }
+  }
+
   /** Strip URLs (reference cleaner.py:118-122). */
-  def stripUrls(c: Column): Column = regexp_replace(c, UrlRe, " ")
+  val UrlRule = Rule(UrlRe, " ", Trigger.AnyOf("http"))
   /** Strip emails (reference cleaner.py:124-128). */
-  def stripEmails(c: Column): Column = regexp_replace(c, EmailRe, " ")
+  val EmailRule = Rule(EmailRe, " ", Trigger.AnyOf("@"))
   /** Strip citation markers `[1]`, `[citation needed]` (cleaner.py:130-132). */
-  def stripCitations(c: Column): Column = regexp_replace(c, CitationRe, "")
+  val CitationRule = Rule(CitationRe, "", Trigger.AnyOf("["))
   /** Drop control characters except \n and \t (cleaner.py:134-138). */
-  def stripControl(c: Column): Column = regexp_replace(c, ControlRe, "")
+  val ControlRule = Rule(ControlRe, "", Trigger.ControlChar)
   /** Collapse runs of spaces/tabs, squeeze 3+ newlines, strip edges
-    * (cleaner.py:140-144). */
-  def normalizeWhitespace(c: Column): Column =
-    regexp_replace(
-      regexp_replace(regexp_replace(c, SpacesRe, " "), NewlinesRe, "\n\n"),
-      EdgeWsRe, "")
+    * (cleaner.py:140-144). A lone space maps to itself, so only a tab or
+    * two spaces trigger the first pass. */
+  val SpacesRule = Rule(SpacesRe, " ", Trigger.AnyOf("\t", "  "))
+  val NewlinesRule = Rule(NewlinesRe, "\n\n", Trigger.AnyOf("\n\n\n"))
+  val EdgeWsRule = Rule(EdgeWsRe, "", Trigger.EdgeWs)
+  val WhitespaceRules = Seq(SpacesRule, NewlinesRule, EdgeWsRule)
 
   /** Full regex-only clean chain, in the reference's fixed order
-    * (cleaner.py:92-144). Mojibake/NFKC (cleaner.py:107-116) are the two
-    * UDF-backed steps and live in [[CleanUdfs]]; they default off here so
-    * this chain stays 100% built-in (codegen + oracle-comparable). */
+    * (cleaner.py:92-144), as one [[graft.functions.CleanExpression]].
+    * Mojibake/NFKC (cleaner.py:107-116) are off here so the result stays
+    * comparable with the DuckDB oracle ([[cleanSqlD]]). */
   def cleanText(c: Column): Column =
-    normalizeWhitespace(stripControl(stripCitations(stripEmails(stripUrls(c)))))
+    graft.functions.CleanChain(c,
+      Seq(UrlRule, EmailRule, CitationRule, ControlRule) ++ WhitespaceRules)
 
   // ---------------------------------------------------------------------
   // Web-corpus cleaners (beyond the wiki-centric reference): PII

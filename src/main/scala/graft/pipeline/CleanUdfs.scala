@@ -3,14 +3,12 @@ package graft.pipeline
 import java.nio.charset.{CharacterCodingException, StandardCharsets}
 import java.text.Normalizer
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
-
-/** The two UDF-backed cleaning steps the regex chain can't express
-  * (reference: src/processing/cleaner.py:107-116). Both are deterministic
-  * `String => String`, so Catalyst can still prune/push around them; they
-  * are kept OUT of oracle-compared projections (DuckDB has neither NFKC
-  * nor a mojibake repair) and are exercised by ScalaTest instead.
+/** The two cleaning steps the regex chain can't express (reference:
+  * src/processing/cleaner.py:107-116), both deterministic
+  * `String => String`. The clean kernel ([[graft.functions.CleanExpression]])
+  * runs them ahead of the regex rules when enabled; they are kept OUT of
+  * oracle-compared projections (DuckDB has neither NFKC nor a mojibake
+  * repair) and are exercised by ScalaTest instead.
   */
 object CleanUdfs {
 
@@ -342,8 +340,4 @@ object CleanUdfs {
     * cp1252-as-Latin-1 controls. */
   def fixText(s: String): String =
     fixC1Controls(fixMojibake(removeTerminalEscapes(unescapeHtml(s))))
-
-  /** Column forms. Deterministic (default for Scala UDFs). */
-  def nfkcCol(c: Column): Column = udf(nfkc _).apply(c)
-  def fixMojibakeCol(c: Column): Column = udf(fixText _).apply(c)
 }

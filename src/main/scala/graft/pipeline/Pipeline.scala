@@ -44,10 +44,12 @@ object Pipeline {
 
   /** pipeline_config.yaml:32-39. algorithm: exact_hash | minhash_lsh |
     * simhash. The LSH shape knobs (num_permutations/threshold/num_bands/
-    * shingle_size) are parsed and validated; the engine's MinHash
-    * instantiation pins (128 perms, 16x8 bands, 5-gram shingles) — the
-    * reference defaults — because the banded signatures are shared
-    * bit-for-bit with the DuckDB oracle (see [[MinHash]]). */
+    * shingle_size) are parsed and then ignored: nothing validates or
+    * reads them (the reference YAML's `num_bands: 32` has no effect).
+    * The engine's MinHash instantiation pins 128 perms, 16x8 bands and
+    * 5-gram shingles — the reference defaults — because the banded
+    * signatures are shared bit-for-bit with the DuckDB oracle (see
+    * [[MinHash]]). */
   final case class DedupConfig(
       enabled: Boolean = true,
       algorithm: String = "minhash_lsh",
@@ -91,25 +93,38 @@ object Pipeline {
         java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  /** Toggleable clean chain (cleaner.py:62-90 constructor flags). The
-    * UDF-backed steps (mojibake, NFKC) only enter the plan when enabled,
-    * keeping the default chain fully codegen'd. The chain is wrapped in
-    * [[Stage.once]]: the run filters on the cleaned length right after,
-    * and without the barrier `PushDownPredicates` copies the whole chain
-    * (two UDFs + the regex passes) into a scan-level Filter, cleaning
-    * every row twice. */
+  /** Toggleable clean chain (cleaner.py:62-90 constructor flags) as one
+    * clean kernel ([[graft.functions.CleanExpression]]): the enabled
+    * mojibake and NFKC steps, then the enabled regex rules in the
+    * reference's order, all on one decoded `String` per document. The
+    * kernel is wrapped in [[Stage.once]]: the run filters on the cleaned
+    * length right after, and without the barrier `PushDownPredicates`
+    * copies the kernel into a scan-level Filter, cleaning every row
+    * twice. */
   def cleanColumn(cfg: CleaningConfig): org.apache.spark.sql.Column = {
-    var c = col("text")
-    if (cfg.fixMojibake) c = CleanUdfs.fixMojibakeCol(c)
-    if (cfg.normalizeUnicode) c = CleanUdfs.nfkcCol(c)
-    if (cfg.removeWikiMarkup || cfg.removeHtmlTags) c = Wiki.regexClean(c)
-    if (cfg.removeUrls) c = Clean.stripUrls(c)
-    if (cfg.removeEmails) c = Clean.stripEmails(c)
-    if (cfg.removeCitations) c = Clean.stripCitations(c)
-    c = Clean.stripControl(c)
-    if (cfg.normalizeWhitespace) c = Clean.normalizeWhitespace(c)
-    Stage.once(c)
+    val rules =
+      (if (cfg.removeWikiMarkup || cfg.removeHtmlTags) Wiki.MarkupRules else Nil) ++
+        Seq(cfg.removeUrls -> Clean.UrlRule, cfg.removeEmails -> Clean.EmailRule,
+          cfg.removeCitations -> Clean.CitationRule, true -> Clean.ControlRule)
+          .collect { case (true, r) => r } ++
+        (if (cfg.normalizeWhitespace) Clean.WhitespaceRules else Nil)
+    Stage.once(graft.functions.CleanChain(col("text"), rules,
+      fixText = cfg.fixMojibake, nfkc = cfg.normalizeUnicode))
   }
+
+  /** The names each config switch accepts; [[run]] rejects any other
+    * before its first job. The codec set is Spark's Parquet codecs,
+    * matched case-insensitively as Spark's writer does. */
+  private val DedupAlgorithms: Seq[String] = Seq("minhash_lsh", "exact_hash", "simhash")
+  private val TokenizerAlgorithms: Seq[String] = Seq("bpe", "wordpiece", "unigram")
+  private val OutputFormats: Seq[String] = Seq("parquet", "jsonl")
+  private val ParquetCodecs: Seq[String] =
+    org.apache.spark.sql.execution.datasources.parquet.ParquetCompressionCodec.values()
+      .map(_.name.toLowerCase(java.util.Locale.ROOT)).toSeq
+
+  private def requireName(key: String, value: String, accepted: Seq[String]): Unit =
+    require(accepted.contains(value),
+      s"$key = '$value' is not one of: ${accepted.mkString(", ")}")
 
   def dedupStage(df: DataFrame, cfg: DedupConfig): DataFrame =
     if (!cfg.enabled) df
@@ -118,11 +133,12 @@ object Pipeline {
       case "simhash" =>
         df.join(NearDup.simhashDuplicateOf(df),
           df("doc_id") === col("duplicate_id"), "left_anti")
-      case _ => MinHash.dedup(df) // minhash_lsh default
+      case "minhash_lsh" => MinHash.dedup(df)
     }
 
   /** Full run: returns the one-row summary after writing outputs.
-    * Mirrors src/main.py:80-150 stage order.
+    * Mirrors src/main.py:80-150 stage order. An unknown algorithm,
+    * output format or codec name fails before the first job.
     *
     * Every stage boundary carries an `observe` counter, so stage counts
     * (and the run summary built from them) cost ZERO extra passes — they
@@ -145,6 +161,11 @@ object Pipeline {
     * enabled, a `pipeline_metrics.json` report (utils/metrics.py:138-170
     * shape) lands next to the outputs. */
   def run(docs0: DataFrame, cfg: GraftConfig, outDir: String): DataFrame = graft.CacheScope.within {
+    requireName("deduplication.algorithm", cfg.dedup.algorithm, DedupAlgorithms)
+    requireName("tokenization.algorithm", cfg.tokenization.algorithm, TokenizerAlgorithms)
+    requireName("output.format", cfg.output.format, OutputFormats)
+    requireName("output.compression",
+      cfg.output.compression.toLowerCase(java.util.Locale.ROOT), ParquetCodecs)
     val spark = docs0.sparkSession
     def nowS: Double = System.currentTimeMillis() / 1000.0
     val tStart = nowS
@@ -193,7 +214,7 @@ object Pipeline {
             val m = WordPiece.train(
               freqs, cfg.tokenization.vocabSize, cfg.tokenization.minFrequency)
             m.encode
-          case _ => // bpe default
+          case "bpe" =>
             val m = Bpe.train(
               freqs, cfg.tokenization.vocabSize, cfg.tokenization.minFrequency)
             m.encode
@@ -213,7 +234,7 @@ object Pipeline {
     val docsOut = outObsDf.drop("tokens")
     cfg.output.format match {
       case "jsonl" => Sinks.writeDocsJsonl(docsOut, s"$outDir/documents")
-      case _ => Sinks.writeParquet(docsOut, s"$outDir/documents",
+      case "parquet" => Sinks.writeParquet(docsOut, s"$outDir/documents",
         cfg.output.maxRecordsPerFile, cfg.output.compression)
     }
     val tWriteEnd = nowS

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.pipeline.Clean.Rule
+import graft.pipeline.Clean.Trigger.AnyOf
 
 /** Wiki-markup removal (F9-F11; reference: src/ingestion/wiki_parser.py).
   *
@@ -10,8 +12,9 @@ import graft.Tables
   * fallback (F10, wiki_parser.py:249-276) it treats as semantically
   * acceptable; there is no JVM mwparserfromhell, so the fallback chain IS
   * the canonical path here (SURVEY §2.3) — a direct transliteration of
-  * the 8 re.subs, followed by the final tidy (F11, :278-293). All
-  * builtin `regexp_replace` — narrow, codegen'd, zero shuffles.
+  * the 8 re.subs, followed by the final tidy (F11, :278-293). Both run
+  * as [[Clean.Rule]] lists on the clean kernel
+  * ([[graft.functions.CleanExpression]]) — narrow, zero shuffles.
   *
   * Fidelity note: the reference applies wiki-link unwrapping ([[x|y]]→y)
   * BEFORE the category rule, so `[[Category:..]]` is already unwrapped
@@ -29,37 +32,33 @@ object Wiki {
   val TemplateDepth = 5
 
   /** F10: the 8-step regex fallback, in reference order (the template
-    * rule iterated per F9 above). */
-  def regexClean(c: Column): Column = {
-    val steps: Seq[(String, String)] =
-      Seq.fill(TemplateDepth)("""\{\{[^{}]+\}\}""" -> "") ++ // templates, innermost-out
+    * rule iterated per F9 above). `$1` keeps capture group 1. */
+  val MarkupRules: Seq[Rule] =
+    Seq.fill(TemplateDepth)(Rule("""\{\{[^{}]+\}\}""", "", AnyOf("{{"))) ++ // templates, innermost-out
     Seq(
-      """(?s)<ref[^>]*>.*?</ref>""" -> "",            // paired refs (DOTALL)
-      """<ref[^/>]*/>""" -> "",                       // self-closing refs
-      """<[^>]+>""" -> "",                            // html tags
-      """\[\[(?:[^|\]]*\|)?([^\]]+)\]\]""" -> "$1",   // wiki links, keep label
-      """\[https?://[^\]]+\]""" -> "",                // external links
-      """\[\[Category:[^\]]+\]\]""" -> "",            // categories (dead, see note)
-      """'{2,5}""" -> "",                             // bold/italic
+      Rule("""(?s)<ref[^>]*>.*?</ref>""", "", AnyOf("<")),           // paired refs (DOTALL)
+      Rule("""<ref[^/>]*/>""", "", AnyOf("<")),                      // self-closing refs
+      Rule("""<[^>]+>""", "", AnyOf("<")),                           // html tags
+      Rule("""\[\[(?:[^|\]]*\|)?([^\]]+)\]\]""", "$1", AnyOf("[[")),  // wiki links, keep label
+      Rule("""\[https?://[^\]]+\]""", "", AnyOf("[http")),          // external links
+      Rule("""\[\[Category:[^\]]+\]\]""", "", AnyOf("[[")),          // categories (dead, see note)
+      Rule("""'{2,5}""", "", AnyOf("''")),                           // bold/italic
       // headings: reference uses `^=+\s*([^=]+)\s*=+$` (MULTILINE); \s is
       // narrowed to [ \t] + non-greedy body so Java and RE2 can't disagree
       // about \n inside the class under (?m)
-      """(?m)^=+[ \t]*([^=]+?)[ \t]*=+$""" -> "$1")
-    steps.foldLeft(c) { case (acc, (re, repl)) => regexp_replace(acc, re, repl) }
-  }
+      Rule("""(?m)^=+[ \t]*([^=]+?)[ \t]*=+$""", "$1", AnyOf("=")))
 
   /** F11: final tidy (wiki_parser.py:278-293). */
-  def tidy(c: Column): Column = {
-    val steps: Seq[(String, String)] = Seq(
-      """\n{3,}""" -> "\n\n",
-      """[ \t]+""" -> " ",
-      """\(\s*\)""" -> "",
-      """\s+([.,;:!?])""" -> "$1",
-      """^\s+|\s+$""" -> "")
-    steps.foldLeft(c) { case (acc, (re, repl)) => regexp_replace(acc, re, repl) }
-  }
+  val TidyRules: Seq[Rule] = Seq(
+    Clean.NewlinesRule,
+    Clean.SpacesRule,
+    Rule("""\(\s*\)""", "", AnyOf("(")),
+    Rule("""\s+([.,;:!?])""", "$1", AnyOf(".", ",", ";", ":", "!", "?")),
+    Clean.EdgeWsRule)
 
-  def cleanWiki(c: Column): Column = tidy(regexClean(c))
+  def regexClean(c: Column): Column = graft.functions.CleanChain(c, MarkupRules)
+
+  def cleanWiki(c: Column): Column = graft.functions.CleanChain(c, MarkupRules ++ TidyRules)
 
   def cleanWikiQuery(docs: DataFrame): DataFrame =
     docs.select(
@@ -73,29 +72,12 @@ object Wiki {
 
   /** DuckDB transliteration — same chain; RE2 takes `(?s)`/`(?m)` inline
     * and `\1` group references. */
-  def cleanWikiSqlD(c: String = "text"): String = {
-    val steps: Seq[(String, String)] =
-      Seq.fill(TemplateDepth)("""\{\{[^{}]+\}\}""" -> "") ++
-    Seq(
-      """(?s)<ref[^>]*>.*?</ref>""" -> "",
-      """<ref[^/>]*/>""" -> "",
-      """<[^>]+>""" -> "",
-      """\[\[(?:[^|\]]*\|)?([^\]]+)\]\]""" -> """\1""",
-      """\[https?://[^\]]+\]""" -> "",
-      """\[\[Category:[^\]]+\]\]""" -> "",
-      """'{2,5}""" -> "",
-      """(?m)^=+[ \t]*([^=]+?)[ \t]*=+$""" -> """\1""",
-      """\n{3,}""" -> "\n\n",
-      """[ \t]+""" -> " ",
-      """\(\s*\)""" -> "",
-      """\s+([.,;:!?])""" -> """\1""",
-      """^\s+|\s+$""" -> "")
-    steps.foldLeft(c) { case (acc, (re, repl)) =>
+  def cleanWikiSqlD(c: String = "text"): String =
+    (MarkupRules ++ TidyRules).foldLeft(c) { case (acc, Rule(re, repl, _)) =>
       val r = re.replace("'", "''")
-      val p = if (repl == "\n\n") "e'\\n\\n'" else s"'$repl'"
+      val p = if (repl == "\n\n") "e'\\n\\n'" else s"'${repl.replace("$1", "\\1")}'"
       s"regexp_replace($acc, '$r', $p, 'g')"
     }
-  }
 
   def oracles: Map[String, String] = Map(
     "clean_wiki" ->

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import graft.pipeline.{Clean, Dedup, MinHash, Quality}
+import graft.pipeline.{Clean, Dedup, MinHash, Quality, Stage}
 
 /** Structured Streaming variant of the pipeline (D6/S4 analogue;
   * reference: deduplicator.py:224-260 `deduplicate_stream` consumes a
@@ -37,7 +37,7 @@ object StreamPipeline {
   def cleanedDeduped(docs: DataFrame, minLen: Int = 100,
       cfg: Quality.Config = Quality.Config()): DataFrame = {
     val cleaned = docs
-      .withColumn("text", Clean.cleanText(col("text")))
+      .withColumn("text", Stage.once(Clean.cleanText(col("text"))))
       .filter(length(col("text")) >= minLen)
     Quality.withReason(cleaned, cfg)
       .withColumn("content_hash", Dedup.contentHash(col("text")))
@@ -60,7 +60,7 @@ object StreamPipeline {
   def cleanedDedupedBounded(docs: DataFrame, tsCol: String, watermark: String,
       minLen: Int = 100, cfg: Quality.Config = Quality.Config()): DataFrame = {
     val cleaned = docs
-      .withColumn("text", Clean.cleanText(col("text")))
+      .withColumn("text", Stage.once(Clean.cleanText(col("text"))))
       .filter(length(col("text")) >= minLen)
     Quality.withReason(cleaned, cfg)
       .withColumn("content_hash", Dedup.contentHash(col("text")))

@@ -4,8 +4,9 @@ import java.nio.file.Files
 
 import graft.pipeline.{Pipeline, Quality}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.catalyst.expressions.ScalaUDF
-import org.apache.spark.sql.catalyst.plans.logical.Filter
+import graft.functions.CleanExpression
+import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpReplace, ScalaUDF}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.functions._
 
 /** Config-driven end-to-end run (reference src/main.py entry point 1). */
@@ -106,10 +107,63 @@ class PipelineSpec extends SparkSpec {
       .withColumn("text", Pipeline.cleanColumn(Pipeline.CleaningConfig()))
       .filter(length(col("text")) >= 100)
       .queryExecution.optimizedPlan
-    val udfFilters = plan.collect {
-      case f: Filter if f.condition.exists(_.isInstanceOf[ScalaUDF]) => f
+    val cleaningFilters = PipelineSpec.cleaningFilters(plan)
+    assert(cleaningFilters.isEmpty, s"clean chain copied into a Filter:\n$plan")
+  }
+
+  test("Pipeline.run's clean projection holds one clean kernel and no regex pass or UDF") {
+    val plan = docsOnDisk()
+      .withColumn("original_length", length(col("text")))
+      .withColumn("text", Pipeline.cleanColumn(Pipeline.CleaningConfig()))
+      .filter(length(col("text")) >= 100)
+      .withColumn("cleaned_length", length(col("text")))
+      .queryExecution.optimizedPlan
+    def count(p: Expression => Boolean): Int =
+      plan.collect { case n => n.expressions.map(_.collect { case e if p(e) => e }.size).sum }.sum
+    assert(count(_.isInstanceOf[CleanExpression]) == 1, plan.toString)
+    assert(count(e => e.isInstanceOf[RegExpReplace] || e.isInstanceOf[ScalaUDF]) == 0,
+      plan.toString)
+  }
+
+  test("the SQL entry point cleans each row once: no clean kernel in a Filter") {
+    val plan = SparkEntry.entry(spark).queryExecution.optimizedPlan
+    assert(PipelineSpec.cleaningFilters(plan).isEmpty, s"clean chain copied into a Filter:\n$plan")
+  }
+
+  test("unknown algorithm, format and codec names fail before the first job") {
+    import scala.jdk.CollectionConverters._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
     }
-    assert(udfFilters.isEmpty, s"clean chain copied into a Filter:\n$plan")
+    val bad = Seq(
+      ("deduplication.algorithm", Pipeline.GraftConfig(dedup = Pipeline.DedupConfig(algorithm = "minhash"))),
+      ("tokenization.algorithm", Pipeline.GraftConfig(
+        tokenization = Pipeline.TokenizationConfig(algorithm = "bpe2"))),
+      ("output.format", Pipeline.GraftConfig(output = Pipeline.OutputConfig(format = "json"))),
+      ("output.compression", Pipeline.GraftConfig(
+        output = Pipeline.OutputConfig(compression = "no-such-codec"))))
+    val input = docsOnDisk()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for ((key, cfg) <- bad) {
+        val e = intercept[IllegalArgumentException](
+          Pipeline.run(input, cfg, Files.createTempDirectory("pipe").toString))
+        assert(e.getMessage.contains(key), e.getMessage)
+      }
+      // the bus delivers in order: once the marker job has arrived, any
+      // job the runs started has too
+      spark.sparkContext.setJobDescription("marker")
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 10000L
+      while (!jobs.contains("marker") && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.asScala.forall(_ == "marker"), s"jobs started: ${jobs.asScala.toSeq}")
+    val e = intercept[IllegalArgumentException](Pipeline.run(input,
+      Pipeline.GraftConfig(output = Pipeline.OutputConfig(compression = "zip")),
+      Files.createTempDirectory("pipe").toString))
+    for (codec <- Seq("snappy", "gzip", "zstd", "none")) assert(e.getMessage.contains(codec), e.getMessage)
   }
 
   test("each input row is read once per run (clean chain and cleaned corpus evaluate once)") {
@@ -130,11 +184,13 @@ class PipelineSpec extends SparkSpec {
       .collect()
     val leftByRun = persisted -- before
     assert(leftByRun.isEmpty, s"the run left persisted RDDs $leftByRun")
-    // an unknown codec fails the docs sink after dedup, quality and the
-    // tokenizer training have materialized their persisted frames
-    val badSink = Pipeline.GraftConfig(output = Pipeline.OutputConfig(compression = "no-such-codec"))
+    // the output directory sits under a regular file, so the docs sink
+    // fails after dedup, quality and the tokenizer training have
+    // materialized their persisted frames
+    val blocker = Files.writeString(Files.createTempDirectory("pipe").resolve("blocker"),
+      "not a directory")
     intercept[Exception](
-      Pipeline.run(input, badSink, Files.createTempDirectory("pipe").toString))
+      Pipeline.run(input, Pipeline.GraftConfig(), blocker.resolve("out").toString))
     val leftByThrow = persisted -- before
     assert(leftByThrow.isEmpty, s"the failed run left persisted RDDs $leftByThrow")
   }
@@ -163,5 +219,13 @@ class PipelineSpec extends SparkSpec {
       .getOrElse(fail(s"no dedup start_time in $json"))
     assert(math.round(dedupStart * 1000) <= firstJobMs,
       s"dedup window starts at $dedupStart s, after the run's first job at $firstJobMs ms")
+  }
+}
+
+object PipelineSpec {
+  /** Filters that hold clean work: the clean kernel, a UDF or a regex pass. */
+  def cleaningFilters(plan: LogicalPlan): Seq[Filter] = plan.collect {
+    case f: Filter if f.condition.exists(e => e.isInstanceOf[CleanExpression] ||
+      e.isInstanceOf[ScalaUDF] || e.isInstanceOf[RegExpReplace]) => f
   }
 }

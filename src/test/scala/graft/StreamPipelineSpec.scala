@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 
 import graft.streaming.StreamPipeline
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 
 /** D6: streaming clean+quality+exact-dedup over a file source. */
 class StreamPipelineSpec extends SparkSpec {
@@ -17,6 +18,27 @@ class StreamPipelineSpec extends SparkSpec {
       "and refined over many years by people in many parts of the world and it " +
       "is a field that draws on the work of many scholars over time and it " +
       "was shaped by the tools and ideas that were available at each point."
+
+  test("both streaming clean sites clean each row once: no clean kernel in a Filter") {
+    val dir = Files.createTempDirectory("stream-plan")
+    Files.writeString(dir.resolve("b1.json"),
+      jsonLine(1, longText).replace("{", "{\"ts\": \"2026-01-01T00:00:00Z\", ") + "\n")
+    val docs = spark.readStream
+      .schema("doc_id BIGINT, ts TIMESTAMP, text STRING, lang STRING, source STRING, n_chars BIGINT")
+      .json(dir.toString)
+    for ((out, i) <- Seq(StreamPipeline.cleanedDeduped(docs),
+        StreamPipeline.cleanedDedupedBounded(docs, "ts", "10 minutes")).zipWithIndex) {
+      // no empty watermark-advancing batch, so the last one read the file
+      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      val q = try StreamPipeline.toMemorySink(out, s"stream_plan_$i").start()
+        finally spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+      val plan = try {
+        q.processAllAvailable()
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
+      } finally q.stop()
+      assert(PipelineSpec.cleaningFilters(plan).isEmpty, s"clean chain copied into a Filter:\n$plan")
+    }
+  }
 
   test("streaming micro-batches are cleaned and deduplicated across batches") {
     val dir: Path = Files.createTempDirectory("stream-in")
