@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -45,9 +46,12 @@ case class MinHashSigExpression(child: Expression)
 }
 
 object MinHashSigExpression {
-  /** Static kernel entry used by both interpreted eval and generated code. */
+  /** Static kernel entry used by both interpreted eval and generated code.
+    * The primitive array is copied straight into an unsafe array:
+    * `GenericArrayData(Array[Int])` would box all 128 slots into an
+    * `Object[]` per document. */
   def compute(s: UTF8String): ArrayData =
-    new GenericArrayData(graft.pipeline.MinHash.signature(s.toString))
+    UnsafeArrayData.fromPrimitiveArray(graft.pipeline.MinHash.signature(s.toString))
 }
 
 object MinHashSig {
@@ -127,7 +131,7 @@ object BandHashesExpression {
       out(j) = h
       j += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out) // unboxed, as in MinHashSigExpression
   }
 }
 

@@ -18,15 +18,20 @@ import graft.Tables
   * not its constants.)
   *
   * Scale design (the 100 TB story):
-  *  - signature: narrow per-row UDF (a tight JVM loop, ~40 K long ops per
-  *    300-char doc) — embarrassingly parallel, no shuffle;
-  *  - candidates: explode 16 (band, bandHash) keys per doc and self-join
-  *    on them — the classic banded-LSH shuffle, never an all-pairs join.
-  *    Bands carry only (doc_id, band, hash); signatures are re-joined by
-  *    id afterwards so the wide sig arrays cross the wire once, not 16x;
-  *  - hot buckets (boilerplate near-identical docs) are the skew risk:
-  *    AQE skew-join handles moderate cases; pathological buckets would be
-  *    capped/salted upstream.
+  *  - signature: a narrow per-row native Catalyst expression
+  *    ([[graft.functions.MinHashSigExpression]] over [[signature]]: a
+  *    branch-free, vectorizable 128-permutation loop over the distinct
+  *    shingle hashes) — embarrassingly parallel, no shuffle;
+  *  - collapse: byte-identical signatures contract to one representative
+  *    `gid` before banding, so a boilerplate family is one row per band;
+  *  - candidates: a skinny (band, bandHash) count pass finds the buckets
+  *    with >= 2 reps, and only those hot bands ship `(gid, sig)` through
+  *    ONE band-keyed exchange into a per-bucket verify kernel — the
+  *    classic banded-LSH shuffle, never an all-pairs join. The verified
+  *    pair frame `(ga < gb)` is read once, in one orientation, by the
+  *    dup-map algebra;
+  *  - oversized buckets (templated spam) take a gid-ordered chunk-pair
+  *    path ([[BandBucketChunkLen]]); moderate skew is left to AQE.
   *
   * Semantics note (SURVEY §2.4): the reference's incremental index is
   * order-dependent; this set-oriented rebuild defines duplicates
@@ -86,24 +91,47 @@ object MinHash {
     * The permutation loop runs over the DISTINCT shingle hashes — min is
     * duplicate-insensitive, so the signature is unchanged, and repetitive
     * corpora (the interesting ones for dedup) cut the 128x inner loop by
-    * the repeat factor. */
+    * the repeat factor. The distinct set is an open-addressing table
+    * (shingle hashes lie in [0, P), so -1 marks an empty slot), compacted
+    * into `hashes` in first-seen order; min does not depend on order.
+    *
+    * The permutation loop body is branch-free — the final Mersenne
+    * subtract and the running min are arithmetic masks over the sign bit
+    * — so C2's superword pass vectorizes it (64-bit lane multiplies
+    * where the CPU has them). Values are bit-identical to `modP` and
+    * `if (v < sig(k))`: NearDupPropertySpec pins the kernel against the
+    * plain-mod loop. */
   def signature(text: String): Array[Int] = {
     val hashes = shingleHashes(text)
-    java.util.Arrays.sort(hashes)
+    val bits = 32 - Integer.numberOfLeadingZeros(math.max(hashes.length, 2) * 2 - 1)
+    val table = new Array[Long](1 << bits)
+    java.util.Arrays.fill(table, -1L)
+    val mask = table.length - 1
     var n = 0
     var si = 0
-    while (si < hashes.length) { // unique in place (array is sorted)
-      if (si == 0 || hashes(si) != hashes(si - 1)) { hashes(n) = hashes(si); n += 1 }
+    while (si < hashes.length) { // distinct in place: n <= si, so no unread slot is overwritten
+      val h = hashes(si)
+      var slot = ((h * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
+      while (table(slot) != -1L && table(slot) != h) slot = (slot + 1) & mask
+      if (table(slot) == -1L) { table(slot) = h; hashes(n) = h; n += 1 }
       si += 1
     }
+    val a = permA
+    val b = permB
     val sig = Array.fill(NumPerm)(Long.MaxValue)
     si = 0
     while (si < n) {
       val h = hashes(si)
       var k = 0
       while (k < NumPerm) {
-        val v = modP(permA(k) * h + permB(k))
-        if (v < sig(k)) sig(k) = v
+        val x0 = a(k) * h + b(k) // < 2^62 + 2^31
+        var x = (x0 & P) + (x0 >>> 31)
+        x = (x & P) + (x >>> 31) // <= P + 1
+        val t = x - P
+        x = t + (P & (t >> 63)) // x mod P
+        val m = sig(k)
+        val d = x - m
+        sig(k) = m + (d & (d >> 63)) // min(x, m)
         k += 1
       }
       si += 1
@@ -518,7 +546,7 @@ object MinHash {
       i += 1
     }
     out.result()
-  }
+  }.withName("minhash_verify_bucket")
 
   /** Chunk-pair form for oversized buckets ([[BandBucketChunkLen]]):
     * chunks are gid-sorted, and ci < cj ⇒ every left gid precedes every
@@ -553,7 +581,7 @@ object MinHash {
       }
       out.result()
     }
-  }
+  }.withName("minhash_verify_bucket_chunks")
 
   /** Test hook: the verified rep pairs at a forced chunk bound, for
     * pinning the chunk-pair path against the single-pass kernel. */
@@ -591,14 +619,16 @@ object MinHash {
     duplicateOfRepGraph(withG.select(col("doc_id"), col("gid")), verifiedPairs)
   }
 
-  /** Per-group min verified partner: `pm(gid)` = the smallest gid among
-    * groups that collide + verify with `gid` (both pair orientations).
-    * Rep-graph-cardinality — two scans of the skinny pair checkpoint
-    * and one tiny groupBy. */
+  /** Per-group min EARLIER verified partner: `pm(gid)` = the smallest
+    * gid below `gid` among groups that collide + verify with it, i.e.
+    * min(ga) over the pairs whose larger side gb is `gid` (every
+    * verified pair is oriented ga < gb). [[originalIdCol]] reads only a
+    * partner below gid, so the pair frame is read once, in one
+    * orientation: an unmemoized caller runs the band exchange and the
+    * verify kernel once, not once per orientation. A gid that is only
+    * ever the smaller side has no `pm` row. */
   private def minPartners(verifiedPairs: DataFrame): DataFrame =
-    verifiedPairs.select(col("ga").as("gid"), col("gb").as("cand"))
-      .union(verifiedPairs.select(col("gb").as("gid"), col("ga").as("cand")))
-      .groupBy(col("gid")).agg(min(col("cand")).as("pm"))
+    verifiedPairs.groupBy(col("gb").as("gid")).agg(min(col("ga")).as("pm"))
 
   /** The duplicate→original column in closed form over `(doc_id, gid,
     * pm)` — provably the old member×partner explode + groupBy(doc_id)
@@ -608,18 +638,15 @@ object MinHash {
     * A member's candidate set is {cand ∈ partners(gid) : cand < doc_id}
     * ∪ {gid | doc_id ≠ gid}, and its original is the set's min.
     *  - doc_id ≠ gid: gid < doc_id (gid is the group MIN), so gid is a
-    *    candidate. If pm < gid then pm < doc_id too, so pm survives the
-    *    filter and min = pm = least(gid, pm). If pm ≥ gid, every
-    *    filtered partner ≥ pm ≥ gid, so min = gid = least(gid, pm).
-    *    (pm null ⇒ least skips it ⇒ gid.)
-    *  - doc_id = gid: candidates are partners < gid. pm < gid ⇒ min =
-    *    pm (pm is the global partner min); pm ≥ gid ⇒ empty ⇒ null
-    *    (not a duplicate).
-    * So original = IF(doc_id ≠ gid, least(gid, pm), IF(pm < gid, pm)).
+    *    candidate, and every partner ≥ gid loses to it. A partner below
+    *    gid is below doc_id too, so the min is pm (the least partner
+    *    below gid) when one exists, else gid.
+    *  - doc_id = gid: candidates are the partners below gid: pm, or
+    *    none (null — not a duplicate).
+    * So original = coalesce(pm, IF(doc_id ≠ gid, gid)).
     */
   private def originalIdCol: org.apache.spark.sql.Column =
-    when(col("doc_id") =!= col("gid"), least(col("gid"), col("pm")))
-      .otherwise(when(col("pm") < col("gid"), col("pm")))
+    coalesce(col("pm"), when(col("doc_id") =!= col("gid"), col("gid")))
 
   /** The dup-map algebra over an already-derived skinny rep graph:
     * members join the per-group [[minPartners]] frame once and the
@@ -747,7 +774,7 @@ object MinHash {
     * the CC clustering family (`dedup_minhash_clusters`,
     * `_cluster_stats`, `dedup_cluster_histogram`, `dedup_keep_best`) —
     * round 13: both families join the corpus-cardinality members frame
-    * against per-GROUP attributes (min verified partner for the dup
+    * against per-GROUP attributes (min earlier verified partner for the dup
     * map, transitive component label for clustering), and before this
     * memo each paid its own members join + corpus-level checkpoint.
     * Per-gid frames ([[minPartners]] and the contracted-graph CC
@@ -770,10 +797,9 @@ object MinHash {
           pairs.filter(col("tree"))
             .select(col("ga").as("id_a"), col("gb").as("id_b")))
         .select(col("doc_id").as("gid"), col("cluster_id"))
-      // pm and cluster_id have identical support (a gid has a verified
-      // partner iff it sits in a tree pair's component — the forest
-      // keeps every paired rep), but full_outer costs nothing and
-      // leaves the invariant to the data rather than the reader.
+      // pm's support is the gids with a verified partner BELOW them; a
+      // gid that is only ever the smaller side has a cluster_id but no
+      // pm row, so the join keeps both sides.
       val gidAttrs = minPartners(pairs).join(repCc, Seq("gid"), "full_outer")
       QueryMemo.materialize(members.join(gidAttrs, Seq("gid"), "left")
         .select(col("doc_id"), col("gid"), col("gsz"),

@@ -152,17 +152,21 @@ class MinHashSpec extends SparkSpec {
     }
   }
 
+  /** Two near-dup families of five distinct variants plus a standalone
+    * doc: the shared fixture of the chunk-path and plan tests. */
+  private def variantFamilies = {
+    val variants = Seq("jumps", "leaps", "hops", "bounds", "vaults")
+    docs(variants.zipWithIndex.map { case (w, i) => (i.toLong, longA.replace("jumps", w)) } ++
+      variants.zipWithIndex.map { case (w, i) => (100L + i, other.replace("databases", w)) } :+
+      (500L, "an entirely different short standalone text about nothing else"): _*)
+  }
+
   test("chunk-pair bucket verify (forced chunkLen=2) emits the identical " +
       "verified pair set as the single-pass kernel") {
     // two near-dup clusters of 5 distinct variants each + an unrelated
     // doc: buckets collect >= 3 same-band reps, so chunkLen=2 exercises
     // same-chunk, cross-chunk, and small-bucket paths together.
-    val variants = Seq("jumps", "leaps", "hops", "bounds", "vaults")
-    val rows =
-      variants.zipWithIndex.map { case (w, i) => (i.toLong, longA.replace("jumps", w)) } ++
-      variants.zipWithIndex.map { case (w, i) => (100L + i, other.replace("databases", w)) } :+
-      (500L, "an entirely different short standalone text about nothing else")
-    val d = docs(rows: _*)
+    val d = variantFamilies
     // (ga, gb, matches) only: the spanning-forest `tree` tag is
     // layout-dependent by design (a forest per kernel scan — chunking
     // changes WHICH pairs are redundant, never the components).
@@ -176,14 +180,112 @@ class MinHashSpec extends SparkSpec {
     assert(chunked === fast)
   }
 
+  test("every verified pair is oriented ga < gb, on the single-pass and " +
+      "the chunk-pair path") {
+    // the one-orientation min-partner frame (min(ga) by gb) reads only
+    // this orientation, so a pair emitted as (larger, smaller) would
+    // silently drop an attribution
+    val d = variantFamilies
+    for (chunkLen <- Seq(Int.MaxValue, 2)) {
+      val ps = MinHash.verifiedPairsOf(d, chunkLen)
+        .select("ga", "gb").as[(Long, Long)].collect()
+      assert(ps.nonEmpty, s"fixture invalid at chunkLen=$chunkLen: no verified pairs")
+      ps.foreach { case (a, b) =>
+        assert(a < b, s"pair ($a, $b) not oriented at chunkLen=$chunkLen")
+      }
+    }
+  }
+
+  test("duplicateOf's executed plan holds one band-keyed exchange and one " +
+      "verify-kernel Generate") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, ScalaUDF}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    object H extends AdaptiveSparkPlanHelper
+    // identical copies too, so the collapse window runs as well
+    val d = variantFamilies.union(docs(7L -> longA, 8L -> longA))
+    val dup = MinHash.duplicateOf(d)
+    assert(dup.collect().nonEmpty, "fixture invalid: no duplicates")
+    val plan = dup.queryExecution.executedPlan
+    assert(plan.isInstanceOf[AdaptiveSparkPlanExec])
+    def bandKeyed(e: SparkPlan): Boolean = e.outputPartitioning match {
+      case HashPartitioning(ks, _) =>
+        ks.collect { case a: Attribute => a.name } == Seq("band", "bh")
+      case _ => false
+    }
+    val exchanges = H.collect(plan) {
+      case e: ShuffleExchangeExec if bandKeyed(e) => e
+      case r: ReusedExchangeExec if bandKeyed(r.child) => r
+    }
+    val verifies = H.collect(plan) {
+      case g: GenerateExec if g.generator.exists {
+        case u: ScalaUDF => u.udfName.contains("minhash_verify_bucket")
+        case _ => false
+      } => g
+    }
+    assert(exchanges.size == 1, s"band-keyed exchanges: ${exchanges.size}\n$plan")
+    assert(verifies.size == 1, s"verify-kernel Generates: ${verifies.size}\n$plan")
+  }
+
+  test("property: the one-orientation min partner gives the two-orientation " +
+      "reference dup map, through duplicateOf and dupsFor") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, least, min, when}
+    /** The former spelling, kept as the reference: the min partner over
+      * BOTH pair orientations, then the closed form that reads it only
+      * below gid. */
+    def referenceDupMap(members: DataFrame, pairs: DataFrame): Set[(Long, Long)] = {
+      val pm = pairs.select(col("ga").as("gid"), col("gb").as("cand"))
+        .union(pairs.select(col("gb").as("gid"), col("ga").as("cand")))
+        .groupBy(col("gid")).agg(min(col("cand")).as("pm"))
+      members.join(pm, Seq("gid"), "left")
+        .select(col("doc_id"),
+          when(col("doc_id") =!= col("gid"), least(col("gid"), col("pm")))
+            .otherwise(when(col("pm") < col("gid"), col("pm"))).as("o"))
+        .filter(col("o").isNotNull)
+        .as[(Long, Long)].collect().toSet
+    }
+    val vocab = ("alpha beta gamma delta epsilon zeta eta theta iota kappa " +
+      "lambda mu nu xi omicron pi rho sigma tau upsilon").split(" ")
+    for (seed <- Seq(5, 23, 71)) {
+      val rnd = new scala.util.Random(seed)
+      def doc(): Seq[String] = Seq.fill(30 + rnd.nextInt(20))(vocab(rnd.nextInt(vocab.length)))
+      def edit(w: Seq[String]): Seq[String] = w.updated(rnd.nextInt(w.size), "omega")
+      // families of exact copies, one-word edits and edits of edits
+      // (chains), under shuffled ids so a near-dup may sit below the
+      // copies it pairs with
+      val texts = (0 until 8).flatMap { _ =>
+        val base = doc()
+        val e1 = edit(base)
+        Seq.fill(1 + rnd.nextInt(3))(base) ++ Seq.fill(rnd.nextInt(3))(e1) ++
+          Seq.fill(rnd.nextInt(2))(edit(e1)) ++ Seq.fill(rnd.nextInt(2))(edit(base))
+      }.map(_.mkString(" ")) ++ Seq.fill(6)(doc().mkString(" "))
+      val ids = rnd.shuffle(texts.indices.map(i => 3L * i + 1))
+      val rows = ids.zip(texts)
+      val d = docs(rows: _*)
+      val sigs = rows.map { case (id, t) => id -> MinHash.signature(t).toSeq }
+      val members = sigs.groupBy(_._2).values.flatMap { g =>
+        val gid = g.map(_._1).min
+        g.map { case (id, _) => (id, gid) }
+      }.toSeq.toDF("doc_id", "gid")
+      val expected = referenceDupMap(members,
+        MinHash.verifiedPairsOf(d, MinHash.BandBucketChunkLen).select("ga", "gb"))
+      assert(expected.exists { case (dd, o) => sigs.toMap.apply(dd) != sigs.toMap.apply(o) },
+        s"seed=$seed: fixture invalid, no near-dup attribution")
+      val viaDuplicateOf = MinHash.duplicateOf(d).as[(Long, Long)].collect().toSet
+      assert(viaDuplicateOf === expected, s"seed=$seed: duplicateOf")
+      val dir = java.nio.file.Files.createTempDirectory("graft-minhash-pm").toString
+      d.coalesce(1).write.parquet(s"$dir/documents.parquet")
+      val viaDupsFor = MinHash.dupsFor(spark, dir).as[(Long, Long)].collect().toSet
+      assert(viaDupsFor === expected, s"seed=$seed: dupsFor")
+    }
+  }
+
   test("tree-tagged pairs span the same components as the full verified " +
       "pair set, on both kernel paths") {
-    val variants = Seq("jumps", "leaps", "hops", "bounds", "vaults")
-    val rows =
-      variants.zipWithIndex.map { case (w, i) => (i.toLong, longA.replace("jumps", w)) } ++
-      variants.zipWithIndex.map { case (w, i) => (100L + i, other.replace("databases", w)) } :+
-      (500L, "an entirely different short standalone text about nothing else")
-    val d = docs(rows: _*)
+    val d = variantFamilies
     def components(edges: Set[(Long, Long)]): Map[Long, Long] = {
       // driver-side union-find over the tiny fixture
       val parent = scala.collection.mutable.Map[Long, Long]()

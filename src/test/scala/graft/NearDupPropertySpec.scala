@@ -170,9 +170,32 @@ class NearDupPropertySpec extends SparkSpec {
 
   test("signature kernel: Mersenne fold + shingle dedupe match the plain-mod multiset loop") {
     val rnd = new Random(11)
-    val texts = Seq.tabulate(40) { _ =>
-      Seq.fill(1 + rnd.nextInt(60))(('a' + rnd.nextInt(3)).toChar).mkString
-    } ++ Seq("", " ", "repeat repeat repeat repeat")
+    def draw(n: Int, alphabet: IndexedSeq[String]): String =
+      Seq.fill(n)(alphabet(rnd.nextInt(alphabet.size))).mkString
+    val abc = IndexedSeq("a", "b", "c")
+    val mixedCase = IndexedSeq("a", "b", "c", "A", "B", "C", "Q")
+    val blanks = IndexedSeq("x", "y", " ", "\t", "\t\t", "\n", "\n\n\n", "\r\n", "\f")
+    // BMP letters whose lower case differs in length or script, and
+    // supplementary code points (surrogate pairs in the UTF-16 string)
+    val unicode = IndexedSeq("é", "ß", "İ", "Σ", "ж", "中", "\u00A0", "\u2028",
+      "😀", "𝔘", "𐐀", "🇩🇪", "a")
+    val texts = Seq.tabulate(40)(_ => draw(1 + rnd.nextInt(60), abc)) ++
+      Seq.tabulate(20)(_ => draw(1 + rnd.nextInt(60), mixedCase)) ++
+      Seq.tabulate(20)(_ => draw(1 + rnd.nextInt(60), blanks)) ++
+      Seq.tabulate(20)(_ => draw(1 + rnd.nextInt(60), unicode)) ++
+      // 1-4 code points: the single-shingle branch, surrogate pairs included
+      Seq.tabulate(40)(i => draw(1 + i % 4,
+        if (i % 2 == 0) unicode.filter(u => u.codePointCount(0, u.length) == 1)
+        else mixedCase)) ++
+      // >= 2,000 chars: few distinct shingles among many repeats (short
+      // alphabets), a near-full distinct set (26 letters), and repeated
+      // phrases — table sizing, long probe runs and many loop passes
+      Seq(draw(2000, IndexedSeq("a", "b")), draw(2500, abc), draw(3001, mixedCase),
+        draw(2048, blanks), draw(2200, unicode),
+        draw(4000, ('a' to 'z').map(_.toString)),
+        "the cat sat on the mat. " * 120,
+        ("Ab\t😀 " * 700).take(3556)) ++ // ends on a lone high surrogate
+      Seq("", " ", "\t", "\n\n", "repeat repeat repeat repeat", "REPEAT repeat RePeAt")
     texts.foreach { t =>
       val naive = {
         val hashes = MinHash.shingleHashes(t)
