@@ -239,15 +239,15 @@ object Bpe {
   /** Distributed word-frequency aggregation feeding the driver loop.
     * `maxLexicon` bounds driver memory at any corpus size; the coverage
     * numbers quantify what the cap dropped. One corpus aggregation,
-    * persisted for the two reads (total mass + top-k). */
+    * persisted for its two reads: the top-k collect, and the total-mass
+    * job, which runs only when the collect hit the cap — below it the
+    * lexicon holds every word, so the total IS the kept mass. */
   def wordFrequenciesWithCoverage(
       docs: DataFrame, maxLexicon: Int = MaxLexicon): LexiconCoverage = {
     val freqs = docs.select(explode(split(col("text"), "[ \t\n\f\r]+")).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("f"))
       .transform(graft.CacheScope.persist)
-    val totalMass = freqs.agg(sum(expr("f * length(w)")).as("m"))
-      .collect()(0).getAs[Long]("m")
     val top = freqs.orderBy(col("f").desc, col("w"))
       .limit(maxLexicon)
       .collect()
@@ -257,6 +257,9 @@ object Bpe {
     // the "exact" droppedPairMass bound wrong or negative).
     val keptMass = top.iterator.map { case (w, f) =>
       f * w.codePointCount(0, w.length) }.sum
+    val totalMass =
+      if (top.length < maxLexicon) keptMass
+      else freqs.agg(sum(expr("f * length(w)")).as("m")).collect()(0).getAs[Long]("m")
     LexiconCoverage(top.toMap, keptMass, totalMass)
   }
 

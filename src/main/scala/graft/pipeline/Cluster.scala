@@ -32,8 +32,9 @@ import graft.Tables
   *
   * Scale shape (100 TB story): per round the state is one (id, label)
   * row per clustered doc and the edge list — both linear in the dup
-  * graph, never quadratic (identical-signature groups enter as stars via
-  * [[MinHash.clusterEdges]], not cliques). Each round's result is
+  * graph, never quadratic (an identical-signature group enters as one
+  * rep of the contracted pair graph, [[MinHash.memberAttrsFor]], not as
+  * a clique). Each round's result is
   * checkpointed to truncate the logical plan — without it the plan
   * doubles per round and analysis time dominates. The checkpoint flavor
   * follows the session: reliable `checkpoint()` when a checkpoint dir is
@@ -230,16 +231,9 @@ object Cluster {
     }
   }
 
-  /** Transitive MinHash near-dup clusters over `documents`: one row per
-    * doc that has at least one verified near-duplicate. */
-  def minhashClusters(docs: DataFrame): DataFrame =
-    connectedComponents(MinHash.clusterEdges(docs))
-
   /** Cluster-size rollup: how many clusters, how many docs they cover,
     * and the largest cluster — the numbers that decide whether a corpus
     * needs boilerplate capping before LSH at scale. */
-  def statsQuery(docs: DataFrame): DataFrame = statsOf(minhashClusters(docs))
-
   private def statsOf(clusters: DataFrame): DataFrame =
     clusters
       .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))

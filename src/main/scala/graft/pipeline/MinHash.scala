@@ -202,8 +202,8 @@ object MinHash {
   }
 
   /** (doc_id, band, bh) exploded band keys of a `(doc_id, sig)` frame —
-    * the LSH bucket key both the batch self-join and the streaming
-    * store join hash on. */
+    * the LSH bucket key of the delta store join ([[repBands]],
+    * [[deltaDupMapOf]]). */
   def bandKeys(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"),
       posexplode(graft.functions.BandHashes(col("sig"))).as(Seq("band", "bh")))
@@ -233,15 +233,6 @@ object MinHash {
     * per-member attribution (the multi-use-subtree idiom). */
   def duplicateOf(docs: DataFrame): DataFrame = duplicateOfSigs(signatures(docs))
 
-  /** The contracted duplicate graph shared by attribution ([[duplicateOfSigs]])
-    * and transitive clustering ([[Cluster.minhashClusters]]):
-    * `withG` = `(doc_id, sig, gid)` where `gid` is the min doc_id among
-    * byte-identical signatures (one shuffle keyed on the full sig array —
-    * exact, no hash-collision risk; the wide arrays cross the wire once),
-    * and `verified` = rep-level pairs `(ga < gb)` that share an LSH band
-    * AND pass signature verification. Verification is a pure function of
-    * the two signatures, so a rep-pair verdict holds for every member
-    * pair between the two groups — the contraction is lossless. */
   /** Oversized-bucket bound for the verify kernel — the same
     * scale-safety class as [[NearDup.PostingChunkLen]]: a (band, bh)
     * bucket beyond this many reps is split into gid-ordered chunks
@@ -261,11 +252,19 @@ object MinHash {
     * broadcastable; beyond it the filter falls back to the full frame. */
   val HotBucketKeysMax: Long = 4000000L
 
+  /** The contracted duplicate graph behind [[duplicateOfSigs]]:
+    * `withG` = `(doc_id, sig, gid)` where `gid` is the min doc_id among
+    * byte-identical signatures (one shuffle keyed on the full sig array —
+    * exact, no hash-collision risk; the wide arrays cross the wire once),
+    * and `verified` = rep-level pairs `(ga < gb)` that share an LSH band
+    * AND pass signature verification. Verification is a pure function of
+    * the two signatures, so a rep-pair verdict holds for every member
+    * pair between the two groups — the contraction is lossless. */
   private[pipeline] def repGraph(sigs: DataFrame): (DataFrame, DataFrame) =
     repGraph(sigs, BandBucketChunkLen)
 
   /** Per-call composition for the unmemoized consumers ([[dedup]],
-    * streaming dedup, [[clusterEdges]], the chunk-path test hook). The
+    * [[statsQuery]], streaming dedup, the chunk-path test hook). The
     * collapse is persisted through [[graft.CacheScope]]: the bucket-stats
     * probe, the verified pairs and the members all read it, and on a
     * duplicate-heavy corpus each read would otherwise re-run the
@@ -588,32 +587,9 @@ object MinHash {
   private[graft] def verifiedPairsOf(docs: DataFrame, chunkLen: Int): DataFrame =
     repGraph(signatures(docs), chunkLen)._2
 
-  /** Undirected duplicate-graph edges `(id_a < id_b)` with the SAME
-    * connectivity as the full member-level verified-pair graph, without
-    * materializing k^2 in-group pairs: star edges member->group-min inside
-    * each identical-signature group, plus the verified rep pairs across
-    * groups. Input to [[Cluster.connectedComponents]]. */
-  def clusterEdges(docs: DataFrame): DataFrame = {
-    val (withG, verifiedPairs) = repGraph(signatures(docs))
-    clusterEdgesOf(withG.select(col("doc_id"), col("gid")), verifiedPairs)
-  }
-
-  /** [[clusterEdges]] over an already-derived skinny rep graph —
-    * the [[repGraphFor]] consumer path. */
-  private[pipeline] def clusterEdgesOf(members: DataFrame,
-      verifiedPairs: DataFrame): DataFrame =
-    members.filter(col("doc_id") =!= col("gid"))
-      .select(col("gid").as("id_a"), col("doc_id").as("id_b"))
-      // CC needs connectivity, not multiplicity: the kernel's
-      // spanning-forest tag drops in-scan-redundant pairs (a k-clique
-      // found in one bucket ships k-1 edges, not k²/2) — same
-      // components by the per-scan forest argument at [[ScanUF]].
-      .union(verifiedPairs.filter(col("tree"))
-        .select(col("ga").as("id_a"), col("gb").as("id_b")))
-
-  /** [[duplicateOf]] over a precomputed `(doc_id, sig)` frame — lets the
-    * streaming path share one signature-kernel evaluation between the
-    * in-batch join and the store join. */
+  /** [[duplicateOf]] over a precomputed `(doc_id, sig)` frame — the
+    * in-delta leg of [[deltaDupMapContracted]], and the streaming batch's
+    * verdicts while its store is empty. */
   def duplicateOfSigs(sigs: DataFrame): DataFrame = {
     val (withG, verifiedPairs) = repGraph(sigs)
     duplicateOfRepGraph(withG.select(col("doc_id"), col("gid")), verifiedPairs)
@@ -648,11 +624,18 @@ object MinHash {
   private def originalIdCol: org.apache.spark.sql.Column =
     coalesce(col("pm"), when(col("doc_id") =!= col("gid"), col("gid")))
 
-  /** The dup-map algebra over an already-derived skinny rep graph:
-    * members join the per-group [[minPartners]] frame once and the
-    * original falls out of [[originalIdCol]] — no member×partner
-    * explode, no corpus-wide groupBy. */
-  private def duplicateOfRepGraph(members: DataFrame,
+  /** THE duplicate-attribution rule of every near-dup operator (MinHash,
+    * simhash, jaccard, semantic text, the three embedding dedups): from
+    * members `(doc_id, gid)` — `gid` the min doc_id of the member's
+    * identical-key group — and verified rep pairs `(ga < gb)` to
+    * `(duplicate_id, original_id)`, each duplicate's original being its
+    * smallest verified partner below it. Members join the per-group
+    * [[minPartners]] frame once and the original falls out of
+    * [[originalIdCol]] — no member×partner explode, no union, no
+    * corpus-wide groupBy. The pair frame may repeat a pair (one row per
+    * shared bucket) and may hold only each rep's min partner: the min
+    * absorbs both. */
+  private[graft] def duplicateOfRepGraph(members: DataFrame,
       verifiedPairs: DataFrame): DataFrame =
     members.join(minPartners(verifiedPairs), Seq("gid"), "left")
       .select(col("doc_id"), originalIdCol.as("original_id"))
@@ -939,13 +922,15 @@ object MinHash {
       storeSigs, storeBands)
   }
 
-  /** The delta attribution algebra over a rep-contracted store. Cost
-    * scales with the DELTA, not the corpus: the store contributes one
-    * scan of its skinny pre-banded rep keys into the (band, bh)
-    * candidate join (no store shuffle of signatures, no banding, no
-    * signature kernel), wide store signatures are fetched only for the
-    * candidate-MATCHED groups, and the in-delta leg runs the full
-    * [[duplicateOfSigs]] machinery on the delta alone.
+  /** The delta attribution algebra over a rep-contracted store — also
+    * each streaming near-dup batch's ([[graft.streaming.StreamPipeline]]),
+    * whose store holds only survivors and so is rep-contracted with
+    * `gid = doc_id`. Cost scales with the DELTA, not the corpus: the
+    * store contributes one scan of its skinny pre-banded rep keys into
+    * the (band, bh) candidate join (no store shuffle of signatures, no
+    * banding, no signature kernel), wide store signatures are fetched
+    * only for the candidate-MATCHED groups, and the in-delta leg runs
+    * the full [[duplicateOfSigs]] machinery on the delta alone.
     *
     * BOTH sides are identical-signature-contracted before the band join
     * (round 16, after the member-level spelling measured 78.6 s on a

@@ -71,8 +71,9 @@ object NearDup {
     * Skew note: one bucket = one task either way (identical to the
     * SMJ's per-key group); pathological buckets would be capped/salted
     * upstream, as with the MinHash bands. A pair sharing several chunks
-    * is emitted once per shared bucket; the final groupBy(id_b).min(id_a)
-    * is duplicate-insensitive. */
+    * is emitted once per shared bucket; the attribution
+    * ([[MinHash.duplicateOfRepGraph]]) takes a min, so repeats are
+    * harmless. */
   def simhashDuplicateOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ss = docs.sparkSession
@@ -82,7 +83,8 @@ object NearDup {
     // blocking — a k-copy boilerplate cluster costs one bucket row, not a
     // k^2 pair enumeration. Hamming verification is a pure function of
     // the two sh values and a group's min member below any doc is the
-    // group's global min, so the expansion below is result-identical.
+    // group's global min, so [[MinHash.duplicateOfRepGraph]]'s member
+    // expansion is result-identical.
     // The window key is a plain long — the cheapest possible shuffle.
     val withG = docs.select(col("doc_id"), simHashUdf(col("text")).as("sh"))
       .withColumn("gid", min(col("doc_id")).over(Window.partitionBy(col("sh"))))
@@ -112,16 +114,7 @@ object NearDup {
         out.result()
       }
       .toDF("ga", "gb")
-    val partners = repPairs.select(col("ga").as("gid"), col("gb").as("cand"))
-      .union(repPairs.select(col("gb").as("gid"), col("ga").as("cand")))
-    val members = withG.select(col("doc_id"), col("gid"))
-    members.join(partners, "gid")
-      .filter(col("cand") < col("doc_id"))
-      .select(col("doc_id"), col("cand"))
-      .union(members.filter(col("doc_id") =!= col("gid"))
-        .select(col("doc_id"), col("gid").as("cand")))
-      .groupBy(col("doc_id").as("duplicate_id"))
-      .agg(min(col("cand")).as("original_id"))
+    MinHash.duplicateOfRepGraph(withG.select(col("doc_id"), col("gid")), repPairs)
   }
 
   // -----------------------------------------------------------------------
@@ -264,12 +257,9 @@ object NearDup {
       .transform(graft.CacheScope.persist)
     // Candidate generation + verification, MIN-PARTNER KERNEL form
     // (round 9; the TextEmbed.minPartnerUdf idiom ported to set
-    // similarity). The dup map only ever consumes ONE fact per
-    // representative — its MINIMUM verified smaller-id partner: a rep's
-    // own members carry the rep id as an in-group candidate that beats
-    // any partner above the rep, and the rep's own row filters to
-    // cand < rep — so of the old candidate-join/verify-join output, only
-    // the per-rep minimum survives the final min. That licenses
+    // similarity). The attribution (MinHash.duplicateOfRepGraph) only
+    // ever reads ONE fact per representative — its MINIMUM verified
+    // smaller-id partner (see its originalIdCol proof). That licenses
     // replacing the prefix self-join (pair enumeration quadratic in
     // posting-list length — 71.9 s / exp 0.86 at the 100x probe, where a
     // planted cluster's pairs grow with factor²) with a per-prefix-gram
@@ -284,7 +274,7 @@ object NearDup {
     //    n_y - rk_y) — valid at the pair's FIRST shared gram, which is
     //    the only place the pair MUST be found (prefix lemma);
     // and then the exact merge verification. First verified ascending =
-    // that gram's minimum; the cross-gram groupBy(min) recovers the true
+    // that gram's minimum; the attribution's per-rep min recovers the true
     // minimum partner: every verified doc is a true partner, so nothing
     // below the true minimum can verify, and the minimum's own first
     // shared gram accepts it. LOSSLESS, arbitrated by the unpruned
@@ -377,9 +367,9 @@ object NearDup {
       // one task): doc_id-ordered chunks of <= chunkLen members, scanned
       // per chunk pair (ci <= cj; every doc in chunk i precedes every doc
       // in chunk j, so cross-chunk scans need no id guard). LOSSLESS
-      // under the dup-map algebra: per doc b, its first verified partner
+      // under the attribution's min: per doc b, its first verified partner
       // within the whole list lives in SOME chunk <= b's, that pair-row
-      // emits it, and the cross-gram groupBy(min) below absorbs the
+      // emits it, and the attribution's per-rep min absorbs the
       // per-pair-row candidates exactly as it absorbs per-gram ones.
       val chunks = posted.filter(col("cnt") > chunkLen)
         .withColumn("ci", ((col("pp") - 1) / chunkLen).cast("int"))
@@ -392,20 +382,10 @@ object NearDup {
           col("l.ps"), col("r.ps"), col("l.ci") === col("r.ci"))).as("p"))
       small.union(large)
     }
-    val verified = pairs.select(col("p._1").as("rep"), col("p._2").as("mp"))
-      .groupBy(col("rep"))
-      .agg(min(col("mp")).as("mp"))
-    // expand rep-level attributions back to members (the shared algebra
-    // of MinHash.duplicateOf / TextEmbed): in-group members attribute to
-    // their rep id; the rep (and transitively its members, mp < rep <=
-    // member) to the minimum verified partner.
-    val members = withG.select(col("doc_id"), col("gid"))
-    members.join(verified, members("gid") === verified("rep"))
-      .select(col("doc_id"), col("mp").as("cand"))
-      .union(members.filter(col("doc_id") =!= col("gid"))
-        .select(col("doc_id"), col("gid").as("cand")))
-      .groupBy(col("doc_id").as("duplicate_id"))
-      .agg(min(col("cand")).as("original_id"))
+    // each kernel row is (rep, a verified partner below it): the pair
+    // (ga = partner < gb = rep) that MinHash.duplicateOfRepGraph reads.
+    MinHash.duplicateOfRepGraph(withG.select(col("doc_id"), col("gid")),
+      pairs.select(col("p._2").as("ga"), col("p._1").as("gb")))
   }
 
   /** Per-prefix-gram min-partner kernel: `ps` is the gram's posting list
@@ -414,7 +394,7 @@ object NearDup {
     * posting). For each doc, scan earlier docs in id order under the
     * PPJoin length + positional prunes and emit (doc, partner) for the
     * FIRST merge-verified one — ascending first = this gram's minimum,
-    * which is the only row the dup-map algebra consumes. */
+    * which is the only row [[MinHash.duplicateOfRepGraph]] reads. */
   /** Decoded posting list: (doc_ids, sizes, prefix-ranks, gram arrays). */
   private type Posting = (Array[Long], Array[Int], Array[Int], Array[Array[Int]])
   private def decodePosting(ps: Seq[Row]): Posting = {

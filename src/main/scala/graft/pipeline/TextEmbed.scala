@@ -200,6 +200,15 @@ object TextEmbed {
     for (p <- 0 until np; d <- 0 until Dim)
       yield (p, d, graft.relational.Similarity.planes(p)(d).toInt)
 
+  /** Memoized documents cardinality (the Similarity.embCountFor
+    * pattern): [[semanticDedupQuery]]'s plane derivation needs only n,
+    * and an un-memoized count opened a full-table job per query
+    * invocation. */
+  private val docCountMemo = new QueryMemo[java.lang.Long](name = "doc_count")
+  private[graft] def docCountFor(s: org.apache.spark.sql.SparkSession, d: String): Long =
+    docCountMemo.getOrElseUpdate(s, d)(
+      java.lang.Long.valueOf(Tables.documents(s, d).count())).longValue()
+
   /** Semantic near-dup over the hashed vectors: identical-vector
     * collapse, MEAN-CENTERED sign-LSH bucket blocking over the
     * REPRESENTATIVES, dim-to-dim exact-integer dot verification,
@@ -230,17 +239,9 @@ object TextEmbed {
     * k²/2 candidate pairs — the 10x probe measured 216 s before the
     * collapse, 8 s after, hash-identical results (cosine is a pure
     * function of the two vectors; a group's min member below any doc is
-    * the group's global min, so rep-level verification + the standard
-    * member expansion reproduces the all-pairs answer the oracle
-    * computes). */
-  /** Memoized documents cardinality (the Similarity.embCountFor
-    * pattern): the plane derivation below needs only n, and an
-    * un-memoized count opened a full-table job per query invocation. */
-  private val docCountMemo = new QueryMemo[java.lang.Long](name = "doc_count")
-  private[graft] def docCountFor(s: org.apache.spark.sql.SparkSession, d: String): Long =
-    docCountMemo.getOrElseUpdate(s, d)(
-      java.lang.Long.valueOf(Tables.documents(s, d).count())).longValue()
-
+    * the group's global min, so rep-level verification +
+    * [[MinHash.duplicateOfRepGraph]]'s member expansion reproduces the
+    * all-pairs answer the oracle computes). */
   def semanticDedupQuery(docs: DataFrame, threshold: Double = DedupCosine,
       nOpt: Option[Long] = None): DataFrame = {
     val collapsed = bucketedVectors(docs, nOpt)
@@ -253,32 +254,28 @@ object TextEmbed {
         expr("transform(vec, x -> x.dim * 4294967296L + x.weight)").as("pv"),
         // one kernel bucket per probe key; a pair found through several
         // shared keys emits several (gid, bucket-min-partner) rows —
-        // harmless, the dup-map algebra below takes the min over all.
+        // harmless, the attribution below takes the min over all.
         // (A canonical-bucket gate — verify a pair only in its minimum
         // shared key's bucket — was probed in round 13 and REJECTED:
         // counters showed it breaks the early exit on dup-dense buckets
         // (gate-corpus scans 31M -> 238M pairs) to save only 16% of
         // cosines on the realistic corpus.)
         explode(col("keys")).as("bucket"))
-    // verification, min-partner form: the final dup map only ever reads
-    // ONE fact per rep — its MINIMUM qualifying smaller-id co-bucket
-    // partner. (Proof over the old all-pairs spelling: a non-rep member
-    // always carries its own gid as an in-group candidate, and every
-    // cross-group candidate b of group a with b > a is dominated by that
-    // gid a; a rep's in-group row is filtered by cand < doc_id. So only
-    // min-partner rows survive the final min either way — results are
-    // bit-identical, the per-pair cosine being a pure function of the
-    // two vectors.) That licenses a per-bucket kernel over the id-sorted
-    // rep list with an ASCENDING EARLY-EXIT scan: the first qualifying
-    // smaller partner IS the min, so a planted k-member near-dup cluster
-    // costs O(k) kernel calls, not the k²/2 of the pair-join form — the
-    // 30x→100x probe measured exponent 1.43 on the join spelling (the
-    // generator grows cluster size with the factor, so true pair count
-    // grows quadratically) vs sub-linear on this one. It also ships each
-    // packed vector once per bucket instead of once per candidate pair.
-    // Worst case (a bucket of mutual non-duplicates) degrades to the
-    // same k²/2 merges the join form always paid — with k capped near
-    // 128 by the occupancy-targeted plane count.
+    // verification, min-partner form: the attribution
+    // (MinHash.duplicateOfRepGraph) only ever reads ONE fact per rep —
+    // its MINIMUM qualifying smaller-id co-bucket partner (the proof is
+    // at its originalIdCol; the per-pair cosine is a pure function of
+    // the two vectors). That licenses a per-bucket kernel over the
+    // id-sorted rep list with an ASCENDING EARLY-EXIT scan: the first
+    // qualifying smaller partner IS the min, so a planted k-member
+    // near-dup cluster costs O(k) kernel calls, not the k²/2 of the
+    // pair-join form — the 30x→100x probe measured exponent 1.43 on the
+    // join spelling (the generator grows cluster size with the factor,
+    // so true pair count grows quadratically) vs sub-linear on this one.
+    // It also ships each packed vector once per bucket instead of once
+    // per candidate pair. Worst case (a bucket of mutual non-duplicates)
+    // degrades to the same k²/2 merges the join form always paid — with
+    // k capped near 128 by the occupancy-targeted plane count.
     val verified = repVecs
       .groupBy(col("bucket"))
       .agg(sort_array(collect_list(struct(col("doc_id"), col("pv")))).as("rs"))
@@ -286,17 +283,9 @@ object TextEmbed {
       // pair — skip the kernel row decode for them
       .filter(size(col("rs")) >= 2)
       .select(explode(minPartnerUdf(threshold)(col("rs"))).as("p"))
-      .select(col("p._1").as("gid"), col("p._2").as("cand"))
-    // member expansion (the shared algebra of MinHash.duplicateOfSigs /
-    // Similarity.dedupFromRepPairs): in-group members attribute to their
-    // gid; cross-group to the smallest verified partner gid below them.
-    members.join(verified, "gid")
-      .filter(col("cand") < col("doc_id"))
-      .select(col("doc_id"), col("cand"))
-      .union(members.filter(col("doc_id") =!= col("gid"))
-        .select(col("doc_id"), col("gid").as("cand")))
-      .groupBy(col("doc_id").as("duplicate_id"))
-      .agg(min(col("cand")).as("original_id"))
+      // each kernel row is (rep, its min partner below it in the bucket)
+      .select(col("p._2").as("ga"), col("p._1").as("gb"))
+    MinHash.duplicateOfRepGraph(members, verified)
   }
 
   /** The blocking relation of [[semanticDedupQuery]], extracted (round
@@ -385,7 +374,7 @@ object TextEmbed {
     * (sort_array on the struct; doc_id is the leading field). For each
     * rep, scan earlier reps in id order and emit (rep, partner) for the
     * FIRST cosine-qualifying one — ascending first = minimum, which is
-    * the only row the dup-map algebra consumes.
+    * the only row [[MinHash.duplicateOfRepGraph]] reads.
     *
     * Norms are precomputed ONCE PER REP (round 13): the cosine merge
     * recomputed both squared norms per CANDIDATE PAIR — two ~|vec| loops

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.pipeline.MinHash
 
 /** Similarity search over the `embeddings` table (64-dim float vectors) —
   * the builder brief's ANN component. Two variants:
@@ -653,7 +654,7 @@ object Similarity {
       .filter(col("ga") < col("gb"))
       .filter(cosineGE("e_a", "e_b", threshold))
       .select(col("ga"), col("gb"))
-    dedupFromRepPairs(members, verified)
+    MinHash.duplicateOfRepGraph(members.withColumnRenamed("vec_id", "doc_id"), verified)
   }
 
   /** Hot-cluster collapse for the embedding joins (same argument as
@@ -661,12 +662,14 @@ object Similarity {
     * a min-id representative BEFORE the bucket join — a k-copy embedded
     * corpus (re-crawls, mirrored shards) costs one bucket row instead of
     * a k² pair explosion, and cosine is a pure function of the two
-    * arrays, so rep-level verification + the member expansion below is
-    * result-identical (measured: the 10x probe's replicated embeddings
-    * took sim_embed_dedup_mp to 18 s; collapsed, the join sees 1/10 the
-    * rows). Zero vectors are dropped outright: cosine is undefined for
-    * them and the pair filter excluded them already. */
-  /** Returns `(members, reps)`: the skinny `(vec_id, gid)` membership
+    * arrays, so rep-level verification + the member expansion of
+    * [[MinHash.duplicateOfRepGraph]] is result-identical (measured: the
+    * 10x probe's replicated embeddings took sim_embed_dedup_mp to 18 s;
+    * collapsed, the join sees 1/10 the rows). Zero vectors are dropped
+    * outright: cosine is undefined for them and the pair filter
+    * excluded them already.
+    *
+    * Returns `(members, reps)`: the skinny `(vec_id, gid)` membership
     * map and the rep-width `(gid, embedding)` frame, both persisted.
     *
     * What gets CACHED changed in round 17 (the GC lever behind the
@@ -707,23 +710,6 @@ object Similarity {
   private def cosineGE(a: String, b: String, t: Double) =
     dotC(col(a), col(b)) /
       (sqrt(dotC(col(a), col(a))) * sqrt(dotC(col(b), col(b)))) >= lit(t)
-
-  /** Member-level duplicate→original attribution from verified
-    * representative pairs — the same expansion algebra as
-    * MinHash.duplicateOfSigs (in-group members attribute to their gid;
-    * cross-group to the smallest verified partner gid below them). */
-  private def dedupFromRepPairs(members: DataFrame, verified: DataFrame): DataFrame = {
-    val partners = verified.select(col("ga").as("gid"), col("gb").as("cand"))
-      .union(verified.select(col("gb").as("gid"), col("ga").as("cand")))
-    val cross = members.join(partners, "gid")
-      .filter(col("cand") < col("vec_id"))
-      .select(col("vec_id"), col("cand"))
-    val inGroup = members.filter(col("vec_id") =!= col("gid"))
-      .select(col("vec_id"), col("gid").as("cand"))
-    cross.union(inGroup)
-      .groupBy(col("vec_id").as("duplicate_id"))
-      .agg(min(col("cand")).as("original_id"))
-  }
 
   /** Multi-probe form of [[embedDedup]]: each vector additionally probes
     * the [[NumPlanes]] buckets at Hamming distance 1 from its own, so a
@@ -775,7 +761,7 @@ object Similarity {
       .join(reps.select(col("gid").as("ga"), col("embedding").as("e_a")), "ga")
       .filter(cosineGE("e_a", "e_b", threshold))
       .select(col("ga"), col("gb"))
-    dedupFromRepPairs(members, verified)
+    MinHash.duplicateOfRepGraph(members.withColumnRenamed("vec_id", "doc_id"), verified)
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -788,7 +774,8 @@ object Similarity {
     * Scale shape: identical-vector collapse first (re-crawled shards cost
     * one row, not a k² pair explosion), then the per-row codegen'd argmin
     * assigns cells with no shuffle, and the only exchanges are the
-    * within-cell self-join and the final attribution agg. At 100 TB the
+    * within-cell self-join and the attribution's per-group min
+    * ([[MinHash.duplicateOfRepGraph]]). At 100 TB the
     * cell count grows with the corpus (paper uses ~100k clusters for
     * LAION) keeping per-cell occupancy — and the quadratic pair join —
     * bounded; cells are also the natural partition key for the join. */
@@ -805,7 +792,7 @@ object Similarity {
       .filter(col("ga") < col("gb"))
       .filter(cosineGE("e_a", "e_b", threshold))
       .select(col("ga"), col("gb"))
-    dedupFromRepPairs(members, verified)
+    MinHash.duplicateOfRepGraph(members.withColumnRenamed("vec_id", "doc_id"), verified)
   }
 
   /** Probe hooks (round 13, [[graft.ProbeRecall]]): the blocking

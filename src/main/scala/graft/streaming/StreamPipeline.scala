@@ -108,13 +108,14 @@ object StreamPipeline {
   /** Streaming NEAR-dup (MinHash LSH) dedup — the reference's
     * `deduplicate_stream` (deduplicator.py:224-260: a growing in-memory
     * LSH index queried per doc) re-expressed Spark-first: `foreachBatch`
-    * turns each micro-batch into a regular DataFrame, which is (1)
-    * near-dup'd WITHIN the batch by the batch operator
-    * (`MinHash.duplicateOf`, skew-collapsed band join), then (2)
-    * band-joined against a PERSISTENT signature store — partitioned
-    * parquet playing the reference's index, so state survives restarts
-    * and scales as a table, not as executor memory. Batch survivors'
-    * signatures append to the store; verdicts append to `outDir`.
+    * turns each micro-batch into a regular DataFrame and attributes it
+    * against a PERSISTENT signature store — partitioned parquet playing
+    * the reference's index, so state survives restarts and scales as a
+    * table, not as executor memory — with the batch delta attribution
+    * ([[MinHash.deltaDupMapOf]]): a doc's original is its smallest
+    * verified store partner, else its smallest verified earlier
+    * in-batch partner. Batch survivors' signatures append to the store;
+    * verdicts append to `outDir`.
     *
     * Semantics note (documented trade): the reference processes docs one
     * by one, so a doc never matches a duplicate admitted before it; the
@@ -123,10 +124,14 @@ object StreamPipeline {
     * resolvable downstream). First-seen-wins holds across batches
     * exactly: only store-unique survivors are ever indexed.
     *
-    * Scale: per batch, two band-hash joins (batch self-join + batch ×
-    * store) — both banded LSH shapes, never all-pairs; the store join
-    * prunes to colliding buckets and verifies with the early-exit
-    * signature kernel.
+    * Scale: per batch, one delta attribution — banded LSH, never
+    * all-pairs. The store is already rep-contracted (only survivors are
+    * indexed, so no two store rows share a signature), so it enters as
+    * [[MinHash.deltaDupMapOf]]'s `(gid, sig)` reps with no collapse
+    * pass: a batch under [[MinHash.DeltaBroadcastMax]] docs is matched
+    * in one pass over the store with its band keys broadcast, a larger
+    * one through the contracted band join. While the store is empty the
+    * batch runs the batch operator alone ([[MinHash.duplicateOfSigs]]).
     *
     * Delivery: EXACTLY-ONCE under foreachBatch's at-least-once replay.
     * Both sinks are parquet tables PARTITIONED BY `batch_id`, written
@@ -164,54 +169,38 @@ object StreamPipeline {
   }
 
   /** One micro-batch of [[nearDupStream]]: a [[graft.CacheScope.within]]
-    * scope, so everything the batch persists (its signatures, the store
-    * view, the verdicts and the rep-graph frames) is released when it
+    * scope, so everything the batch persists (its signatures, the
+    * verdicts and the attribution's own frames) is released when it
     * returns or throws. */
   def nearDupBatch(batch: DataFrame, stateDir: String, outDir: String,
       batchId: Long): Unit = graft.CacheScope.within {
-    val spark = batch.sparkSession
-    val sigs = graft.CacheScope.persist(MinHash.signatures(batch))
-    // (1) within-batch attribution (min-id original wins, LSH-verified);
-    // shares the persisted signature frame with the store join below.
-    val inBatch = MinHash.duplicateOfSigs(sigs)
-      .select(col("duplicate_id").as("doc_id"), col("original_id").as("batch_orig"))
-    // (2) cross-store attribution: batch bands vs EARLIER-batch store
-    // bands, verified. The batch_id < current filter is partition-pruned
-    // at the scan and is what makes replays deterministic.
-    val storeView = readStore(spark, stateDir)
-      .map(_.filter(col("batch_id") < batchId))
-    val store = storeView.map(graft.CacheScope.persist)
-    val storeDup = store match {
-      case None =>
-        spark.emptyDataFrame.select(lit(0L).as("doc_id"), lit(0L).as("store_orig"))
-          .limit(0)
+    val sigs = MinHash.signatures(batch)
+    // Only survivors are indexed, so no two store rows share a
+    // signature: the store is already rep-contracted with gid = doc_id,
+    // and the delta attribution applies as is — a store match (earlier
+    // batch) wins, else the smallest earlier in-batch partner. The
+    // batch_id < current filter is partition-pruned at the scan and is
+    // what makes replays deterministic. Either branch persists `sigs`
+    // (deltaDupMapOf does it itself), so the survivors' write below
+    // reads the signatures from the cache.
+    val dups = readStore(batch.sparkSession, stateDir) match {
+      case None => MinHash.duplicateOfSigs(graft.CacheScope.persist(sigs))
       case Some(st) =>
-        MinHash.bandKeys(sigs).as("b")
-          .join(MinHash.bandKeys(st).withColumnRenamed("doc_id", "store_id").as("s"),
-            col("b.band") === col("s.band") && col("b.bh") === col("s.bh"))
-          .select(col("b.doc_id").as("doc_id"), col("store_id")).distinct()
-          .join(sigs.select(col("doc_id"), col("sig")), "doc_id")
-          .join(st.select(col("doc_id").as("store_id"), col("sig").as("store_sig")),
-            "store_id")
-          .filter(MinHash.sigMatchCol(col("sig"), col("store_sig")))
-          .groupBy(col("doc_id"))
-          .agg(min(col("store_id")).as("store_orig"))
+        val reps = st.filter(col("batch_id") < batchId)
+          .select(col("doc_id").as("gid"), col("sig"))
+        MinHash.deltaDupMapOf(sigs, reps, MinHash.repBands(reps))
     }
-    // verdicts: store match (earlier batch) wins over in-batch original
     val verdicts = batch.select(col("doc_id"))
-      .join(storeDup, Seq("doc_id"), "left")
-      .join(inBatch, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("store_orig"), col("batch_orig")).as("original_id"),
-        coalesce(col("store_orig"), col("batch_orig")).isNotNull.as("is_duplicate"))
+      .join(dups.withColumnRenamed("duplicate_id", "doc_id"), Seq("doc_id"), "left")
+      .select(col("doc_id"), col("original_id"),
+        col("original_id").isNotNull.as("is_duplicate"))
       .transform(graft.CacheScope.persist)
     verdicts.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(outDir)
-    // (3) index only the survivors — first-seen-wins across batches
+    // index only the survivors — first-seen-wins across batches
     sigs.join(
         verdicts.filter(col("is_duplicate")).select(col("doc_id")),
         Seq("doc_id"), "left_anti")

@@ -88,4 +88,48 @@ class BpeSpec extends SparkSpec {
     assert(capped.keptPairMass == 4)
     assert(capped.droppedPairMass == 2)
   }
+
+  test("an uncapped lexicon starts no total-mass job; at the cap the mass is still exact") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // words no other test uses, so no frequency frame another test left
+    // cached serves a call here: each call builds its own. Both counted
+    // calls share one cap, so their plans differ only in the data.
+    val twoWords = Seq((1L, "delta delta omega delta"), (2L, "omega")).toDF("doc_id", "text")
+    val threeWords = Seq((1L, "delta delta omega delta"), (2L, "omega sigma"))
+      .toDF("doc_id", "text")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    def tagged[A](tag: String)(body: => A): A = {
+      spark.sparkContext.setJobDescription(tag)
+      try graft.CacheScope.within(body) finally spark.sparkContext.setJobDescription(null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (uncapped, atCap) = try {
+      val u = tagged("uncapped")(Bpe.wordFrequenciesWithCoverage(twoWords, maxLexicon = 3))
+      // three distinct words: the collect fills the cap exactly
+      val a = tagged("at-cap")(Bpe.wordFrequenciesWithCoverage(threeWords, maxLexicon = 3))
+      // the bus delivers in order: once the marker job has arrived, every
+      // job the calls started has too
+      tagged("marker")(spark.range(1).count())
+      val deadline = System.currentTimeMillis() + 10000L
+      while (!jobs.contains("marker") && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      (u, a)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val n = jobs.asScala.groupBy(identity).map { case (k, v) => k -> v.size }
+    assert(n.getOrElse("uncapped", 0) >= 1)
+    // at the cap the total-mass aggregation runs: its shuffle stage and
+    // result are two more jobs under AQE
+    assert(n.getOrElse("at-cap", 0) > n("uncapped"), s"jobs per call: $n")
+    assert(uncapped == Bpe.LexiconCoverage(Map("delta" -> 3L, "omega" -> 2L), 25L, 25L))
+    val all = Map("delta" -> 3L, "omega" -> 2L, "sigma" -> 1L)
+    assert(atCap == Bpe.LexiconCoverage(all, 30L, 30L))
+    assert(Bpe.wordFrequenciesWithCoverage(threeWords) == Bpe.LexiconCoverage(all, 30L, 30L))
+    assert(Bpe.wordFrequenciesWithCoverage(threeWords, maxLexicon = 1) ==
+      Bpe.LexiconCoverage(Map("delta" -> 3L), 15L, 30L))
+  }
 }

@@ -61,7 +61,15 @@ class PlanShapeSpec extends SparkSpec {
     // plans SMJ (+2 shuffles, +2 sorts) where it used to broadcast the
     // tiny prefix side — a small-scale estimation artifact; at 100x
     // that join is SMJ either way and the query got 2x faster.
-    "dedup_jaccard_dupmap" -> ((5, 2, 2)),
+    // One attribution (MinHash.duplicateOfRepGraph): the kernel's
+    // (rep, partner) rows fold into the min-partner groupBy by gb, and
+    // members LEFT-join it, so only the partner side can be the build
+    // side. At this fixture's estimates that join plans SMJ (+2 sorts,
+    // the member side's exchange standing in for the dropped
+    // groupBy(doc_id) one) where the inner member-expansion join
+    // broadcast: (5, 2, 2) -> (5, 1, 4). AQE still turns it into a
+    // broadcast at run time when the partner side is small.
+    "dedup_jaccard_dupmap" -> ((5, 1, 4)),
     // round 9: the minhash family rides the memoized localCheckpoint
     // dupmap (MinHash.dupsFor) — the signature/band/verify subtree runs
     // once per (session, dir), so the per-query plans are a checkpoint
@@ -92,6 +100,14 @@ class PlanShapeSpec extends SparkSpec {
     // collect_list re-assembly, and the broadcast plane join are gone;
     // what remains is the gh collapse repartition, the per-bucket verify
     // groupBy, and the member-expansion broadcast (100x 8.1 -> 3.8 s).
+    // (The collapse repartition sits inside the persisted
+    // bucketedVectors frame, which this count does not enter: the two
+    // shuffles are the verify groupBy's and the attribution's.)
+    // One attribution (MinHash.duplicateOfRepGraph): the min-partner
+    // groupBy by gb takes the exchange of the retired groupBy(doc_id),
+    // and the members left-join broadcasts its output where the member
+    // expansion broadcast the kernel pairs — no Union, same counts:
+    // still (2, 1, 0).
     "dedup_semantic_text" -> ((2, 1, 0)),
     "doc_tfidf_keywords" -> ((4, 2, 2)),
     "mix_temperature" -> ((4, 3, 1)),
@@ -135,33 +151,51 @@ class PlanShapeSpec extends SparkSpec {
     }
 
 
-  test("plan shape pinned: minhash cluster edge list (CC per-round input)") {
+  test("plan shape pinned: MinHash.duplicateOf (unmemoized dedup of Pipeline.run)") {
     // Start from an empty cache: earlier pins in this suite run
     // repGraphFor, whose persists the cache manager would match on
     // canonicalized-plan equality, so the plan below would depend on
     // which suites ran first.
     spark.catalog.clearCache()
-    val edges = graft.pipeline.MinHash.clusterEdges(Tables.documents(spark, sfDir))
-    val got = shape(edges)
-    info(s"clusterEdges -> shuffles=${got._1} broadcasts=${got._2} sorts=${got._3}")
-    // round 11: the per-bucket verify kernel (one groupBy on (band, bh))
-    // replaced the band self-join + distinct + two broadcast verify
-    // joins; the one broadcast is the hot-bucket key pre-filter (the
-    // payload shuffle only ships reps whose bucket can pair).
-    // Round 13: the adaptive unique-row collapse bypass (this corpus
-    // takes it) adds the narrow gh-count shuffle + the dup-branch
-    // window repartition (its window sorts are the two sorts) and two
-    // broadcasts for the dup-key anti/semi joins — the trade that
-    // keeps corpus-wide SIGNATURE BYTES out of the collapse exchange
-    // (only the narrow 8-byte key pass and the duplicate-candidate
-    // subset shuffle).
-    // Since repGraph persists the collapse (its bucket-stats probe, the
-    // verified pairs and the members all read it, and each read re-ran
-    // the window), the collapse subtree this plan reads twice (members
-    // and reps) is an in-memory scan on both reads: its window
-    // repartitions, window sorts and dup-key broadcasts are gone from
-    // the plan. What is left is the (band, bh) bucket shuffle and the
-    // hot-bucket key broadcast: (3, 4, 2) -> (1, 1, 0).
-    assert(got == ((1, 1, 0)), s"clusterEdges plan shape drifted: got $got")
+    val dups = graft.pipeline.MinHash.duplicateOf(Tables.documents(spark, sfDir))
+    val got = shape(dups)
+    info(s"duplicateOf -> shuffles=${got._1} broadcasts=${got._2} sorts=${got._3}")
+    // This pin held the CC edge list (MinHash.clusterEdges) until that
+    // unmemoized clustering path, which nothing called, was deleted; it
+    // now holds the composition Pipeline.run's dedup executes on the
+    // same fixture. The repGraph collapse is persisted, so its window
+    // is an in-memory scan here. What is left is the (band, bh) bucket
+    // shuffle and the hot-bucket key broadcast of the verified pairs,
+    // plus the attribution's min-partner groupBy by gb and the members
+    // sort-merge join on gid (the member side's exchange and both sorts).
+    assert(got == ((3, 1, 2)), s"duplicateOf plan shape drifted: got $got")
   }
+
+  /** Node names of a query's executed plan after a collect: each adaptive
+    * plan's initial and final plan (AQE drops a Union at run time when
+    * its inputs turn out empty, as the embedding dedups' are on this
+    * fixture), together with the plans of the cached frames it scans. */
+  private def executedNodeNames(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    object H extends AdaptiveSparkPlanHelper
+    df.collect()
+    def names(p: SparkPlan): Seq[String] = H.collect(p) {
+      case a: AdaptiveSparkPlanExec => a.nodeName +: names(a.initialPlan)
+      case s: InMemoryTableScanExec => s.nodeName +: names(s.relation.cachedPlan)
+      case n => Seq(n.nodeName)
+    }.flatten
+    names(df.queryExecution.executedPlan)
+  }
+
+  // Every near-dup operator builds its dup map through one attribution
+  // (MinHash.duplicateOfRepGraph): members join the per-group min
+  // partner, with no member x partner union and no corpus-wide groupBy.
+  for (name <- Seq("dedup_simhash_dupmap", "dedup_jaccard_dupmap", "dedup_semantic_text",
+      "sim_embed_dedup", "sim_embed_dedup_mp", "sim_semdedup"))
+    test(s"no Union in the executed plan: $name") {
+      val nodes = executedNodeNames(SparkEntry.queries(name)(spark, sfDir))
+      assert(nodes.nonEmpty)
+      assert(!nodes.contains("Union"), s"$name executes a Union: ${nodes.mkString(", ")}")
+    }
 }

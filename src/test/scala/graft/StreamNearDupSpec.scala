@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{coalesce, col, min}
+
+import graft.pipeline.MinHash
 import graft.streaming.StreamPipeline
 
 /** Streaming MinHash-LSH near-dup dedup: foreachBatch + persistent
@@ -88,6 +92,63 @@ class StreamNearDupSpec extends SparkSpec {
     val sigRows = spark.read.parquet(state).collect()
     assert(sigRows.length === 3)
     assert(sigRows.map(_.getLong(0)).toSet === Set(1L, 2L, 4L))
+  }
+
+  /** The former `nearDupBatch` verdicts, kept as the reference: the batch
+    * operator within the batch, a hand-rolled band join against every
+    * store row, and the store match winning over the in-batch original. */
+  private def referenceVerdicts(batch: DataFrame, store: DataFrame): Map[Long, Option[Long]] = {
+    import spark.implicits._
+    val sigs = MinHash.signatures(batch)
+    val inBatch = MinHash.duplicateOfSigs(sigs)
+      .select(col("duplicate_id").as("doc_id"), col("original_id").as("batch_orig"))
+    val storeDup = MinHash.bandKeys(sigs).as("b")
+      .join(MinHash.bandKeys(store).withColumnRenamed("doc_id", "store_id").as("s"),
+        col("b.band") === col("s.band") && col("b.bh") === col("s.bh"))
+      .select(col("b.doc_id").as("doc_id"), col("store_id")).distinct()
+      .join(sigs.select(col("doc_id"), col("sig")), "doc_id")
+      .join(store.select(col("doc_id").as("store_id"), col("sig").as("store_sig")), "store_id")
+      .filter(MinHash.sigMatchCol(col("sig"), col("store_sig")))
+      .groupBy(col("doc_id"))
+      .agg(min(col("store_id")).as("store_orig"))
+    batch.select(col("doc_id"))
+      .join(storeDup, Seq("doc_id"), "left")
+      .join(inBatch, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("store_orig"), col("batch_orig")))
+      .as[(Long, Option[Long])].collect().toMap
+  }
+
+  test("a store hit, an in-batch duplicate and a doc that is both: the store " +
+      "wins, as in the reference spelling") {
+    val dir = Files.createTempDirectory("snd_both")
+    val state = dir.resolve("store").toString
+    val out = dir.resolve("verdicts").toString
+    def batch(name: String, rows: String*) = {
+      val f = dir.resolve(name)
+      Files.writeString(f, rows.mkString("", "\n", "\n"))
+      spark.read.schema(StreamPipeline.docSchema).json(f.toString)
+    }
+    val nearA = textA.replace("jumps", "leaps")
+    val textD = "a fourth unrelated text on streaming watermarks state stores " +
+      "checkpoint directories and exactly once sinks for micro batches"
+    StreamPipeline.nearDupBatch(batch("b0.json", doc(10, textA), doc(11, textB)), state, out)
+    // 2: near-dup of store doc 10, and the least of its in-batch family;
+    // 5: copy of store doc 10 AND in-batch near-dup of 2 — the store wins;
+    // 7: in-batch copy of 3 only; 3 and 12 are new.
+    val b1 = batch("b1.json", doc(2, nearA), doc(3, textC), doc(5, textA),
+      doc(7, textC), doc(12, textD))
+    val store = spark.read.parquet(state).filter(col("batch_id") < 1)
+    val want = referenceVerdicts(b1, store)
+    assert(want === Map(2L -> Some(10L), 3L -> None, 5L -> Some(10L), 7L -> Some(3L),
+      12L -> None))
+    StreamPipeline.nearDupBatch(b1, state, out)
+    val got = spark.read.parquet(out).filter(col("batch_id") === 1).collect()
+      .map(r => r.getLong(0) -> (Option(r.get(1)).map(_.asInstanceOf[Long]), r.getBoolean(2)))
+      .toMap
+    assert(got.map { case (d, (o, _)) => d -> o } === want)
+    assert(got.forall { case (_, (o, isDup)) => isDup == o.isDefined })
+    val stored = spark.read.parquet(state).collect().map(_.getLong(0)).toSet
+    assert(stored === Set(10L, 11L, 3L, 12L))
   }
 
   test("nearDupBatch releases every persist it makes: no cached frames pile up per batch") {
