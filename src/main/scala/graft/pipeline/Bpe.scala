@@ -17,8 +17,9 @@ import graft.Tables
   * merge loop then runs on the driver over the aggregated lexicon, which
   * is vocabulary-sized, not corpus-sized (at 100 TB: cap the lexicon at
   * the top ~1M words; tail words back off to char encoding via <unk>-free
-  * char symbols). Encoding is a deterministic per-row UDF, embarrassingly
-  * parallel.
+  * char symbols). Encoding is a per-row UDF over [[WordEncoder.encode]]:
+  * deterministic, embarrassingly parallel, and each task encodes a distinct
+  * word once (a per-task word → ids memo).
   *
   * Determinism: pair selection breaks ties by (count DESC, pair ASC);
   * vocab ids are specials, then sorted chars, then merges in creation
@@ -30,15 +31,12 @@ object Bpe {
   val Specials: Seq[String] = Seq("<pad>", "<unk>", "<bos>", "<eos>")
   val UnkId = 1
 
-  final case class Model(vocab: Map[String, Int], merges: List[(String, String)]) {
+  final case class Model(vocab: Map[String, Int], merges: List[(String, String)])
+      extends WordEncoder {
     @transient private lazy val ranks: Map[(String, String), Int] =
       merges.zipWithIndex.toMap
 
     def vocabSize: Int = vocab.size
-
-    /** T4: encode one whitespace-pretokenized text to ids. */
-    def encode(text: String): Array[Int] =
-      text.split("[ \t\n\f\r]+").filter(_.nonEmpty).flatMap(encodeWord)
 
     def encodeWord(word: String): Array[Int] = {
       var syms = word.map(_.toString).toBuffer :+ EndOfWord
@@ -239,11 +237,12 @@ object Bpe {
   /** Distributed word-frequency aggregation feeding the driver loop.
     * `maxLexicon` bounds driver memory at any corpus size; the coverage
     * numbers quantify what the cap dropped. One corpus aggregation,
-    * persisted for its two reads: the top-k collect, and the total-mass
-    * job, which runs only when the collect hit the cap — below it the
-    * lexicon holds every word, so the total IS the kept mass. */
+    * persisted for its two reads and released on return: the top-k
+    * collect, and the total-mass job, which runs only when the collect hit
+    * the cap — below it the lexicon holds every word, so the total IS the
+    * kept mass. */
   def wordFrequenciesWithCoverage(
-      docs: DataFrame, maxLexicon: Int = MaxLexicon): LexiconCoverage = {
+      docs: DataFrame, maxLexicon: Int = MaxLexicon): LexiconCoverage = graft.CacheScope.within {
     val freqs = docs.select(explode(split(col("text"), "[ \t\n\f\r]+")).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("f"))
@@ -279,45 +278,23 @@ object Bpe {
 
   private[pipeline] def trainOnCov(cov: LexiconCoverage, vocabSize: Int): Model = {
     if (cov.droppedPairMass > 0)
-      System.err.println(
-        s"[graft.bpe] lexicon capped at ${cov.lexicon.size} words: " +
-          s"covers ${cov.keptPairMass} of ${cov.totalPairMass} pair mass " +
-          s"(truncation bound ${cov.droppedPairMass} per pair count)")
+      log.warn(s"lexicon capped at ${cov.lexicon.size} words: " +
+        s"covers ${cov.keptPairMass} of ${cov.totalPairMass} pair mass " +
+        s"(truncation bound ${cov.droppedPairMass} per pair count)")
     train(cov.lexicon, vocabSize)
   }
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   def trainOn(docs: DataFrame, vocabSize: Int = 64): Model =
     trainOnCov(wordFrequenciesWithCoverage(docs), vocabSize)
 
-  /** Token-COUNT udf for any word-based encoder (encode =
-    * whitespace-split `flatMap encodeWord`): per-word encode lengths
-    * memoized in a per-TASK cache (the captured map deserializes fresh
-    * with each task's closure, so models never cross-pollute), so a
-    * Zipf corpus pays `encodeWord` once per distinct word per task
-    * instead of once per occurrence. `Σ length` is exactly
-    * `size(encode(text))`. */
-  private[pipeline] def tokenCountUdf(encodeWord: String => Array[Int])
-      : org.apache.spark.sql.expressions.UserDefinedFunction = udf {
-    val cache = new java.util.HashMap[String, Integer]()
-    (t: String) => {
-      val ws = t.split("[ \t\n\f\r]+")
-      var total = 0
-      var i = 0
-      while (i < ws.length) {
-        val w = ws(i)
-        if (w.nonEmpty) {
-          var c = cache.get(w)
-          if (c == null) {
-            c = Integer.valueOf(encodeWord(w).length)
-            if (cache.size < (1 << 20)) cache.put(w, c)
-          }
-          total += c.intValue()
-        }
-        i += 1
-      }
-      total
-    }
-  }
+  /** Token-COUNT udf for any of the three tokenizers: `size(encode(text))`
+    * per row, read from the model's per-task word memo
+    * ([[WordEncoder.tokenCount]]) without building the ids. */
+  private[pipeline] def tokenCountUdf(model: WordEncoder)
+      : org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf((t: String) => model.tokenCount(t))
 
   /** T7 over a BPE model trained on the same corpus: stats of the encoded
     * corpus. Registered rows-only (the merge table isn't SQL-derivable);
@@ -325,7 +302,7 @@ object Bpe {
   def statsQuery(spark: SparkSession, docs: DataFrame, vocabSize: Int = 64,
       cov: Option[LexiconCoverage] = None): DataFrame = {
     val model = trainOnCov(cov.getOrElse(wordFrequenciesWithCoverage(docs)), vocabSize)
-    val nTok = tokenCountUdf(model.encodeWord)
+    val nTok = tokenCountUdf(model)
     docs.select(col("doc_id"), length(col("text")).as("n_chars"),
         nTok(col("text")).as("n_tokens"))
       .agg(
@@ -377,9 +354,9 @@ object Bpe {
     * engine bug). Valid while distinct corpus words ≤ [[MaxLexicon]],
     * true of every gate corpus by orders of magnitude (the synthetic
     * generator's vocabulary is dozens of words, measured 31 at sf0.1);
-    * [[trainOnCov]] prints the `lexicon capped` warning the moment the
-    * assumption stops holding, so a divergence is pre-announced on
-    * stderr rather than silent. */
+    * [[trainOnCov]] logs the `lexicon capped` warning the moment the
+    * assumption stops holding, so a divergence is pre-announced in the
+    * log rather than silent. */
   def oracles: Map[String, String] = Map(
     "tok_bpe_char_baseline" ->
       """WITH words AS (SELECT unnest(regexp_split_to_array(text, '[ \t\n\f\r]+')) AS w

@@ -207,19 +207,14 @@ object Pipeline {
         // share the (train on driver-merged word frequencies, distributed
         // encode UDF) contract — tokenizer.py:58-133's algorithm switch.
         val freqs = Bpe.wordFrequencies(passed)
-        val enc: String => Array[Int] = cfg.tokenization.algorithm match {
-          case "unigram" =>
-            val m = Unigram.train(freqs, cfg.tokenization.vocabSize); m.encode
+        val model: WordEncoder = cfg.tokenization.algorithm match {
+          case "unigram" => Unigram.train(freqs, cfg.tokenization.vocabSize)
           case "wordpiece" =>
-            val m = WordPiece.train(
-              freqs, cfg.tokenization.vocabSize, cfg.tokenization.minFrequency)
-            m.encode
+            WordPiece.train(freqs, cfg.tokenization.vocabSize, cfg.tokenization.minFrequency)
           case "bpe" =>
-            val m = Bpe.train(
-              freqs, cfg.tokenization.vocabSize, cfg.tokenization.minFrequency)
-            m.encode
+            Bpe.train(freqs, cfg.tokenization.vocabSize, cfg.tokenization.minFrequency)
         }
-        val encUdf = udf(enc)
+        val encUdf = udf(model.encode _)
         passed.withColumn("tokens", encUdf(col("text")))
           .withColumn("token_count", size(col("tokens")).cast("long"))
           .transform(graft.CacheScope.persist)

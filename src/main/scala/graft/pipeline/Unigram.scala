@@ -28,7 +28,8 @@ object Unigram {
   val PruneFraction = 0.25
   val UnkId = 1
 
-  final case class Model(vocab: Map[String, Int], scores: Map[String, Double]) {
+  final case class Model(vocab: Map[String, Int], scores: Map[String, Double])
+      extends WordEncoder {
     def vocabSize: Int = vocab.size
 
     /** Viterbi-segment one word; unknown chars fall back to <unk>. */
@@ -36,9 +37,6 @@ object Unigram {
 
     def encodeWord(word: String): Array[Int] =
       segmentWord(word).map(p => vocab.getOrElse(p, UnkId)).toArray
-
-    def encode(text: String): Array[Int] =
-      text.split("[ \t\n\f\r]+").filter(_.nonEmpty).flatMap(encodeWord)
   }
 
   /** Max-sum-log-prob segmentation; pieces absent from `scores` are only
@@ -135,7 +133,7 @@ object Unigram {
       lexicon: Option[Map[String, Long]] = None): DataFrame = {
     import org.apache.spark.sql.functions._
     val model = train(lexicon.getOrElse(Bpe.wordFrequencies(docs)), vocabSize)
-    val nTok = Bpe.tokenCountUdf(model.encodeWord)
+    val nTok = Bpe.tokenCountUdf(model)
     docs.select(length(col("text")).as("n_chars"), nTok(col("text")).as("n_tokens"))
       .agg(
         count(lit(1)).as("total_documents"),

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * work — word-frequency counting — is the distributed aggregation in
   * [[Bpe.wordFrequencies]] (map-side combine, lexicon capped); training
   * runs on the driver over the vocabulary-sized lexicon; encoding is a
-  * deterministic per-row UDF.
+  * deterministic per-row UDF over [[WordEncoder.encode]].
   *
   * Selection is an O(live pairs) argmax scan per merge rather than
   * [[Bpe.train]]'s lazy-invalidation heap: a WordPiece score's
@@ -39,7 +39,7 @@ object WordPiece {
   val Cont = "##"
   val UnkId = 1
 
-  final case class Model(vocab: Map[String, Int]) {
+  final case class Model(vocab: Map[String, Int]) extends WordEncoder {
     def vocabSize: Int = vocab.size
 
     /** Greedy longest-match-first; any uncoverable span voids the whole
@@ -63,9 +63,6 @@ object WordPiece {
       }
       if (bad) Array(UnkId) else out.toArray
     }
-
-    def encode(text: String): Array[Int] =
-      text.split("[ \t\n\f\r]+").filter(_.nonEmpty).flatMap(encodeWord)
 
     /** T5: decode ids back to text (whole-word boundaries are implicit:
       * a piece without the "##" prefix starts a new word). */
@@ -224,7 +221,7 @@ object WordPiece {
   def statsQuery(docs: DataFrame, vocabSize: Int = 64,
       lexicon: Option[Map[String, Long]] = None): DataFrame = {
     val model = train(lexicon.getOrElse(Bpe.wordFrequencies(docs)), vocabSize)
-    val nTok = Bpe.tokenCountUdf(model.encodeWord)
+    val nTok = Bpe.tokenCountUdf(model)
     docs.select(length(col("text")).as("n_chars"), nTok(col("text")).as("n_tokens"))
       .agg(
         count(lit(1)).as("total_documents"),

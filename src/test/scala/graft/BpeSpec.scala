@@ -93,9 +93,7 @@ class BpeSpec extends SparkSpec {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    // words no other test uses, so no frequency frame another test left
-    // cached serves a call here: each call builds its own. Both counted
-    // calls share one cap, so their plans differ only in the data.
+    // Both counted calls share one cap, so their plans differ only in the data.
     val twoWords = Seq((1L, "delta delta omega delta"), (2L, "omega")).toDF("doc_id", "text")
     val threeWords = Seq((1L, "delta delta omega delta"), (2L, "omega sigma"))
       .toDF("doc_id", "text")
@@ -131,5 +129,14 @@ class BpeSpec extends SparkSpec {
     assert(Bpe.wordFrequenciesWithCoverage(threeWords) == Bpe.LexiconCoverage(all, 30L, 30L))
     assert(Bpe.wordFrequenciesWithCoverage(threeWords, maxLexicon = 1) ==
       Bpe.LexiconCoverage(Map("delta" -> 3L), 15L, 30L))
+  }
+
+  test("the lexicon releases its frequency frame on return, even outside any scope") {
+    import spark.implicits._
+    val docs = Seq((1L, "kappa kappa lambda"), (2L, "lambda mu")).toDF("doc_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    assert(Bpe.wordFrequencies(docs) == Map("kappa" -> 2L, "lambda" -> 2L, "mu" -> 1L))
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"cached after the call: $left")
   }
 }
