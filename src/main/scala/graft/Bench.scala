@@ -132,22 +132,9 @@ object Bench {
     // `memo_build_shared` entry included in the total: per-query medians
     // then measure warm steady-state against an index built exactly
     // once — the same amortization a production deployment runs.
-    // Skipped when a query filter is given and no memo consumer is in it.
-    val memoConsumers = Set("dedup_delta_minhash",
-      "dedup_minhash", "dedup_minhash_dupmap", "dedup_minhash_pairs",
-      "dedup_minhash_stats", "pipeline_unique_docs", "dedup_minhash_clusters",
-      "dedup_minhash_cluster_stats", "dedup_cluster_histogram", "dedup_keep_best",
-      "quality_lm_transition", "quality_lm_buckets",
-      "sim_ivf_topk", "sim_ivfpq_topk", "sim_ivfpq_rerank",
-      "sim_ann_lsh", "sim_semdedup", "sim_embed_dedup", "sim_embed_dedup_mp",
-      "dedup_semantic_text",
-      "decontaminate_fuzzy", "decontaminate_attribution",
-      "decontaminate_flags", "decontaminate_overlap",
-      "dedup_jaccard_dupmap", "corpus_novelty",
-      "mix_dsir_weights", "mix_dsir_weights_bigram", "quality_passed",
-      "quality_histogram", "quality_reason_report", "quality_by_source",
-      "tok_bpe_stats", "tok_wordpiece_stats", "tok_unigram_stats",
-      "quality_cascade", "quality_histogram_refdefaults", "lang_distribution")
+    // A query filter builds only the chains its queries read, and skips
+    // the mark when they read none.
+    val memoChains = graft.pipeline.Memos.chainsFor(only)
     // Per-mark metric deltas, run order, one entry per rep — the
     // mark-level self-explanation beside rep_spread (see
     // [[BenchMetricsListener]]). peakExecMem is a monotonic max, reset
@@ -160,14 +147,14 @@ object Bench {
       snapsByQuery(name) = snapsByQuery.getOrElse(name, Vector.empty) :+
         ((metrics.snapshot() - before, metrics.peakExecMem.get))
     val memoMark: Seq[(String, Double)] =
-      if (only.nonEmpty && only.intersect(memoConsumers).isEmpty) Nil
+      if (memoChains.isEmpty) Nil
       else {
         graft.pipeline.QueryMemo.phase = "memo_build"
         metrics.peakExecMem.set(0L)
         val snap0 = metrics.snapshot()
         val t0 = System.nanoTime()
         val ok =
-          try { graft.pipeline.Memos.build(spark, sfDir); true }
+          try { graft.pipeline.Memos.build(spark, sfDir, memoChains); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] memo_build_shared FAILED: ${e.getMessage}"); false
           }
@@ -276,8 +263,8 @@ object Bench {
     // the map says exactly which mark and how much, so round-over-round
     // totals decompose into real changes vs accounting shifts. (Two
     // classes land here by design and cost what they cost: memos for
-    // queries outside `memoConsumers`, and rebuilds after an LRU/
-    // fingerprint eviction mid-sweep.)
+    // queries outside every `Memos.chains` consumer set, and rebuilds
+    // after an LRU/fingerprint eviction mid-sweep.)
     val late = graft.pipeline.QueryMemo.lateBuilds()
     late.foreach { case (k, s) =>
       System.err.println(f"[bench] late memo build $k ${s}%.1f s")

@@ -15,7 +15,9 @@ import org.apache.spark.sql.SparkSession
   *    memo/CC materialization becomes a fault-tolerant `checkpoint()`
   *    (QueryMemo.materialize), so memos survive executor loss.
   *
-  * The Spark log level is WARN.
+  * The Spark log level is WARN; the engine's own `graft.*` loggers log
+  * at INFO, so the memo and connected-components timing lines reach a
+  * main's log.
   */
 object GraftSession {
 
@@ -67,6 +69,8 @@ object GraftSession {
       .config(s.conf.toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft", org.apache.logging.log4j.Level.INFO)
     s.checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     spark
   }

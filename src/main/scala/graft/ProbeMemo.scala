@@ -37,7 +37,7 @@ object ProbeMemo {
       MinHash.signatures(Tables.documents(spark, d))
         .write.format("noop").mode("overwrite").save()
     }
-    Memos.chains.flatten.foreach { case (name, f) => t(name)(f(spark, d)) }
+    Memos.chains.flatMap(_.steps).foreach { case (name, f) => t(name)(f(spark, d)) }
     spark.stop()
   }
 }

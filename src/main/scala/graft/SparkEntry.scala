@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Analytics, Bpe, Chunking, Clean, Cluster, Contamination, Dedup, LangModel, MinHash, NearDup, PipelineOps, Quality, Repetition, Sampling, Stage, TextEmbed, Tokenize, Unigram, Wiki, WordPiece}
+import graft.pipeline.{Analytics, Chunking, Clean, Cluster, Contamination, Dedup, LangModel, MinHash, NearDup, PipelineOps, Quality, Repetition, Sampling, Stage, TextEmbed, Tokenize, Wiki, WordEncoder}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -43,9 +43,7 @@ object SparkEntry {
       (MinHash.queries, MinHash.oracles),
       (Cluster.queries, Cluster.oracles),
       (Tokenize.queries, Tokenize.oracles),
-      (Bpe.queries, Bpe.oracles),
-      (Unigram.queries, Unigram.oracles),
-      (WordPiece.queries, WordPiece.oracles),
+      (WordEncoder.queries, WordEncoder.oracles),
       (Wiki.queries, Wiki.oracles),
       (PipelineOps.queries, PipelineOps.oracles),
       (Analytics.queries, Analytics.oracles),

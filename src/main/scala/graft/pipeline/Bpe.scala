@@ -19,7 +19,9 @@ import graft.Tables
   * the top ~1M words; tail words back off to char encoding via <unk>-free
   * char symbols). Encoding is a per-row UDF over [[WordEncoder.encode]]:
   * deterministic, embarrassingly parallel, and each task encodes a distinct
-  * word once (a per-task word → ids memo).
+  * word once (a per-task word → ids memo). Algorithm selection, the
+  * capped-lexicon warning, the stats rollup and the `tok_bpe_*` queries
+  * live in the shell the three tokenizers share, [[WordEncoder$]].
   *
   * Determinism: pair selection breaks ties by (count DESC, pair ASC);
   * vocab ids are specials, then sorted chars, then merges in creation
@@ -265,9 +267,9 @@ object Bpe {
   def wordFrequencies(docs: DataFrame, maxLexicon: Int = MaxLexicon): Map[String, Long] =
     wordFrequenciesWithCoverage(docs, maxLexicon).lexicon
 
-  /** One lexicon aggregation per table directory: all THREE trainer
-    * stats queries (BPE / WordPiece / Unigram) start from the same
-    * corpus word-frequency pass — previously each re-ran it. Driver
+  /** One lexicon aggregation per table directory: the six `tok_*`
+    * queries of [[WordEncoder.queries]] start from the same corpus
+    * word-frequency pass. Driver
     * footprint is [[MaxLexicon]]-bounded by construction (the same
     * bounded-collect class the trainers already rely on). */
   private val lexMemo = new graft.pipeline.QueryMemo[LexiconCoverage](name = "lexicon")
@@ -275,104 +277,4 @@ object Bpe {
     lexMemo.getOrElseUpdate(s, d) {
       wordFrequenciesWithCoverage(Tables.documents(s, d))
     }
-
-  private[pipeline] def trainOnCov(cov: LexiconCoverage, vocabSize: Int): Model = {
-    if (cov.droppedPairMass > 0)
-      log.warn(s"lexicon capped at ${cov.lexicon.size} words: " +
-        s"covers ${cov.keptPairMass} of ${cov.totalPairMass} pair mass " +
-        s"(truncation bound ${cov.droppedPairMass} per pair count)")
-    train(cov.lexicon, vocabSize)
-  }
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  def trainOn(docs: DataFrame, vocabSize: Int = 64): Model =
-    trainOnCov(wordFrequenciesWithCoverage(docs), vocabSize)
-
-  /** Token-COUNT udf for any of the three tokenizers: `size(encode(text))`
-    * per row, read from the model's per-task word memo
-    * ([[WordEncoder.tokenCount]]) without building the ids. */
-  private[pipeline] def tokenCountUdf(model: WordEncoder)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((t: String) => model.tokenCount(t))
-
-  /** T7 over a BPE model trained on the same corpus: stats of the encoded
-    * corpus. Registered rows-only (the merge table isn't SQL-derivable);
-    * semantics are pinned by BpeSpec goldens instead. */
-  def statsQuery(spark: SparkSession, docs: DataFrame, vocabSize: Int = 64,
-      cov: Option[LexiconCoverage] = None): DataFrame = {
-    val model = trainOnCov(cov.getOrElse(wordFrequenciesWithCoverage(docs)), vocabSize)
-    val nTok = tokenCountUdf(model)
-    docs.select(col("doc_id"), length(col("text")).as("n_chars"),
-        nTok(col("text")).as("n_tokens"))
-      .agg(
-        count(lit(1)).as("total_documents"),
-        sum(col("n_tokens")).as("total_tokens"),
-        sum(col("n_chars")).as("total_chars"),
-        lit(model.vocabSize).as("vocab_size"))
-      .select(col("*"),
-        (col("total_tokens").cast("double") / col("total_documents").cast("double"))
-          .as("avg_tokens_per_doc"),
-        (col("total_chars").cast("double") / col("total_tokens").cast("double"))
-          .as("compression_ratio"))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tok_bpe_stats" -> ((s, d) =>
-      statsQuery(s, Tables.documents(s, d), cov = Some(lexiconFor(s, d)))),
-    // Hash-checked companion for the rows-only tok_bpe_stats: the SAME
-    // lexicon build + trainer + encode UDF + stats rollup, but with
-    // vocabSize=0 so the trainer learns ZERO merges. A zero-merge BPE
-    // model has a closed form the oracle can state exactly — every word
-    // encodes to its chars plus the </w> sentinel, so total_tokens =
-    // Σ(non-ws chars) + Σ(word count), and vocab_size = specials(4) +
-    // distinct word chars + </w>. Everything in the chain EXCEPT the
-    // merge-selection loop (pinned by BpeSpec goldens) is arbitrated by
-    // DuckDB, closing the round-11 verdict's task #5 evidence gap.
-    "tok_bpe_char_baseline" -> ((s, d) =>
-      statsQuery(s, Tables.documents(s, d), vocabSize = 0,
-        cov = Some(lexiconFor(s, d)))))
-
-  /** tok_bpe_stats has no DuckDB oracle: the learned merge table is not
-    * SQL-derivable (the trainer is an iterative frequency argmax — each
-    * merge's pair counts depend on every earlier merge's rewrites, which
-    * SQL cannot express short of re-implementing the loop). The driver
-    * records the weaker rows-only check; BpeSpec pins exact encode/decode
-    * behavior on golden fixtures, and tok_bpe_char_baseline hash-checks
-    * the full surrounding machinery under a zero-merge model.
-    *
-    * Char-count convention: the oracle counts code points (DuckDB
-    * `length`/`string_split`) while `encodeWord` symbols are UTF-16
-    * units — identical unless the corpus has non-BMP chars (the gate
-    * corpora have none at any scale; verified per round).
-    *
-    * Lexicon-coverage assumption: the oracle's alphabet spans EVERY
-    * corpus word, but the engine's alphabet (and WordPiece's
-    * every-word-coverable property) comes from the [[MaxLexicon]]-capped
-    * lexicon — a character appearing ONLY in words ranked past the cap
-    * would make `vocab_size` diverge (a spurious hash mismatch, not an
-    * engine bug). Valid while distinct corpus words ≤ [[MaxLexicon]],
-    * true of every gate corpus by orders of magnitude (the synthetic
-    * generator's vocabulary is dozens of words, measured 31 at sf0.1);
-    * [[trainOnCov]] logs the `lexicon capped` warning the moment the
-    * assumption stops holding, so a divergence is pre-announced in the
-    * log rather than silent. */
-  def oracles: Map[String, String] = Map(
-    "tok_bpe_char_baseline" ->
-      """WITH words AS (SELECT unnest(regexp_split_to_array(text, '[ \t\n\f\r]+')) AS w
-        |               FROM documents),
-        |nz AS (SELECT w FROM words WHERE w <> ''),
-        |tok AS (SELECT CAST(sum(length(w)) + count(*) AS BIGINT) AS total_tokens FROM nz),
-        |alpha AS (SELECT count(DISTINCT c) AS n_alpha
-        |          FROM (SELECT unnest(string_split(w, '')) AS c FROM nz)),
-        |base AS (SELECT CAST(count(*) AS BIGINT) AS total_documents,
-        |                CAST(sum(length(text)) AS BIGINT) AS total_chars
-        |         FROM documents)
-        |SELECT base.total_documents, tok.total_tokens, base.total_chars,
-        |       CAST(alpha.n_alpha + 5 AS INT) AS vocab_size,
-        |       tok.total_tokens::DOUBLE / base.total_documents::DOUBLE
-        |         AS avg_tokens_per_doc,
-        |       base.total_chars::DOUBLE / tok.total_tokens::DOUBLE
-        |         AS compression_ratio
-        |FROM base, tok, alpha""".stripMargin)
 }

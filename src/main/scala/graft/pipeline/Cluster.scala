@@ -44,6 +44,7 @@ import graft.Tables
 object Cluster {
 
   private val MaxRounds = 40
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Connected components of the undirected graph given as `(id_a, id_b)`
     * pair rows. Returns `(doc_id, cluster_id)` for every vertex that
@@ -146,7 +147,7 @@ object Cluster {
     require(!anyChanged, s"connectedComponents did not converge in $MaxRounds rounds")
     // observability: rounds ~ log(component diameter) — the number that
     // decides iteration cost at scale (scale-probe sweeps read it).
-    System.err.println(s"[graft.cc] converged in $rounds rounds")
+    log.info(s"[graft.cc] converged in $rounds rounds")
     labels.select(col("id").as("doc_id"), col("lab").as("cluster_id"))
   }
 
@@ -213,8 +214,7 @@ object Cluster {
         if (ids(i) < minOf(r)) minOf(r) = ids(i)
         i += 1
       }
-      System.err.println(
-        s"[graft.cc] solved ${edges.length} edges / ${ids.length} vertices on driver")
+      log.info(s"[graft.cc] solved ${edges.length} edges / ${ids.length} vertices on driver")
       val ss = pairs.sparkSession
       val rows = (0 until ids.length).map { v =>
         org.apache.spark.sql.Row(ids(v), minOf(find(v)))

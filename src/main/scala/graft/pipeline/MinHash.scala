@@ -666,7 +666,6 @@ object MinHash {
     while (i < NumPerm) { if (a(i) == b(i)) m += 1; i += 1 }
     m
   }
-  private val sigMatchCountUdf = udf(sigMatchCount _)
 
   /** D5: the surviving documents (near-dups removed, lowest id wins).
     * `docs` is read twice — by the signature pass and by the survivors'

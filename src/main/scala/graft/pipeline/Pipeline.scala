@@ -113,10 +113,10 @@ object Pipeline {
   }
 
   /** The names each config switch accepts; [[run]] rejects any other
-    * before its first job. The codec set is Spark's Parquet codecs,
+    * before its first job. The tokenizer names are the keys of
+    * [[WordEncoder.Trainers]]. The codec set is Spark's Parquet codecs,
     * matched case-insensitively as Spark's writer does. */
   private val DedupAlgorithms: Seq[String] = Seq("minhash_lsh", "exact_hash", "simhash")
-  private val TokenizerAlgorithms: Seq[String] = Seq("bpe", "wordpiece", "unigram")
   private val OutputFormats: Seq[String] = Seq("parquet", "jsonl")
   private val ParquetCodecs: Seq[String] =
     org.apache.spark.sql.execution.datasources.parquet.ParquetCompressionCodec.values()
@@ -162,7 +162,8 @@ object Pipeline {
     * shape) lands next to the outputs. */
   def run(docs0: DataFrame, cfg: GraftConfig, outDir: String): DataFrame = graft.CacheScope.within {
     requireName("deduplication.algorithm", cfg.dedup.algorithm, DedupAlgorithms)
-    requireName("tokenization.algorithm", cfg.tokenization.algorithm, TokenizerAlgorithms)
+    requireName("tokenization.algorithm", cfg.tokenization.algorithm,
+      WordEncoder.Trainers.keys.toSeq)
     requireName("output.format", cfg.output.format, OutputFormats)
     requireName("output.compression",
       cfg.output.compression.toLowerCase(java.util.Locale.ROOT), ParquetCodecs)
@@ -203,17 +204,12 @@ object Pipeline {
     val tokenized =
       if (!cfg.tokenization.enabled) None
       else Some {
-        // tokenization.algorithm selects the trainer; all three models
-        // share the (train on driver-merged word frequencies, distributed
-        // encode UDF) contract — tokenizer.py:58-133's algorithm switch.
-        val freqs = Bpe.wordFrequencies(passed)
-        val model: WordEncoder = cfg.tokenization.algorithm match {
-          case "unigram" => Unigram.train(freqs, cfg.tokenization.vocabSize)
-          case "wordpiece" =>
-            WordPiece.train(freqs, cfg.tokenization.vocabSize, cfg.tokenization.minFrequency)
-          case "bpe" =>
-            Bpe.train(freqs, cfg.tokenization.vocabSize, cfg.tokenization.minFrequency)
-        }
+        // tokenization.algorithm selects the trainer from the shell's
+        // registry; all three models train on driver-merged word
+        // frequencies and encode through one distributed UDF.
+        val model = WordEncoder.train(cfg.tokenization.algorithm,
+          Bpe.wordFrequenciesWithCoverage(passed), cfg.tokenization.vocabSize,
+          cfg.tokenization.minFrequency)
         val encUdf = udf(model.encode _)
         passed.withColumn("tokens", encUdf(col("text")))
           .withColumn("token_count", size(col("tokens")).cast("long"))

@@ -50,6 +50,8 @@ final class QueryMemo[V](capacity: Int = 4, name: String = "") {
 }
 
 object QueryMemo {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Plan-truncating materialization for memo state that outlives a
     * query — the one shared spelling of the checkpoint-reliability
     * choice (round-14 verdict #2; previously [[Cluster]] alone made it
@@ -128,9 +130,8 @@ object QueryMemo {
       // alone) but DISABLES in-place-regeneration staleness detection —
       // a stale memo then surfaces as a confusing Spark-vs-oracle hash
       // mismatch, so the degradation must be loud (round-14 advice).
-      System.err.println(
-        s"[graft.memo] WARN fingerprint($d) failed (${e.getMessage}); " +
-          "using 0 — stale-data invalidation disabled for this key")
+      log.warn(s"[graft.memo] WARN fingerprint($d) failed (${e.getMessage}); " +
+        "using 0 — stale-data invalidation disabled for this key")
       0L
     }
   }

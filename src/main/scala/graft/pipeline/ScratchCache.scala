@@ -42,6 +42,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[graft] object ScratchCache {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   private def scratchRoot(s: SparkSession): Path =
     s.sparkContext.getCheckpointDir match {
       case Some(cp) => new Path(cp, "graft_scratch")
@@ -168,7 +170,7 @@ private[graft] object ScratchCache {
     }
     val freed = stale.map(st => sizeOf(fs, st.getPath)).sum
     stale.foreach(st => fs.delete(st.getPath, true))
-    System.err.println(
+    log.info(
       f"[graft.memos] $name scratch ${sizeOf(fs, target) / 1048576.0}%.1f MB" +
         f" at ${target.getName} (gc ${stale.length} stale," +
         f" ${freed / 1048576.0}%.1f MB freed)")

@@ -2,8 +2,6 @@ package graft.pipeline
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
-
 /** Unigram language-model tokenizer (the third T1 algorithm option,
   * reference tokenizer.py:58-133 / pipeline_config.yaml:63 `unigram`).
   * Re-derived from the published SentencePiece unigram algorithm (Kudo
@@ -20,7 +18,8 @@ import org.apache.spark.sql.DataFrame
   * Deterministic: all ties break on (score/usage, piece) lexicographic
   * order. Like [[Bpe]], the corpus-sized work (word frequencies) is a
   * Spark aggregation; the training loop runs on the driver over the
-  * vocabulary-sized lexicon.
+  * vocabulary-sized lexicon. Selection, stats and the `tok_unigram_*`
+  * queries live in the shell the three tokenizers share, [[WordEncoder$]].
   */
 object Unigram {
 
@@ -123,62 +122,4 @@ object Unigram {
     val vocab = (Bpe.Specials ++ ordered).zipWithIndex.toMap
     Model(vocab, scores)
   }
-
-  def trainOn(docs: DataFrame, vocabSize: Int = 64): Model =
-    train(Bpe.wordFrequencies(docs), vocabSize)
-
-  /** T7 over a unigram model trained on the same corpus. Rows-only check
-    * (like tok_bpe_stats: the learned pieces aren't SQL-derivable). */
-  def statsQuery(docs: DataFrame, vocabSize: Int = 64,
-      lexicon: Option[Map[String, Long]] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val model = train(lexicon.getOrElse(Bpe.wordFrequencies(docs)), vocabSize)
-    val nTok = Bpe.tokenCountUdf(model)
-    docs.select(length(col("text")).as("n_chars"), nTok(col("text")).as("n_tokens"))
-      .agg(
-        count(lit(1)).as("total_documents"),
-        sum(col("n_tokens")).as("total_tokens"),
-        sum(col("n_chars")).as("total_chars"),
-        lit(model.vocabSize).as("vocab_size"))
-      .select(col("*"),
-        (col("total_chars").cast("double") / col("total_tokens").cast("double"))
-          .as("compression_ratio"))
-  }
-
-  def queries: Map[String, (org.apache.spark.sql.SparkSession, String) => DataFrame] = Map(
-    "tok_unigram_stats" -> ((s, d) => statsQuery(graft.Tables.documents(s, d),
-      lexicon = Some(Bpe.lexiconFor(s, d).lexicon))),
-    // Hash-checked companion for the rows-only tok_unigram_stats (the
-    // tok_bpe_char_baseline idiom): vocabSize=0 sets the prune target to
-    // the char alphabet (chars are never pruned), so the EM loop runs to
-    // a chars-only vocabulary and Viterbi segmentation has exactly one
-    // path — one piece per char. total_tokens = Σ word chars and
-    // vocab_size = specials(4) + distinct word chars, both exactly
-    // SQL-stateable; the seed scoring + prune loop + segmentation
-    // machinery all execute for real on the way there. Only the learned
-    // piece inventory of a non-degenerate target (pinned by UnigramSpec
-    // goldens) is outside the check.
-    "tok_unigram_char_baseline" -> ((s, d) =>
-      statsQuery(graft.Tables.documents(s, d), vocabSize = 0,
-        lexicon = Some(Bpe.lexiconFor(s, d).lexicon))))
-
-  /** tok_unigram_stats stays rows-only (the EM-pruned piece inventory
-    * isn't SQL-derivable; see [[Bpe.oracles]] for the full argument);
-    * the char-baseline companion arbitrates the rest of the chain. */
-  def oracles: Map[String, String] = Map(
-    "tok_unigram_char_baseline" ->
-      """WITH words AS (SELECT unnest(regexp_split_to_array(text, '[ \t\n\f\r]+')) AS w
-        |               FROM documents),
-        |nz AS (SELECT w FROM words WHERE w <> ''),
-        |tok AS (SELECT CAST(sum(length(w)) AS BIGINT) AS total_tokens FROM nz),
-        |alpha AS (SELECT count(DISTINCT c) AS n_alpha
-        |          FROM (SELECT unnest(string_split(w, '')) AS c FROM nz)),
-        |base AS (SELECT CAST(count(*) AS BIGINT) AS total_documents,
-        |                CAST(sum(length(text)) AS BIGINT) AS total_chars
-        |         FROM documents)
-        |SELECT base.total_documents, tok.total_tokens, base.total_chars,
-        |       CAST(alpha.n_alpha + 4 AS INT) AS vocab_size,
-        |       base.total_chars::DOUBLE / tok.total_tokens::DOUBLE
-        |         AS compression_ratio
-        |FROM base, tok, alpha""".stripMargin)
 }

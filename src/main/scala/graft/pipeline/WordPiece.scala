@@ -2,9 +2,6 @@ package graft.pipeline
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** WordPiece tokenizer — the reference's second T1 training algorithm
   * (tokenizer.py:58-133 offers bpe | wordpiece | unigram as co-equal
   * trainers; its wordpiece path wraps the Rust HuggingFace
@@ -21,7 +18,9 @@ import org.apache.spark.sql.functions._
   * work — word-frequency counting — is the distributed aggregation in
   * [[Bpe.wordFrequencies]] (map-side combine, lexicon capped); training
   * runs on the driver over the vocabulary-sized lexicon; encoding is a
-  * deterministic per-row UDF over [[WordEncoder.encode]].
+  * deterministic per-row UDF over [[WordEncoder.encode]]. Selection,
+  * stats and the `tok_wordpiece_*` queries live in the shared shell,
+  * [[WordEncoder$]].
   *
   * Selection is an O(live pairs) argmax scan per merge rather than
   * [[Bpe.train]]'s lazy-invalidation heap: a WordPiece score's
@@ -210,66 +209,4 @@ object WordPiece {
     val vocab = (Bpe.Specials ++ alphabet ++ merges.result().distinct).zipWithIndex.toMap
     Model(vocab)
   }
-
-  def trainOn(docs: DataFrame, vocabSize: Int = 64): Model =
-    train(Bpe.wordFrequencies(docs), vocabSize)
-
-  /** T7 over a WordPiece model trained on the same corpus. Rows-only
-    * check (like tok_bpe_stats / tok_unigram_stats: the likelihood-
-    * learned pieces aren't SQL-derivable); WordPieceSpec pins exact
-    * training and encode behavior on golden fixtures. */
-  def statsQuery(docs: DataFrame, vocabSize: Int = 64,
-      lexicon: Option[Map[String, Long]] = None): DataFrame = {
-    val model = train(lexicon.getOrElse(Bpe.wordFrequencies(docs)), vocabSize)
-    val nTok = Bpe.tokenCountUdf(model)
-    docs.select(length(col("text")).as("n_chars"), nTok(col("text")).as("n_tokens"))
-      .agg(
-        count(lit(1)).as("total_documents"),
-        sum(col("n_tokens")).as("total_tokens"),
-        sum(col("n_chars")).as("total_chars"),
-        lit(model.vocabSize).as("vocab_size"))
-      .select(col("*"),
-        (col("total_chars").cast("double") / col("total_tokens").cast("double"))
-          .as("compression_ratio"))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tok_wordpiece_stats" -> ((s, d) => statsQuery(graft.Tables.documents(s, d),
-      lexicon = Some(Bpe.lexiconFor(s, d).lexicon))),
-    // Hash-checked companion for the rows-only tok_wordpiece_stats (the
-    // tok_bpe_char_baseline idiom): vocabSize=0 learns ZERO merges, so
-    // the vocab is exactly the position-tagged alphabet and greedy
-    // longest-match emits one piece per char — total_tokens = Σ word
-    // chars, vocab_size = specials(4) + distinct bare first chars +
-    // distinct "##"-tagged continuation chars. Every word is coverable
-    // by construction (the alphabet comes from the same corpus), so the
-    // <unk> collapse never fires. Only the likelihood-scored merge
-    // selection (pinned by WordPieceSpec goldens) is outside the check.
-    "tok_wordpiece_char_baseline" -> ((s, d) =>
-      statsQuery(graft.Tables.documents(s, d), vocabSize = 0,
-        lexicon = Some(Bpe.lexiconFor(s, d).lexicon))))
-
-  /** tok_wordpiece_stats stays rows-only (the likelihood-learned pieces
-    * aren't SQL-derivable; see [[Bpe.oracles]] for the full argument);
-    * the char-baseline companion arbitrates the rest of the chain. */
-  def oracles: Map[String, String] = Map(
-    "tok_wordpiece_char_baseline" ->
-      """WITH words AS (SELECT unnest(regexp_split_to_array(text, '[ \t\n\f\r]+')) AS w
-        |               FROM documents),
-        |nz AS (SELECT w FROM words WHERE w <> ''),
-        |tok AS (SELECT CAST(sum(length(w)) AS BIGINT) AS total_tokens FROM nz),
-        |alpha AS (SELECT count(*) AS n_alpha FROM (
-        |  SELECT DISTINCT substring(w, 1, 1) AS sym FROM nz
-        |  UNION
-        |  SELECT DISTINCT '##' || c AS sym
-        |  FROM (SELECT unnest(string_split(substring(w, 2), '')) AS c
-        |        FROM nz WHERE length(w) > 1))),
-        |base AS (SELECT CAST(count(*) AS BIGINT) AS total_documents,
-        |                CAST(sum(length(text)) AS BIGINT) AS total_chars
-        |         FROM documents)
-        |SELECT base.total_documents, tok.total_tokens, base.total_chars,
-        |       CAST(alpha.n_alpha + 4 AS INT) AS vocab_size,
-        |       base.total_chars::DOUBLE / tok.total_tokens::DOUBLE
-        |         AS compression_ratio
-        |FROM base, tok, alpha""".stripMargin)
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.Bpe
+import graft.pipeline.{Bpe, WordEncoder}
 
 /** Mirrors reference tests/test_pipeline.py:180-241 (TestTokenizer):
   * vocab bounded by target, encode yields ints, save/load round-trip —
@@ -58,7 +58,7 @@ class BpeSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val freqs = Bpe.wordFrequencies(docs)
     assert(freqs == Map("spark" -> 3L, "flink" -> 2L, "beam" -> 1L))
-    val m = Bpe.trainOn(docs, vocabSize = 32)
+    val m = WordEncoder.train("bpe", Bpe.wordFrequenciesWithCoverage(docs), vocabSize = 32)
     assert(m.vocabSize <= 32)
   }
 

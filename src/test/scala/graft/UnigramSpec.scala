@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.Unigram
+import graft.pipeline.{Bpe, Unigram, WordEncoder}
 
 /** Unigram-LM tokenizer (third T1 algorithm option). */
 class UnigramSpec extends SparkSpec {
@@ -42,7 +42,8 @@ class UnigramSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((1L, "nation international nation"), (2L, "intern nation"))
       .toDF("doc_id", "text")
-    val m = Unigram.trainOn(docs, vocabSize = 32)
+    val m = WordEncoder.train("unigram", Bpe.wordFrequenciesWithCoverage(docs), vocabSize = 32)
+      .asInstanceOf[Unigram.Model]
     assert(m.segmentWord("nation").mkString("") == "nation")
   }
 }

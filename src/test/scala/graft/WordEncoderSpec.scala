@@ -13,9 +13,6 @@ import graft.pipeline.{Bpe, Pipeline, Unigram, WordEncoder, WordPiece}
 class WordEncoderSpec extends SparkSpec {
   import WordEncoderSpec._
 
-  private def reference(m: WordEncoder, text: String): Array[Int] =
-    text.split("[ \t\n\f\r]+").filter(_.nonEmpty).flatMap(m.encodeWord)
-
   // Word chars: ASCII and Latin-1 letters, U+000B (not a separator, so it
   // stays inside its word) and two supplementary letters (Deseret, Gothic),
   // whose surrogate halves are separate symbols in training and encode.
@@ -170,8 +167,13 @@ class WordEncoderSpec extends SparkSpec {
 object WordEncoderSpec {
   private val calls = new AtomicInteger
 
+  /** The per-occurrence encode: every word through `encodeWord`, no memo. */
+  def reference(m: WordEncoder, text: String): Array[Int] =
+    text.split("[ \t\n\f\r]+").filter(_.nonEmpty).flatMap(m.encodeWord)
+
   /** Encodes a word to (length, tag) and counts every call. */
   final case class Counting(tag: Int) extends WordEncoder {
+    def vocabSize: Int = 0
     def encodeWord(word: String): Array[Int] = {
       calls.incrementAndGet()
       Array(word.length, tag)

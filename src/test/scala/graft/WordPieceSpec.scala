@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{Bpe, WordPiece}
+import graft.pipeline.{Bpe, WordEncoder, WordPiece}
 
 /** Pins the WordPiece trainer (tokenizer.py:58-133's `wordpiece` option):
   * likelihood-scored merge selection, ## continuation pieces, greedy
@@ -63,7 +63,8 @@ class WordPieceSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((1L, "spark spark flink spark"), (2L, "flink beam"))
       .toDF("doc_id", "text")
-    val m = WordPiece.trainOn(docs, vocabSize = 32)
+    val m = WordEncoder.train("wordpiece", Bpe.wordFrequenciesWithCoverage(docs), vocabSize = 32)
+      .asInstanceOf[WordPiece.Model]
     assert(m.vocabSize <= 32)
     assert(m.vocab.keySet.intersect(Bpe.Specials.toSet) == Bpe.Specials.toSet)
   }
