@@ -29,14 +29,14 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val a = parseArgs(args)
+    // session first: before it, log4j's root level drops the config's WARN
+    val spark = GraftSession.start("graft-pipeline")
     val cfg0 = a.get("config").map(Pipeline.GraftConfig.fromYamlFile)
       .getOrElse(Pipeline.GraftConfig())
     val cfg = a.get("max-articles")
       .map(n => cfg0.copy(maxDocs = Some(n.toLong))).getOrElse(cfg0)
     val outDir = a.getOrElse("output-dir",
       java.nio.file.Files.createTempDirectory("graft-out").toString)
-
-    val spark = GraftSession.start("graft-pipeline")
 
     val docs = (a.get("input"), a.get("wiki-dump")) match {
       case (Some(parquet), _) =>

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Analytics, Chunking, Clean, Cluster, Contamination, Dedup, LangModel, MinHash, NearDup, PipelineOps, Quality, Repetition, Sampling, Stage, TextEmbed, Tokenize, Wiki, WordEncoder}
+import graft.pipeline.{Analytics, Chunking, Clean, Cluster, Contamination, Dedup, LangModel, MinHash, NearDup, Pipeline, PipelineOps, Quality, Repetition, Sampling, TextEmbed, Tokenize, Wiki, WordEncoder}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -22,9 +22,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val docs = Tables.documents(spark, sfDir)
-    val cleaned = docs
-      .withColumn("text", Stage.once(Clean.cleanText(col("text"))))
-      .filter(length(col("text")) >= 100)
+    val cleaned = Pipeline.cleanStage(docs, Pipeline.CleaningConfig.regexOnly(100))
     Quality.withReason(Dedup.exactDedup(cleaned))
       .groupBy(col("lang"), col("reason"))
       .agg(count(lit(1)).as("n_docs"))

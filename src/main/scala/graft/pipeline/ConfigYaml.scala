@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.{util => ju}
 
+import scala.jdk.CollectionConverters._
+
 import org.yaml.snakeyaml.Yaml
 
 /** YAML config ingestion (reference: src/utils/config.py:12-125 over
@@ -59,13 +61,11 @@ object ConfigYaml {
     }
 
     /** Present-and-non-null numeric, else None (nullable knobs like
-      * ingestion.max_articles / deduplication.num_bands). */
+      * ingestion.max_articles). */
     def getLongOpt(path: String): Option[Long] = get(path) match {
       case Some(n: Number) => Some(n.longValue)
       case _ => None
     }
-
-    def getIntOpt(path: String): Option[Int] = getLongOpt(path).map(_.toInt)
 
     def getStrings(path: String, default: Seq[String]): Seq[String] = get(path) match {
       case Some(l: ju.List[_]) =>
@@ -78,12 +78,38 @@ object ConfigYaml {
 
   def parse(yamlText: String): Tree = new Tree(new Yaml().load[Any](yamlText))
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** YAML keys the engine reads no value from, each with the value it
+    * runs with (the MinHash shape is shared with the DuckDB oracle). */
+  private val Pinned: Seq[(String, String)] = Seq(
+    "deduplication.num_permutations" -> MinHash.NumPerm.toString,
+    "deduplication.threshold" -> MinHash.Threshold.toString,
+    "deduplication.num_bands" -> MinHash.NumBands.toString,
+    "deduplication.shingle_size" -> MinHash.ShingleSize.toString,
+    "tokenization.special_tokens" -> Bpe.Specials.mkString("[", ", ", "]"),
+    "tokenization.output_format" -> "jsonl", "output.include_metadata" -> "true")
+
+  /** `key = value (runs with pinned)` for each pinned key whose YAML
+    * value differs; numbers compare by value, absent or null keys pass. */
+  def unhonoured(t: Tree): Seq[String] = Pinned.flatMap { case (key, pinned) =>
+    t.get(key).map {
+      case n: Number => scala.util.Try(new java.math.BigDecimal(n.toString)
+        .stripTrailingZeros.toPlainString).getOrElse(n.toString)
+      case l: ju.List[_] => l.asScala.mkString("[", ", ", "]")
+      case v => String.valueOf(v)
+    }.filter(_ != pinned).map(v => s"$key = $v (runs with $pinned)")
+  }
+
   /** configs/pipeline_config.yaml → GraftConfig. Key-by-key transliteration
     * of the YAML tree; every default below is the reference's own default
     * for the same key, so a partial YAML degrades exactly as the reference
     * does. */
   def fromYaml(yamlText: String): Pipeline.GraftConfig = {
     val t = parse(yamlText)
+    val ignored = unhonoured(t)
+    if (ignored.nonEmpty)
+      log.warn(s"config values the engine does not honour: ${ignored.mkString("; ")}")
 
     val cleaning = Pipeline.CleaningConfig(
       removeUrls = t.getBoolean("cleaning.remove_urls", default = true),
@@ -98,11 +124,7 @@ object ConfigYaml {
 
     val dedup = Pipeline.DedupConfig(
       enabled = t.getBoolean("deduplication.enabled", default = true),
-      algorithm = t.getString("deduplication.algorithm", default = "minhash_lsh"),
-      numPermutations = t.getInt("deduplication.num_permutations", default = 128),
-      threshold = t.getDouble("deduplication.threshold", default = 0.8),
-      numBands = t.getIntOpt("deduplication.num_bands"),
-      shingleSize = t.getInt("deduplication.shingle_size", default = 5))
+      algorithm = t.getString("deduplication.algorithm", default = "minhash_lsh"))
 
     // quality_filter.py:94-137 constructor defaults
     val quality = Quality.Config(
@@ -121,18 +143,14 @@ object ConfigYaml {
       enabled = t.getBoolean("tokenization.enabled", default = true),
       algorithm = t.getString("tokenization.algorithm", default = "bpe"),
       vocabSize = t.getInt("tokenization.vocab_size", default = 32000),
-      minFrequency = t.getLong("tokenization.min_frequency", default = 2L),
-      specialTokens = t.getStrings("tokenization.special_tokens",
-        Seq("<pad>", "<unk>", "<bos>", "<eos>")),
-      outputFormat = t.getString("tokenization.output_format", default = "jsonl"))
+      minFrequency = t.getLong("tokenization.min_frequency", default = 2L))
 
     val output = Pipeline.OutputConfig(
       format = t.getString("output.format", default = "parquet"),
       compression = t.getString("output.compression", default = "snappy"),
       // max_file_size_mb is a size hint; Spark's file-split control is
       // maxRecordsPerFile, set separately — 0 keeps Spark's natural splits.
-      maxRecordsPerFile = 0L,
-      includeMetadata = t.getBoolean("output.include_metadata", default = true))
+      maxRecordsPerFile = 0L)
 
     Pipeline.GraftConfig(
       maxDocs = t.getLongOpt("ingestion.max_articles"),

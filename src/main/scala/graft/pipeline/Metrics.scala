@@ -6,8 +6,10 @@ import java.nio.file.{Files, Paths}
   * 18-59 `StageMetrics`, :138-170 `to_dict`/`save` → metrics.json).
   *
   * Counts come from `Sinks.observeStage` observations — exact, collected
-  * during the run's existing actions with NO extra pass over the data.
-  * Durations are wall-clock phase timers from `Pipeline.run`. One honest
+  * during the run's existing actions with NO extra pass over the data and
+  * no job of their own; `filter_reasons` is `Pipeline.qualityStage`'s one
+  * `count_if` per [[Quality.Reasons]] entry. Durations are wall-clock
+  * phase timers from `Pipeline.run`. One honest
   * deviation from the eager reference: ingest→clean→dedup→quality do
   * not run one after another. MinHash dedup's probe jobs, run while the
   * dedup stage is planned, already scan, clean and sign the corpus; the

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Config tree + end-to-end orchestrator (reference: src/main.py:44-150
   * `LLMDataPipeline`, configs/pipeline_config.yaml, src/utils/config.py).
@@ -42,37 +43,38 @@ object Pipeline {
       removeHtmlTags: Boolean = false,
       minLengthChars: Int = 100)
 
+  object CleaningConfig {
+    /** The regex-only chain of [[Clean.cleanText]] (no mojibake fix, no
+      * NFKC), the chain the DuckDB oracle can reproduce. */
+    def regexOnly(minLengthChars: Int): CleaningConfig =
+      CleaningConfig(normalizeUnicode = false, fixMojibake = false,
+        minLengthChars = minLengthChars)
+  }
+
   /** pipeline_config.yaml:32-39. algorithm: exact_hash | minhash_lsh |
-    * simhash. The LSH shape knobs (num_permutations/threshold/num_bands/
-    * shingle_size) are parsed and then ignored: nothing validates or
-    * reads them (the reference YAML's `num_bands: 32` has no effect).
-    * The engine's MinHash instantiation pins 128 perms, 16x8 bands and
-    * 5-gram shingles — the reference defaults — because the banded
+    * simhash. The LSH shape is pinned, not configured: 128 permutations,
+    * 16x8 bands, 5-gram shingles and threshold 0.8, because the banded
     * signatures are shared bit-for-bit with the DuckDB oracle (see
-    * [[MinHash]]). */
+    * [[MinHash]]); [[ConfigYaml.fromYaml]] warns about a YAML that asks
+    * for another shape. */
   final case class DedupConfig(
       enabled: Boolean = true,
-      algorithm: String = "minhash_lsh",
-      numPermutations: Int = 128,
-      threshold: Double = 0.8,
-      numBands: Option[Int] = None, // null = auto-calculated
-      shingleSize: Int = 5)
+      algorithm: String = "minhash_lsh")
 
-  /** pipeline_config.yaml:60-70. algorithm: bpe | wordpiece | unigram */
+  /** pipeline_config.yaml:60-70. algorithm: bpe | wordpiece | unigram.
+    * The special tokens are [[Bpe.Specials]] and the tokens sink writes
+    * JSONL. */
   final case class TokenizationConfig(
       enabled: Boolean = true,
       algorithm: String = "bpe",
       vocabSize: Int = 32000,
-      minFrequency: Long = 2L,
-      specialTokens: Seq[String] = Seq("<pad>", "<unk>", "<bos>", "<eos>"),
-      outputFormat: String = "jsonl")
+      minFrequency: Long = 2L)
 
-  /** pipeline_config.yaml:72-78 */
+  /** pipeline_config.yaml:72-78. The documents sink writes every column. */
   final case class OutputConfig(
       format: String = "parquet", // parquet | jsonl
       compression: String = "snappy", // snappy | gzip | none
-      maxRecordsPerFile: Long = 0L,
-      includeMetadata: Boolean = true)
+      maxRecordsPerFile: Long = 0L)
 
   final case class GraftConfig(
       maxDocs: Option[Long] = None, // ingestion.max_articles (O3/P5)
@@ -126,6 +128,12 @@ object Pipeline {
     require(accepted.contains(value),
       s"$key = '$value' is not one of: ${accepted.mkString(", ")}")
 
+  /** Clean stage: the clean kernel ([[cleanColumn]]), then the
+    * reference's min-length filter on the cleaned text. */
+  def cleanStage(df: DataFrame, cfg: CleaningConfig): DataFrame =
+    df.withColumn("text", cleanColumn(cfg))
+      .filter(length(col("text")) >= cfg.minLengthChars)
+
   def dedupStage(df: DataFrame, cfg: DedupConfig): DataFrame =
     if (!cfg.enabled) df
     else cfg.algorithm match {
@@ -136,13 +144,35 @@ object Pipeline {
       case "minhash_lsh" => MinHash.dedup(df)
     }
 
+  /** Quality stage: the documents whose cascade reason is `passed`, and
+    * an observation with one `count_if` per [[Quality.Reasons]] entry. */
+  def qualityStage(df: DataFrame, cfg: Quality.Config): (DataFrame, Observation) = {
+    val obs = Observation("reasons")
+    val counts = Quality.Reasons.map(r => count_if(col("reason") === r).as(r))
+    val reasoned = Quality.withReason(df, cfg).observe(obs, counts.head, counts.tail: _*)
+    (reasoned.filter(col("reason") === "passed").drop("reason"), obs)
+  }
+
+  /** Tokenize stage: train the [[WordEncoder.Trainers]] model on the
+    * documents' word frequencies and encode each document; persisted,
+    * because both sinks read it. */
+  def tokenizeStage(docs: DataFrame, cfg: TokenizationConfig): DataFrame = {
+    val model = WordEncoder.train(cfg.algorithm, Bpe.wordFrequenciesWithCoverage(docs),
+      cfg.vocabSize, cfg.minFrequency)
+    graft.CacheScope.persist(docs.withColumn("tokens", udf(model.encode _).apply(col("text")))
+      .withColumn("token_count", size(col("tokens")).cast("long")))
+  }
+
   /** Full run: returns the one-row summary after writing outputs.
-    * Mirrors src/main.py:80-150 stage order. An unknown algorithm,
-    * output format or codec name fails before the first job.
+    * Mirrors src/main.py:80-150 stage order: ingest, [[cleanStage]],
+    * [[dedupStage]], [[qualityStage]], [[tokenizeStage]], then the sinks.
+    * An unknown algorithm, output format or codec name fails before the
+    * first job.
     *
-    * Every stage boundary carries an `observe` counter, so stage counts
-    * (and the run summary built from them) cost ZERO extra passes — they
-    * resolve as a side effect of the actions the run performs anyway.
+    * Every stage boundary carries an `observe` counter, so stage counts,
+    * the filter-reason histogram and the summary (written on the driver)
+    * cost no extra pass and no job: they resolve as a side effect of the
+    * actions the run performs anyway.
     *
     * Each layer's work runs once per document. Where that is arranged:
     *  - clean: [[cleanColumn]] is a [[Stage.once]] barrier, so the
@@ -152,8 +182,8 @@ object Pipeline {
     *    feeds both the signature pass and the survivors' anti-join) and
     *    the identical-signature collapse (its probes and the band/verify
     *    chain all read it);
-    *  - quality: the reasoned frame feeds the passed docs, the tokenizer
-    *    training and the filter-reason histogram, so it is persisted;
+    *  - quality: the passed documents feed the tokenizer's lexicon and
+    *    the encode, so they are persisted when tokenization is on;
     *  - tokenize: the encoded frame feeds both sinks, so it is persisted.
     * The run is a [[graft.CacheScope.within]] scope: every frame it
     * persists, those four included, is released when it returns or
@@ -167,7 +197,6 @@ object Pipeline {
     requireName("output.format", cfg.output.format, OutputFormats)
     requireName("output.compression",
       cfg.output.compression.toLowerCase(java.util.Locale.ROOT), ParquetCodecs)
-    val spark = docs0.sparkSession
     def nowS: Double = System.currentTimeMillis() / 1000.0
     val tStart = nowS
     val docs = cfg.maxDocs.fold(docs0) { n =>
@@ -177,11 +206,8 @@ object Pipeline {
     }
 
     val (ingested, ingestObs) = Sinks.observeStage(docs, "ingest")
-    val cleaned = ingested
-      .withColumn("original_length", length(col("text")))
-      .withColumn("text", cleanColumn(cfg.cleaning))
-      .filter(length(col("text")) >= cfg.cleaning.minLengthChars)
-      .withColumn("cleaned_length", length(col("text")))
+    val cleaned = cleanStage(ingested.withColumn("original_length", length(col("text"))),
+      cfg.cleaning).withColumn("cleaned_length", length(col("text")))
     val (cleanedObs, cleanObs) = Sinks.observeStage(cleaned, "clean",
       sum(col("original_length") - col("cleaned_length")).as("chars_removed"))
     // The fused window opens here: MinHash dedup runs its probe jobs
@@ -189,34 +215,15 @@ object Pipeline {
     // the stage is being planned.
     val tFusedStart = nowS
     val (deduped, dedupObs) = Sinks.observeStage(dedupStage(cleanedObs, cfg.dedup), "dedup")
-    // reason column computed once, persisted: feeds the passed-docs branch
-    // AND the filter-reason histogram without re-running clean/dedup.
-    val reasoned =
-      if (cfg.qualityEnabled)
-        Some(graft.CacheScope.persist(Quality.withReason(deduped, cfg.quality)))
-      else None
-    val passed0 = reasoned.fold(deduped)(_.filter(col("reason") === "passed").drop("reason"))
-    val (passed, qualityObs) = Sinks.observeStage(passed0, "quality")
+    val quality = Option.when(cfg.qualityEnabled)(qualityStage(deduped, cfg.quality))
+    val passed0 = quality.fold(deduped)(_._1)
+    val (passed, qualityObs) = Sinks.observeStage(
+      if (cfg.tokenization.enabled) graft.CacheScope.persist(passed0) else passed0, "quality")
 
     val tTrainStart = nowS
-    // Encoded frame, persisted: both sinks read it, and the encode UDF
-    // would otherwise run once per sink.
-    val tokenized =
-      if (!cfg.tokenization.enabled) None
-      else Some {
-        // tokenization.algorithm selects the trainer from the shell's
-        // registry; all three models train on driver-merged word
-        // frequencies and encode through one distributed UDF.
-        val model = WordEncoder.train(cfg.tokenization.algorithm,
-          Bpe.wordFrequenciesWithCoverage(passed), cfg.tokenization.vocabSize,
-          cfg.tokenization.minFrequency)
-        val encUdf = udf(model.encode _)
-        passed.withColumn("tokens", encUdf(col("text")))
-          .withColumn("token_count", size(col("tokens")).cast("long"))
-          .transform(graft.CacheScope.persist)
-      }
-    val out = tokenized.getOrElse(
-      passed.withColumn("token_count", lit(null: java.lang.Long)))
+    val out =
+      if (cfg.tokenization.enabled) tokenizeStage(passed, cfg.tokenization)
+      else passed.withColumn("token_count", lit(null: java.lang.Long))
     val tTrainEnd = nowS
 
     // S6/S7 final corpus + S8 tokens
@@ -232,60 +239,48 @@ object Pipeline {
     if (cfg.tokenization.enabled)
       Sinks.writeTokensJsonl(outObsDf.select("tokens"), s"$outDir/tokens")
 
-    // S9: one-row summary straight from the resolved observations — the
-    // reference's summary fields (src/main.py:407-420) with no re-scan.
+    // S9: the reference's summary fields (src/main.py:407-420) from the
+    // resolved observations, as the returned one-row frame and as
+    // summary.json in Spark's JSON row shape (no spaces, nulls left out).
     import Sinks.obsLong
-    val totalTokens: java.lang.Long =
-      if (cfg.tokenization.enabled) java.lang.Long.valueOf(obsLong(tokenObs, "total_tokens"))
-      else null
-    val summaryRow = org.apache.spark.sql.Row(
-      obsLong(ingestObs, "rows"), obsLong(cleanObs, "rows"),
-      obsLong(cleanObs, "chars_removed"), obsLong(dedupObs, "rows"),
-      obsLong(qualityObs, "rows"), totalTokens)
-    val summarySchema = org.apache.spark.sql.types.StructType(
-      Seq("docs_ingested", "docs_after_clean", "chars_removed",
-        "docs_after_dedup", "docs_passed_quality", "total_tokens")
-        .map(org.apache.spark.sql.types.StructField(_,
-          org.apache.spark.sql.types.LongType, nullable = true)))
-    val summary = spark.createDataFrame(
-      java.util.Collections.singletonList(summaryRow), summarySchema)
-    Sinks.writeSummaryJson(summary, s"$outDir/summary.json")
+    val fusedObs = Seq("ingest" -> ingestObs, "clean" -> cleanObs, "dedup" -> dedupObs,
+      "quality" -> qualityObs)
+    val rows = fusedObs.map { case (_, o) => obsLong(o, "rows") }
+    val totalTokens = Option.when(cfg.tokenization.enabled)(obsLong(tokenObs, "total_tokens"))
+    val summaryFields: Seq[(String, Option[Long])] = Seq(
+      "docs_ingested" -> Some(rows(0)), "docs_after_clean" -> Some(rows(1)),
+      "chars_removed" -> Some(obsLong(cleanObs, "chars_removed")),
+      "docs_after_dedup" -> Some(rows(2)), "docs_passed_quality" -> Some(rows(3)),
+      "total_tokens" -> totalTokens)
+    val summary = docs0.sparkSession.createDataFrame(
+      java.util.Collections.singletonList(Row.fromSeq(summaryFields.map(_._2.map(Long.box).orNull))),
+      StructType(summaryFields.map(f => StructField(f._1, LongType, nullable = true))))
+    Metrics.save(s"$outDir/summary.json", summaryFields
+      .collect { case (k, Some(n)) => s"${graft.Json.quote(k)}:$n" }.mkString("{", ",", "}"))
 
     if (cfg.metricsEnabled) {
       // filter-reason histogram (metrics.py add_filter_reason) from the
-      // persisted reasoned frame — <= 12 rows collected.
-      val filterReasons = reasoned.toSeq.flatMap { r =>
-        r.filter(col("reason") =!= "passed")
-          .groupBy("reason").agg(count(lit(1)).as("n"))
-          .orderBy(col("n").desc, col("reason"))
-          .collect().map(row => row.getString(0) -> row.getLong(1))
+      // quality stage's observation: reasons that caught a document, most
+      // frequent first, ties by name.
+      val filterReasons = quality.toSeq.flatMap { case (_, o) =>
+        Quality.Reasons.map(r => r -> obsLong(o, r)).filter(_._2 > 0)
+          .sortBy { case (r, n) => (-n, r) }
       }
       val tEnd = nowS
       // The fused corpus stages share one window: from the dedup stage's
       // planning probes to the end of the action that first materialized
       // the quality frame — the tokenizer's word-frequency aggregation
       // when training is enabled, the output write otherwise (see
-      // Metrics scaladoc).
+      // Metrics scaladoc). A stage's input is the previous stage's output.
       val fEnd = if (cfg.tokenization.enabled) tTrainEnd else tWriteEnd
-      val fused = Map("evaluation" -> "fused")
-      val inRows = obsLong(ingestObs, "rows")
-      val cleanRows = obsLong(cleanObs, "rows")
-      val dedupRows = obsLong(dedupObs, "rows")
-      val passRows = obsLong(qualityObs, "rows")
-      val stages = Seq(
-        StageReport("ingest", tFusedStart, fEnd, inRows, inRows, 0, 0,
-          obsLong(ingestObs, "text_bytes"), fused),
-        StageReport("clean", tFusedStart, fEnd, inRows, cleanRows, inRows - cleanRows, 0,
-          obsLong(cleanObs, "text_bytes"), fused),
-        StageReport("dedup", tFusedStart, fEnd, cleanRows, dedupRows, cleanRows - dedupRows, 0,
-          obsLong(dedupObs, "text_bytes"), fused),
-        StageReport("quality", tFusedStart, fEnd, dedupRows, passRows, dedupRows - passRows, 0,
-          obsLong(qualityObs, "text_bytes"), fused),
-        StageReport("tokenize", tTrainStart, tWriteEnd, passRows, passRows, 0, 0,
-          obsLong(tokenObs, "text_bytes"),
-          Map("algorithm" -> cfg.tokenization.algorithm,
-            "enabled" -> cfg.tokenization.enabled.toString,
-            "total_tokens" -> String.valueOf(totalTokens))))
+      val stages = fusedObs.zip(rows.head +: rows.init).zip(rows).map {
+        case (((name, o), in), out) => StageReport(name, tFusedStart, fEnd, in, out, in - out,
+          0, obsLong(o, "text_bytes"), Map("evaluation" -> "fused"))
+      } :+ StageReport("tokenize", tTrainStart, tWriteEnd, rows(3), rows(3), 0, 0,
+        obsLong(tokenObs, "text_bytes"),
+        Map("algorithm" -> cfg.tokenization.algorithm,
+          "enabled" -> cfg.tokenization.enabled.toString,
+          "total_tokens" -> totalTokens.fold("null")(_.toString)))
       Metrics.save(s"$outDir/pipeline_metrics.json",
         Metrics.reportJson(tEnd - tStart, stages, filterReasons,
           java.time.Instant.now().toString))

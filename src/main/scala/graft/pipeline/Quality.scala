@@ -131,27 +131,46 @@ object Quality {
       " ELSE 'unknown' END"
   }
 
-  /** The ordered first-failure cascade over the metric COLUMNS. */
-  private def reasonOverCols(cfg: Config): String = {
-    val langOk =
-      if (cfg.allowedLanguages.isEmpty) "true"
-      else s"m_langdet = 'unknown' OR m_langdet IN (${cfg.allowedLanguages.map(l => s"'$l'").mkString(",")})"
-    s"""CASE
-       | WHEN m_wc < ${cfg.minWords} THEN 'too_short'
-       | WHEN m_wc > ${cfg.maxWords} THEN 'too_long'
-       | WHEN m_awl < ${cfg.minAvgWordLen} THEN 'short_avg_word_length'
-       | WHEN m_awl > ${cfg.maxAvgWordLen} THEN 'long_avg_word_length'
-       | WHEN m_nonspace > 0 AND m_alpha / m_nonspace < ${cfg.minAlphaRatio} THEN 'low_alpha_ratio'
-       | WHEN m_nonspace > 0 AND m_digit / m_nonspace > ${cfg.maxDigitRatio} THEN 'high_digit_ratio'
-       | WHEN m_nonspace > 0 AND (m_nonspace - m_alpha - m_digit) / m_nonspace > ${cfg.maxSymbolRatio} THEN 'high_symbol_ratio'
-       | WHEN m_nlines > 1 AND m_nstrip > 0
-       |   AND m_maxrep / m_nlines > ${cfg.maxRepetitionRatio} THEN 'high_repetition'
-       | WHEN m_bullets / m_nlines > ${cfg.maxBulletRatio} THEN 'mostly_bullet_list'
-       | WHEN m_boiler > ${cfg.maxBoilerplate} THEN 'boilerplate_content'
-       | WHEN NOT ($langOk) THEN 'wrong_language'
-       | ELSE 'passed'
-       |END""".stripMargin
-  }
+  /** How one engine names the metrics the cascade reads: Spark's staged
+    * columns ([[ColumnSpelling]]) or the oracle's inlined SQL. */
+  private final case class MetricSpelling(wc: String, awl: String, nonspace: String,
+      alpha: String, digit: String, nlines: String, nstrip: String, maxrep: String,
+      bullets: String, boiler: String, lang: String)
+
+  private val ColumnSpelling = MetricSpelling("m_wc", "m_awl", "m_nonspace", "m_alpha",
+    "m_digit", "m_nlines", "m_nstrip", "m_maxrep", "m_bullets", "m_boiler", "m_langdet")
+
+  /** The first-failure cascade (quality_filter.py:160-253), spelled once:
+    * the first predicate that holds names the document's reason; a
+    * document no predicate catches has reason `passed`. */
+  private val Cascade: Seq[(String, (Config, MetricSpelling) => String)] = Seq(
+    "too_short" -> ((c, m) => s"${m.wc} < ${c.minWords}"),
+    "too_long" -> ((c, m) => s"${m.wc} > ${c.maxWords}"),
+    "short_avg_word_length" -> ((c, m) => s"${m.awl} < ${c.minAvgWordLen}"),
+    "long_avg_word_length" -> ((c, m) => s"${m.awl} > ${c.maxAvgWordLen}"),
+    "low_alpha_ratio" -> ((c, m) =>
+      s"${m.nonspace} > 0 AND ${m.alpha} / ${m.nonspace} < ${c.minAlphaRatio}"),
+    "high_digit_ratio" -> ((c, m) =>
+      s"${m.nonspace} > 0 AND ${m.digit} / ${m.nonspace} > ${c.maxDigitRatio}"),
+    "high_symbol_ratio" -> ((c, m) =>
+      s"${m.nonspace} > 0 AND (${m.nonspace} - ${m.alpha} - ${m.digit}) / ${m.nonspace} > ${c.maxSymbolRatio}"),
+    "high_repetition" -> ((c, m) =>
+      s"${m.nlines} > 1 AND ${m.nstrip} > 0\n   AND ${m.maxrep} / ${m.nlines} > ${c.maxRepetitionRatio}"),
+    "mostly_bullet_list" -> ((c, m) => s"${m.bullets} / ${m.nlines} > ${c.maxBulletRatio}"),
+    "boilerplate_content" -> ((c, m) => s"${m.boiler} > ${c.maxBoilerplate}"),
+    "wrong_language" -> ((c, m) =>
+      if (c.allowedLanguages.isEmpty) "NOT (true)"
+      else s"NOT (${m.lang} = 'unknown' OR ${m.lang} IN (${c.allowedLanguages.map(l => s"'$l'").mkString(",")}))"))
+
+  /** The cascade's failure reasons, in cascade order. */
+  val Reasons: Seq[String] = Cascade.map(_._1)
+
+  /** The cascade as one SQL CASE over `m`'s metric spelling. */
+  private def cascadeSql(cfg: Config, m: MetricSpelling): String =
+    Cascade.map { case (r, p) => s" WHEN ${p(cfg, m)} THEN '$r'\n" }
+      .mkString("CASE\n", "", " ELSE 'passed'\nEND")
+
+  private def reasonOverCols(cfg: Config): String = cascadeSql(cfg, ColumnSpelling)
 
   private val metricCols: Seq[String] =
     Seq("m_lines", "m_langhits", "m_wc", "m_nonspace", "m_alpha",
@@ -373,28 +392,14 @@ object Quality {
     * identically. Use FROM [[qmetricsD]]. */
   val langD: String = langCaseOverCols
 
-  /** First-failure cascade for the oracle. References `text` and the
-    * staged `m_hits_*` columns — use FROM [[qmetricsD]]. */
-  def reasonCascadeD(cfg: Config): String = {
-    val langOk =
-      if (cfg.allowedLanguages.isEmpty) "true"
-      else s"($langD) = 'unknown' OR ($langD) IN (${cfg.allowedLanguages.map(l => s"'$l'").mkString(",")})"
-    s"""CASE
-       | WHEN $wcD < ${cfg.minWords} THEN 'too_short'
-       | WHEN $wcD > ${cfg.maxWords} THEN 'too_long'
-       | WHEN $avgWordLenD < ${cfg.minAvgWordLen} THEN 'short_avg_word_length'
-       | WHEN $avgWordLenD > ${cfg.maxAvgWordLen} THEN 'long_avg_word_length'
-       | WHEN $nonspaceD > 0 AND $alphaD / $nonspaceD < ${cfg.minAlphaRatio} THEN 'low_alpha_ratio'
-       | WHEN $nonspaceD > 0 AND $digitD / $nonspaceD > ${cfg.maxDigitRatio} THEN 'high_digit_ratio'
-       | WHEN $nonspaceD > 0 AND ($nonspaceD - $alphaD - $digitD) / $nonspaceD > ${cfg.maxSymbolRatio} THEN 'high_symbol_ratio'
-       | WHEN len($linesD) > 1 AND len($strippedNeD) > 0
-       |   AND $maxRepD / len($linesD) > ${cfg.maxRepetitionRatio} THEN 'high_repetition'
-       | WHEN $bulletLinesD / len($linesD) > ${cfg.maxBulletRatio} THEN 'mostly_bullet_list'
-       | WHEN $boilerD > ${cfg.maxBoilerplate} THEN 'boilerplate_content'
-       | WHEN NOT ($langOk) THEN 'wrong_language'
-       | ELSE 'passed'
-       |END""".stripMargin
-  }
+  /** The metrics as DuckDB expressions over `text` and the staged
+    * `m_hits_*` columns. */
+  private val DuckSpelling = MetricSpelling(wcD, avgWordLenD, nonspaceD, alphaD, digitD,
+    s"len($linesD)", s"len($strippedNeD)", maxRepD, bulletLinesD, boilerD, s"($langD)")
+
+  /** First-failure cascade for the oracle: the [[Cascade]] table over the
+    * inlined metrics. Use FROM [[qmetricsD]]. */
+  def reasonCascadeD(cfg: Config): String = cascadeSql(cfg, DuckSpelling)
 
   def oracles: Map[String, String] = {
     val cfg = Config()

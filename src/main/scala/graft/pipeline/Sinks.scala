@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * observed metrics (A6; utils/metrics.py:89-170).
   *
   * Sinks are plain distributed writers — each executor writes its own
-  * partition files, nothing funnels through the driver. Only the one-row
-  * summary (S9) is driver-side, as in the reference.
+  * partition files, nothing funnels through the driver. The one-row
+  * summary (S9) is written by `Pipeline.run` on the driver from these
+  * observed counters, as in the reference.
   */
 object Sinks {
 
@@ -56,17 +57,6 @@ object Sinks {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete()
     ()
-  }
-
-  /** S9: single-row summary → one JSON object file (src/main.py:407-420).
-    * Collects exactly one row on the driver. */
-  def writeSummaryJson(summary: DataFrame, path: String): Unit = {
-    val json = summary.toJSON.collect() match {
-      case Array(one) => one
-      case rows => rows.mkString("[", ",", "]")
-    }
-    Files.createDirectories(Paths.get(path).getParent)
-    Files.writeString(Paths.get(path), json + "\n")
   }
 
   /** Training-shard writer: exactly `numShards` output files, docs

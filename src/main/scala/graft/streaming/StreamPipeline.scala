@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import graft.pipeline.{Clean, Dedup, MinHash, Quality, Stage}
+import graft.pipeline.{Dedup, MinHash, Pipeline, Quality}
 
 /** Structured Streaming variant of the pipeline (D6/S4 analogue;
   * reference: deduplicator.py:224-260 `deduplicate_stream` consumes a
@@ -35,14 +35,14 @@ object StreamPipeline {
   /** clean → min-length filter → quality reason → content-hash dedup.
     * Emits the surviving docs with their reason column. */
   def cleanedDeduped(docs: DataFrame, minLen: Int = 100,
-      cfg: Quality.Config = Quality.Config()): DataFrame = {
-    val cleaned = docs
-      .withColumn("text", Stage.once(Clean.cleanText(col("text"))))
-      .filter(length(col("text")) >= minLen)
-    Quality.withReason(cleaned, cfg)
+      cfg: Quality.Config = Quality.Config()): DataFrame =
+    reasonedHashed(docs, minLen, cfg).dropDuplicates("content_hash")
+
+  /** The clean stage (the regex-only chain), the quality reason and the
+    * content hash that both dedup variants key their state on. */
+  private def reasonedHashed(docs: DataFrame, minLen: Int, cfg: Quality.Config): DataFrame =
+    Quality.withReason(Pipeline.cleanStage(docs, Pipeline.CleaningConfig.regexOnly(minLen)), cfg)
       .withColumn("content_hash", Dedup.contentHash(col("text")))
-      .dropDuplicates("content_hash")
-  }
 
   /** Convenience writer for tests/demos: complete pipeline into a named
     * in-memory sink table. */
@@ -58,15 +58,9 @@ object StreamPipeline {
     * horizon; a re-arrival after the horizon is treated as new — the
     * documented trade for finite state at 100 TB/day. */
   def cleanedDedupedBounded(docs: DataFrame, tsCol: String, watermark: String,
-      minLen: Int = 100, cfg: Quality.Config = Quality.Config()): DataFrame = {
-    val cleaned = docs
-      .withColumn("text", Stage.once(Clean.cleanText(col("text"))))
-      .filter(length(col("text")) >= minLen)
-    Quality.withReason(cleaned, cfg)
-      .withColumn("content_hash", Dedup.contentHash(col("text")))
-      .withWatermark(tsCol, watermark)
+      minLen: Int = 100, cfg: Quality.Config = Quality.Config()): DataFrame =
+    reasonedHashed(docs, minLen, cfg).withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("content_hash")
-  }
 
   /** Watermarked tumbling-window aggregation over an event-time stream —
     * the streaming twin of Relational.hourlyEventStats. The watermark

@@ -28,10 +28,6 @@ class ConfigYamlSpec extends AnyFunSuite {
     // deduplication (yaml:32-38)
     assert(cfg.dedup.enabled)
     assert(cfg.dedup.algorithm == "minhash_lsh")
-    assert(cfg.dedup.numPermutations == 128)
-    assert(cfg.dedup.threshold == 0.8)
-    assert(cfg.dedup.numBands.contains(32))
-    assert(cfg.dedup.shingleSize == 5)
     // quality (yaml:41-57): reference thresholds
     assert(cfg.qualityEnabled)
     assert(cfg.quality.minWords == 50)
@@ -47,12 +43,9 @@ class ConfigYamlSpec extends AnyFunSuite {
     assert(cfg.tokenization.algorithm == "bpe")
     assert(cfg.tokenization.vocabSize == 32000)
     assert(cfg.tokenization.minFrequency == 2L)
-    assert(cfg.tokenization.specialTokens == Seq("<pad>", "<unk>", "<bos>", "<eos>"))
-    assert(cfg.tokenization.outputFormat == "jsonl")
     // output (yaml:73-78)
     assert(cfg.output.format == "parquet")
     assert(cfg.output.compression == "snappy")
-    assert(cfg.output.includeMetadata)
   }
 
   test("dot-path get mirrors config.py semantics") {
@@ -97,7 +90,7 @@ class ConfigYamlSpec extends AnyFunSuite {
         |""".stripMargin)
     assert(cfg.maxDocs.contains(123L))
     assert(cfg.dedup.algorithm == "exact_hash")
-    assert(cfg.dedup.numBands.isEmpty)
+    assert(ConfigYaml.unhonoured(ConfigYaml.parse("deduplication:\n  num_bands: null\n")).isEmpty)
     assert(!cfg.qualityEnabled)
     assert(cfg.quality.allowedLanguages.isEmpty) // lang filter disabled
     assert(cfg.tokenization.algorithm == "unigram")
@@ -107,6 +100,45 @@ class ConfigYamlSpec extends AnyFunSuite {
     // untouched sections keep reference defaults
     assert(cfg.cleaning.minLengthChars == 100)
     assert(cfg.quality.minWords == 50)
+  }
+
+  test("unhonoured lists each pinned key whose YAML value the engine ignores") {
+    // the reference YAML's values for the seven pinned keys (yaml:32-78):
+    // only num_bands differs from what the engine runs with
+    val reference = ConfigYaml.parse(
+      """deduplication:
+        |  num_permutations: 128
+        |  threshold: 0.8
+        |  num_bands: 32
+        |  shingle_size: 5
+        |tokenization:
+        |  special_tokens: ["<pad>", "<unk>", "<bos>", "<eos>"]
+        |  output_format: jsonl
+        |output:
+        |  include_metadata: true
+        |""".stripMargin)
+    assert(ConfigYaml.unhonoured(reference) == Seq("deduplication.num_bands = 32 (runs with 16)"))
+    val allOff = ConfigYaml.parse(
+      """deduplication:
+        |  num_permutations: 256
+        |  threshold: 0.7
+        |  num_bands: 16.0
+        |  shingle_size: 3
+        |tokenization:
+        |  special_tokens: ["<pad>"]
+        |  output_format: parquet
+        |output:
+        |  include_metadata: false
+        |""".stripMargin)
+    assert(ConfigYaml.unhonoured(allOff) == Seq(
+      "deduplication.num_permutations = 256 (runs with 128)",
+      "deduplication.threshold = 0.7 (runs with 0.8)",
+      "deduplication.shingle_size = 3 (runs with 5)",
+      "tokenization.special_tokens = [<pad>] (runs with [<pad>, <unk>, <bos>, <eos>])",
+      "tokenization.output_format = parquet (runs with jsonl)",
+      "output.include_metadata = false (runs with true)"))
+    // absent keys are honoured
+    assert(ConfigYaml.unhonoured(ConfigYaml.parse("{}")).isEmpty)
   }
 
   test("empty yaml yields all reference defaults") {

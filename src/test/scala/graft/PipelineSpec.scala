@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.pipeline.{Pipeline, Quality}
+import graft.pipeline.{Clean, Pipeline, Quality, Stage}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.functions.CleanExpression
 import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpReplace, ScalaUDF}
@@ -103,19 +103,16 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("the min-length filter reads the cleaned column: no UDF in a Filter") {
-    val plan = docsOnDisk()
-      .withColumn("text", Pipeline.cleanColumn(Pipeline.CleaningConfig()))
-      .filter(length(col("text")) >= 100)
+    val plan = Pipeline.cleanStage(docsOnDisk(), Pipeline.CleaningConfig())
       .queryExecution.optimizedPlan
     val cleaningFilters = PipelineSpec.cleaningFilters(plan)
     assert(cleaningFilters.isEmpty, s"clean chain copied into a Filter:\n$plan")
   }
 
   test("Pipeline.run's clean projection holds one clean kernel and no regex pass or UDF") {
-    val plan = docsOnDisk()
-      .withColumn("original_length", length(col("text")))
-      .withColumn("text", Pipeline.cleanColumn(Pipeline.CleaningConfig()))
-      .filter(length(col("text")) >= 100)
+    val plan = Pipeline.cleanStage(
+        docsOnDisk().withColumn("original_length", length(col("text"))),
+        Pipeline.CleaningConfig())
       .withColumn("cleaned_length", length(col("text")))
       .queryExecution.optimizedPlan
     def count(p: Expression => Boolean): Int =
@@ -125,18 +122,22 @@ class PipelineSpec extends SparkSpec {
       plan.toString)
   }
 
+  test("a regex-only CleaningConfig builds Clean.cleanText's chain behind the barrier") {
+    def chain(c: org.apache.spark.sql.Column) =
+      org.apache.spark.sql.GraftSqlBridge.expression(c) match {
+        case graft.functions.BarrierExpression(CleanExpression(_, fixText, nfkc, rules)) =>
+          (fixText, nfkc, rules)
+      }
+    assert(chain(Pipeline.cleanColumn(Pipeline.CleaningConfig.regexOnly(100))) ==
+      chain(Stage.once(Clean.cleanText(col("text")))))
+  }
+
   test("the SQL entry point cleans each row once: no clean kernel in a Filter") {
     val plan = SparkEntry.entry(spark).queryExecution.optimizedPlan
     assert(PipelineSpec.cleaningFilters(plan).isEmpty, s"clean chain copied into a Filter:\n$plan")
   }
 
   test("unknown algorithm, format and codec names fail before the first job") {
-    import scala.jdk.CollectionConverters._
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
     val bad = Seq(
       ("deduplication.algorithm", Pipeline.GraftConfig(dedup = Pipeline.DedupConfig(algorithm = "minhash"))),
       ("tokenization.algorithm", Pipeline.GraftConfig(
@@ -145,21 +146,14 @@ class PipelineSpec extends SparkSpec {
       ("output.compression", Pipeline.GraftConfig(
         output = Pipeline.OutputConfig(compression = "no-such-codec"))))
     val input = docsOnDisk()
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val started = jobsOf {
       for ((key, cfg) <- bad) {
         val e = intercept[IllegalArgumentException](
           Pipeline.run(input, cfg, Files.createTempDirectory("pipe").toString))
         assert(e.getMessage.contains(key), e.getMessage)
       }
-      // the bus delivers in order: once the marker job has arrived, any
-      // job the runs started has too
-      spark.sparkContext.setJobDescription("marker")
-      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 10000L
-      while (!jobs.contains("marker") && System.currentTimeMillis() < deadline) Thread.sleep(20)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.asScala.forall(_ == "marker"), s"jobs started: ${jobs.asScala.toSeq}")
+    }
+    assert(started.isEmpty, s"jobs started: $started")
     val e = intercept[IllegalArgumentException](Pipeline.run(input,
       Pipeline.GraftConfig(output = Pipeline.OutputConfig(compression = "zip")),
       Files.createTempDirectory("pipe").toString))
@@ -219,6 +213,80 @@ class PipelineSpec extends SparkSpec {
       .getOrElse(fail(s"no dedup start_time in $json"))
     assert(math.round(dedupStart * 1000) <= firstJobMs,
       s"dedup window starts at $dedupStart s, after the run's first job at $firstJobMs ms")
+  }
+
+  /** Descriptions of the jobs `body` starts, in start order. The bus
+    * delivers in order: once a marker job run after `body` has arrived,
+    * every job `body` started has too. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription("marker")
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 10000L
+      while (!jobs.contains("marker") && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.asScala.toSeq.takeWhile(_ != "marker")
+  }
+
+  test("the metrics report adds no job: a run starts as many jobs with metrics off as on") {
+    val input = docsOnDisk()
+    def run(metrics: Boolean): Seq[String] = jobsOf(Pipeline.run(input,
+      Pipeline.GraftConfig(metricsEnabled = metrics),
+      Files.createTempDirectory("pipe").toString).collect())
+    run(metrics = true) // warm-up
+    val off = run(metrics = false)
+    val on = run(metrics = true)
+    assert(on.size == off.size, s"metrics on: ${on.size} jobs, off: ${off.size}")
+  }
+
+  test("summary.json is Spark's JSON of the returned summary row, tokenize on and off") {
+    for (tokenize <- Seq(true, false)) {
+      val out = Files.createTempDirectory("pipe").toString
+      val summary = Pipeline.run(docs, Pipeline.GraftConfig(
+        tokenization = Pipeline.TokenizationConfig(enabled = tokenize)), out)
+      val json = Files.readString(java.nio.file.Paths.get(s"$out/summary.json"))
+      assert(json == summary.toJSON.collect().head + "\n")
+      assert(json.contains("\"total_tokens\":") == tokenize, json)
+    }
+  }
+
+  test("filter_reasons equals a groupBy over Quality.withReason: keys, counts and order") {
+    val cfg = Pipeline.GraftConfig()
+    val words = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
+      .split(" ")
+    // digit-heavy, short and boilerplate documents, each unique after
+    // cleaning: at least three reasons fire and two of them tie in count,
+    // which pins the tie-break by name (both checked below)
+    def digits(seed: Int) = (1 to 60).map(i => s"${seed * 7919 + i * 104729}").mkString(" ")
+    def short(k: Int) = (0 until 18).map(i => words((i * k + k) % words.length)).mkString(" ")
+    val boiler = good + " Copyright 2024 all rights reserved. Read our privacy policy, " +
+      "our terms of service and our cookie policy, then click here to subscribe."
+    val input = docs.filter(col("doc_id") =!= 4L).union(Seq(
+      (10L, digits(1)), (11L, digits(2)), (12L, short(1)), (13L, short(5)),
+      (14L, boiler)).toDF("doc_id", "text"))
+    val out = Files.createTempDirectory("pipe").toString
+    Pipeline.run(input, cfg, out).collect()
+    val json = Files.readString(java.nio.file.Paths.get(s"$out/pipeline_metrics.json"))
+    val reported = "\"([a-z_]+)\": ([0-9]+)".r
+      .findAllMatchIn(json.split("\"filter_reasons\": ")(1).takeWhile(_ != '}'))
+      .map(m => m.group(1) -> m.group(2).toLong).toSeq
+    val expected = Quality.withReason(
+        Pipeline.dedupStage(Pipeline.cleanStage(input, cfg.cleaning), cfg.dedup), cfg.quality)
+      .filter(col("reason") =!= "passed")
+      .groupBy("reason").agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("reason"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(reported == expected)
+    assert(expected.size >= 3, s"fixture hits too few reasons: $expected")
+    assert(expected.map(_._2).distinct.size < expected.size, s"fixture has no tie: $expected")
   }
 }
 

@@ -59,13 +59,6 @@ class SinksSpec extends SparkSpec {
     assert(rows.forall(_.isNullAt(1)))
   }
 
-  test("summary JSON sink writes a single object file") {
-    val path = Files.createTempDirectory("snk").toString + "/sub/summary.json"
-    Sinks.writeSummaryJson(docs.agg(count(lit(1)).as("n")), path)
-    val txt = Files.readString(java.nio.file.Paths.get(path)).trim
-    assert(txt == """{"n":2}""")
-  }
-
   test("shard writer: every doc in exactly one shard, sorted, one file per shard") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("shards").resolve("out").toString
