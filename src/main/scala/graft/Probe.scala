@@ -3,10 +3,63 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+/** The probe mains behind one entry point, `graft.Probe <name> [args]`.
+  * Each probe measures something no spec or bench mark pins, prints
+  * it, and exits:
+  *
+  *  - `memo <sfDir>` — shared-memo build profiler. The
+  *    `memo_build_shared` mark is the largest entry of every bench
+  *    sweep, and [[graft.pipeline.Memos]]' own per-chain log lines
+  *    overlap in wall-clock under the concurrent build, so attributing
+  *    the mark needs a SEQUENTIAL pass: each step of
+  *    [[graft.pipeline.Memos.chains]] is timed in list order and in
+  *    isolation (same session, fresh memo state per JVM); the whole
+  *    concurrent build, in a second JVM, is the number to compare
+  *    against `memo_build_shared`. Bench env contract: SPARK_GRAFT_CPUS,
+  *    optional SPARK_GRAFT_CHECKPOINT_DIR.
+  *  - `recall [sfDir] [minhash|textlsh|embed|ann ...]` — the standing
+  *    blocking-recall artifact, `recall_out.json` ([[ProbeRecall]]).
+  */
+object Probe {
+
+  def main(args: Array[String]): Unit = args.toList match {
+    case "memo" :: sfDir :: Nil => memo(sfDir)
+    case "recall" :: rest => ProbeRecall.run(rest)
+    case _ => sys.error(
+      "usage: graft.Probe memo <sfDir> | recall [sfDir] [minhash|textlsh|embed|ann ...]")
+  }
+
+  /** Time one probe step inside its own cache scope, then GC: the
+    * step's persisted frames are released and collected before the
+    * next step is timed. */
+  private def mark(name: String)(body: => Any): Unit = {
+    CacheScope.within {
+      val t0 = System.nanoTime()
+      body
+      println(f"[probe] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    }
+    System.gc()
+  }
+
+  private def memo(d: String): Unit = {
+    val spark = GraftSession.start("graft-probe-memo")
+    // bench-identical warmup
+    spark.read.parquet(s"$d/documents.parquet")
+      .write.format("noop").mode("overwrite").save()
+    import graft.pipeline._
+    mark("signatures_noop") {
+      MinHash.signatures(Tables.documents(spark, d))
+        .write.format("noop").mode("overwrite").save()
+    }
+    Memos.chains.flatMap(_.steps).foreach { case (name, f) => mark(name)(f(spark, d)) }
+    spark.stop()
+  }
+}
+
 /** Standing recall artifact for the LSH/blocked dedup + ANN families
   * (round-12 verdict #2): every blocked operator trades recall for the
   * bucket join, and the blocking has been retuned twice (plane-floor
-  * removal, mean-centering) justified by spec fixtures only — this main
+  * removal, mean-centering) justified by spec fixtures only — this probe
   * MEASURES the trade per corpus and the numbers land in SCALE.md next
   * to the perf rows.
   *
@@ -28,7 +81,7 @@ import org.apache.spark.sql.functions._
   * Determinism: jitter uses fixed-seed PRNGs, samples are
   * xxhash64-ordered — same corpus, same numbers.
   */
-object ProbeRecall {
+private object ProbeRecall {
 
   private val P = 200
 
@@ -60,7 +113,7 @@ object ProbeRecall {
       (if (qualifying == 0) "n/a" else f"$recall%.3f") + " |"
   }
 
-  def main(args: Array[String]): Unit = {
+  def run(args: Seq[String]): Unit = {
     val sfDir = args.headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val spark = GraftSession.start("graft-probe-recall")

@@ -67,10 +67,8 @@ object Tables {
   def orders(spark: SparkSession, dir: String): DataFrame =
     load(spark, dir, "orders")
   def customer(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "customer")
-  def supplier(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "supplier")
   def part(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "part")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
-  def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
 
   /** `events.parquet` stores `ts` as INT64 TIMESTAMP(NANOS), which Spark's
     * parquet reader rejects outright (PARQUET_TYPE_ILLEGAL). We read nanos as

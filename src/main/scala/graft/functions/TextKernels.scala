@@ -388,7 +388,7 @@ object DupNgrams {
 /** In-row collapsed word TYPE counts →
   * array<struct<word STRING, n BIGINT>>, word-ascending. Kernel:
   * [[graft.pipeline.LangModel.wordTypeCounts]]; `lower` (a plan-time
-  * constant) selects the lowercased wordsExpr fold vs the
+  * constant) selects the lowercased word fold vs the
   * case-preserving split. */
 case class WordCountsExpression(child: Expression, lower: Boolean) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
@@ -509,50 +509,6 @@ object DupNgramsMergedExpression {
 object DupNgramsMerged {
   def apply(c: Column): Column =
     GraftSqlBridge.column(DupNgramsMergedExpression(GraftSqlBridge.expression(c)))
-}
-
-/** In-row collapsed bigram TYPE counts →
-  * array<struct<prev STRING, cur STRING, n BIGINT>>, (prev, cur)
-  * ascending. Kernel: [[graft.pipeline.LangModel.bigramTypeCounts]] —
-  * the transition-score model's per-(doc, bigram-type) frame emitted
-  * straight from the scan stage, replacing an explode + string-keyed
-  * groupBy over one row per bigram OCCURRENCE. */
-case class BigramCountsExpression(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("prev", StringType, nullable = false),
-    StructField("cur", StringType, nullable = false),
-    StructField("n", LongType, nullable = false))), containsNull = false)
-  override def foldable: Boolean = child.foldable
-  override def prettyName: String = "graft_bigram_counts"
-  override protected def nullSafeEval(input: Any): Any =
-    BigramCountsExpression.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.BigramCountsExpression.compute($c)")
-  override protected def withNewChildInternal(newChild: Expression): BigramCountsExpression =
-    copy(child = newChild)
-}
-
-object BigramCountsExpression {
-  def compute(s: UTF8String): ArrayData = {
-    val bs = graft.pipeline.LangModel.bigramTypeCounts(s.toString)
-    val out = new Array[Any](bs.length)
-    var i = 0
-    while (i < bs.length) {
-      out(i) = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(bs(i)._1), UTF8String.fromString(bs(i)._2), bs(i)._3))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
-object BigramCounts {
-  def apply(c: Column): Column =
-    GraftSqlBridge.column(BigramCountsExpression(GraftSqlBridge.expression(c)))
 }
 
 /** In-document first-occurrence line dedup → struct(n_lines BIGINT,

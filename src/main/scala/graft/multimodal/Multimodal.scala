@@ -2,9 +2,8 @@ package graft.multimodal
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column support: image/audio/video as opaque `binary`
   * columns with typed metadata (builder brief — the reference pipeline is
@@ -12,11 +11,9 @@ import org.apache.spark.sql.types._
   * pipeline needs for mixed corpora).
   *
   * What is REAL here and designed for scale:
-  *   - the schema contract (binary payload + metadata struct),
   *   - the batch shape: per-PARTITION processing via `mapPartitions`
   *     with one-time "codec/model" init amortized across the partition
   *     (the JVM analogue of Python's `mapInPandas` batching),
-  *   - partitioning control so decode parallelism matches cores, and
   *   - the column-level decode path (a deterministic header parse that
   *     whole-stage codegen treats like any other expression).
   *
@@ -29,18 +26,6 @@ import org.apache.spark.sql.types._
 object Multimodal {
 
   val FeatureDim = 16
-
-  /** media row contract. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("content", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("format", StringType, nullable = true),
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("sample_rate", IntegerType, nullable = true),
-      StructField("duration_ms", IntegerType, nullable = true))), nullable = true)))
 
   /** STUB: fake 12-byte header `GRF!` + width:int32 + height:int32 (LE).
     * A real build replaces this with an actual codec probe. */
@@ -109,11 +94,6 @@ object Multimodal {
     media.withColumn("frames", sample(col("content")))
       .withColumn("n_frames", size(col("frames")))
   }
-
-  /** Decode-parallelism control: spread payloads evenly before heavy
-    * per-row work (payload sizes are skewed in real corpora). */
-  def repartitionForDecode(media: DataFrame, partitions: Int): Dataset[Row] =
-    media.repartition(partitions, col("media_id"))
 
   /** Longest output side after resize. */
   val ResizeMax = 256

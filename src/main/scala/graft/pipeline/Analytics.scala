@@ -428,15 +428,12 @@ object Analytics {
     * to the trigram universe) and one join back over the persisted gram
     * relation — both exchanges keyed on the gram, the
     * `dedup_lines`/`dedup_paragraphs` class; no window, no all-pairs
-    * anything. Zero-gram docs (< 3 words) drop on both engines. */
-  def noveltyQuery(docs: DataFrame): DataFrame =
-    noveltyOver(Grams.triFrame(docs)
-      .transform(graft.CacheScope.persist)) // feeds the explode AND the denominators
-
-  /** The novelty rollup over an already-built `(doc_id, ga)` trigram
-    * relation — the registration rides the [[Grams.gramsFor]] checkpoint
-    * (shared with the jaccard dup map and the fuzzy decontamination
-    * index), so the trigram kernel runs once per table directory. */
+    * anything. Zero-gram docs (< 3 words) drop on both engines.
+    *
+    * Runs over an already-built `(doc_id, ga)` trigram relation — the
+    * registration rides the [[Grams.gramsFor]] checkpoint (shared with
+    * the jaccard dup map and the fuzzy decontamination index), so the
+    * trigram kernel runs once per table directory. */
   private[graft] def noveltyOver(base: DataFrame): DataFrame = {
     // n_novel needs no join back over the gram relation: group the
     // (gram -> first doc) winners BY the winner. The per-doc denominator

@@ -109,9 +109,10 @@ object Clean {
       Seq(UrlRule, EmailRule, CitationRule, ControlRule) ++ WhitespaceRules)
 
   // ---------------------------------------------------------------------
-  // Web-corpus cleaners (beyond the wiki-centric reference): PII
-  // redaction and HTML stripping, the two passes every web-crawl
-  // training pipeline runs. Same Java∩RE2 regex discipline as above.
+  // Web-corpus cleaner (beyond the wiki-centric reference): PII
+  // redaction, a pass every web-crawl training pipeline runs (HTML tags
+  // go through `remove_html_tags`, i.e. [[Wiki.MarkupRules]]). Same
+  // Java∩RE2 regex discipline as above.
   // ---------------------------------------------------------------------
 
   /** North-American-style phone numbers, optional +1 country code. */
@@ -120,9 +121,6 @@ object Clean {
   val Ipv4Re = """\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b"""
   /** SSN-shaped ddd-dd-dddd. */
   val SsnRe = """\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b"""
-  /** HTML/XML tags (non-greedy, single-line body like BeautifulSoup's
-    * fallback regex strippers; comments/scripts are tags too). */
-  val HtmlTagRe = """</?[A-Za-z][^>]*>"""
 
   /** Redact PII spans with typed placeholder tokens (emails reuse
     * [[EmailRe]]; phone before IP so extension digits don't half-match). */
@@ -134,19 +132,6 @@ object Clean {
           PhoneRe, "<PHONE>"),
         SsnRe, "<SSN>"),
       Ipv4Re, "<IP>")
-
-  /** Strip HTML tags, then decode the five predefined entities. */
-  def stripHtml(c: Column): Column = {
-    val noTags = regexp_replace(c, HtmlTagRe, " ")
-    val amp = regexp_replace(
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(noTags, "&lt;", "<"),
-          "&gt;", ">"),
-        "&quot;", "\""),
-      "&#39;", "'")
-    regexp_replace(amp, "&amp;", "&")
-  }
 
   // ---------------------------------------------------------------------
   // C4-style line-level cleaning (Raffel et al. 2020, "Exploring the

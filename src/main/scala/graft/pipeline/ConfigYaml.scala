@@ -81,14 +81,16 @@ object ConfigYaml {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** YAML keys the engine reads no value from, each with the value it
-    * runs with (the MinHash shape is shared with the DuckDB oracle). */
+    * runs with (the MinHash shape is shared with the DuckDB oracle; the
+    * file sinks keep Spark's natural splits, so any file-size cap warns). */
   private val Pinned: Seq[(String, String)] = Seq(
     "deduplication.num_permutations" -> MinHash.NumPerm.toString,
     "deduplication.threshold" -> MinHash.Threshold.toString,
     "deduplication.num_bands" -> MinHash.NumBands.toString,
     "deduplication.shingle_size" -> MinHash.ShingleSize.toString,
     "tokenization.special_tokens" -> Bpe.Specials.mkString("[", ", ", "]"),
-    "tokenization.output_format" -> "jsonl", "output.include_metadata" -> "true")
+    "tokenization.output_format" -> "jsonl", "output.include_metadata" -> "true",
+    "output.max_file_size_mb" -> "Spark's natural file splits")
 
   /** `key = value (runs with pinned)` for each pinned key whose YAML
     * value differs; numbers compare by value, absent or null keys pass. */
@@ -104,7 +106,10 @@ object ConfigYaml {
   /** configs/pipeline_config.yaml → GraftConfig. Key-by-key transliteration
     * of the YAML tree; every default below is the reference's own default
     * for the same key, so a partial YAML degrades exactly as the reference
-    * does. */
+    * does. The [[unhonoured]] keys are logged as one WARN, which is
+    * dropped unless a SparkSession has started: until Spark installs its
+    * log4j2 profile the root level is ERROR. A caller parsing before
+    * that reads [[unhonoured]] itself. */
   def fromYaml(yamlText: String): Pipeline.GraftConfig = {
     val t = parse(yamlText)
     val ignored = unhonoured(t)
@@ -148,8 +153,7 @@ object ConfigYaml {
     val output = Pipeline.OutputConfig(
       format = t.getString("output.format", default = "parquet"),
       compression = t.getString("output.compression", default = "snappy"),
-      // max_file_size_mb is a size hint; Spark's file-split control is
-      // maxRecordsPerFile, set separately — 0 keeps Spark's natural splits.
+      // max_file_size_mb is listed in [[Pinned]]: 0 keeps Spark's natural splits.
       maxRecordsPerFile = 0L)
 
     Pipeline.GraftConfig(

@@ -34,13 +34,10 @@ object Contamination {
        |                              i -> concat_ws(' ', $parts))) END""".stripMargin
   }
 
-  /** Per contaminated training doc: how many of its distinct
-    * [[GramN]]-grams appear anywhere in the benchmark. Only docs with
-    * >= 1 overlap are emitted (the flag list a pipeline would subtract
-    * or quarantine). */
-  def contaminationQuery(docs: DataFrame): DataFrame =
-    exactFlags(exactTierCounts(docs, adHocBenchSet(docs), BenchmarkDocs))
-
+  /** `decontaminate_flags`: per contaminated training doc, how many of
+    * its distinct [[GramN]]-grams appear anywhere in the benchmark. Only
+    * docs with >= 1 overlap are emitted (the flag list a pipeline would
+    * subtract or quarantine). */
   private def exactFlags(counts: DataFrame): DataFrame =
     counts.select(col("doc_id"), col("n_shared").as("n_contaminated_grams"))
 
@@ -50,14 +47,12 @@ object Contamination {
     * shared 5-gram in a long doc is usually boilerplate, not leakage. */
   val OverlapThreshold = 0.2
 
-  /** Fractional-overlap decontamination: per contaminated training doc,
-    * the SHARE of its distinct [[GramN]]-grams found in the benchmark
-    * (plus the substantial-contamination verdict at [[OverlapThreshold]]).
-    * Same scan-local probe as [[contaminationQuery]] — the denominator
-    * (distinct-gram count) falls out of the same in-kernel pass. */
-  def overlapQuery(docs: DataFrame): DataFrame =
-    exactOverlap(exactTierCounts(docs, adHocBenchSet(docs), BenchmarkDocs))
-
+  /** `decontaminate_overlap`, fractional-overlap decontamination: per
+    * contaminated training doc, the SHARE of its distinct [[GramN]]-grams
+    * found in the benchmark (plus the substantial-contamination verdict
+    * at [[OverlapThreshold]]). Same scan-local probe as [[exactFlags]] —
+    * the denominator (distinct-gram count) falls out of the same
+    * in-kernel pass. */
   private def exactOverlap(counts: DataFrame): DataFrame =
     counts.select(col("doc_id"), col("n_shared"), col("n_grams"),
       (col("n_shared").cast("double") / col("n_grams").cast("double"))
@@ -71,9 +66,10 @@ object Contamination {
     * produce: the `doc_id < benchDocs` predicate reaches the parquet
     * scan, so the build reads bench-sized data, not the corpus.
     *
-    * MEASURED bound (`ProbeContamination --benchset`, round 12, on the
-    * mostly-unique 500k corpus — worst case: every doc contributes ~50
-    * distinct grams): |bench| 10^3 / 10^4 / 10^5 docs → 50k / 0.5M /
+    * MEASURED bound (round 12, by a `--benchset` probe main since
+    * removed; SCALE.md keeps the record; on the mostly-unique 500k
+    * corpus — worst case: every doc contributes ~50 distinct grams):
+    * |bench| 10^3 / 10^4 / 10^5 docs → 50k / 0.5M /
     * 5.0M grams ≈ 7 / 69 / 685 MB, build 3.0 / 3.5 / 7.1 s. Linear in
     * benchmark gram mass; a 10^5-item suite broadcasts in the hundreds
     * of MB — acceptable against multi-GiB executors, and the
@@ -91,11 +87,6 @@ object Contamination {
       .distinct().as[String].collect().foreach(out.add)
     out
   }
-
-  private def adHocBenchSet(docs: DataFrame)
-      : org.apache.spark.broadcast.Broadcast[java.util.HashSet[String]] =
-    docs.sparkSession.sparkContext.broadcast(
-      buildBenchGramSet(docs, BenchmarkDocs))
 
   /** One bench-gram-set build + broadcast per table directory (the
     * [[fuzzyIxFor]] memo story); both exact-tier registrations share it. */
@@ -199,10 +190,11 @@ object Contamination {
   def fuzzyDfCap(corpusDocs: Long): Long =
     math.max(FuzzyDfCap.toLong, corpusDocs / FuzzyDfCapRatio)
 
-  /** FUZZY decontamination: per training doc, the MAXIMUM trigram-
-    * Jaccard similarity against any benchmark doc sharing at least one
-    * RARE trigram with it (corpus df ≤ [[FuzzyDfCap]]), flagged at
-    * [[FuzzyThreshold]]. Exact n-gram overlap ([[contaminationQuery]])
+  /** FUZZY decontamination (`decontaminate_fuzzy`): per training doc,
+    * the MAXIMUM trigram-Jaccard similarity against any benchmark doc
+    * sharing at least one RARE trigram with it (corpus df ≤
+    * [[FuzzyDfCap]]), flagged at [[FuzzyThreshold]]. Exact n-gram
+    * overlap (`decontaminate_flags`)
     * misses paraphrased or lightly-edited eval leakage — a doc can
     * share zero 5-grams with a benchmark item yet be a near-copy of it;
     * whole-doc set similarity is the fuzzy tier the Llama-lineage
@@ -236,34 +228,21 @@ object Contamination {
     * posting-equi-join + distinct: on a low-diversity corpus (where no
     * trigram exceeds the df cap) it shuffled one row per (pair, shared
     * gram) — ~80 M rows at the 5 k-doc/1 k-bench probe, 44 s vs 5.4 s
-    * for THIS kernel on the same data. */
-  def fuzzyContaminationQuery(docs: DataFrame,
-      benchDocs: Int = BenchmarkDocs): DataFrame =
-    flagsOf(fuzzyAttributionQuery(docs, benchDocs))
-
-  /** The scalar fuzzy tier IS the attribution result minus the bench
-    * column — one projection, defined once. */
+    * for THIS kernel on the same data.
+    *
+    * The scalar tier IS the attribution result ([[attributionOf]])
+    * minus the bench column — one projection, defined once. */
   private def flagsOf(attribution: DataFrame): DataFrame =
     attribution.select(col("doc_id"), col("max_jaccard"), col("contaminated"))
 
-  /** Attribution form of the fuzzy tier: WHICH benchmark item each
-    * matched training doc most resembles — the actionable report (drop
-    * the doc, then audit the eval item's leakage footprint). Same
-    * index + in-kernel probe as [[fuzzyContaminationQuery]]; the argmax
-    * bench doc rides out of the kernel beside the max Jaccard (ties on
-    * bit-equal Jaccard to the smallest bench id, mirrored by the
-    * oracle's window order). */
-  def fuzzyAttributionQuery(docs: DataFrame,
-      benchDocs: Int = BenchmarkDocs): DataFrame = {
-    val tri = trigramFrame(docs)
-    attributionOf(tri,
-      docs.sparkSession.sparkContext.broadcast(buildFuzzyIndex(tri, benchDocs)),
-      benchDocs)
-  }
-
-  /** The shared probe pass: one `mapPartitions` over the training side
-    * against an already-built broadcast index. Both fuzzy queries (and
-    * the dir-memoized registrations) run exactly this. */
+  /** Attribution form of the fuzzy tier (`decontaminate_attribution`):
+    * WHICH benchmark item each matched training doc most resembles — the
+    * actionable report (drop the doc, then audit the eval item's leakage
+    * footprint). One `mapPartitions` over the training side against an
+    * already-built broadcast index; the argmax bench doc rides out of
+    * the kernel beside the max Jaccard (ties on bit-equal Jaccard to the
+    * smallest bench id, mirrored by the oracle's window order). Both
+    * fuzzy registrations run exactly this. */
   private def attributionOf(tri: DataFrame,
       ix: org.apache.spark.broadcast.Broadcast[FuzzyIndex],
       benchDocs: Int): DataFrame = {
@@ -300,10 +279,6 @@ object Contamination {
       s.sparkContext.broadcast(buildFuzzyIndex(Grams.gramsFor(s, d), BenchmarkDocs))
     }
 
-  private[graft] def trigramFrame(docs: DataFrame): DataFrame =
-    Grams.triFrame(docs)
-      .transform(graft.CacheScope.persist) // reused: df pass + kernel pass
-
   /** The driver-built broadcast index: dense gram ids over the BENCH
     * vocabulary, per-bench-doc gram-id arrays, and posting lists for
     * the rare (corpus df ≤ [[FuzzyDfCap]]) grams only. All structures
@@ -320,8 +295,8 @@ object Contamination {
     import ss.implicits._
     // EVAL-SET-bounded collect (same class as the IVF codebooks): the
     // benchmark is thousands of docs by construction, never corpus-scale.
-    // MEASURED bound (round 11, `ProbeContamination --index` at the 100×
-    // corpus; SCALE.md table): |bench| = 10³/10⁴/10⁵ → index ≈
+    // MEASURED bound (round 11, by an `--index` probe main since removed,
+    // at the 100× corpus; SCALE.md table): |bench| = 10³/10⁴/10⁵ → index ≈
     // 3.3/5.9/28 MB estimated driver footprint, build 4.4/4.3/5.9 s —
     // the gram map grows SUBLINEARLY (bounded by corpus trigram
     // diversity, 23k → 36k entries across those two decades); only the
@@ -408,47 +383,6 @@ object Contamination {
         Some((bestId, best))
       }
     }
-
-    /** Candidate bench DOC IDS for one training doc (spec surface). */
-    def candidates(ga: Seq[String]): Seq[Long] = {
-      stamp += 1
-      val out = Seq.newBuilder[Long]
-      val it = ga.iterator
-      while (it.hasNext) {
-        val id = ix.gramId.get(it.next())
-        if (id != null) {
-          val post = ix.rarePostings(id.intValue())
-          if (post != null) {
-            var k = 0
-            while (k < post.length) {
-              val b = post(k)
-              if (candStamp(b) != stamp) { candStamp(b) = stamp; out += ix.benchDocIds(b) }
-              k += 1
-            }
-          }
-        }
-      }
-      out.result()
-    }
-  }
-
-  /** Candidate (train doc, bench doc) pairs for the fuzzy tier: pairs
-    * sharing ≥ 1 trigram whose corpus-wide document frequency is
-    * ≤ [[FuzzyDfCap]]. `tri` is the (doc_id, ga) distinct-trigram
-    * frame. Exposed for the scale spec, which asserts |cand| ≪
-    * |corpus| × |bench| on a corpus where every pair shares a stop
-    * trigram; shares the kernel's index + probe with the query path. */
-  private[graft] def fuzzyCandidates(tri: DataFrame, benchDocs: Int): DataFrame = {
-    val ss = tri.sparkSession
-    import ss.implicits._
-    val ix = ss.sparkContext.broadcast(buildFuzzyIndex(tri, benchDocs))
-    tri.filter(col("doc_id") >= benchDocs)
-      .select(col("doc_id"), col("ga")).as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val probe = new FuzzyProbe(ix.value)
-        it.flatMap { case (id, ga) => probe.candidates(ga).map(b => (id, b)) }
-      }
-      .toDF("doc_id", "bench_id")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

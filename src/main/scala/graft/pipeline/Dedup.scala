@@ -57,37 +57,11 @@ object Dedup {
       (count(lit(1)) - countDistinct(col("h"))).as("duplicate_documents"))
   }
 
-  /** Incremental-ingest dedup against an EXISTING corpus via a Bloom
-    * filter of its content hashes — the nightly-delta shape where
-    * joining the delta against 100 TB of history is the wrong plan: the
-    * filter builds in one aggregation over the corpus, ships to the
-    * batch side as a closure broadcast, and the probe is a scan-local
-    * predicate (no shuffle touches either side). One-sided error only:
-    * false NEGATIVES are impossible, so no known duplicate ever
-    * survives; ~fpp of genuinely-new docs are lost (size fpp to the
-    * recall budget). At extreme corpus sizes, shard the filter by a
-    * hash prefix and probe the matching shard — same algebra, bounded
-    * per-filter memory. */
-  def bloomNewDocs(batch: DataFrame, corpus: DataFrame, fpp: Double = 0.001,
-      expectedItems: Option[Long] = None): DataFrame = {
-    // Callers in the nightly-delta shape usually KNOW the corpus
-    // cardinality (yesterday's summary row); passing it skips a full
-    // history scan that otherwise runs solely to size the filter.
-    val expected = math.max(expectedItems.getOrElse(corpus.count()), 1L)
-    val bf = corpus.stat.bloomFilter(contentHash(col("text")), expected, fpp)
-    val seen = udf((h: String) => bf.mightContain(h))
-    batch.withColumn("content_hash", contentHash(col("text")))
-      .filter(!seen(col("content_hash")))
-  }
-
-  /** Deterministic twin of [[bloomNewDocs]] — the nightly-delta shape
-    * made oracle-checkable (verdict r10 #6): delta docs whose content
-    * hash is absent from the corpus snapshot survive, via a LEFT ANTI
-    * join on the 128-bit hash. One uniform-key exchange per side; at
-    * 100 TB the history side ships only its hash column. The bloom
-    * variant is the scan-local fast path (no shuffle touches history
-    * beyond the filter build); its one-sided error guarantees
-    * bloom-survivors ⊆ anti-join-survivors, which DeltaDedupSpec pins. */
+  /** Incremental-ingest dedup against an EXISTING corpus — the
+    * nightly-delta shape, oracle-checkable (verdict r10 #6): delta docs
+    * whose content hash is absent from the corpus snapshot survive, via
+    * a LEFT ANTI join on the 128-bit hash. One uniform-key exchange per
+    * side; at 100 TB the history side ships only its hash column. */
   def deltaExactNewDocs(delta: DataFrame, corpus: DataFrame): DataFrame =
     delta.withColumn("content_hash", contentHash(col("text")))
       .join(corpus.select(contentHash(col("text")).as("content_hash")),
@@ -178,8 +152,8 @@ object Dedup {
       // The whole decision fits the driver (byte-probed): ship it as a
       // broadcast SET into the rebuild kernel — the main query is then a
       // bare docs scan + one narrow kernel pass, no second explode, no
-      // join, no exchange at all (the [[bloomNewDocs]] scan-local-probe
-      // shape, exact here because the set is exact). The alternative
+      // join, no exchange at all (a scan-local probe, exact because the
+      // set is exact). The alternative
       // semi-join spelling below re-evaluates the exploded lines as the
       // probe side — a second full pass over the corpus text.
       val sc = docs.sparkSession.sparkContext

@@ -11,13 +11,14 @@ import graft.Tables
   *  - CCNet (Wenzek et al. 2020) filters web text by the perplexity of a
   *    reference-corpus LM; docs with improbable token transitions are
   *    noise/jargon, docs with only ultra-common transitions are
-  *    boilerplate. [[transitionScoreQuery]] is that signal with the LM
-  *    trained in-corpus: an add-one-smoothed bigram transition model.
+  *    boilerplate. [[transitionScoreHashedQuery]] is that signal with
+  *    the LM trained in-corpus: an add-one-smoothed bigram transition
+  *    model over feature-hashed words.
   *  - DSIR (Xie et al. 2023, "Data Selection for Language Models via
   *    Importance Resampling") weights raw docs by
   *    p_target(doc)/p_raw(doc) under n-gram multinomials so that sampling
   *    by weight shifts the mixture toward a target domain.
-  *    [[dsirWeightsQuery]] computes those weights with target = the
+  *    [[dsirWeightsOver]] computes those weights with target = the
   *    quality-cascade-passing subset (the in-repo stand-in for "looks
   *    like Wikipedia") over unigram features.
   *
@@ -33,74 +34,6 @@ import graft.Tables
   * deliberate and documented rather than hidden in float noise.
   */
 object LangModel {
-
-  private val wordsExpr = "filter(split(lower(text), '\\\\s+'), x -> x != '')"
-
-  /** Per-(doc, bigram-type) occurrence counts — the collapsed frame every
-    * downstream join runs on. Collapsing BEFORE joining the model is the
-    * Zipf-skew story (same as doc_commonness): a "the the"-heavy corpus
-    * ships one row per (doc, bigram-type), not one per occurrence. Since
-    * round 11 the collapse happens IN-ROW in a native kernel
-    * ([[bigramTypeCounts]] via `graft.functions.BigramCounts`) — the
-    * old explode + groupBy(doc, prev, cur) shuffled one string-keyed row
-    * per bigram occurrence corpus-wide; now the scan stage emits the
-    * per-doc types directly with no exchange at all (LangModelSpec pins
-    * kernel-vs-HOF parity). */
-  private def perDocBigrams(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"),
-        explode(graft.functions.BigramCounts(col("text"))).as("b"))
-      .select(col("doc_id"), col("b.prev").as("prev"), col("b.cur").as("cur"),
-        col("b.n").as("n_occ"))
-
-  /** Add-one-smoothed bigram transition score per doc.
-    *
-    * Model, trained on the whole corpus in two aggregations over the
-    * collapsed bigram frame:
-    *   c(prev,cur)  corpus occurrences of the transition,
-    *   c(prev)      total transitions out of `prev`,
-    *   V            number of distinct contexts (the smoothing mass).
-    * Per-token smoothed probability is (c(prev,cur)+1)/(c(prev)+V); the
-    * doc score is the micro-average
-    *   score = Σ n_occ·(c(prev,cur)+1) / Σ n_occ·(c(prev)+V)
-    * over the doc's transitions — both sums exact BIGINTs, one division.
-    * Low score = improbable transitions (CCNet's high-perplexity tail);
-    * high = boilerplate-common ones. Docs with < 2 tokens have no
-    * transitions and drop out (inner semantics, like doc_commonness).
-    *
-    * Scale shape: one shuffle to collapse (doc,prev,cur), one to build the
-    * bigram model keyed (prev,cur) (map-side partials absorb hot
-    * transitions), a vocabulary-sized context rollup, then model joins on
-    * the COLLAPSED frame (AQE splits residual hot bigrams) and a per-doc
-    * aggregation. Integer overflow bound: Σ n_occ·c ≤ doc_tokens ·
-    * corpus_transitions — same envelope as doc_commonness's total_freq;
-    * int64 holds to ~1e6-token docs against ~1e12-transition corpora. */
-  def transitionScoreQuery(docs: DataFrame): DataFrame = {
-    val pdb = perDocBigrams(docs)
-    val big = pdb.groupBy(col("prev"), col("cur"))
-      .agg(sum(col("n_occ")).as("c_bg"))
-      .transform(graft.CacheScope.persist) // feeds ctx, V AND the join
-    val ctx = big.groupBy(col("prev")).agg(sum(col("c_bg")).as("c_ctx"))
-    val v = ctx.agg(count(lit(1)).as("v"))
-    // Fold the context totals and V into the MODEL before the corpus
-    // join: big/ctx are vocabulary-cardinality, so their join and the
-    // broadcast cross are model-sized, and the corpus-cardinality pdb
-    // frame crosses the wire for ONE join instead of two (round-12 memo
-    // cut: the second 20M-row exchange was ~a third of lm_scores at
-    // 100x for identical output).
-    val model = big.join(ctx, Seq("prev")).crossJoin(broadcast(v))
-    pdb.join(model, Seq("prev", "cur"))
-      .groupBy(col("doc_id"))
-      .agg(
-        sum(col("n_occ")).as("n_transitions"),
-        sum(col("n_occ") * (col("c_bg") + lit(1L))).as("sum_smoothed_bigram"),
-        sum(col("n_occ") * (col("c_ctx") + col("v"))).as("sum_smoothed_context"))
-      .select(
-        col("doc_id"), col("n_transitions"),
-        col("sum_smoothed_bigram"), col("sum_smoothed_context"),
-        (col("sum_smoothed_bigram").cast("double")
-          / col("sum_smoothed_context").cast("double")).as("transition_score"))
-  }
 
   /** DSIR importance weights toward the quality-passing subset.
     *
@@ -123,12 +56,9 @@ object LangModel {
     * so the oracle can arbitrate it — the bucketing is a memory cap, not
     * a semantic. Scale shape: the (doc,word) collapse is the only wide
     * frame; the target model is a semi-join-then-rollup of it; both scalar
-    * masses broadcast. */
-  def dsirWeightsQuery(docs: DataFrame,
-                       cfg: Quality.Config = Quality.Config()): DataFrame =
-    dsirWeightsOver(docs, Quality.passedQuery(docs, cfg).select(col("doc_id")))
-
-  private[pipeline] def dsirWeightsOver(docs: DataFrame, passedIds: DataFrame): DataFrame =
+    * masses broadcast. `passedIds` is the target set's `doc_id`s (the
+    * registration passes the memoized [[Quality.passedIdsFor]]). */
+  private[graft] def dsirWeightsOver(docs: DataFrame, passedIds: DataFrame): DataFrame =
     dsirOver(
       // In-row collapsed (word, count) types (round 11): the occurrence
       // explode + the downstream groupBy(doc, feat) string exchange are
@@ -159,11 +89,7 @@ object LangModel {
     * variant: the (doc, feat) collapse is the only wide frame — and the
     * feature key is a bounded int bucket, so the model frames are at most
     * [[DsirHashDim]] rows however large the corpus grows. */
-  def dsirBigramWeightsQuery(docs: DataFrame,
-                             cfg: Quality.Config = Quality.Config()): DataFrame =
-    dsirBigramWeightsOver(docs, Quality.passedQuery(docs, cfg).select(col("doc_id")))
-
-  private[pipeline] def dsirBigramWeightsOver(docs: DataFrame,
+  private[graft] def dsirBigramWeightsOver(docs: DataFrame,
       passedIds: DataFrame): DataFrame =
     dsirOver(
       // In-row kernel collapse (round 10): per-doc hashed-feature counts
@@ -193,8 +119,8 @@ object LangModel {
 
   /** JVM kernel behind [[graft.functions.DsirBigramFeatsExpression]]:
     * (feat, count) pairs per doc, feats ascending. Bigrams over the
-    * [[wordsExpr]] word semantics (lowercase, ASCII-\s split, empties
-    * dropped); feat = first 32 md5 bits of "prev cur" mod
+    * [[tokenizeWords]] word semantics (lowercase, ASCII-\s split,
+    * empties dropped); feat = first 32 md5 bits of "prev cur" mod
     * [[DsirHashDim]]. Lowercasing is Locale.ROOT — the locale-
     * INDEPENDENT fold the DuckDB oracle's lower() applies (the MinHash
     * normalizer's established choice); Spark's builtin lower() is the
@@ -213,7 +139,7 @@ object LangModel {
     words
   }
 
-  /** The [[wordsExpr]] word semantics as a JVM pass (lowercase
+  /** The lowercased word semantics as a JVM pass (lowercase
     * Locale.ROOT, ASCII-\s split, empties dropped) — shared by the
     * bigram and word-count kernels. */
   private def tokenizeWords(text: String): Array[String] =
@@ -224,7 +150,7 @@ object LangModel {
     * frequencies emitted straight from the scan stage, replacing the
     * explode + string-keyed groupBy(doc, word) over one row per token
     * OCCURRENCE that tfidf / DSIR-unigram / commonness each paid.
-    * `lower` selects the [[wordsExpr]] fold (tfidf, DSIR) vs the
+    * `lower` selects the [[tokenizeWords]] fold (tfidf, DSIR) vs the
     * case-preserving split (commonness, which scores raw tokens). */
   def wordTypeCounts(text: String, lower: Boolean): Array[(String, Long)] = {
     val words =
@@ -243,36 +169,6 @@ object LangModel {
     while (it.hasNext) {
       val e = it.next()
       out(t) = (e.getKey, e.getValue)
-      t += 1
-    }
-    out
-  }
-
-  /** In-row collapsed bigram TYPE counts, (prev, cur) ascending — the
-    * kernel behind [[graft.functions.BigramCountsExpression]]. Replaces
-    * [[perDocBigrams]]' explode + groupBy(doc, prev, cur): the corpus's
-    * widest string-keyed exchange (one row per bigram occurrence)
-    * becomes zero shuffle, with the same per-(doc, type) rows emitted
-    * from the scan stage (100× lm_scores memo split: the collapse was
-    * the dominant term). */
-  def bigramTypeCounts(text: String): Array[(String, String, Long)] = {
-    val words = tokenizeWords(text)
-    if (words.length < 2) return Array.empty
-    val m = new java.util.TreeMap[(String, String), Long](
-      implicitly[Ordering[(String, String)]])
-    var i = 0
-    while (i < words.length - 1) {
-      val k = (words(i), words(i + 1))
-      val prev = m.get(k) // null unboxes to 0 for an absent key
-      m.put(k, prev + 1L)
-      i += 1
-    }
-    val out = new Array[(String, String, Long)](m.size)
-    val it = m.entrySet().iterator()
-    var t = 0
-    while (it.hasNext) {
-      val e = it.next()
-      out(t) = (e.getKey._1, e.getKey._2, e.getValue)
       t += 1
     }
     out
@@ -443,11 +339,25 @@ object LangModel {
           .as("dsir_weight"))
   }
 
-  /** [[transitionScoreQuery]] under the DSIR hashing trick (round 13) —
-    * the gate-registered spelling behind `quality_lm_transition` /
-    * `quality_lm_buckets` and the [[scoresFor]] memo.
+  /** Add-one-smoothed bigram transition score per doc, under the DSIR
+    * hashing trick (round 13) — the spelling behind
+    * `quality_lm_transition` / `quality_lm_buckets` and the
+    * [[scoresFor]] memo.
     *
-    * SEMANTICS: identical estimator, HASHED key spaces. c(prev,cur)
+    * The estimator: with c(prev,cur) the corpus occurrences of a
+    * transition, c(prev) the total transitions out of `prev` and V the
+    * number of distinct contexts (the smoothing mass), the per-token
+    * smoothed probability is (c(prev,cur)+1)/(c(prev)+V) and the doc
+    * score is the micro-average
+    *   score = Σ n_occ·(c(prev,cur)+1) / Σ n_occ·(c(prev)+V)
+    * over the doc's transitions — both sums exact BIGINTs, one division.
+    * Low score = improbable transitions (CCNet's high-perplexity tail);
+    * high = boilerplate-common ones. Docs with < 2 tokens have no
+    * transitions and drop out. Integer overflow bound: Σ n_occ·c ≤
+    * doc_tokens · corpus_transitions; int64 holds to ~1e6-token docs
+    * against ~1e12-transition corpora.
+    *
+    * HASHED key spaces: c(prev,cur)
     * becomes c(hb) with hb = md5-hash(prev+" "+cur) mod [[LmBigDim]];
     * c(prev) becomes c(hp) with hp = md5-hash(prev) mod [[LmCtxDim]];
     * V becomes the count of distinct OCCUPIED context buckets.
@@ -468,8 +378,7 @@ object LangModel {
     * marginals (bounded exchange, bounded driver collect — a model
     * download, not a corpus read), pass 2 scores every doc IN-ROW
     * against the broadcast count arrays. The corpus side is never
-    * persisted, joined, or shuffled. The exact-vocabulary
-    * [[transitionScoreQuery]] stays as library surface. */
+    * persisted, joined, or shuffled. */
   def transitionScoreHashedQuery(docs: DataFrame): DataFrame = {
     val ss = docs.sparkSession
     // Pass 1 — BOTH model marginals in ONE kernel scan, GROUPING SETS
@@ -594,10 +503,7 @@ object LangModel {
     * hash-identical to the window spelling — same total order, same
     * bucket sizes; docs with < 2 tokens have no score and stay out
     * (inner semantics, as the score query). */
-  def perplexityBucketsQuery(docs: DataFrame): DataFrame =
-    bucketsOf(transitionScoreQuery(docs), docs)
-
-  private def bucketsOf(scored: DataFrame, docs: DataFrame): DataFrame = {
+  private[graft] def bucketsOf(scored: DataFrame, docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.LongType
     val ss = scored.sparkSession

@@ -43,7 +43,7 @@ object Memos {
     * so every shared [[QueryMemo]] is populated before its dependents
     * look it up, and each memo's own lock serializes any residual race
     * to a single evaluation. Results are build-order independent; the
-    * per-build `timed` lines now overlap in wall-clock. [[graft.ProbeMemo]]
+    * per-build `timed` lines now overlap in wall-clock. `graft.Probe memo`
     * times the same steps one at a time, in list order. */
   private[graft] val chains: Seq[Chain] = Seq(
     Chain( // rep graph: eager checkpoints; ONE member-attribution pass

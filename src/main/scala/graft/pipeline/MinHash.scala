@@ -264,13 +264,13 @@ object MinHash {
     repGraph(sigs, BandBucketChunkLen)
 
   /** Per-call composition for the unmemoized consumers ([[dedup]],
-    * [[statsQuery]], streaming dedup, the chunk-path test hook). The
+    * streaming dedup, and the specs that force a chunk bound). The
     * collapse is persisted through [[graft.CacheScope]]: the bucket-stats
     * probe, the verified pairs and the members all read it, and on a
     * duplicate-heavy corpus each read would otherwise re-run the
     * `repartition(gh)` window (the memoized path, [[repGraphFor]], fixed
     * the same re-execution in round 14). */
-  private[pipeline] def repGraph(sigs: DataFrame, chunkLen: Int): (DataFrame, DataFrame) = {
+  private[graft] def repGraph(sigs: DataFrame, chunkLen: Int): (DataFrame, DataFrame) = {
     val withG = graft.CacheScope.persist(collapse(sigs))
     val reps = withG.filter(col("doc_id") === col("gid"))
       .select(col("gid"), col("sig"))
@@ -582,11 +582,6 @@ object MinHash {
     }
   }.withName("minhash_verify_bucket_chunks")
 
-  /** Test hook: the verified rep pairs at a forced chunk bound, for
-    * pinning the chunk-pair path against the single-pass kernel. */
-  private[graft] def verifiedPairsOf(docs: DataFrame, chunkLen: Int): DataFrame =
-    repGraph(signatures(docs), chunkLen)._2
-
   /** [[duplicateOf]] over a precomputed `(doc_id, sig)` frame — the
     * in-delta leg of [[deltaDupMapContracted]], and the streaming batch's
     * verdicts while its store is empty. */
@@ -680,8 +675,6 @@ object MinHash {
     docs.join(dups, docs("doc_id") === dups("duplicate_id"), "left_anti")
 
   /** D7: DeduplicationResult counters (deduplicator.py:29-43, 210-215). */
-  def statsQuery(docs: DataFrame): DataFrame = statsOf(docs, duplicateOf(docs))
-
   private def statsOf(docs: DataFrame, dups: DataFrame): DataFrame =
     docs.select(count(lit(1)).as("total_documents"))
       .crossJoin(dups.select(

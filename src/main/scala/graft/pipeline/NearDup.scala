@@ -164,12 +164,6 @@ object NearDup {
     * posting list means a >4096-member near-dup cluster). */
   val PostingChunkLen = 4096
 
-  def jaccardDuplicateOf(docs: DataFrame): DataFrame =
-    jaccardDuplicateOf(docs, PostingChunkLen)
-
-  private[graft] def jaccardDuplicateOf(docs: DataFrame, chunkLen: Int): DataFrame =
-    jaccardOverGrams(Grams.triFrame(docs), chunkLen)
-
   /** The PPJoin chain over an already-built `(doc_id, ga)` trigram
     * relation ([[Grams.triFrame]] — or the [[Grams.gramsFor]]
     * checkpoint, which the `dedup_jaccard_dupmap` registration rides so

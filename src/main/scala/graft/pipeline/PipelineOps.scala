@@ -12,9 +12,6 @@ object PipelineOps {
 
   /** P4 (src/main.py:250-256): keep original documents whose id survived
     * dedup — an explicit left-semi join (ships only ids, never payloads). */
-  def uniqueDocs(docs: DataFrame): DataFrame =
-    uniqueDocsFrom(docs, MinHash.dedup(docs))
-
   private def uniqueDocsFrom(docs: DataFrame, surviving: DataFrame): DataFrame =
     docs.join(surviving.select("doc_id"), Seq("doc_id"), "left_semi")
       .select("doc_id", "lang", "source")

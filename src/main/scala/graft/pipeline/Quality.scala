@@ -192,14 +192,12 @@ object Quality {
   // Registered queries
   // -----------------------------------------------------------------------
 
-  /** Per-doc scores + first-failing reason (Q11: every metric as a column —
-    * quality_filter.py:160-253 stashes them in `scores`). */
-  def cascadeQuery(docs: DataFrame, cfg: Config = Config()): DataFrame =
-    cascadeOver(withMetrics(docs), cfg)
-
-  /** The cascade projection over any frame carrying the scalar metric
-    * columns — the registration passes the memoized [[metricsFor]]. */
-  private def cascadeOver(m: DataFrame, cfg: Config = Config()): DataFrame =
+  /** `quality_cascade`: per-doc scores + first-failing reason (Q11: every
+    * metric as a column — quality_filter.py:160-253 stashes them in
+    * `scores`), over any frame carrying the scalar metric columns
+    * ([[withMetrics]]) — the registration passes the memoized
+    * [[metricsFor]]. */
+  private[graft] def cascadeOver(m: DataFrame, cfg: Config = Config()): DataFrame =
     m.select(
       col("doc_id"),
       col("m_wc").as("word_count"),
@@ -209,11 +207,6 @@ object Quality {
       col("m_boiler").as("boilerplate_matches"),
       col("m_langdet").as("detected_language"),
       expr(reasonOverCols(cfg)).as("reason"))
-
-  /** The surviving documents (filter_batch keep-side, quality_filter.py:276-281). */
-  def passedQuery(docs: DataFrame, cfg: Config = Config()): DataFrame =
-    withReason(docs, cfg).filter(col("reason") === "passed")
-      .select("doc_id", "lang", "source", "n_chars")
 
   /** `quality_by_source`: per-source cascade outcome rates — the
     * source-curation report: which ingest sources fail which filters, and
@@ -343,7 +336,7 @@ object Quality {
     // rides the memoized passed-id set (the DSIR consumers' frame):
     // a broadcast semi-join on doc_id against the docs scan replaces a
     // second full cascade evaluation — same rows by construction (the
-    // memo IS passedQuery's id projection at the same default config).
+    // memo IS the default-config cascade's `reason = 'passed'` ids).
     "quality_passed" -> ((s, d) => Tables.documents(s, d)
       .join(passedIdsFor(s, d), Seq("doc_id"), "left_semi")
       .select("doc_id", "lang", "source", "n_chars")))

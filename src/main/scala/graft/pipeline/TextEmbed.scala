@@ -37,7 +37,6 @@ import graft.Tables
 object TextEmbed {
 
   val Dim = 64
-  val NumPlanes = 8
   val DedupCosine = 0.9
 
   /** Margin-directed multi-probe flips per vector (round 13; the
@@ -58,7 +57,7 @@ object TextEmbed {
     * the probes covering the extra straddle risk exactly where it
     * concentrates.
     *
-    * Measured by [[graft.ProbeRecall]] (planted near-pairs, both
+    * Measured by `graft.Probe recall` (planted near-pairs, both
     * standing 100× corpora, round 13): exact-bucket recall was 0.39
     * realistic / 0.52 gate; at T=4 the probed blocking reads 0.94 /
     * 0.97, costing dedup_semantic_text 5.3 → 10.9 s realistic and
@@ -289,7 +288,7 @@ object TextEmbed {
   }
 
   /** The blocking relation of [[semanticDedupQuery]], extracted (round
-    * 13) so [[graft.ProbeRecall]] can measure the blocking's recall
+    * 13) so `graft.Probe recall` can measure the blocking's recall
     * against brute-force cosine on a sample: `(doc_id, vec, bucket,
     * gid)` — zero-word docs dropped, identical vectors collapsed to
     * their min-id gid, bucket = full-corpus MEAN-CENTERED sign-LSH over

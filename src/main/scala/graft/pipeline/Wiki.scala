@@ -56,8 +56,6 @@ object Wiki {
     Rule("""\s+([.,;:!?])""", "$1", AnyOf(".", ",", ";", ":", "!", "?")),
     Clean.EdgeWsRule)
 
-  def regexClean(c: Column): Column = graft.functions.CleanChain(c, MarkupRules)
-
   def cleanWiki(c: Column): Column = graft.functions.CleanChain(c, MarkupRules ++ TidyRules)
 
   def cleanWikiQuery(docs: DataFrame): DataFrame =

@@ -90,8 +90,11 @@ object WordEncoder {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Trains `algorithm` on a corpus lexicon. A capped lexicon logs its
-    * truncation bound: a learned decision can differ from the uncapped
-    * corpus only where a margin is below it. */
+    * truncation bound as a WARN: a learned decision can differ from the
+    * uncapped corpus only where a margin is below it. The WARN is
+    * dropped unless a SparkSession has started (until Spark installs its
+    * log4j2 profile the root level is ERROR); `cov.droppedPairMass`
+    * carries the same bound for a caller without one. */
   def train(algorithm: String, cov: Bpe.LexiconCoverage, vocabSize: Int,
       minFreq: Long = 2L): WordEncoder = {
     if (cov.droppedPairMass > 0)

@@ -795,7 +795,7 @@ object Similarity {
     MinHash.duplicateOfRepGraph(members.withColumnRenamed("vec_id", "doc_id"), verified)
   }
 
-  /** Probe hooks (round 13, [[graft.ProbeRecall]]): the blocking
+  /** Probe hooks (round 13, `graft.Probe recall`): the blocking
     * relations of the three embedding-dedup families, exposed so the
     * recall artifact measures exactly the buckets/cells the operators
     * join on. MEMBER-level `(vec_id, bucket)` / `(vec_id, cell)`: a

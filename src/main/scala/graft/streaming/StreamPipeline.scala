@@ -36,31 +36,14 @@ object StreamPipeline {
     * Emits the surviving docs with their reason column. */
   def cleanedDeduped(docs: DataFrame, minLen: Int = 100,
       cfg: Quality.Config = Quality.Config()): DataFrame =
-    reasonedHashed(docs, minLen, cfg).dropDuplicates("content_hash")
-
-  /** The clean stage (the regex-only chain), the quality reason and the
-    * content hash that both dedup variants key their state on. */
-  private def reasonedHashed(docs: DataFrame, minLen: Int, cfg: Quality.Config): DataFrame =
     Quality.withReason(Pipeline.cleanStage(docs, Pipeline.CleaningConfig.regexOnly(minLen)), cfg)
       .withColumn("content_hash", Dedup.contentHash(col("text")))
+      .dropDuplicates("content_hash")
 
   /** Convenience writer for tests/demos: complete pipeline into a named
     * in-memory sink table. */
   def toMemorySink(out: DataFrame, name: String): DataStreamWriter[Row] =
     out.writeStream.format("memory").queryName(name).outputMode("append")
-
-  /** Bounded-state streaming dedup: `dropDuplicatesWithinWatermark` keys
-    * the state store on the content hash but expires entries once the
-    * watermark passes their event time — the production form of
-    * [[cleanedDeduped]] for unbounded streams (an unbounded exact-dedup
-    * state store is the same memory hazard as the reference's in-memory
-    * index). Semantics: duplicates are only suppressed within the dedup
-    * horizon; a re-arrival after the horizon is treated as new — the
-    * documented trade for finite state at 100 TB/day. */
-  def cleanedDedupedBounded(docs: DataFrame, tsCol: String, watermark: String,
-      minLen: Int = 100, cfg: Quality.Config = Quality.Config()): DataFrame =
-    reasonedHashed(docs, minLen, cfg).withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("content_hash")
 
   /** Watermarked tumbling-window aggregation over an event-time stream —
     * the streaming twin of Relational.hourlyEventStats. The watermark
@@ -76,28 +59,6 @@ object StreamPipeline {
         col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("w.start").as("window_start"), col("event_type"), col("n_events"))
-
-  /** Per-source ingest-rate monitor: windowed doc/byte/token throughput
-    * over the document stream — the observability surface a 100 TB/day
-    * ingest runs against its mixture plan (compare each window's
-    * `n_tokens` share to `mix_allocation`'s targets to catch a source
-    * going dark or flooding). Watermarked tumbling windows in append
-    * mode: state stays bounded to in-flight windows, counts are pure
-    * sums (map-side partial aggregation), and the output key
-    * (window, source) is tiny. */
-  def sourceRateMonitor(docs: DataFrame, tsCol: String, window: String = "1 minute",
-      watermark: String = "2 minutes"): DataFrame =
-    docs
-      .withWatermark(tsCol, watermark)
-      .groupBy(
-        org.apache.spark.sql.functions.window(col(tsCol), window).as("w"),
-        col("source"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(octet_length(col("text"))).as("n_bytes"),
-        sum(size(split(col("text"), "\\s+"))).as("n_tokens"))
-      .select(col("w.start").as("window_start"), col("source"),
-        col("n_docs"), col("n_bytes"), col("n_tokens"))
 
   /** Streaming NEAR-dup (MinHash LSH) dedup — the reference's
     * `deduplicate_stream` (deduplicator.py:224-260: a growing in-memory

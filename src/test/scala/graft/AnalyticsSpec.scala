@@ -106,7 +106,7 @@ class AnalyticsSpec extends SparkSpec {
       30L -> "beta gamma delta zeta",
       40L -> "one two") // < 3 words: no trigrams, absent from output
     val d = docs.toDF("doc_id", "text")
-    val got = Analytics.noveltyQuery(d)
+    val got = runRegistered(Analytics.queries("corpus_novelty"), d)
       .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
     assert(got === Seq(
       (10L, 3L, 3L, 1.0),

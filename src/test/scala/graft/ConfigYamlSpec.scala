@@ -141,6 +141,13 @@ class ConfigYamlSpec extends AnyFunSuite {
     assert(ConfigYaml.unhonoured(ConfigYaml.parse("{}")).isEmpty)
   }
 
+  test("output.max_file_size_mb is unhonoured: the sinks keep Spark's natural file splits") {
+    val yaml = "output:\n  max_file_size_mb: 128\n"
+    assert(ConfigYaml.unhonoured(ConfigYaml.parse(yaml)) ==
+      Seq("output.max_file_size_mb = 128 (runs with Spark's natural file splits)"))
+    assert(Pipeline.GraftConfig.fromYaml(yaml).output.maxRecordsPerFile == 0L)
+  }
+
   test("empty yaml yields all reference defaults") {
     val cfg = Pipeline.GraftConfig.fromYaml("{}")
     assert(cfg == Pipeline.GraftConfig(

@@ -1,10 +1,15 @@
 package graft
 
-import graft.pipeline.Contamination
+import graft.pipeline.{Contamination, Grams}
+import org.apache.spark.sql.DataFrame
 
-/** Goldens for benchmark n-gram decontamination. */
+/** Goldens for benchmark n-gram decontamination, run through the
+  * registered `decontaminate_*` closures. */
 class ContaminationSpec extends SparkSpec {
   import spark.implicits._
+
+  private def registered(name: String, docs: DataFrame): DataFrame =
+    runRegistered(Contamination.queries(name), docs)
 
   test("training docs sharing a 5-gram with a benchmark doc are flagged") {
     val bench = "alpha beta gamma delta epsilon zeta"
@@ -16,7 +21,7 @@ class ContaminationSpec extends SparkSpec {
       21L -> "alpha beta gamma NOPE delta epsilon zeta",
       // too short for any 5-gram
       22L -> "alpha beta").toDF("doc_id", "text")
-    val m = Contamination.contaminationQuery(docs).collect()
+    val m = registered("decontaminate_flags", docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m === Map(20L -> 2L))
   }
@@ -40,9 +45,9 @@ class ContaminationSpec extends SparkSpec {
       22L -> "completely different text about oranges apples and long cold evenings"
     ).toDF("doc_id", "text")
     // exact tier: every 5-gram window of the paraphrase contains an edit
-    assert(Contamination.contaminationQuery(docs).collect().map(_.getLong(0)).toSet
+    assert(registered("decontaminate_flags", docs).collect().map(_.getLong(0)).toSet
       === Set.empty[Long])
-    val fuzzy = Contamination.fuzzyContaminationQuery(docs).collect()
+    val fuzzy = registered("decontaminate_fuzzy", docs).collect()
       .map(r => r.getLong(0) -> ((r.getDouble(1), r.getBoolean(2)))).toMap
     assert(fuzzy.keySet === Set(20L, 21L)) // doc 22 shares no trigram at all
     // local brute-force jaccard over distinct lowercased trigrams
@@ -69,7 +74,7 @@ class ContaminationSpec extends SparkSpec {
       20L -> (itemA + " with a small appended remark"), // closer to A than B
       21L -> itemB
     ).toDF("doc_id", "text")
-    val att = Contamination.fuzzyAttributionQuery(docs).collect()
+    val att = registered("decontaminate_attribution", docs).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getBoolean(3)))).toMap
     // doc 20's best match is item A; items 1 and 3 are identical so the
     // Jaccard ties bit-for-bit and the smaller bench id must win.
@@ -77,7 +82,7 @@ class ContaminationSpec extends SparkSpec {
     assert(att(20L)._3)
     assert(att(21L)._1 === 2L)
     // attribution agrees with the scalar fuzzy tier on (doc, max_jaccard)
-    val fuzzy = Contamination.fuzzyContaminationQuery(docs).collect()
+    val fuzzy = registered("decontaminate_fuzzy", docs).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(att.view.mapValues(_._2).toMap === fuzzy)
   }
@@ -95,7 +100,7 @@ class ContaminationSpec extends SparkSpec {
     // doc 80 additionally shares the rare "zeta quartz potion" chain.
     val rare = 80L -> "common phrase here zeta quartz potion trailing extra words"
     val docs = ((1L -> bench) +: stopOnly :+ rare).toDF("doc_id", "text")
-    val out = Contamination.fuzzyContaminationQuery(docs).collect()
+    val out = registered("decontaminate_fuzzy", docs).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(out.keySet === Set(80L))
     // exact jaccard includes the stop trigram in the intersection
@@ -119,17 +124,24 @@ class ContaminationSpec extends SparkSpec {
       (nBench + j) -> s"shared boiler plate opening pair$b token$b link$b own$j word$j"
     }
     val docs = (benchDocs ++ trainDocs).toDF("doc_id", "text")
-    val tri = docs.select(col("doc_id"),
-        graft.functions.Trigrams(col("text")).as("ga"))
-    val cand = Contamination.fuzzyCandidates(tri, nBench).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
+    // the registered tier's index build, at this bench size
+    val tri = Grams.triFrame(docs)
+    val ix = Contamination.buildFuzzyIndex(tri, nBench)
+    val train = tri.filter(col("doc_id") >= nBench)
+      .select("doc_id", "ga").as[(Long, Seq[String])].collect()
+    // candidates = bench docs on a rare (df-capped) trigram's posting list
+    val cand = train.flatMap { case (d, ga) =>
+      ga.flatMap(g => Option(ix.gramId.get(g)))
+        .flatMap(id => Option(ix.rarePostings(id.intValue())).toSeq.flatten)
+        .distinct.map(b => (d, ix.benchDocIds(b)))
+    }
     // exactly one bench partner per train doc: the df-capped index
     // nominated 2k pairs, not the 2M (train x bench) the stop trigrams
     // would have produced.
     assert(cand.length === nTrain)
     assert(cand.toMap.forall { case (d, b) => b === (d - nBench) % nBench })
-    val out = Contamination.fuzzyContaminationQuery(docs, benchDocs = nBench)
-    assert(out.count() === nTrain.toLong)
+    val probe = new Contamination.FuzzyProbe(ix)
+    assert(train.count { case (_, ga) => probe.bestMatch(ga).isDefined } === nTrain)
   }
 
   test("fuzzy df cap: floor of 50 below 50k docs, 0.1% of the corpus above " +
@@ -146,7 +158,7 @@ class ContaminationSpec extends SparkSpec {
     // doc 30's words: a b c d e a b c d e -> the gram "a b c d e" occurs
     // at positions 1 and 6 but counts once; the bridging grams
     // (e.g. "d e a b c") are not in the benchmark.
-    val m = Contamination.contaminationQuery(docs).collect()
+    val m = registered("decontaminate_flags", docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m === Map(30L -> 1L))
   }
@@ -183,10 +195,10 @@ class ContaminationSpec extends SparkSpec {
         (col("n_shared").cast("double") / col("n_grams").cast("double")
           >= Contamination.OverlapThreshold).as("substantial"))
       .as[(Long, Long, Long, Double, Boolean)].collect().sorted.toSeq
-    val gotOverlap = Contamination.overlapQuery(docs)
+    val gotOverlap = registered("decontaminate_overlap", docs)
       .as[(Long, Long, Long, Double, Boolean)].collect().sorted.toSeq
     assert(gotOverlap === wantOverlap)
-    val gotFlags = Contamination.contaminationQuery(docs)
+    val gotFlags = registered("decontaminate_flags", docs)
       .as[(Long, Long)].collect().sorted.toSeq
     assert(gotFlags === wantOverlap.map { case (id, s, _, _, _) => (id, s) })
   }

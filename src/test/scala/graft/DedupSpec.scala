@@ -62,20 +62,6 @@ class DedupSpec extends SparkSpec {
     assert(m(3L) === ((1L, "y")))
   }
 
-  test("bloom incremental dedup: known duplicates never survive; new docs pass") {
-    val corpus = docs((1L to 200L).map(i => i -> s"corpus document number $i with its own words"): _*)
-    val batch = docs(
-      1001L -> "corpus document number 7 with its own words", // exact known dup
-      1002L -> "  CORPUS document number 7 with its own words  ", // case/edge-ws variant
-      1003L -> "a genuinely new document that the corpus has never seen",
-      1004L -> "another brand new document with fresh content entirely")
-    val kept = Dedup.bloomNewDocs(batch, corpus).select("doc_id").as[Long].collect().toSet
-    // no false negatives: both known-content rows are gone, guaranteed
-    assert(!kept.contains(1001L) && !kept.contains(1002L))
-    // fpp = 0.1% over 2 new docs: pass outside astronomically-unlucky seeds
-    assert(kept == Set(1003L, 1004L))
-  }
-
   test("paragraph dedup drops a copied passage whole, even with internal line breaks") {
     // the shared PASSAGE contains a '\n' — line-level dedup would split
     // it into two lines; paragraph-level treats it as one unit
@@ -91,8 +77,7 @@ class DedupSpec extends SparkSpec {
     assert(m(3L) === ((1L, 1L, "standalone doc")))
   }
 
-  test("delta dedup: anti-join keeps exactly the unseen delta docs, and " +
-      "the bloom fast path's survivors are a subset of them") {
+  test("delta dedup: anti-join keeps exactly the unseen delta docs") {
     // corpus = ids not divisible by 10; delta = {10, 20, 30}. 10 copies
     // corpus doc 3 (case-variant — hashing normalizes), 30 copies doc 7
     // verbatim, 20 is genuinely new.
@@ -106,9 +91,6 @@ class DedupSpec extends SparkSpec {
     val exact = Dedup.deltaExactNewDocs(delta, corpus)
       .select("doc_id").as[Long].collect().toSet
     assert(exact == Set(20L))
-    val bloom = Dedup.bloomNewDocs(delta, corpus)
-      .select("doc_id").as[Long].collect().toSet
-    assert(bloom.subsetOf(exact), s"bloom $bloom leaked a known duplicate past exact $exact")
     // the registered gate query is the same algebra over the mod-split
     val viaQuery = Dedup.deltaExactQuery(d).select("doc_id").as[Long].collect().toSet
     assert(viaQuery == Set(20L))

@@ -142,7 +142,7 @@ class DupAttributionSpec extends SparkSpec {
 
   test("MinHash.duplicateOf equals the reference over its verified rep pairs") {
     val members = membersBy(corpus.map { case (id, t) => id -> MinHash.signature(t).toSeq })
-    val pairs = MinHash.verifiedPairsOf(corpusDf, MinHash.BandBucketChunkLen)
+    val pairs = MinHashSpec.verifiedPairs(corpusDf, MinHash.BandBucketChunkLen)
       .select("ga", "gb").as[(Long, Long)].collect().toSeq
     checkCaller("minhash", MinHash.duplicateOf(corpusDf), members, pairs)
   }
@@ -159,7 +159,7 @@ class DupAttributionSpec extends SparkSpec {
     checkCaller("simhash", NearDup.simhashDuplicateOf(corpusDf), members, pairs)
   }
 
-  test("NearDup.jaccardDuplicateOf equals the reference over brute-force trigram Jaccard") {
+  test("dedup_jaccard_dupmap equals the reference over brute-force trigram Jaccard") {
     val tri = graft.pipeline.Grams.triFrame(corpusDf).as[(Long, Seq[String])].collect().toSeq
     val members = membersBy(tri)
     val setOf = tri.map { case (id, g) => id -> g.toSet }.toMap
@@ -170,7 +170,8 @@ class DupAttributionSpec extends SparkSpec {
       NearDup.JaccardDenom * inter >=
         NearDup.JaccardNumer * (setOf(a).size + setOf(b).size - inter)
     }
-    checkCaller("jaccard", NearDup.jaccardDuplicateOf(corpusDf), members, pairs)
+    checkCaller("jaccard", runRegistered(NearDup.queries("dedup_jaccard_dupmap"), corpusDf),
+      members, pairs)
   }
 
   test("TextEmbed.semanticDedupQuery equals the reference over every co-bucket " +

@@ -1,12 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.{LangModel, Quality}
 
 /** LM-transition scoring and DSIR weights: hand-computed goldens for the
-  * bigram model, and a brute-force local recomputation for both queries
-  * over a mixed fixture (independent of the Spark join/aggregation
-  * plumbing being tested). */
+  * bigram model, and a brute-force local recomputation for every
+  * registered query over a mixed fixture (independent of the Spark
+  * join/aggregation plumbing being tested). */
 class LangModelSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,14 +17,36 @@ class LangModelSpec extends SparkSpec {
       .withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")))
 
-  test("transition score: hand-computed add-one bigram golden") {
-    // corpus bigrams: (a,b) x3, (b,a) x1; contexts a:3 b:1; V=2.
-    val docs = docsDF(Seq(1L -> "a b a b", 2L -> "a b", 3L -> "x"))
-    val got = LangModel.transitionScoreQuery(docs)
+  /** `quality_lm_transition`'s rows, keyed by doc. */
+  private def scoreRows(docs: DataFrame) =
+    runRegistered(LangModel.queries("quality_lm_transition"), docs)
       .select("doc_id", "n_transitions", "sum_smoothed_bigram",
         "sum_smoothed_context", "transition_score")
       .as[(Long, Long, Long, Long, Double)].collect()
       .map { case (id, a, b, c, d) => id -> ((a, b, c, d)) }.toMap
+
+  /** The `quality_lm_buckets` rank over the hashed scores. */
+  private def buckets(docs: DataFrame): DataFrame =
+    LangModel.bucketsOf(LangModel.transitionScoreHashedQuery(docs), docs)
+
+  /** The default-cascade target set the DSIR registrations memoize, at `cfg`. */
+  private def passedIds(docs: DataFrame, cfg: Quality.Config): DataFrame =
+    Quality.withReason(docs, cfg).filter(col("reason") === "passed").select("doc_id")
+
+  /** The fixture's md5 context and bigram buckets are injective, so the
+    * hashed model counts exactly what the word-keyed model counts. */
+  private def assertInjective(vocab: Seq[String]): Unit = {
+    assert(vocab.map(w => md5h32(w) % LangModel.LmCtxDim).distinct.size == vocab.size)
+    val pairs = for (a <- vocab; b <- vocab) yield (a, b)
+    assert(pairs.map { case (a, b) =>
+      (md5h32(a) * 31L + md5h32(b)) % LangModel.LmBigDim
+    }.distinct.size == pairs.size)
+  }
+
+  test("transition score: hand-computed add-one bigram golden") {
+    // corpus bigrams: (a,b) x3, (b,a) x1; contexts a:3 b:1; V=2.
+    assertInjective(Seq("a", "b"))
+    val got = scoreRows(docsDF(Seq(1L -> "a b a b", 2L -> "a b", 3L -> "x")))
     // doc 3 has one token -> no transitions -> absent.
     assert(got.keySet == Set(1L, 2L))
     // doc1: 2*(3+1)+1*(1+1)=10 over 2*(3+2)+1*(1+2)=13.
@@ -35,32 +58,40 @@ class LangModelSpec extends SparkSpec {
   private def words(t: String): Seq[String] =
     t.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
 
-  test("transition score matches a local brute-force recomputation") {
-    val rnd = new scala.util.Random(7)
-    val vocab = Vector("the", "cat", "sat", "on", "mat", "dog", "ran", "zap")
-    val rows = (1L to 40L).map { id =>
-      id -> Seq.fill(1 + rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
-    }
-    val corpus = rows.flatMap { case (_, t) => words(t).sliding(2).filter(_.size == 2) }
-      .map { case Seq(a, b) => (a, b) }
-    val big = corpus.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-    val ctx = big.groupBy(_._1._1).map { case (p, m) => p -> m.values.sum }
+  /** Brute-force scores of `rows` under the model keyed by `key`: a
+    * bigram's count is that of its key, a context's that of its context
+    * key, and V counts the distinct context keys. */
+  private def bruteScores[B, C](rows: Seq[(Long, String)],
+      bigramKey: (String, String) => B, ctxKey: String => C) = {
+    def bigrams(t: String) =
+      words(t).sliding(2).filter(_.size == 2).map { case Seq(a, b) => (a, b) }.toSeq
+    val corpus = rows.flatMap { case (_, t) => bigrams(t) }
+    val big = corpus.groupBy { case (a, b) => bigramKey(a, b) }.map { case (k, v) => k -> v.size.toLong }
+    val ctx = corpus.groupBy { case (a, _) => ctxKey(a) }.map { case (k, v) => k -> v.size.toLong }
     val v = ctx.size.toLong
-    val want = rows.flatMap { case (id, t) =>
-      val bgs = words(t).sliding(2).filter(_.size == 2).map { case Seq(a, b) => (a, b) }.toSeq
+    rows.flatMap { case (id, t) =>
+      val bgs = bigrams(t)
       if (bgs.isEmpty) None
       else {
-        val num = bgs.map(bg => big(bg) + 1L).sum
-        val den = bgs.map(bg => ctx(bg._1) + v).sum
+        val num = bgs.map { case (a, b) => big(bigramKey(a, b)) + 1L }.sum
+        val den = bgs.map { case (a, _) => ctx(ctxKey(a)) + v }.sum
         Some(id -> ((bgs.size.toLong, num, den, num.toDouble / den.toDouble)))
       }
     }.toMap
-    val got = LangModel.transitionScoreQuery(docsDF(rows))
-      .select("doc_id", "n_transitions", "sum_smoothed_bigram",
-        "sum_smoothed_context", "transition_score")
-      .as[(Long, Long, Long, Long, Double)].collect()
-      .map { case (id, a, b, c, d) => id -> ((a, b, c, d)) }.toMap
-    assert(got == want)
+  }
+
+  test("transition score matches a local brute-force recomputation") {
+    // the hashed model recomputed in plain Scala over md5 buckets; a
+    // 300-word vocabulary, so collisions are whatever md5 gives
+    val rnd = new scala.util.Random(7)
+    val vocab = Vector.tabulate(300)(i => s"w$i")
+    val rows = (1L to 60L).map { id =>
+      id -> Seq.fill(1 + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    }
+    val want = bruteScores(rows,
+      (a, b) => (md5h32(a) * 31L + md5h32(b)) % LangModel.LmBigDim,
+      a => md5h32(a) % LangModel.LmCtxDim)
+    assert(scoreRows(docsDF(rows)) == want)
   }
 
   private def md5h32(s: String): Long = {
@@ -86,41 +117,17 @@ class LangModelSpec extends SparkSpec {
 
   test("hashed transition score equals the exact model when the fixture's " +
       "hashes are injective (deterministic for fixed md5)") {
-    // 8-word vocab: 8 contexts and <= 49 bigram types hashed into 2^18 /
-    // 2^20 buckets — verify injectivity explicitly, then the hashed and
-    // exact estimators must agree row-for-row (same counts, same V).
+    // 8-word vocab: 8 contexts and <= 64 bigram types hashed into 2^18 /
+    // 2^20 buckets — verify injectivity explicitly, then the hashed
+    // registration and the word-keyed brute force must agree row-for-row
+    // (same counts, same V).
     val rnd = new scala.util.Random(11)
     val vocab = Vector("the", "cat", "sat", "on", "mat", "dog", "ran", "zap")
-    assert(vocab.map(w => md5h32(w) % LangModel.LmCtxDim).distinct.size == vocab.size)
-    val pairs = for (a <- vocab; b <- vocab) yield (a, b)
-    assert(pairs.map { case (a, b) =>
-      (md5h32(a) * 31L + md5h32(b)) % LangModel.LmBigDim
-    }.distinct.size == pairs.size)
+    assertInjective(vocab)
     val rows = (1L to 30L).map { id =>
       id -> Seq.fill(1 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
     }
-    def rowsOf(df: org.apache.spark.sql.DataFrame) = df
-      .select("doc_id", "n_transitions", "sum_smoothed_bigram",
-        "sum_smoothed_context", "transition_score")
-      .as[(Long, Long, Long, Long, Double)].collect()
-      .map { case (id, a, b, c, d) => id -> ((a, b, c, d)) }.toMap
-    assert(rowsOf(LangModel.transitionScoreHashedQuery(docsDF(rows)))
-      == rowsOf(LangModel.transitionScoreQuery(docsDF(rows))))
-  }
-
-  test("in-row bigram type-count kernel equals an independent sliding " +
-      "grouping (mixed case, repeated whitespace, repeats, short docs)") {
-    val texts = Seq(
-      "The the THE the", "a  b\t c\na b", "single", "", "  ", "x y x y x",
-      "Mixed Case mixed case MIXED")
-    for (t <- texts) {
-      val want = t.toLowerCase(java.util.Locale.ROOT).split("\\s+")
-        .filter(_.nonEmpty).toSeq.sliding(2).filter(_.size == 2)
-        .map { case Seq(a, b) => (a, b) }.toSeq
-        .groupBy(identity).map { case ((a, b), v) => (a, b, v.size.toLong) }
-        .toSeq.sorted
-      assert(LangModel.bigramTypeCounts(t).toSeq === want, s"text <$t>")
-    }
+    assert(scoreRows(docsDF(rows)) == bruteScores(rows, (a, b) => (a, b), a => a))
   }
 
   test("in-row word type-count kernel equals an independent grouping, " +
@@ -173,7 +180,7 @@ class LangModelSpec extends SparkSpec {
       (1L to 6L).map(id => id -> (sentence + " take " + id)) ++
         Seq(7L -> "tiny", 8L -> "12345 67890 11111 22222 33333")
     val docs = docsDF(rows)
-    val passed = Quality.passedQuery(docs, cfg).select("doc_id").as[Long].collect().toSet
+    val passed = passedIds(docs, cfg).as[Long].collect().toSet
     assert(passed.nonEmpty && passed.size < rows.size,
       s"fixture should mix passing and failing docs, got $passed")
     val raw = rows.flatMap { case (_, t) => words(t) }
@@ -188,7 +195,7 @@ class LangModelSpec extends SparkSpec {
       id -> ((ws.size.toLong, sumTgt, sumRaw,
         (sumTgt.toDouble * (tRaw + v).toDouble) / (sumRaw.toDouble * (tTgt + v).toDouble)))
     }.toMap
-    val got = LangModel.dsirWeightsQuery(docs, cfg)
+    val got = LangModel.dsirWeightsOver(docs, passedIds(docs, cfg))
       .select("doc_id", "n_tokens", "sum_tgt", "sum_raw", "dsir_weight")
       .as[(Long, Long, Long, Long, Double)].collect()
       .map { case (id, a, b, c, d) => id -> ((a, b, c, d)) }.toMap
@@ -208,7 +215,7 @@ class LangModelSpec extends SparkSpec {
           // different bigrams — the property the feature space exists for.
           9L -> (sentence + " take 1").split(" ").reverse.mkString(" "))
     val docs = docsDF(rows)
-    val passed = Quality.passedQuery(docs, cfg).select("doc_id").as[Long].collect().toSet
+    val passed = passedIds(docs, cfg).as[Long].collect().toSet
     assert(passed.nonEmpty && passed.size < rows.size)
     def feat(a: String, b: String): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -233,7 +240,7 @@ class LangModelSpec extends SparkSpec {
           (sumTgt.toDouble * (tRaw + v).toDouble) / (sumRaw.toDouble * (tTgt + v).toDouble))))
       }
     }.toMap
-    val got = LangModel.dsirBigramWeightsQuery(docs, cfg)
+    val got = LangModel.dsirBigramWeightsOver(docs, passedIds(docs, cfg))
       .select("doc_id", "n_bigrams", "sum_tgt", "sum_raw", "dsir_weight")
       .as[(Long, Long, Long, Long, Double)].collect()
       .map { case (id, a, b, c, d) => id -> ((a, b, c, d)) }.toMap
@@ -249,7 +256,7 @@ class LangModelSpec extends SparkSpec {
     // provably blind here: identical integer sums, bit-identical row.
     assert(got(9L)._1 == got(1L)._1) // same bigram COUNT...
     assert(got(9L)._3 != got(1L)._3) // ...different raw-frequency mass
-    val uni = LangModel.dsirWeightsQuery(docs, cfg)
+    val uni = LangModel.dsirWeightsOver(docs, passedIds(docs, cfg))
       .select("doc_id", "n_tokens", "sum_tgt", "sum_raw", "dsir_weight")
       .as[(Long, Long, Long, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
@@ -268,7 +275,7 @@ class LangModelSpec extends SparkSpec {
     val docs = rows.toDF("doc_id", "text", "lang")
       .withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")))
-    val got = LangModel.perplexityBucketsQuery(docs)
+    val got = buckets(docs)
       .select("doc_id", "lang", "transition_score", "ppl_bucket")
       .as[(Long, String, Double, String)].collect()
     // the 1-token doc has no transitions and is absent
@@ -305,7 +312,7 @@ class LangModelSpec extends SparkSpec {
     val docs = rows.toDF("doc_id", "text", "lang")
       .withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")))
-    val scored = LangModel.transitionScoreQuery(docs)
+    val scored = LangModel.transitionScoreHashedQuery(docs)
     // the pre-rewrite spelling, verbatim, as the semantic reference
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("lang"))
       .orderBy(col("transition_score").desc, col("doc_id"))
@@ -316,7 +323,7 @@ class LangModelSpec extends SparkSpec {
         when(col("b") === 1, "head").when(col("b") === 2, "middle")
           .otherwise("tail").as("ppl_bucket"))
       .as[(Long, String, Double, String)].collect().sortBy(_._1)
-    val got = LangModel.perplexityBucketsQuery(docs)
+    val got = buckets(docs)
       .as[(Long, String, Double, String)].collect().sortBy(_._1)
     assert(got.length == want.length && got.sameElements(want))
     // every ntile group size pattern shows up: 270 = 3*90, 20 and 10 are
@@ -329,7 +336,7 @@ class LangModelSpec extends SparkSpec {
   test("perplexity buckets plan has NO window operator (the rank is " +
       "distributed, not a per-language funnel)") {
     val docs = docsDF(Seq(1L -> "a b a b", 2L -> "a b c", 3L -> "b a"))
-    val plan = LangModel.perplexityBucketsQuery(docs)
+    val plan = buckets(docs)
       .queryExecution.executedPlan
     val unwrapped = plan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>

@@ -65,7 +65,8 @@ class MinHashSkewSpec extends SparkSpec {
     for ((name, fn) <- Seq(
         "simhash" -> graft.pipeline.NearDup.simhashDuplicateOf _,
         "jaccard" -> ((d: org.apache.spark.sql.DataFrame) =>
-          graft.pipeline.NearDup.jaccardDuplicateOf(d)))) {
+          graft.pipeline.NearDup.jaccardOverGrams(graft.pipeline.Grams.triFrame(d),
+            graft.pipeline.NearDup.PostingChunkLen)))) {
       val t0 = System.nanoTime()
       val dup = fn(docs).as[(Long, Long)].collect()
       val wallSeconds = (System.nanoTime() - t0) / 1e9

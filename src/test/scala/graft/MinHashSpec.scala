@@ -67,7 +67,7 @@ class MinHashSpec extends SparkSpec {
 
   test("stats query counts totals, uniques, dups, clusters") {
     val d = docs(1L -> longA, 2L -> longB, 3L -> other, 4L -> longA)
-    val row = MinHash.statsQuery(d).collect().head
+    val row = runRegistered(MinHash.queries("dedup_minhash_stats"), d).collect().head
     assert(row.getLong(0) == 4L) // total
     assert(row.getLong(1) == 2L) // unique
     assert(row.getLong(2) == 2L) // duplicates (2 and 4 -> original 1)
@@ -171,7 +171,7 @@ class MinHashSpec extends SparkSpec {
     // layout-dependent by design (a forest per kernel scan — chunking
     // changes WHICH pairs are redundant, never the components).
     def pairsAt(chunkLen: Int) =
-      MinHash.verifiedPairsOf(d, chunkLen)
+      MinHashSpec.verifiedPairs(d, chunkLen)
         .select("ga", "gb", "matches")
         .as[(Long, Long, Int)].collect().toSet
     val fast = pairsAt(Int.MaxValue)
@@ -187,7 +187,7 @@ class MinHashSpec extends SparkSpec {
     // silently drop an attribution
     val d = variantFamilies
     for (chunkLen <- Seq(Int.MaxValue, 2)) {
-      val ps = MinHash.verifiedPairsOf(d, chunkLen)
+      val ps = MinHashSpec.verifiedPairs(d, chunkLen)
         .select("ga", "gb").as[(Long, Long)].collect()
       assert(ps.nonEmpty, s"fixture invalid at chunkLen=$chunkLen: no verified pairs")
       ps.foreach { case (a, b) =>
@@ -271,7 +271,7 @@ class MinHashSpec extends SparkSpec {
         g.map { case (id, _) => (id, gid) }
       }.toSeq.toDF("doc_id", "gid")
       val expected = referenceDupMap(members,
-        MinHash.verifiedPairsOf(d, MinHash.BandBucketChunkLen).select("ga", "gb"))
+        MinHashSpec.verifiedPairs(d, MinHash.BandBucketChunkLen).select("ga", "gb"))
       assert(expected.exists { case (dd, o) => sigs.toMap.apply(dd) != sigs.toMap.apply(o) },
         s"seed=$seed: fixture invalid, no near-dup attribution")
       val viaDuplicateOf = MinHash.duplicateOf(d).as[(Long, Long)].collect().toSet
@@ -302,7 +302,7 @@ class MinHashSpec extends SparkSpec {
       byRoot.flatMap { case (_, ms) => val m = ms.min; ms.map(_ -> m) }.toMap
     }
     for (chunkLen <- Seq(Int.MaxValue, 2)) {
-      val ps = MinHash.verifiedPairsOf(d, chunkLen)
+      val ps = MinHashSpec.verifiedPairs(d, chunkLen)
         .select("ga", "gb", "tree").as[(Long, Long, Boolean)].collect()
       val all = ps.map { case (a, b, _) => (a, b) }.toSet
       val tree = ps.collect { case (a, b, true) => (a, b) }.toSet
@@ -384,4 +384,12 @@ class MinHashSpec extends SparkSpec {
     assert(small.nonEmpty, "fixture invalid: no duplicates found at all")
     assert(small === contracted)
   }
+}
+
+object MinHashSpec {
+  /** The verified rep pairs at a forced chunk bound, for pinning the
+    * chunk-pair path against the single-pass kernel. */
+  def verifiedPairs(docs: org.apache.spark.sql.DataFrame, chunkLen: Int)
+      : org.apache.spark.sql.DataFrame =
+    MinHash.repGraph(MinHash.signatures(docs), chunkLen)._2
 }

@@ -4,8 +4,23 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
 
 class MultimodalSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** The media row contract the fixtures below are built in: binary
+    * payload + typed metadata struct. */
+  private val mediaSchema: StructType = StructType(Seq(
+    StructField("media_id", LongType, nullable = false),
+    StructField("kind", StringType, nullable = false), // image | audio | video
+    StructField("content", BinaryType, nullable = true),
+    StructField("meta", StructType(Seq(
+      StructField("format", StringType, nullable = true),
+      StructField("width", IntegerType, nullable = true),
+      StructField("height", IntegerType, nullable = true),
+      StructField("sample_rate", IntegerType, nullable = true),
+      StructField("duration_ms", IntegerType, nullable = true))), nullable = true)))
 
   private def fakeImage(w: Int, h: Int, payload: Int = 64): Array[Byte] = {
     val bb = ByteBuffer.allocate(12 + payload).order(ByteOrder.LITTLE_ENDIAN)
@@ -20,13 +35,15 @@ class MultimodalSpec extends SparkSpec {
       Row(2L, "image", fakeImage(64, 64), Row("grf", 64, 64, null, null)),
       Row(3L, "audio", Array.fill[Byte](100)(7), Row("pcm", null, null, 16000, 250)))
     spark.createDataFrame(
-      spark.sparkContext.parallelize(rows), Multimodal.mediaSchema)
+      spark.sparkContext.parallelize(rows), mediaSchema)
   }
 
   test("schema contract: binary payload + typed metadata struct") {
-    val df = mediaDf
-    assert(df.schema == Multimodal.mediaSchema)
-    assert(df.count() == 3)
+    assert(mediaDf.count() == 3)
+    // the registered mm_* queries' fixture carries the contract's payload columns
+    val fixture = Multimodal.fixtureFromDocs(Seq((3L, "abc")).toDF("doc_id", "text"))
+    assert(fixture.schema.map(f => f.name -> f.dataType) ==
+      mediaSchema.take(3).map(f => f.name -> f.dataType))
   }
 
   test("decode stub extracts dimensions from the header; non-image yields nulls") {
@@ -66,9 +83,5 @@ class MultimodalSpec extends SparkSpec {
     assert(m(2L) === ((Some(64), Some(64), Some(12 + 64))))
     // audio payload without the GRF! header: decode fails -> nulls
     assert(m(3L) === ((None, None, None)))
-  }
-
-  test("repartition for decode spreads rows") {
-    assert(Multimodal.repartitionForDecode(mediaDf, 3).rdd.getNumPartitions == 3)
   }
 }

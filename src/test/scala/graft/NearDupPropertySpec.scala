@@ -2,7 +2,7 @@ package graft
 
 import scala.util.Random
 
-import graft.pipeline.{Dedup, MinHash, NearDup}
+import graft.pipeline.{Dedup, Grams, MinHash, NearDup}
 
 /** Property tests pinning the near-dup operators against naive
   * reference implementations computed in plain Scala — the pruning math
@@ -57,7 +57,7 @@ class NearDupPropertySpec extends SparkSpec {
     test(s"prefix+length+positional-filtered jaccard join is lossless (seed $seed)") {
       val docs = corpus(seed, 60)
       val df = docs.toDF("doc_id", "text")
-      val got = NearDup.jaccardDuplicateOf(df)
+      val got = NearDup.jaccardOverGrams(Grams.triFrame(df), NearDup.PostingChunkLen)
         .as[(Long, Long)].collect().toMap
       assert(got == naiveJaccardDups(docs))
     }
@@ -69,7 +69,7 @@ class NearDupPropertySpec extends SparkSpec {
       // bounded-row fallback for oversized lists must be lossless.
       val docs = corpus(seed, 60)
       val df = docs.toDF("doc_id", "text")
-      val got = NearDup.jaccardDuplicateOf(df, chunkLen = 2)
+      val got = NearDup.jaccardOverGrams(Grams.triFrame(df), chunkLen = 2)
         .as[(Long, Long)].collect().toMap
       assert(got == naiveJaccardDups(docs))
     }

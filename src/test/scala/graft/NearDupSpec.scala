@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.NearDup
+import graft.pipeline.{Grams, NearDup}
 import graft.relational.Similarity
 
 /** SimHash, n-gram Jaccard, winnowing fingerprints, embedding near-dup. */
@@ -32,8 +32,8 @@ class NearDupSpec extends SparkSpec {
   }
 
   test("trigram jaccard: near-dup detected, distinct kept, short docs never join") {
-    val dup = NearDup.jaccardDuplicateOf(
-        docs(1L -> longA, 2L -> longB, 3L -> other, 4L -> "two words"))
+    val dup = NearDup.jaccardOverGrams(Grams.triFrame(
+        docs(1L -> longA, 2L -> longB, 3L -> other, 4L -> "two words")), NearDup.PostingChunkLen)
       .as[(Long, Long)].collect().toSet
     assert(dup == Set((2L, 1L)))
   }
@@ -41,7 +41,7 @@ class NearDupSpec extends SparkSpec {
   test("trigram jaccard: identical copies and near variants attribute to the cluster min") {
     val d = docs(1L -> longA, 2L -> longB, 3L -> other, 4L -> "two words",
       5L -> longA, 6L -> (longA + " extra trailing words here"))
-    val got = NearDup.jaccardDuplicateOf(d).as[(Long, Long)].collect().toSet
+    val got = NearDup.jaccardOverGrams(Grams.triFrame(d), NearDup.PostingChunkLen).as[(Long, Long)].collect().toSet
     assert(got.contains((5L, 1L))) // exact copy collapses pre-kernel
     assert(got.contains((2L, 1L))) // near variant via the min-partner kernel
     assert(!got.exists(_._1 == 3L) && !got.exists(_._1 == 4L))
@@ -57,7 +57,7 @@ class NearDupSpec extends SparkSpec {
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(3))).toMap
     assert(pairs.keySet === Set((1L, 2L)))
     assert(pairs((1L, 2L)) > 0.8) // nearly all of the smaller sketch is shared
-    val jac = NearDup.jaccardDuplicateOf(d).collect()
+    val jac = NearDup.jaccardOverGrams(Grams.triFrame(d), NearDup.PostingChunkLen).collect()
     assert(jac.isEmpty) // containment is invisible to symmetric doc-level jaccard
   }
 

@@ -83,7 +83,7 @@ class QualitySpec extends SparkSpec {
 
   test("trigram detector resolves text the stopword heuristic could not (round-6 item 4)") {
     def detect(text: String): String =
-      Quality.cascadeQuery(Seq((1L, text)).toDF("doc_id", "text"), cfg)
+      Quality.cascadeOver(Quality.withMetrics(Seq((1L, text)).toDF("doc_id", "text")), cfg)
         .select("detected_language").as[String].collect().head
     // German compound nouns: ZERO of the old top-20 stopwords appear, so
     // the word-list heuristic returned 'unknown'/'en'; word-interior
@@ -107,7 +107,7 @@ class QualitySpec extends SparkSpec {
   }
 
   test("metric columns surface per-doc scores (Q11)") {
-    val df = Quality.cascadeQuery(Seq((7L, goodText)).toDF("doc_id", "text"), cfg)
+    val df = Quality.cascadeOver(Quality.withMetrics(Seq((7L, goodText)).toDF("doc_id", "text")), cfg)
     val row = df.collect().head
     assert(row.getAs[Int]("word_count") >= 50)
     assert(row.getAs[String]("detected_language") == "en")

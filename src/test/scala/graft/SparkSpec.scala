@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,6 +11,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = {
     // session is shared across suites; don't stop it here
     super.afterAll()
+  }
+
+  /** Run a registered query closure (`X.queries(name)`) over `docs`,
+    * laid out as the one-table data dir the closure reads. */
+  def runRegistered(query: (SparkSession, String) => DataFrame, docs: DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-registered").toString
+    docs.coalesce(1).write.parquet(s"$dir/documents.parquet")
+    query(spark, dir)
   }
 }
 

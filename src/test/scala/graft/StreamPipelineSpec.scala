@@ -19,25 +19,19 @@ class StreamPipelineSpec extends SparkSpec {
       "is a field that draws on the work of many scholars over time and it " +
       "was shaped by the tools and ideas that were available at each point."
 
-  test("both streaming clean sites clean each row once: no clean kernel in a Filter") {
+  test("the streaming clean site cleans each row once: no clean kernel in a Filter") {
     val dir = Files.createTempDirectory("stream-plan")
     Files.writeString(dir.resolve("b1.json"),
       jsonLine(1, longText).replace("{", "{\"ts\": \"2026-01-01T00:00:00Z\", ") + "\n")
     val docs = spark.readStream
       .schema("doc_id BIGINT, ts TIMESTAMP, text STRING, lang STRING, source STRING, n_chars BIGINT")
       .json(dir.toString)
-    for ((out, i) <- Seq(StreamPipeline.cleanedDeduped(docs),
-        StreamPipeline.cleanedDedupedBounded(docs, "ts", "10 minutes")).zipWithIndex) {
-      // no empty watermark-advancing batch, so the last one read the file
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val q = try StreamPipeline.toMemorySink(out, s"stream_plan_$i").start()
-        finally spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      val plan = try {
-        q.processAllAvailable()
-        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
-      } finally q.stop()
-      assert(PipelineSpec.cleaningFilters(plan).isEmpty, s"clean chain copied into a Filter:\n$plan")
-    }
+    val q = StreamPipeline.toMemorySink(StreamPipeline.cleanedDeduped(docs), "stream_plan").start()
+    val plan = try {
+      q.processAllAvailable()
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
+    } finally q.stop()
+    assert(PipelineSpec.cleaningFilters(plan).isEmpty, s"clean chain copied into a Filter:\n$plan")
   }
 
   test("streaming micro-batches are cleaned and deduplicated across batches") {
@@ -61,39 +55,6 @@ class StreamPipelineSpec extends SparkSpec {
       // doc 3 is a dup of doc 1 (hash is case-insensitive) and must not appear
       assert(out.keySet == Set(1L, 2L, 4L))
       assert(out(1L) == "passed")
-    } finally q.stop()
-  }
-
-  test("watermarked dedup suppresses within the horizon, expires state after") {
-    val dir: Path = Files.createTempDirectory("stream-wm")
-    def line(id: Long, text: String, ts: String): String = {
-      val esc = text.replace("\\", "\\\\").replace("\"", "\\\"")
-      s"""{"doc_id": $id, "ts": "$ts", "text": "$esc", "lang": "en", "source": "s", "n_chars": ${text.length}}"""
-    }
-    val docs = spark.readStream
-      .schema("doc_id BIGINT, ts TIMESTAMP, text STRING, lang STRING, source STRING, n_chars BIGINT")
-      .json(dir.toString)
-    val stream = StreamPipeline.cleanedDedupedBounded(docs, "ts", "10 minutes",
-      cfg = graft.pipeline.Quality.Config.reference)
-    val q = StreamPipeline.toMemorySink(stream, "stream_wm_out").start()
-    try {
-      // batch 1: base doc at t0, duplicate inside the horizon at t0+5m
-      Files.writeString(dir.resolve("b1.json"),
-        line(1, longText, "2026-01-01T00:00:00Z") + "\n" +
-          line(2, longText, "2026-01-01T00:05:00Z") + "\n")
-      q.processAllAvailable()
-      // batch 2: watermark advances far past the horizon...
-      Files.writeString(dir.resolve("b2.json"),
-        line(3, longText + " Unrelated new content sentence.", "2026-01-01T02:00:00Z") + "\n")
-      q.processAllAvailable()
-      // batch 3: the same content re-arrives AFTER its state expired
-      Files.writeString(dir.resolve("b3.json"),
-        line(4, longText, "2026-01-01T02:01:00Z") + "\n")
-      q.processAllAvailable()
-      val ids = spark.sql("SELECT doc_id FROM stream_wm_out").collect()
-        .map(_.getLong(0)).toSet
-      // 2 suppressed (inside horizon); 4 re-admitted (state expired)
-      assert(ids == Set(1L, 3L, 4L), s"got $ids")
     } finally q.stop()
   }
 

@@ -33,34 +33,6 @@ class StreamWindowSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("source rate monitor: per-window per-source doc/byte/token throughput") {
-    val dir = Files.createTempDirectory("srate")
-    val docs = spark.readStream
-      .schema("doc_id BIGINT, ts TIMESTAMP, source STRING, text STRING")
-      .json(dir.toString)
-    val q = StreamPipeline.toMemorySink(
-      StreamPipeline.sourceRateMonitor(docs, "ts"), "rate_out").start()
-    try {
-      Files.writeString(dir.resolve("b1.json"),
-        """{"doc_id":1,"ts":"2024-01-01T10:00:10Z","source":"web","text":"one two three"}
-          |{"doc_id":2,"ts":"2024-01-01T10:00:40Z","source":"web","text":"four five"}
-          |{"doc_id":3,"ts":"2024-01-01T10:00:50Z","source":"books","text":"six"}
-          |""".stripMargin)
-      q.processAllAvailable()
-      // advance event time past watermark to finalize the 10:00:00 window
-      Files.writeString(dir.resolve("b2.json"),
-        """{"doc_id":9,"ts":"2024-01-01T10:10:00Z","source":"web","text":"x"}
-          |""".stripMargin)
-      q.processAllAvailable()
-      val rows = spark.sql(
-          "SELECT source, n_docs, n_bytes, n_tokens FROM rate_out WHERE window_start = TIMESTAMP '2024-01-01 10:00:00'")
-        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-      assert(rows == Map(
-        "web" -> ((2L, 22L, 5L)), // "one two three"(13) + "four five"(9)
-        "books" -> ((1L, 3L, 1L))))
-    } finally q.stop()
-  }
-
   test("session_window sessionization merges within gap and splits across it") {
     val dir = Files.createTempDirectory("ssess")
     val events = spark.readStream

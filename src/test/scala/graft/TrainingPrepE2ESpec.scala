@@ -1,22 +1,18 @@
 package graft
 
-import java.nio.file.Files
-
-import graft.pipeline.{Chunking, Clean, Dedup, Sinks}
+import graft.pipeline.{Chunking, Clean, Dedup}
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-data prep tail: clean → exact dedup →
-  * context-window chunking → hash-sharded layout. Complements
-  * IngestE2ESpec (which drives the reference-shaped Pipeline.run):
-  * this pins the TRAINING-side contracts — chunk coverage/overlap
-  * reconstruct the document exactly, and the shard layout is
-  * complete, balanced-by-hash, and sorted within each shard. */
+  * context-window chunking. Complements IngestE2ESpec (which drives the
+  * reference-shaped Pipeline.run): this pins the TRAINING-side contract
+  * — chunk coverage/overlap reconstruct the document exactly. */
 class TrainingPrepE2ESpec extends SparkSpec {
   import spark.implicits._
 
   private def word(i: Long, j: Int) = s"w${(i * 31 + j * 7) % 97}"
 
-  test("clean -> dedup -> chunk -> shards: coverage, overlap, layout") {
+  test("clean -> dedup -> chunk: coverage, overlap") {
     val base = (1L to 30L).map { i =>
       (i, s"src${i % 3}", Seq.tabulate(40 + (i % 7).toInt)(j => word(i, j)).mkString(" "))
     }
@@ -52,18 +48,6 @@ class TrainingPrepE2ESpec extends SparkSpec {
       assert(rebuilt === wordsByDoc(id), s"doc $id: overlap reconstruction")
     }
 
-    // shard layout: complete, every shard present, sorted within shard
-    val out = Files.createTempDirectory("shards").toString
-    Sinks.writeShards(deduped.select("doc_id", "source", "text"), out, numShards = 4)
-    val back = spark.read.parquet(out)
-    assert(back.select("doc_id").as[Long].collect().toSet ===
-      wordsByDoc.keySet.toSet)
-    assert(back.select("shard").distinct().as[Int].collect().toSet === Set(0, 1, 2, 3))
-    (0 to 3).foreach { sh =>
-      val ids = spark.read.parquet(s"$out/shard=$sh")
-        .select("doc_id").as[Long].collect().toSeq
-      assert(ids == ids.sorted, s"shard $sh not sorted")
-    }
     deduped.unpersist()
   }
 }
